@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import importlib.util
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1227,13 +1228,12 @@ def q_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     like any built-in. (For additive ints the built-in SUM is the
     production choice; the UDAF tier exists for aggregates Spark
     lacks — this query keeps its semantics verifiable.)"""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # the explicit GROUPED_AGG functionType (not type-hint inference):
-    # this module uses `from __future__ import annotations`, so hints
-    # are strings pyspark cannot resolve against a locally-imported pd
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def int_sum(v):
+    # Series -> scalar hints make it a GROUPED_AGG pandas UDF; `pd` is
+    # module-global so the postponed (string) annotations resolve
+    @pandas_udf("long")
+    def int_sum(v: pd.Series) -> int:
         return int(v.sum())
 
     emb = table(spark, sf_dir, "embeddings")

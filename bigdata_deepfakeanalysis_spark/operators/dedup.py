@@ -33,7 +33,7 @@ Charikar) as used in LLM-corpus pipelines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -964,6 +964,21 @@ def q_cosine_near_dup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # needs (keep one survivor per component, not per pair).
 # ---------------------------------------------------------------------------
 
+def _pin_counting(df: DataFrame, cond: Column) -> tuple[DataFrame, int]:
+    """Pin ``df`` with an eager ``localCheckpoint`` and return it with
+    the number of its rows where ``cond`` holds. The count is an
+    observed metric of the checkpoint's own job, not a second action
+    (a separate filtered ``count()`` costs a map stage and a result
+    job under AQE)."""
+    obs = Observation()
+    pinned = df.observe(obs, F.count(F.when(cond, 1)).alias("n"))
+    pinned = pinned.localCheckpoint(eager=True)
+    # read only after the eager checkpoint returned: a failed or
+    # cancelled job raises above, so `get` never waits on metrics
+    # that cannot arrive
+    return pinned, obs.get["n"]
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",
@@ -974,10 +989,12 @@ def connected_components(
     starts labeled with its own id; each round takes the min of its and
     its neighbors' labels; converges in O(component diameter) rounds
     (near-dup components are band-join cliques — diameter 1-2, so 2-3
-    rounds in practice). Each round is one shuffle-join + one groupBy;
-    the driver only checks a scalar changed-count per round (the
-    GraphFrames large-star/small-star optimization applies at 100 TB if
-    components were ever deep chains). Returns (id, component).
+    rounds in practice). Each round is one shuffle-join + one groupBy
+    and one Spark job: the round's eager checkpoint, which also yields
+    the scalar changed-count the loop checks as an observed metric
+    (the GraphFrames large-star/small-star optimization applies at
+    100 TB if components were ever deep chains). Returns (id,
+    component).
 
     Iteration state is ``localCheckpoint``-ed, not cached: a cache
     keeps the logical plan growing every round (cache substitution
@@ -1002,12 +1019,14 @@ def connected_components(
     # seed labels with min(id, direct-neighbor min): the distinct the
     # identity init needed is a groupBy anyway, and this folds the
     # first propagation round into it — an LSH clique (diameter 1)
-    # then converges at round 1's changed==0 check instead of round 2
+    # then converges at round 1's changed==0 check instead of round 2.
+    # Not pinned: the groupBy is already hash-partitioned by id, so
+    # round 0 joins it without a re-shuffle and its checkpoint job
+    # computes the seed too.
     labels = (
         edges.groupBy(F.col("src").alias("id"))
         .agg(F.min("dst").alias("_nm"))
         .select("id", F.least(F.col("id"), F.col("_nm")).alias("label"))
-        .localCheckpoint(eager=True)
     )
     changed = -1
     first_changed = None
@@ -1015,7 +1034,7 @@ def connected_components(
         # Adaptive pointer halving (r12): LSH near-dup graphs are
         # diameter-1-2 cliques and converge in <= 3 plain rounds, but
         # grid/chain graphs (q_grid_dbscan's cell adjacency) propagate
-        # one hop per round — O(diameter). When the driver's free
+        # one hop per round — O(diameter). When the observed
         # changed-counts show SLOW convergence (round k-1 still moved
         # more than half of round 0's labels), each round additionally
         # joins label-of-label, doubling the propagation reach —
@@ -1039,11 +1058,10 @@ def connected_components(
             .agg(F.min("label").alias("nbr_min"))
             .withColumnRenamed("src", "id")
         )
-        # carry the changed flag through the checkpoint so the
-        # convergence test is a narrow scan of the materialized
-        # partitions, not another shuffle join against the old labels
-        # (one fewer join + shuffle per round; the count action reuses
-        # the checkpoint blocks the loop needs anyway)
+        # carry the changed flag into the checkpointed frame so the
+        # convergence count rides on the checkpoint job as an observed
+        # metric: no shuffle join against the old labels and no
+        # separate count job
         stepped = labels.join(nbr_min, "id", "left").select(
             "id",
             F.least(
@@ -1077,8 +1095,7 @@ def connected_components(
                 ).alias("label"),
                 "chg",
             )
-        stepped = stepped.localCheckpoint(eager=True)
-        changed = stepped.where(F.col("chg")).count()
+        stepped, changed = _pin_counting(stepped, F.col("chg"))
         labels = stepped.drop("chg")
         if first_changed is None:
             first_changed = changed
@@ -1163,38 +1180,40 @@ def connected_components_star(
         center = ori.join(m, "u").select(
             F.col("m").alias("nu"), F.col("u").alias("nv")
         )
-        return (
-            hang.unionByName(center)
-            .select(F.col("nu").alias("u"), F.col("nv").alias("v"))
-            .distinct()
+        # not deduplicated here: the loop's groupBy(u, v) is the
+        # distinct
+        return hang.unionByName(center).select(
+            F.col("nu").alias("u"), F.col("nv").alias("v")
         )
 
+    changed = -1
     for _ in range(max_iter):
         # fixpoint = a FULL alternation leaves the edge set unchanged
         # (comparing the two half-rounds to each other converges
         # spuriously: small-star can fix large-star's output without
         # either being a star — observed on a path graph)
-        prev = edges
         after_ls = large_star(edges).localCheckpoint(eager=True)
-        new_edges = small_star(after_ls).localCheckpoint(eager=True)
-        # symmetric difference in ONE action (both edge sets are
-        # distinct, so an edge appearing once in the union is in
-        # exactly one side) — the two-anti-join form cost two jobs
-        # per alternation for the same scalar
-        changed = (
-            new_edges.unionAll(prev)
+        # small-star's distinct doubles as the symmetric difference
+        # against the previous edges: tag new edges 1 and old ones 0;
+        # an edge whose max tag equals its min tag is on one side only,
+        # and that count rides on the checkpoint job
+        tagged = (
+            small_star(after_ls)
+            .withColumn("_t", F.lit(1))
+            .unionByName(edges.withColumn("_t", F.lit(0)))
             .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .where(F.col("_c") == 1)
-            .count()
+            .agg(F.max("_t").alias("_new"), F.min("_t").alias("_old"))
         )
-        edges = new_edges
+        tagged, changed = _pin_counting(
+            tagged, F.col("_new") == F.col("_old")
+        )
+        edges = tagged.where(F.col("_new") == 1).select("u", "v")
         if changed == 0:
             break
     else:
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} "
-            "alternations"
+            f"alternations ({changed} edges still changing)"
         )
     star_labels = edges.select(
         F.col("v").alias("id"), F.col("u").alias("component")

@@ -19,6 +19,7 @@ Gopher/C4-style quality signals).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -2182,12 +2183,12 @@ def q_pandas_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow batch transfer, null handling, codegen boundary — at the
     cost profile the plan-hygiene suite tracks (ArrowEvalPython, never
     row-pickling BatchEvalPython)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit SCALAR functionType: string annotations under
-    # `from __future__ import annotations` defeat hint inference
-    @pandas_udf("string", PandasUDFType.SCALAR)
-    def md5_nibble(texts):
+    # Series -> Series hints make it a scalar pandas UDF; `pd` is
+    # module-global so the postponed (string) annotations resolve
+    @pandas_udf("string")
+    def md5_nibble(texts: pd.Series) -> pd.Series:
         import hashlib as _h
 
         # na_action='ignore' keeps Arrow nulls null instead of feeding

@@ -113,6 +113,11 @@ _WINDOW: list[str] = [
     "q_dup_cluster_sizes",
     "q_semantic_dedup",
     "q_semantic_dedup_lsh",
+    # (a') then: the star components variant (observed edge-change
+    # count) and the two pandas UDFs moved to type hints
+    "q_dedup_components_star",
+    "q_pandas_scalar_udf",
+    "q_pandas_udaf",
     # (b) least-recently-graded fillers: the full r2 residue (the 8
     # names rotated out in r12), then the alphabetically-first r3
     # names that fit, staging names last
@@ -121,7 +126,6 @@ _WINDOW: list[str] = [
     "q_udtf_bigrams",
     "q_union_provenance",
     "q_window_distribution",
-    "q_window_lag",
     "q_window_running_sum",
     "q_window_topk_per_group",
     # r3 rank, non-staging, alphabetical
@@ -146,12 +150,10 @@ _WINDOW: list[str] = [
     "q_standardize",
     "q_stem_join_concat",
     "q_stream_dedup_watermark",
-    "q_stream_late_drop",
     "q_stream_record_breakers",
     "q_stream_session_window",
     "q_stream_static_join",
     "q_stream_stream_outer_join",
-    "q_stream_tumbling_window",
     "q_surrogate_features",
     "q_zorder_layout",
     # r3 rank, staging-late convention

@@ -5,6 +5,8 @@ labels."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from bigdata_deepfakeanalysis_spark.registry import all_queries
@@ -68,8 +70,11 @@ def test_connected_components_raises_on_non_convergence(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(4)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="did not converge") as err:
         connected_components(chain, max_iter=1).collect()
+    # the message carries the observed changed-count of the last round
+    still = re.search(r"\((\d+) labels still changing\)", str(err.value))
+    assert still and int(still.group(1)) > 0, str(err.value)
 
     ok = connected_components(chain, max_iter=10)
     labels = {r.component for r in ok.collect()}
@@ -143,6 +148,96 @@ def test_star_components_equal_label_propagation(spark):
     b = {(r.id, r.component) for r in connected_components_star(g).collect()}
     assert a == b
     assert (777, 777) in b
+
+
+def _component_minima(edges):
+    """Reference labels: union-find, every node labeled with the
+    smallest id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
+def _grid_edges(n):
+    return [
+        (r * n + c, r * n + c + 1) for r in range(n) for c in range(n - 1)
+    ] + [(r * n + c, (r + 1) * n + c) for r in range(n - 1) for c in range(n)]
+
+
+@pytest.fixture(scope="module")
+def lsh_cliques(spark):
+    """The LSH candidate pairs of the fixture corpus, pinned: disjoint
+    near-dup cliques that converge in one propagation round."""
+    from bigdata_deepfakeanalysis_spark.operators.dedup import (
+        aug_docs,
+        lsh_candidate_pairs,
+        minhash_bands,
+    )
+
+    return lsh_candidate_pairs(
+        minhash_bands(aug_docs(spark, SF_DIR))
+    ).localCheckpoint(eager=True)
+
+
+@pytest.mark.parametrize(
+    "graph", ["empty", "self_pair", "one_pair", "path300", "grid40", "lsh"]
+)
+def test_components_variants_give_component_minima(
+    spark, lsh_cliques, graph
+):
+    """Both connected-components variants label every node with its
+    component minimum on degenerate, deep (path, grid) and clique
+    (LSH candidate) graphs, and return on the empty and tiny ones."""
+    from bigdata_deepfakeanalysis_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    if graph == "lsh":
+        pairs = lsh_cliques
+        edges = [(r.doc_a, r.doc_b) for r in pairs.collect()]
+    else:
+        edges = {
+            "empty": [],
+            "self_pair": [(5, 5)],
+            "one_pair": [(3, 9)],
+            "path300": [(i, i + 1) for i in range(299)],
+            "grid40": _grid_edges(40),
+        }[graph]
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    expected = _component_minima(edges)
+    assert expected or graph == "empty"
+    for cc in (connected_components, connected_components_star):
+        got = {(r.id, r.component) for r in cc(pairs).collect()}
+        assert got == expected, cc.__name__
+
+
+def test_components_round_runs_no_count_job(spark, lsh_cliques):
+    """On one-round cliques the changed-count rides on the round's
+    checkpoint job as an observed metric and the seed labels are not
+    pinned: the build runs the edge pin and one round, 8 jobs under
+    AQE. A separate count job (+2 under AQE) or a seed pin (+2) would
+    show here."""
+    from bigdata_deepfakeanalysis_spark.operators.dedup import (
+        connected_components,
+    )
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    connected_components(lsh_cliques)
+    jobs = dag.nextJobId() - before
+    assert jobs <= 8, jobs
 
 
 def test_quality_dedup_prefers_clean_case_originals(spark):
