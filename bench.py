@@ -1,33 +1,24 @@
 #!/usr/bin/env python
-"""Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: every benched registry query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-    {"metric": "...", "value": N, "unit": "sec", ..., "queries": {...}}
+Method: one tuned session; before timing, every table is cached and
+the bucketed orders/lineitem layout is staged (`warm`); each query is
+then timed twice with plan build plus a `noop` write inside the timed
+region, and the min is reported (`time_query`). The benched set is the
+registry minus UNBENCHED, in registry order. When tools/stage_sf1.py
+has staged the 10x workload, a fixed sf1 subset is timed the same way
+over a warm OS page cache (tables not cached).
 
-Each query is forced end-to-end with the `noop` sink (full JVM-side
-execution, no driver collect), timed wall-clock after a warmup query
-that amortizes JVM/codegen startup.
+Prints ONE JSON line: summary scalars first, `queries` (name ->
+seconds) last, so a head-truncated capture still ends with per-query
+pairs. The full document, plus the sf1 section, goes to the sidecar
+tools/bench_sidecar_last.json, overwritten every run (copy it to a
+named tools/bench_local_*.json to keep a run).
 
-Line-size contract (r13, VERDICT r12 task 2): the driver's stdout
-capture is bounded, and BENCH_r03..r11 all came back `parsed: null`
-with only a truncated tail — so the printed line carries ONLY the
-summary scalars plus the per-query seconds (compact separators,
-summary keys first, `queries` last so even a head-truncated tail
-still yields per-query pairs), while the bulky sections (`retimed`
-detail, the sf1 scale block) go to a sidecar file the line references
-(`tools/bench_sidecar_last.json`, overwritten per run — copy it to a
-named tools/bench_local_*.json artifact to keep a run). Nothing about
-the timing methodology changed; the `queries` dict still contains
-every benched name with its adjudicated min.
-
-Phantom-host adjudication asymmetry (disclosed): queries whose
-min-of-2 exceeds 2x the prior committed artifact are re-timed
-interleaved min-of-3 (up to 25 of them), so slow outliers get up to 5
-min-samples while fast outliers keep 2 — totals are slightly
-flattered relative to a flat min-of-2 policy, never lowered below the
-plain min of this session's own runs for non-movers. Both numbers are
-preserved in the sidecar's `retimed` section.
+`warm` and `time_query` are the one timing harness: the tools that time
+queries call them, and so can a REPL (`from bench import warm,
+time_query`).
 """
 
 from __future__ import annotations
@@ -37,372 +28,15 @@ import os
 import re
 import sys
 import time
+from typing import Callable
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Headline set: one per operator family (join-heavy agg, windows, arrays,
-# sampling, dedup/similarity/text once registered). Missing names are
-# skipped so the bench never breaks while coverage grows.
-HEADLINE = [
-    "q5_regional_revenue",           # 4-way join + agg (entry flagship)
-    "q1_pricing_summary",            # TPC-H Q1-shaped wide agg
-    "q3_top_orders",                 # join + agg + top-k
-    "q_window_topk_per_group",       # window rank over big table
-    "q_window_running_sum",          # running frame window
-    "q_rollup",                      # grouping sets
-    "q_stem_join_concat",            # array join + decimal checksum
-    "q_seeded_cap_sample",           # md5-rank per-group sample
-    "q_channel_variance_topk",       # explode + agg + window
-    "q_exact_dedup",                 # exact dedup over documents
-    "q_minhash_near_dup",            # MinHash-LSH near-dup pairs
-    "q_ann_cosine_topk",             # brute cosine top-k
-    "q_lang_id",                     # text n-gram language ID
-    "q_token_stats",                 # token counting / quality
-    "q_stream_tumbling_window",      # batch-equivalent streaming window
-    "q_simhash_hamming",             # simhash + blocked hamming pairs
-    "q_ngram_jaccard",               # shared-shingle jaccard verify
-    "q_cosine_near_dup",             # blocked cosine near-dup pairs
-    "q_asof_join",                   # forward-fill as-of join
-    "q_salted_distinct",             # salted exact distinct
-    "q_stream_session_window",       # gaps-and-islands sessions
-    "q_ann_lsh_recall",              # multi-table LSH index vs exact top-k
-    "q_corpus_curation",             # quality filter -> dedup -> lang rollup
-    "q_dedup_components",            # near-dup clusters (min-label prop)
-    "q_bucketed_join",               # zero-Exchange co-located fact join
-    "q_embedding_sq8",               # int8 scalar quantization profile
-    "q14_promo_revenue",             # conditional-agg ratio over dim join
-    # r10: the full TPC-H family joins the census — every shape the
-    # r9/r10 hint sweeps touched now carries bench evidence, and the
-    # census rule for this family is principled (ALL of them), not a
-    # spotlight choice (VERDICT r9 observation 3)
-    "q2_min_cost_supplier",          # decorrelated scalar-MIN bridge join
-    "q6_forecast_revenue",           # single-scan predicate agg
-    "q7_trade_flows",                # nation-pair volume flows
-    "q8_market_share",               # 8-way join market share
-    "q9_product_profit",             # 6-way join profit rollup
-    "q10_returned_items",            # returned-item revenue top-k
-    "q11_important_parts",           # broadcast-scalar threshold filter
-    "q12_priority_lines",            # shipmode conditional counts
-    "q13_order_count_distribution",  # outer-join count histogram
-    "q15_top_supplier",              # scalar-max revenue view join
-    "q16_supplier_part_counts",      # anti-join distinct counts
-    "q17_small_quantity_revenue",    # per-part avg threshold scan
-    "q18_large_volume_orders",       # large-order semi filter
-    "q19_disjunctive_join",          # disjunctive predicate join
-    "q20_dominant_suppliers",        # semi-join dominance filter
-    "q21_waiting_suppliers",         # window-decorrelated EXISTS pair
-    "q22_dormant_customers",         # anti-join + scalar-avg filter
-    "q_repetition_filter",           # row-local Gopher repetition metrics
-    "q_pii_redaction",               # regex PII scrub + lang rollup
-    "q_domain_rollup",               # URL-domain provenance rollup
-    "q_ann_sq8_rescore",             # SQ8 shortlist + exact rescore ANN
-    "q_semantic_dedup",              # IVF -> cosine -> components -> survivors
-    "q_stream_stream_join",          # watermarked interval join (batch form)
-    "q_stratified_split",            # deterministic train/val/test assignment
-    "q_substring_span_dedup",        # char-40-gram anchor span dedup
-    "q_contamination_check",         # benchmark n-gram leakage scan
-    "q_sequence_packing",            # token-budget context-bin packing
-    "q_tfidf_topterms",              # per-lang TF-IDF top terms
-    "q_cms_heavy_hitters",           # count-min-sketch frequency estimates
-    "q_zorder_layout",               # Morton-key range split + file stats
-    "q_mixture_resample",            # equal-token mixture downsampling
-    "q_variant_events",              # VARIANT semi-structured ingest
-    "q_arrow_quantize",              # mapInArrow fixed-point quantization
-    "q_incremental_dedup",           # cross-snapshot hash-index dedup
-    "q_quality_dedup",               # argmax-quality dedup survivorship
-    "q_lm_quality_score",            # bigram-LM fluency quality filter
-    "q_training_pipeline",           # composed quality->dedup->decontam funnel
-    "q_hll_distinct_merge",          # mergeable HLL cardinality sketches
-    "q_approx_quantile_profile",     # mergeable GK quantile sketch profile
-    "q_audio_chunk_rms",             # audio PCM chunk peak/RMS profile
-    "q_stream_stream_outer_join",    # left-outer interval join (funnel)
-    "q_doc_chunking",                # RAG overlapping token windows
-    "q_bm25_topdocs",                # BM25 retrieval top-20
-    "q_ts_correlation_search",       # time-series correlation search
-    "q_ts_pattern_match",            # sliding-window subsequence match
-    "q_snm_dedup",                   # sorted-neighborhood near-dup pairs
-    "q_bpe_merges",                  # BPE tokenizer-merge induction
-    "q_cohort_retention",            # first-seen cohort retention matrix
-    "q_event_funnel",                # ordered conversion funnel
-    "q_cdc_upsert",                  # MERGE-shaped latest-wins snapshot upsert
-    "q_pagerank_copurchase",         # fixed-point Pregel-style PageRank
-    "q_pmi_cooccurrence",            # skip-gram PMI association lift
-    "q_url_canonicalize",            # crawl URL canonical dedup rollup
-    "q_phash_near_dup",              # aHash image near-dup band join
-    "q_dq_constraints",              # one-pass Deequ-style table health
-    "q_feature_hashing",             # signed hashing-trick featurizer
-    "q_inverted_index",              # posting-list index build
-    "q_histogram_profile",           # equi-width distribution profile
-    "q_temperature_mixture",         # sqrt-weighted language budgets
-    "q_salted_join",                 # salt+replicate hot-key join
-    "q_sessionize_events",           # gaps-and-islands session ids
-    "q_python_datasource",           # Spark 4 pluggable Python source
-    "q_corrupt_json_permissive",     # PERMISSIVE corrupt-row quarantine
-    "q_negative_sampling",           # unigram^0.75 sampling table
-    "q_window_range_frame",          # trailing-interval RANGE window
-    "q_unpivot_metrics",             # wide-to-long melt reshaping
-    "q_null_safe_join",              # NULL-safe equality join
-    # round-4 additions
-    "q_triangle_count",              # sparsified co-customer triangles
-    "q_zorder_pruning",              # min/max file-skipping audit
-    "q_bucketed_agg",                # zero-Exchange keyed rollup
-    "q_channel_topk_rowlocal",       # row-local array_sort top-k
-    "q_path_rollup",                 # parsed-path hierarchy ROLLUP
-    "q_not_in_anti_join",            # null-aware anti join trio
-    "q_semantic_dedup_lsh",          # fully-oracled SemDeDup composition
-    "q_dedup_components_star",       # O(log n) large/small-star components
-    "q_jdbc_roundtrip",              # embedded-Derby JDBC round-trip
-    "q_edit_distance_join",          # Ed-Join prefix-filter similarity join
-    "q_snapshot_time_travel",        # MVCC manifest snapshot reads
-    "q_skew_diagnosis",              # exact-ppm hot-key report
-    # back in the headline set since r7: the exact equi-depth histogram
-    # now runs the two-pass rownum + arithmetic-NTILE form (no
-    # single-partition sort) — bit-identical buckets, scale-safe plan.
-    "q_equidepth_histogram",
-    "q_drift_psi",                   # population-stability drift
-    "q_scd2_join",                   # SCD2 temporal dimension join
-    "q_global_rownum",               # two-pass global row numbering
-    "q_scene_cuts",                  # video scene-cut detection
-    "q_mad_outliers",                # median/MAD robust outliers
-    "q_compaction_plan",             # small-file merge planning
-    "q_recursive_cte_chain",         # WITH RECURSIVE hierarchy walk
-    "q_lateral_topn",                # LATERAL correlated top-n
-    "q_session_window_native",       # native session-merge aggregate
-    "q_map_metrics",                 # map HOF algebra rollup
-    "q_file_metadata",               # hidden _metadata provenance
-    "q_hilbert_layout",              # Hilbert-curve range split
-    "q_auc_evaluation",              # exact rank-sum AUC metrics
-    "q_calibration_bins",            # score-decile reliability
-    "q_stream_jdbc_exactly_once",    # epoch-txn JDBC stream sink
-    "q_grouping_id_rollup",          # subtotal-vs-NULL disambiguation
-    "q_try_arithmetic",              # ANSI-safe dirty-data math
-    "q_pandas_udaf",                 # Series->scalar Arrow UDAF
-    "q_pandas_scalar_udf",           # Series->Series Arrow UDF
-    "q_xml_roundtrip",               # Spark 4 built-in XML format
-    "q_frequent_pairs",              # market-basket support/lift
-    "q_dictionary_encode",           # dense-id vocabulary build
-    "q_lpa_communities",             # deterministic LPA communities
-    "q_sequence_gaps",               # id-space hole audit
-    "q_snapshot_diff",               # full-outer reconciliation
-    "q_benford_audit",               # first-digit chi-square audit
-    "q_entropy_profile",             # per-column Shannon entropy
-    "q_contribution_share",          # ratio-to-report window
-    "q_yoy_growth",                  # trend LAG over year series
-    "q_touch_attribution",           # first/last-touch matrix
-    "q_grid_knn_join",               # cell-bucketed spatial KNN
-    "q_max_concurrency",             # sweep-line peak occupancy
-    "q_merge_intervals",             # coverage-span consolidation
-    "q_record_linkage",              # fuzzy-match golden records
-    "q_quantile_band_join",          # broadcast-boundary banding
-    "q_rfm_segmentation",            # 8-cell RFM rollup
-    "q_ab_test",                     # two-proportion z readout
-    "q_seasonal_index",              # monthly seasonality ratios
-    "q_abc_analysis",                # Pareto revenue classes
-    "q_readability",                 # Flesch-input text ratios
-    "q_late_arriving_dim",           # UNKNOWN-member fact parking
-    "q_string_agg_report",           # ordered listagg roster
-    "q_date_spine",                  # zero-fill daily calendar
-    # round-5 additions
-    "q_bucket_pruned_lookup",        # bucket-file-pruned point scan
-    "q_stem_coverage",               # stem-alignment coverage matrix
-    "q_hash_bernoulli_sample",       # zero-shuffle hash sampling
-    "q_kmv_distinct",                # oracled KMV distinct sketch
-    "q_occlusion_sensitivity",       # codegen occlusion saliency
-    # round-6 additions
-    "q_stream_chained_windows",      # stacked window-over-window aggs
-    "q_bucketed_semi_join",          # zero-Exchange LEFT SEMI merge join
-    "q_extension_audit",             # extension/label intake audit
-    "q_stream_static_anti_join",     # broadcast blocklist anti join
-    "q_bucketed_window_rank",        # zero-Exchange bucket-key window
-    "q_bucket_coalesced_join",       # 8-bkt x 4-bkt coalesced merge join
-    "q_key_depth_audit",             # malformed-key intake guard
-    "q_null_skew_shunt_join",        # NULL-key skew shunt outer join
-    "q_weighted_sample",             # Efraimidis-Spirakis draws
-    "q_ks_drift",                    # exact two-sample KS per segment
-    "q_linear_interpolation",        # hourly lerp gap fill
-    "q_blocking_quality",            # ER reduction ratio / completeness
-    "q_winnowing_fingerprints",      # MOSS winnowing selection
-    "q_sparse_cosine_pairs",         # TF-IDF postings similarity join
-    "q_image_tiling",                # binary patch fan-out
-    "q_kcore",                       # fixed-round k-core peeling
-    "q_ngram_novelty",               # first-seen 5-gram novelty
-    "q_robust_scale",                # median/IQR robust transform
-    "q_audio_vad_segments",          # energy-threshold VAD islands
-    "q_skyline_pareto",              # per-segment Pareto frontier
-    "q_session_path_ngrams",         # clickstream transition mining
-    "q_pr_curve_ap",                 # exact PR-curve AP + best F1
-    "q_decile_lift",                 # gains table, broadcast deciles
-    "q_bloom_prefilter_dedup",       # SQL Bloom prefilter + FP audit
-    "q_dynamic_partition_overwrite", # partition-scoped table refresh
-    "q_merge_into_emulation",        # three-clause MERGE audit
-    "q_compaction_execute",          # fragmented -> compacted rewrite
-    "q_upset_overlaps",              # bitmask set-combination counts
-    "q_bitmap_exact_distinct",       # mergeable exact bitmap distinct
-    "q_time_weighted_avg",           # integer-exact TWAP
-    "q_link_prediction",             # common-neighbor link scores
-    "q_weighted_median",             # integer-weight order statistic
-    "q_chi2_independence",           # contingency chi-square
-    "q_gini_concentration",          # per-segment Lorenz inequality
-    "q_cusum_changepoint",           # exact-prefix CUSUM peak scan
-    "q_array_smooth",                # row-local moving-average HOF
-    "q_hotkey_split_join",           # hot/cold key-temperature join
-    "q_interval_overlap_join",       # week-bucket interval matching
-    "q_centroid_classifier",         # oracled Rocchio confusion matrix
-    "q_quantile_normalize",          # pooled-shape alignment
-    "q_cohort_ltv",                  # cumulative LTV curve
-    "q_peak_detection",              # prominence-gated local maxima
-    "q_rolling_zscore",              # trailing-window anomaly flags
-    "q_ols_elasticity",              # one-pass integer-moment OLS
-    "q_sample_bias_audit",           # sampling goodness-of-fit QA
-    "q_mllib_minhash_join",          # MLlib MinHashLSH, exact-verified
-    "q_mllib_brp_lsh_join",          # MLlib BRP-LSH, exact-verified
-    "q_approx_topk_terms",           # Spark 4 native top-k sketch
-    "q_mllib_summarizer",            # tree-aggregated vector stats
-    "q_containment_dedup",           # asymmetric small-in-big dedup
-    "q_histogram2d",                 # joint heat-map binning
-    "q_ohlc_candles",                # one-pass min_by/max_by candles
-    "q_trailing_distinct_users",     # explode-window rolling WAU
-    "q_fk_integrity_audit",          # six-FK orphan report
-    "q_forecast_backtest_mape",      # seasonal-naive MAPE backtest
-    "q_group_mode",                  # deterministic exact mode
-    "q_kwic_concordance",            # keyword-in-context extraction
-    "q_normalized_exact_dedup",      # canonicalize-then-hash dedup
-    "q_partition_advisor",           # layout-key candidate report
-    "q_cumulative_distinct_users",   # first-seen running reach
-    "q_bounce_rate",                 # per-day single-event sessions
-    "q_degree_assortativity",        # hub-to-hub edge correlation
-    "q_percentile_trend",            # monthly p50/p95/p99 series
-    "q_js_divergence_sources",       # corpus-shift JS divergence
-    "q_zipf_fit",                    # rank-frequency power-law QA
-    "q_conversion_latency",          # signup->purchase latency card
-    "q_two_hop_reach",               # strict distance-2 audience
-    "q_kaplan_meier",                # KM retention curve
-    "q_acf_daily_revenue",           # calendar-lag autocorrelation
-    "q_mutual_information",          # categorical MI audit
-    "q_ndcg_mrr",                    # per-group ranking eval
-    "q_frequent_triples",            # apriori level-3 baskets
-    "q_local_clustering",            # clustering coefficient
-    "q_datasketches_native",         # native HLL/theta sketch algebra
-    "q_unigram_perplexity",          # corpus-LM perplexity gate
-    "q_association_rules",           # basket confidence/lift rules
-    "q_itemitem_cf",                 # item-item cosine neighbors
-    "q_bfs_distance",                # BFS frontier supersteps
-    "q_seasonal_anomaly",            # dow-adjusted robust-z anomalies
-    "q_centroid_similarity",         # label-centroid cosine matrix
-    "q_burstiness",                  # inter-arrival burstiness
-    "q_topk_grouping_sets",          # multi-grain cell top-k
-    "q_knn_classifier",              # 5-NN hold-out eval (brute baseline)
-    "q_moment_merge",                # mergeable moment partials
-    "q_lsh_dedup_eval",              # dedup precision/recall card
-    "q_sample_estimate",             # AQP hash-sample scorecard
-    "q_modularity",                  # community-quality Q score
-    "q_dataset_card",                # corpus release datasheet
-    "q_boilerplate_suppress",        # C4-style repeated-span removal
-    "q_phrase_search",               # positional-index phrase match
-    "q_markov_transitions",          # next-event conditional matrix
-    "q_k_anonymity",                 # QI generalization ladder audit
-    "q_forward_fill",                # LOCF calendar-spine gap fill
-    "q_join_size_estimate",          # CBO stats-only join cardinality
-    "q_trending_terms",              # heavy-hitter rank-delta movers
-    "q_analyze_stats",               # ANALYZE-style column statistics
-    "q_bootstrap_ci",                # B=100 half-sample bootstrap CI
-    "q_dp_count_release",            # Laplace-noised count release
-    "q_spearman_corr",               # daily rank correlation
-    "q_hhi_concentration",           # HHI market concentration
-    "q_target_encoding",             # smoothed target-mean encoding
-    "q_emd_lengths",                 # exact 1-D Wasserstein distance
-    "q_heaps_law",                   # vocabulary-growth OLS fit
-    "q_largest_remainder",           # Hamilton quota apportionment
-    "q_degree_powerlaw",             # scale-free degree-exponent fit
-    "q_simpson_diversity",           # per-source language diversity
-    "q_rrf_fusion",                  # hybrid-retrieval rank fusion
-    "q_lang_confusion",              # lang-ID eval confusion matrix
-    "q_stratified_kfold",            # deterministic CV fold audit
-    "q_rolling_median",              # exact moving order statistic
-    "q_brier_profile",               # per-bin Brier calibration mass
-    "q_lorenz_deciles",              # inequality curve (broadcast bands)
-    "q_source_vocab_jaccard",        # pairwise source vocab overlap
-    "q_bigram_perplexity",           # conditional-LM quality filter
-    "q_winsorized_mean",             # trimmed robust location
-    "q_grid_dbscan",                 # density clustering, cell-bounded
-    "q_centroid_silhouette",         # cluster quality, no pair join
-    "q_dup_cluster_sizes",           # near-dup cluster distribution
-    "q_ab_srm",                      # sample-ratio-mismatch guard
-    "q_rare_category_collapse",      # encoder cardinality guard
-    "q_dow_hour_heatmap",            # calendar seasonality cells
-    "q_dau_mau_stickiness",          # engagement ratio by month
-    "q_head_coverage",               # per-source N50 mass profile
-    "q_embedding_norm_audit",        # vector-store QA gate
-    "q_mmr_rerank",                  # serving-time diversity rerank
-    "q_neyman_allocation",           # optimal stratified design
-    "q_encoding_profile",            # RLE/DICT layout advisor
-    "q_chisq_residuals",             # per-cell dependence drill-down
-    "q_quantization_error",          # int8 reconstruction cost
-    "q_new_vs_returning",            # growth accounting by day
-    "q_cohens_d",                    # effect size next to the z
-    "q_seasonality_strength",        # dow variance decomposition
-    "q_rake_keywords",               # unsupervised keyphrases
-    "q_incremental_file_pickup",     # modifiedAfter listing prune
-    "q_batch_retrieval",             # multi-query one-pass scoring
-    "q_l_diversity",                 # homogeneity-attack audit
-    "q_retention_audit",             # TTL partition sweep
-    "q_table_checksum",              # replication content hash
-    "q_catalog_census",              # warehouse discovery scan
-    "q_embedding_drift",             # batch centroid-shift check
-    "q_price_index",                 # Laspeyres composite index
-    "q_dup_flow_matrix",             # cross-source dup provenance
-    "q_fisher_scores",               # dimension-level attribution
-    "q_permutation_importance",      # md5-permutation probe importance
-    "q_intradoc_redundancy",         # row-local template detector
-    "q_tokenizer_fertility",         # subwords/word mixture factor
-    "q_span_corruption_plan",        # T5 denoising mask audit
-    "q_order_to_ship_latency",       # SLA percentile profile
-    "q_fk_fanout_profile",           # join multiplicity histogram
-    "q_ts_feature_matrix",           # leakage-safe forecast features
-    "q_effective_sample_size",       # Kish ESS weighting diagnostic
-    "q_anova_f",                     # k-group variance decomposition
-    "q_theil_index",                 # decomposable inequality index
-    "q_cuped_variance_reduction",    # pre-period covariate adjustment
-    "q_knee_detection",              # concentration-curve elbow
-    "q_runs_test",                   # daily-revenue randomness check
-    "q_markov_entropy_rate",         # next-event predictability
-    "q_conformal_interval",          # distribution-free intervals
-    "q_price_volume_mix",            # revenue bridge decomposition
-    "q_dsir_resample",               # hashed-LM importance selection
-    "q_diff_in_diff",                # quasi-experimental interaction
-    "q_ams_f2_sketch",               # self-join size estimator
-    "q_curriculum_plan",             # easy-to-hard token phasing
-    "q_hill_tail_index",             # Pareto exponent of the tail
-    "q_overdispersion",              # Poisson vs NB count check
-    "q_shapley_attribution",         # exact coalition channel credit
-    "q_wilcoxon_signed_rank",        # paired nonparametric shift
-    "q_logrank_test",                # survival-curve comparison
-    "q_eb_shrinkage",                # beta-binomial rate pooling
-    "q_mcnemar_filters",             # paired filter disagreement
-    "q_rank_biased_overlap",         # top-weighted rank similarity
-    "q_direct_standardization",      # segment-mix-adjusted means
-    "q_cem_att",                     # coarsened exact matching
-    "q_granger_lag1",                # cross-lag predictive gain
-    "q_burrows_delta",               # source stylometry distance
-    "q_split_half_reliability",      # quality-score stability
-    "q_dead_dimension_audit",        # embedding liveness/energy
-    "q_rate_mix_decomposition",      # ratio-metric bridge
-    "q_quantile_treatment_effect",   # distributional effect profile
-    "q_simpson_reversal",            # aggregation-artifact screen
-    "q_mixture_epoch_budget",        # data-constrained epoch plan
-    "q_vocab_coverage_curve",        # tokenizer sizing analysis
-    "q_session_timeout_sweep",       # sessionizer parameter sweep
-    "q_icc_customers",               # clustering-strength ICC(1)
-    "q_mutual_nn_alignment",         # exact-integer mutual NN pairs
-    "q_age_period_cohort",           # APC mean-polish residuals
-]
-
 # ---------------------------------------------------------------------------
-# Bench census (r12, VERDICT r11 task 7). Every registered query is
-# either in HEADLINE above or here WITH a reason — a pytest
-# (tests/test_registry.py::test_bench_census_covers_registry) derives
-# the census from the registry minus this list, so a future query
-# cannot silently skip bench. Reason vocabulary:
+# Bench census. Every registered query is benched unless it is listed
+# here WITH a reason, so a new query is benched by default
+# (tests/test_registry.py::test_bench_census_covers_registry checks the
+# names and reasons). Reason vocabulary:
 #   scalar-demo : tiny fixed-cardinality scalar/demo fixture — the
 #                 timing would measure session overhead, not operator
 #                 cost (the family's scale row is a benched sibling)
@@ -447,8 +81,8 @@ UNBENCHED: dict[str, str] = {
     "q_ann_ivf_recall": "eager-ml",  # MLlib k-means IVF fit
     "q_cosine_near_dup_ivf": "eager-ml",  # MLlib k-means IVF fit
     # tiny scalar/demo fixtures (benched siblings carry the family's
-    # scale evidence: the relational/TPC-H family, window family,
-    # dedup family, text family are all in HEADLINE)
+    # scale evidence: the relational/TPC-H, window, dedup and text
+    # families all have benched queries)
     "q_cohens_kappa": "scalar-demo",
     "q_observe_metrics": "scalar-demo",
     "q_range_join": "scalar-demo",
@@ -502,83 +136,49 @@ UNBENCHED: dict[str, str] = {
 }
 
 
-def _bench_doc_queries(doc: dict, sf: float | None) -> dict[str, float]:
-    """Per-query seconds out of one bench artifact, handling both
-    shapes on disk: this script's own output (top-level `queries`) and
-    the driver's BENCH_r*.json wrapper ({n, rc, sf, tail, parsed} —
-    `parsed` is the JSON line when it fit, else `tail` holds a
-    HEAD-TRUNCATED stdout suffix). For the truncated case, regex the
-    "name": seconds pairs out of the tail SLICED AT `"sf1":` — the
-    pre-r13 key order put the sf1 scale block (same names, 10x
-    timings) after the headline `queries` dict, and slicing there
-    keeps those from masquerading as sf0.1 priors (the r13 line has no
-    sf1 section at all — it lives in the sidecar — so the slice is a
-    no-op there; `retimed` entries are `"name": {...}` objects the
-    number-match regex skips). A partial prior (head lost to
-    truncation) just narrows the adjudication to the names it
-    covers."""
-    if doc.get("sf") != sf:
-        return {}
-    if isinstance(doc.get("queries"), dict):
-        src = doc["queries"]
-        return {n: float(v) for n, v in src.items()
-                if isinstance(v, (int, float))}
-    inner = doc.get("parsed")
-    if isinstance(inner, dict) and isinstance(inner.get("queries"), dict):
-        return {n: float(v) for n, v in inner["queries"].items()
-                if isinstance(v, (int, float))}
-    tail = doc.get("tail")
-    if isinstance(tail, str) and tail:
-        head = tail.split('"sf1":')[0]
-        pairs = re.findall(r'"(q[a-z0-9_]+)":\s*([0-9]+(?:\.[0-9]+)?)',
-                           head)
-        if pairs:
-            # drop the first name: truncation may have cut its digits
-            return {n: float(v) for n, v in pairs[1:]}
-    return {}
+def benched() -> list[str]:
+    """The benched set: every registered query not in UNBENCHED, in
+    registry order."""
+    from bigdata_deepfakeanalysis_spark.registry import all_queries
+
+    return [n for n in all_queries() if n not in UNBENCHED]
 
 
-def _load_prior_bench(sf: float | None) -> dict[str, float]:
-    """Per-query seconds from the most recent committed BENCH_r*.json
-    at the same SF (the driver's own prior-round artifact — the
-    baseline every cross-round regression question is asked against),
-    back-filled from the newest tools/bench_local_*.json for names the
-    driver artifact's truncated tail lost. Empty dict when nothing at
-    this SF exists, which disables the adjudication pass rather than
-    comparing apples to oranges. Driver artifacts that record a
-    DIFFERENT core count (the scaling-block BENCH_r*_c8.json runs) are
-    skipped for the same reason — their uniformly slower seconds would
-    mask genuine >2x movers at the full core count (r13)."""
-    import glob
+def warm(spark, sf_dir: str, cache: bool) -> None:
+    """Warm every table whose parquet is present in `sf_dir`.
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    here = os.path.dirname(os.path.abspath(__file__))
-    prior: dict[str, float] = {}
-    for pattern in (
-        os.path.join(here, "BENCH_r*.json"),
-        os.path.join(here, "tools", "bench_local_*.json"),
-    ):
-        # newest by mtime, not filename — bench_local_r9 sorts after
-        # bench_local_r11 lexicographically
-        for path in sorted(glob.glob(pattern),
-                           key=os.path.getmtime, reverse=True):
-            try:
-                with open(path) as f:
-                    doc = json.load(f)
-            except (OSError, json.JSONDecodeError):
-                continue
-            if (
-                cpus is not None
-                and doc.get("cpus") is not None
-                and str(doc["cpus"]) != str(cpus)
-            ):
-                continue
-            got = _bench_doc_queries(doc, sf)
-            if got:
-                for n, v in got.items():
-                    prior.setdefault(n, v)  # BENCH_r* takes precedence
-                break  # newest artifact of this pattern only
-    return prior
+    With `cache`, each table is cached (Spark's CacheManager substitutes
+    the in-memory relation for every later identical scan) and the
+    bucketed orders/lineitem layout is staged: table prep the bucketed
+    queries amortize, so its cost lands in setup, not in a query.
+    Without it, one count() per table only warms the OS page cache."""
+    from bigdata_deepfakeanalysis_spark.catalog import TABLES, table
+    from bigdata_deepfakeanalysis_spark.operators.bucketing import (
+        stage_bucketed,
+    )
+
+    present = [
+        t for t in TABLES
+        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
+    ]
+    for t in present:
+        df = table(spark, sf_dir, t)
+        (df.cache() if cache else df).count()
+    if cache and {"orders", "lineitem"} <= set(present):
+        stage_bucketed(spark, sf_dir)
+
+
+def time_query(build: Callable, runs: int) -> list[float]:
+    """Seconds of each of `runs` executions of `build()` (a thunk
+    returning a DataFrame) forced end-to-end through a `noop` write.
+    Plan build is inside the timed region: iterative operators run
+    their eager checkpoint jobs while building."""
+    secs = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        build().write.format("noop").mode("overwrite").save()
+        secs.append(time.perf_counter() - t0)
+    return secs
 
 
 def main() -> None:
@@ -588,139 +188,43 @@ def main() -> None:
 
     spark = get_spark("bench")
     queries = all_queries()
+    warm(spark, SF_DIR, cache=True)
 
-    # Resolve the headline set against the registry; fall back to the
-    # flagship via __spark_entry__ if a name moved.
-    names = [n for n in HEADLINE if n in queries]
-    missing = [n for n in HEADLINE if n not in queries]
-
-    # Warmup: cache every table (file listing, footers, decode) so the
-    # timed section measures the operators, not 21× repeated scan setup.
-    # Spark's CacheManager substitutes the InMemoryRelation for every
-    # later identical scan plan, mirroring a warm cluster's page cache.
-    from bigdata_deepfakeanalysis_spark.catalog import TABLES, table
-
-    for t in TABLES:
-        try:
-            table(spark, SF_DIR, t).cache().count()
-        except Exception:
-            pass
-
-    # Bucketed-table ingest is table PREP (the pay-once shuffle the
-    # bucketed join exists to amortize), not per-query work — stage it
-    # in warmup like the cache fill; its cost lands in setup_sec.
-    try:
-        from bigdata_deepfakeanalysis_spark.operators.bucketing import (
-            stage_bucketed,
+    # Min of two runs: the host is a co-tenant VM and single runs show
+    # 2-5x outliers from neighbour load (measured q_ngram_jaccard 2.9 s
+    # vs 15.6 s back to back with identical plans).
+    def min_of_2(name: str, sf_dir: str) -> float:
+        return round(
+            min(time_query(lambda: queries[name](spark, sf_dir), 2)), 3
         )
 
-        stage_bucketed(spark, SF_DIR)
-    except Exception:
-        pass
-
-    # Two timed runs per query, report the min: the container is a
-    # co-tenant VM and single runs show 2-5× outliers from host
-    # contention (measured q_ngram_jaccard 2.9 s vs 15.6 s back to
-    # back with identical plans). Min-of-N isolates the engine's cost
-    # from the neighbor's; the flag below records the policy.
     t_first_query = time.time()
-    timings: dict[str, float] = {}
-    for name in names:
-        best = None
-        for _ in range(2):
-            # time plan build + execution: iterative operators
-            # (connected components, LSH-verify) run eager checkpoint
-            # actions during build, which a write-only timer would
-            # silently exclude
-            t0 = time.time()
-            df = queries[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
+    timings = {n: min_of_2(n, SF_DIR) for n in benched()}
 
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
-
-    # ---- phantom-host adjudication (r12, VERDICT r11 task 4) --------
-    # r10 needed 7 and r11 needed 13 HAND-run tools/time_queries.py
-    # re-times for >2x movers vs the prior round on untouched code —
-    # the documented co-tenant-host class. Automate it: load the most
-    # recent committed BENCH_r*.json at the same SF, find queries whose
-    # min-of-2 came out >2x the prior round, and re-time those
-    # INTERLEAVED min-of-3 (round-robin across movers, the same
-    # protocol the hand adjudications used — interleaving means a
-    # transient load spike can't inflate one query's all three runs).
-    # Both numbers land in the artifact: `queries` carries the final
-    # adjudicated min (consistent with the min-of-N policy), `retimed`
-    # preserves the pre-adjudication value and the prior-round base.
-    retimed: dict[str, dict] = {}
-    prior = _load_prior_bench(sf)
-    if prior:
-        movers = sorted(
-            (
-                n
-                for n, t in timings.items()
-                if prior.get(n, 0) > 0 and t > 2 * prior[n]
-            ),
-            key=lambda n: timings[n] / prior[n],
-            reverse=True,
-        )[:25]  # bound the adjudication pass; >25 movers = host story
-        if movers:
-            best3 = {n: timings[n] for n in movers}
-            for _ in range(3):
-                for name in movers:
-                    t0 = time.time()
-                    df = queries[name](spark, SF_DIR)
-                    df.write.format("noop").mode("overwrite").save()
-                    best3[name] = min(best3[name], time.time() - t0)
-            for name in movers:
-                retimed[name] = {
-                    "prior": prior[name],
-                    "first_min2": timings[name],
-                    "interleaved_min3": round(best3[name], 3),
-                }
-                timings[name] = round(best3[name], 3)
-
-    total = round(sum(timings.values()), 3)
-    # Printed-line document: summary scalars first, `queries` LAST
-    # (a head-truncated capture still ends with per-query pairs), and
-    # the bulky `retimed` / `sf1` sections live in the sidecar only —
-    # see the module docstring for the size contract.
     out = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
         "n_queries": len(timings),
-        # startup + cache-fill + bucketed staging only; the discarded
-        # non-min runs are NOT in here (they'd read as setup bloat)
+        # startup + cache fill + bucketed staging only
         "setup_sec": round(t_first_query - t_setup, 1),
-        # cache policy marker: tables are cached before timing (warm
-        # run — operator cost, not scan setup). BENCH_r01 was cold;
-        # r02+ are warm — compare rounds with the same flag only.
+        # tables cached before timing (r02+; BENCH_r01 was cold)
         "warm_cache": True,
-        # noisy-neighbor policy: each query timed twice, min reported
-        # (r03+; r01/r02 were single-run).
+        # each query timed twice, min reported (r03+)
         "runs_per_query": 2,
         "agg": "min",
-        "skipped": missing,
-        # phantom-host adjudication (r12+): >2x movers vs the prior
-        # BENCH_r*.json at the same SF are re-timed min-of-3
-        # interleaved in-session; `queries` holds the adjudicated min;
-        # the sidecar's `retimed` section preserves the
-        # pre-adjudication number and the prior-round base.
-        "retimed_n": len(retimed),
         "sidecar": "tools/bench_sidecar_last.json",
         "queries": timings,
     }
-    sidecar = {"retimed": retimed}
+    sidecar = {}
 
-    # ---- sf1 section (round-3 VERDICT stretch item) -----------------
-    # Runs ONLY if tools/stage_sf1.py already staged the 10x fact
-    # workload (~170 MB): TPC-H-shaped joins at ~6M lineitem rows, with
-    # AQE skew handling + runtime filters active (session confs). Kept
-    # out of the headline total so rounds stay comparable.
+    # sf1 section: runs only if tools/stage_sf1.py already staged the
+    # 10x fact workload (~170 MB), with AQE skew handling and runtime
+    # filters active (session confs). Kept out of the headline total.
     try:
         from tools.stage_sf1 import sf1_dir
 
@@ -809,32 +313,9 @@ def main() -> None:
                 # 3x rebuild).
                 "q_dup_cluster_sizes",
             ]
-            # Warm the OS page cache with one pass per sf1 table (same
-            # warm-cache policy as the sf0.1 headline section, and the
-            # realistic cluster condition): r6 change — the previous
-            # cold-cache policy let a co-tenant IO spike during the
-            # first parquet read inflate a row 7x (a 14.5 s
-            # q_minhash_near_dup reading whose interleaved recheck was
-            # 1.9 s), which reads as a phantom regression in a
-            # round-over-round diff.
-            for t in TABLES:
-                try:  # sf1 stages only the tables the section queries
-                    table(spark, str(sf1), t).count()
-                except Exception:
-                    pass
-            sf1_timings = {}
-            for name in sf1_names:
-                best = None
-                for _ in range(2):
-                    t0 = time.time()
-                    queries[name](spark, str(sf1)).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    dt = time.time() - t0
-                    best = dt if best is None else min(best, dt)
-                sf1_timings[name] = round(best, 3)
+            warm(spark, str(sf1), cache=False)
             sidecar["sf1"] = {
-                "queries": sf1_timings,
+                "queries": {n: min_of_2(n, str(sf1)) for n in sf1_names},
                 "note": (
                     "10x key-shifted sf0.1 facts + content-perturbed"
                     " documents/embeddings (tools/stage_sf1.py), dims"
@@ -846,12 +327,11 @@ def main() -> None:
             }
     except Exception as e:  # noqa: BLE001 — reported, never swallowed
         # a failed sf1 run must be distinguishable from a not-staged
-        # one (ADVICE r4): not-staged -> no "sf1" key at all;
-        # staged-but-broken -> explicit error entry
+        # one: not staged -> no "sf1" key; staged but broken -> error
         sidecar["sf1"] = {"error": f"{type(e).__name__}: {e}"}
 
-    # Sidecar: the full document (summary + queries + retimed + sf1),
-    # overwritten every run; failures to write never fail the bench.
+    # the sidecar carries the full document; failing to write it never
+    # fails the bench
     try:
         here = os.path.dirname(os.path.abspath(__file__))
         with open(os.path.join(here, out["sidecar"]), "w") as f:

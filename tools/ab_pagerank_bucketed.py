@@ -16,13 +16,33 @@
 #      is part of the query), then the same 3 supersteps off the
 #      bucketed scan.
 # Also prints the superstep-only decomposition (edges build vs loop).
+# Session and timing are bench.py's (`warm`, `time_query`).
 import sys
-import time
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bench import SF_DIR, time_query, warm
+from bigdata_deepfakeanalysis_spark.catalog import table
+
+
+def _edges(spark, sf_dir):
+    """Bipartite customer/supplier co-purchase edges, both directions
+    (customers even ids, suppliers odd)."""
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders")
+    pairs = (
+        li.select("l_orderkey", "l_suppkey")
+        .join(o.select("o_orderkey", "o_custkey"),
+              F.col("l_orderkey") == F.col("o_orderkey"))
+        .select((F.col("o_custkey") * 2).alias("c"),
+                (F.col("l_suppkey") * 2 + 1).alias("s"))
+        .distinct()
+    )
+    return pairs.select(
+        F.col("c").alias("src"), F.col("s").alias("dst")
+    ).unionByName(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
 
 
 def main() -> int:
@@ -31,29 +51,16 @@ def main() -> int:
     for a in argv:
         if a == "--rounds":
             rounds = int(next(argv))
-    sf_dir = "/root/testdata/sf0.1"
+    sf_dir = SF_DIR
 
-    from bigdata_deepfakeanalysis_spark.session import tune
-    from bigdata_deepfakeanalysis_spark.catalog import table, staging_dir
+    from bigdata_deepfakeanalysis_spark.catalog import staging_dir
     from bigdata_deepfakeanalysis_spark.operators.graph import (
         _BASE, _SCALE, _ITERS, pagerank_fixed,
     )
-    from tools.ab_pagerank import _edges
+    from bigdata_deepfakeanalysis_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    tune(spark)
-    for t in ("lineitem", "orders"):
-        table(spark, sf_dir, t).cache().count()
-
-    def run_a():
-        ranks = pagerank_fixed(_edges(spark, sf_dir))
-        ranks.write.format("noop").mode("overwrite").save()
+    spark = get_spark("ab-pagerank-bucketed")
+    warm(spark, sf_dir, cache=True)
 
     def pagerank_bucketed(iters=_ITERS):
         edges = _edges(spark, sf_dir).select(
@@ -111,9 +118,6 @@ def main() -> int:
             )
         return ranks
 
-    def run_b():
-        pagerank_bucketed().write.format("noop").mode("overwrite").save()
-
     # equality check once
     a = pagerank_fixed(_edges(spark, sf_dir))
     b = pagerank_bucketed()
@@ -122,19 +126,15 @@ def main() -> int:
     assert diff == 0
 
     # decomposition of arm A: edges build alone vs full
-    t0 = time.time()
-    ew = _edges(spark, sf_dir)
-    ew.write.format("noop").mode("overwrite").save()
-    print(f"edges-build noop: {time.time() - t0:.2f}s")
+    (t_edges,) = time_query(lambda: _edges(spark, sf_dir), 1)
+    print(f"edges-build noop: {t_edges:.2f}s")
 
     ta, tb = [], []
     for i in range(rounds):
-        t0 = time.time()
-        run_a()
-        ta.append(round(time.time() - t0, 3))
-        t0 = time.time()
-        run_b()
-        tb.append(round(time.time() - t0, 3))
+        (a_s,) = time_query(lambda: pagerank_fixed(_edges(spark, sf_dir)), 1)
+        (b_s,) = time_query(pagerank_bucketed, 1)
+        ta.append(round(a_s, 3))
+        tb.append(round(b_s, 3))
         print(f"round {i}: statusquo {ta[-1]}  bucketed {tb[-1]}",
               flush=True)
     print(

@@ -17,8 +17,9 @@ import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
+from bigdata_deepfakeanalysis_spark.catalog import TABLES
+
 SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 class ComplexCellError(TypeError):

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Time the DuckDB oracle SQL for each benched-and-oracled headline
+"""Time the DuckDB oracle SQL for each benched-and-oracled registry
 query at $SPARK_GRAFT_SF_DIR (default sf0.1) — the judge's yardstick.
 
 Prints one JSON line {"queries": {name: sec}, "timeouts": [...],
@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from bench import HEADLINE, SF_DIR
+from bench import SF_DIR, benched
 from bigdata_deepfakeanalysis_spark.catalog import TABLES
 from bigdata_deepfakeanalysis_spark.registry import all_oracles
 
@@ -74,7 +74,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     timeouts: list[str] = []
-    for name in HEADLINE:
+    for name in benched():
         sql = oracles.get(name)
         if sql is None:
             continue

@@ -7,9 +7,10 @@ task 3): measure time(sf5)/time(sf1) against the 5x row growth, so the
 Stages an sf5-equivalent (50 key-shifted, content-perturbed copies of
 sf0.1 — tools/stage_sf1.py's mechanism at copies=50) next to the sf1
 staging, then times each probe query INTERLEAVED A=sf1 / B=sf5 in one
-tuned session (warm page cache, one discarded warmup per arm, min of
---runs). Interleaving makes the ratio host-load-proof; absolute times
-are not comparable across sessions (see memory: phantom host load).
+tuned session with bench.py's harness (`bench.warm` of the page cache,
+`bench.time_query`; one discarded warmup per arm, min of --runs).
+Interleaving makes the ratio host-load-proof; absolute times are not
+comparable across sessions (co-tenant host load).
 
 Prints one JSON line per query:
     {"query", "sf1_sec", "sf5_sec", "ratio", "rows_ratio": 5.0,
@@ -31,10 +32,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from bench import time_query, warm
 
 # the three families the VERDICT names (MinHash/LSH dedup, tile-grid
 # mutual-NN/kNN, PageRank/LPA) + two linear references (exact dedup,
@@ -54,20 +56,6 @@ DEFAULT_PROBES = [
     "q_pagerank_copurchase",    # 3 supersteps on top-E edge list
     "q_lpa_communities",        # label propagation on top-E edge list
 ]
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
-
-
-def _warm(spark, d: str) -> None:
-    from bigdata_deepfakeanalysis_spark.catalog import table
-
-    for t in TABLES:
-        if os.path.exists(os.path.join(d, f"{t}.parquet")):
-            table(spark, d, t).count()
-
 
 def main() -> int:
     runs = 2
@@ -92,11 +80,10 @@ def main() -> int:
     names = names or DEFAULT_PROBES
 
     from bigdata_deepfakeanalysis_spark.registry import all_queries
-    from bigdata_deepfakeanalysis_spark.session import get_spark, tune
+    from bigdata_deepfakeanalysis_spark.session import get_spark
     from tools.stage_sf1 import sf1_dir, scale_dir, stage, stage_scale
 
     spark = get_spark("scale-probe")
-    tune(spark)
 
     def arm_dir(label: str):
         """Resolve + stage an arm: 'sf1' is the bench's own staging;
@@ -120,15 +107,13 @@ def main() -> int:
     d1, copies_a = arm_dir(arms[0])
     d5, copies_b = arm_dir(arms[1])
     rows_ratio = copies_b / copies_a
-    _warm(spark, str(d1))
-    _warm(spark, str(d5))
+    warm(spark, str(d1), cache=False)
+    warm(spark, str(d5), cache=False)
 
     qs = all_queries()
 
     def run_once(name: str, d: str) -> float:
-        t0 = time.monotonic()
-        qs[name](spark, d).write.format("noop").mode("overwrite").save()
-        return time.monotonic() - t0
+        return time_query(lambda: qs[name](spark, d), 1)[0]
 
     results = []
     for name in names:

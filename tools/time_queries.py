@@ -1,41 +1,37 @@
 #!/usr/bin/env python
-"""Interleaved timing harness for named registry queries — the
-generic form of tools/ab_semantic_dedup_lsh.py, for adjudicating
-cross-round bench moves (the r6/r7/r8 verdicts each needed one).
+"""Interleaved timing harness for named registry queries, for
+adjudicating cross-round bench moves.
 
 Usage:
     python tools/time_queries.py q_name [q_name ...]
         [--sf-dir DIR | --sf1] [--runs 3]
         [--ab key=value]          # arm B sets this conf, arm A unsets
 
-One tuned local[32] session, warm page cache (one count() per input
-table), one discarded warmup run per query, then `--runs` timed runs
-(interleaved A/B when --ab is given — only interleaved numbers are
-comparable; absolute times swing 2-5x with host load). Prints one JSON
-line per query: {"query", "sf_dir", "runs": [...], "min", plus
-"runs_b"/"min_b" under --ab}.
+Boots the bench's session (`session.get_spark`, local[$SPARK_GRAFT_CPUS])
+and warms it the way bench.py does at that scale (`bench.warm`: tables
+cached, or only the page cache for --sf1), then per query one discarded
+warmup run and `--runs` timed runs (`bench.time_query`), interleaved
+A/B when --ab is given. Only interleaved numbers are comparable;
+absolute times swing 2-5x with host load. Prints one JSON line per
+query: {"query", "sf_dir", "runs": [...], "min", plus "runs_b"/"min_b"
+under --ab}.
 """
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
+from bench import SF_DIR, time_query, warm
 
 
 def main() -> int:
     names: list = []
     runs = 3
     ab = None
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = SF_DIR
+    cache = True
     argv = iter(sys.argv[1:])
     for a in argv:
         if a == "--runs":
@@ -48,6 +44,7 @@ def main() -> int:
             p = sf1_dir()
             assert (p / ".complete").exists(), "stage sf1 first"
             sf_dir = str(p)
+            cache = False
         elif a == "--ab":
             ab = next(argv).split("=", 1)
         elif a.startswith("--"):
@@ -56,57 +53,41 @@ def main() -> int:
         else:
             names.append(a)
 
-    from bigdata_deepfakeanalysis_spark.session import tune
     from bigdata_deepfakeanalysis_spark.registry import all_queries
-    from bigdata_deepfakeanalysis_spark.catalog import table
+    from bigdata_deepfakeanalysis_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    tune(spark)
     qs = all_queries()
     unknown = [n for n in names if n not in qs]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
-    for t in TABLES:
-        try:  # staged dirs may hold only the tables their queries read
-            table(spark, sf_dir, t).count()
-        except Exception:
-            pass
-
-    def run_once(name: str) -> float:
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.time() - t0
+    spark = get_spark("time-queries")
+    warm(spark, sf_dir, cache)
 
     for name in names:
-        run_once(name)  # discard: JIT + shuffle-dir warm
+        def build():
+            return qs[name](spark, sf_dir)
+
+        time_query(build, 1)  # discard: JIT + shuffle-dir warm
         times_a, times_b = [], []
         for _ in range(runs):
             if ab is not None:
                 spark.conf.unset(ab[0])
-            times_a.append(round(run_once(name), 3))
+            times_a += time_query(build, 1)
             if ab is not None:
                 spark.conf.set(ab[0], ab[1])
-                times_b.append(round(run_once(name), 3))
+                times_b += time_query(build, 1)
         out = {
             "query": name,
             "sf_dir": sf_dir,
-            "runs": times_a,
-            "min": min(times_a),
+            "runs": [round(t, 3) for t in times_a],
+            "min": round(min(times_a), 3),
         }
         if ab is not None:
             out["ab_conf"] = f"{ab[0]}={ab[1]}"
-            out["runs_b"] = times_b
-            out["min_b"] = min(times_b)
+            out["runs_b"] = [round(t, 3) for t in times_b]
+            out["min_b"] = round(min(times_b), 3)
         print(json.dumps(out), flush=True)
     return 0
 
