@@ -12,7 +12,8 @@ over a warm OS page cache (tables not cached).
 
 Prints ONE JSON line: summary scalars first, `queries` (name ->
 seconds) last, so a head-truncated capture still ends with per-query
-pairs. The full document, plus the sf1 section, goes to the sidecar
+pairs. The full document, plus each query's two run times (`runs`,
+name -> seconds of both runs) and the sf1 section, goes to the sidecar
 tools/bench_sidecar_last.json, overwritten every run (copy it to a
 named tools/bench_local_*.json to keep a run).
 
@@ -192,14 +193,15 @@ def main() -> None:
 
     # Min of two runs: the host is a co-tenant VM and single runs show
     # 2-5x outliers from neighbour load (measured q_ngram_jaccard 2.9 s
-    # vs 15.6 s back to back with identical plans).
-    def min_of_2(name: str, sf_dir: str) -> float:
-        return round(
-            min(time_query(lambda: queries[name](spark, sf_dir), 2)), 3
-        )
+    # vs 15.6 s back to back with identical plans). Both runs go to the
+    # sidecar, so the spread stays visible.
+    def runs_of_2(name: str, sf_dir: str) -> list[float]:
+        secs = time_query(lambda: queries[name](spark, sf_dir), 2)
+        return [round(s, 3) for s in secs]
 
     t_first_query = time.time()
-    timings = {n: min_of_2(n, SF_DIR) for n in benched()}
+    runs = {n: runs_of_2(n, SF_DIR) for n in benched()}
+    timings = {n: min(r) for n, r in runs.items()}
 
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
@@ -220,7 +222,7 @@ def main() -> None:
         "sidecar": "tools/bench_sidecar_last.json",
         "queries": timings,
     }
-    sidecar = {}
+    sidecar = {"runs": runs}
 
     # sf1 section: runs only if tools/stage_sf1.py already staged the
     # 10x fact workload (~170 MB), with AQE skew handling and runtime
@@ -314,8 +316,10 @@ def main() -> None:
                 "q_dup_cluster_sizes",
             ]
             warm(spark, str(sf1), cache=False)
+            sf1_runs = {n: runs_of_2(n, str(sf1)) for n in sf1_names}
             sidecar["sf1"] = {
-                "queries": {n: min_of_2(n, str(sf1)) for n in sf1_names},
+                "queries": {n: min(r) for n, r in sf1_runs.items()},
+                "runs": sf1_runs,
                 "note": (
                     "10x key-shifted sf0.1 facts + content-perturbed"
                     " documents/embeddings (tools/stage_sf1.py), dims"

@@ -11,6 +11,7 @@ import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -68,9 +69,56 @@ def events_select(df: DataFrame) -> DataFrame:
     )
 
 
+# Resolved parquet path -> (stamp, schema). A StructType holds no JVM
+# handle, so one entry per path serves every session in the process.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stamp(path: str) -> tuple | None:
+    """``(name, st_mtime_ns, st_size)`` of the file, or of every entry
+    when ``path`` is a directory; None when it does not exist (the
+    inference read then raises Spark's own PATH_NOT_FOUND)."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
+        with os.scandir(path) as entries:
+            return tuple(
+                sorted(
+                    (e.name, (st := e.stat()).st_mtime_ns, st.st_size)
+                    for e in entries
+                )
+            )
+    except FileNotFoundError:
+        return None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet file or directory at
+    ``path``, inferred (one Spark job) only when the path is new or its
+    stamp changed since the last inference."""
+    key = os.path.realpath(path)
+    stamp = _stamp(key)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (stamp, schema)
+    return schema
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Column pruning + predicate pushdown reach the
     parquet reader because we return the raw declarative scan.
+
+    The scan reads with a user-specified schema, so it starts no Spark
+    job: the schema Spark inferred for the table's path is memoized
+    process-wide, keyed on the resolved path and stamped with
+    ``(name, st_mtime_ns, st_size)`` of the file, or of every entry of
+    a directory. A table rewritten in place changes its stamp and is
+    re-inferred. Only the schema is memoized, not the DataFrame, so
+    Spark still lists the files on every read, and a read still
+    resolves to a cached relation of the same table.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's native
     timestamp type cannot hold (µs max) — we force the INT64 through as
@@ -78,13 +126,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (bigint) and a µs-truncated ``ts`` timestamp. Oracle SQL mirrors the
     truncation with ``make_timestamp(epoch_ns(ts)//1000)``.
     """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         return events_select(
-            spark.read.schema(EVENTS_READ_SCHEMA).parquet(
-                f"{sf_dir}/{name}.parquet"
-            )
+            spark.read.schema(EVENTS_READ_SCHEMA).parquet(path)
         )
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 # Interpolate into oracle SQL to see the same µs-truncated events table

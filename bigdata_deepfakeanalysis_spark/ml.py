@@ -1825,7 +1825,8 @@ def q_mllib_brp_lsh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold UDF still prunes inside it), re-attach both embedding
     # arrays via broadcast joins against the 400-row fixture, and the
     # fold runs on distinct pairs only. Interleaved A/B min-of-3 at
-    # sf0.1: 4.28 -> 0.76 s, result rows identical (tools/ab_brp_lsh).
+    # sf0.1: 4.28 -> 0.76 s, result rows identical (OPTIMIZATION_r13.md
+    # §9, row ab_brp_lsh.py).
     cand_ids = (
         lsh.approxSimilarityJoin(
             emb, emb, math.sqrt(_BRP_D2) + 1e-9, distCol="dist"

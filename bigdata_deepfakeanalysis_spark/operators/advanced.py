@@ -1520,7 +1520,8 @@ def q_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the SAME partitioning, so both ride one Exchange + one Sort and
     # the argmax becomes a row-local filter (guide §2.4 "window
     # functions partitioned by the same key ... do not need a second
-    # shuffle"; interleaved A/B below in tools/ab_max_concurrency).
+    # shuffle"; interleaved A/B in OPTIMIZATION_r13.md §9, row
+    # ab_maxconc.py).
     swept = ev.select(
         "lane",
         "t",

@@ -26,7 +26,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import staging_dir, table
+from ..catalog import parquet_schema, staging_dir, table
 from ..registry import query
 from .parity import dmul2_sum, dmul2_sum_sql
 
@@ -51,7 +51,7 @@ def stage_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 # sf0.1 per fresh session). Spark's bucketed file names
                 # encode the bucket id, so the DDL's CLUSTERED BY is
                 # honored for the written data.
-                ddl = spark.read.parquet(str(path)).schema.toDDL()
+                ddl = parquet_schema(spark, str(path)).toDDL()
                 spark.sql(
                     f"CREATE TABLE {name} ({ddl}) USING parquet "
                     f"CLUSTERED BY ({key}) SORTED BY ({key}) "
@@ -318,7 +318,7 @@ def stage_bucketed_orders4(spark: SparkSession, sf_dir: str) -> str:
     if not spark.catalog.tableExists(name):
         path = staging_dir(f"bucketed4_{tag}") / "orders"
         if (path / "_SUCCESS").exists():
-            ddl = spark.read.parquet(str(path)).schema.toDDL()
+            ddl = parquet_schema(spark, str(path)).toDDL()
             spark.sql(
                 f"CREATE TABLE {name} ({ddl}) USING parquet "
                 f"CLUSTERED BY (o_orderkey) SORTED BY (o_orderkey) "

@@ -26,7 +26,8 @@ cardinality, so that path uses plain joins and leaves broadcast
 decisions to the planner/AQE (ADVICE r12) — grouped callers with a
 high-cardinality key get a shuffle join instead of a broadcast OOM.
 
-Interleaved A/B (sf0.1, warm, min-of-3, tools/ab_histo_percentile.py):
+Interleaved A/B (sf0.1, warm, min-of-3; OPTIMIZATION_r13.md §9,
+row ab_histo_percentile.py):
 ungrouped deciles over lineitem 2.10-2.77 s (percentile agg) vs
 0.64-0.85 s (this helper), boundaries BIT-IDENTICAL. For tiny-group
 grouped percentiles (3 return flags) the single agg stays faster

@@ -5158,8 +5158,8 @@ def q_topk_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mergeable-partials contract q_moment_merge pins). The gid=1
     # (yr, pk) grain is not built at all: the declared filter discards
     # it and it ranks in its own window partitions, so omitting it is
-    # row-identical (re-asserted by tools/ab_topk_preagg.py: 352 rows
-    # byte-equal; interleaved A/B 2.16-2.73 -> 1.88-2.41 s). The
+    # row-identical (352 rows byte-equal; interleaved A/B 2.16-2.73 ->
+    # 1.88-2.41 s: OPTIMIZATION_r13.md §9, row ab_topk_preagg.py). The
     # oracle keeps the declared GROUPING SETS form.
     fine = base.groupBy("yr", "nk", "pk").agg(
         F.expr("SUM(CAST(qty AS DECIMAL(18,2)))").alias("s"),

@@ -107,3 +107,67 @@ def test_training_pipeline_funnel_strictly_shrinks(spark):
     # at least one lang caught a re-post AND a leaked eval doc
     assert any(r.n_quality > r.n_unique for r in rows)
     assert any(r.n_unique > r.n_clean for r in rows)
+
+
+def test_table_read_infers_schema_once(spark):
+    """Only the first read of a path runs the schema-inference job."""
+    from bigdata_deepfakeanalysis_spark.catalog import table
+
+    from .conftest import SF_DIR
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    table(spark, SF_DIR, "lineitem")
+    before = dag.nextJobId()
+    table(spark, SF_DIR, "lineitem")
+    assert dag.nextJobId() == before
+
+
+def test_table_rewritten_in_place_is_reinferred(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigdata_deepfakeanalysis_spark.catalog import table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    df = table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_table_read_hits_the_cached_relation(spark):
+    from bigdata_deepfakeanalysis_spark.catalog import table
+
+    from .conftest import SF_DIR
+
+    cached = table(spark, SF_DIR, "nation").cache()
+    try:
+        cached.count()
+        plan = table(spark, SF_DIR, "nation")._jdf.queryExecution()
+        assert "InMemoryRelation" in plan.withCachedData().toString()
+    finally:
+        cached.unpersist()
+
+
+def test_table_missing_path_raises_path_not_found(spark, tmp_path):
+    """A missing table raises Spark's own error, also after a schema
+    for the same path was memoized and the file was then deleted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from bigdata_deepfakeanalysis_spark.catalog import table
+
+    with pytest.raises(AnalysisException) as missing:
+        table(spark, str(tmp_path), "absent")
+    assert missing.value.getCondition() == "PATH_NOT_FOUND"
+
+    path = tmp_path / "gone.parquet"
+    pq.write_table(pa.table({"a": [1]}), path)
+    table(spark, str(tmp_path), "gone")
+    path.unlink()
+    with pytest.raises(AnalysisException) as deleted:
+        table(spark, str(tmp_path), "gone")
+    assert deleted.value.getCondition() == "PATH_NOT_FOUND"
