@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .multimodal import MEDIA_CTE, media
+from .operators.parity import sort_bounded
 from .registry import query
 
 _HEATMAP_SCHEMA = (
@@ -537,5 +538,5 @@ def q_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("importance"),
         )
-        .orderBy("dim")
+        .transform(sort_bounded, "dim")
     )

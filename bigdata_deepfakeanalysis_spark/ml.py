@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from .catalog import table
 from .operators.fixtures import GROUPED_EMBEDDINGS_CTE, grouped_embeddings
+from .operators.parity import sort_bounded
 from .operators.sampling import _seeded_rank_sql, seeded_rank
 from .registry import query
 
@@ -1622,7 +1623,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("nv"), 6).alias("normed_min"),
             F.round(F.max("nv"), 6).alias("normed_max"),
         )
-        .orderBy("o_orderpriority")
+        .transform(sort_bounded, "o_orderpriority")
     )
 
 
@@ -1932,7 +1933,7 @@ def q_mllib_summarizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.expr("mu[31]"), 6).alias("mean_d31"),
         F.round(F.expr("l2[0]"), 6).alias("l2_d0"),
         F.round(F.expr("l2[63]"), 6).alias("l2_d63"),
-    ).orderBy("label")
+    ).transform(sort_bounded, "label")
 
 
 # ---------------------------------------------------------------------------
@@ -2008,7 +2009,7 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("smoothed_ppm"),
             F.col("prior_ppm").cast("bigint"),
         )
-        .orderBy("segment")
+        .transform(sort_bounded, "segment")
     )
 
 
@@ -2469,4 +2470,4 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("na").cast("bigint").alias("n_a"),
         F.col("nb").cast("bigint").alias("n_b"),
         F.expr("CAST(floor(drift2) AS BIGINT)").alias("drift2_floor"),
-    ).orderBy("label")
+    ).transform(sort_bounded, "label")

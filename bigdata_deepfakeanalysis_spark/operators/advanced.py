@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import EVENTS_US_CTE, table
 from ..registry import query
-from .parity import range_parts
+from .parity import range_parts, sort_bounded
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 _FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -1708,7 +1708,7 @@ def q_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)"
             ).alias("revenue"),
         )
-        .orderBy("segment")
+        .transform(sort_bounded, "segment")
     )
 
 
@@ -2824,7 +2824,7 @@ def q_forecast_backtest_mape(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " / COUNT(*)"
             ).alias("mean_bias"),
         )
-        .orderBy("series")
+        .transform(sort_bounded, "series")
     )
 
 
@@ -4325,7 +4325,7 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("bigint"),
             F.col("level").cast("int"),
         )
-        .orderBy("level", "nat_qi", "seg_qi")
+        .transform(sort_bounded, "level", "nat_qi", "seg_qi")
     )
 
 
@@ -4441,7 +4441,7 @@ def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(dau_sum * 1000000 DIV (n_days * mau) AS BIGINT)"
             ).alias("stickiness_ppm"),
         )
-        .orderBy("month")
+        .transform(sort_bounded, "month")
     )
 
 
@@ -4581,7 +4581,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(top_val_n * 1000000 DIV group_n AS BIGINT)"
         ).alias("top_share_ppm"),
         (F.col("l_distinct") >= _LDIV_L).alias("diverse_flag"),
-    ).orderBy("nat_qi", "seg_qi")
+    ).transform(sort_bounded, "nat_qi", "seg_qi")
 
 
 # ---------------------------------------------------------------------------
@@ -4648,7 +4648,7 @@ def q_retention_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             " WHEN n_expired = 0 THEN 'KEEP'"
             " ELSE 'REWRITE' END"
         ).alias("action"),
-    ).orderBy("month")
+    ).transform(sort_bounded, "month")
 
 
 # ---------------------------------------------------------------------------

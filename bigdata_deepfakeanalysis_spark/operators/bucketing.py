@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import parquet_schema, staging_dir, table
 from ..registry import query
-from .parity import dmul2_sum, dmul2_sum_sql
+from .parity import dmul2_sum, dmul2_sum_sql, sort_bounded
 
 _N_BUCKETS = 8
 
@@ -87,7 +87,7 @@ def bucketed_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_orderkey").alias("n_orders"),
             dmul2_sum("l_extendedprice", "1 - l_discount", "revenue"),
         )
-        .orderBy("o_orderpriority")
+        .transform(sort_bounded, "o_orderpriority")
     )
 
 
@@ -198,7 +198,7 @@ def q_bucketed_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(o_totalprice AS DECIMAL(21,6))) AS DOUBLE)"
             ).alias("sum_totalprice"),
         )
-        .orderBy("o_orderpriority")
+        .transform(sort_bounded, "o_orderpriority")
     )
 
 
@@ -258,7 +258,7 @@ def q_bucketed_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(l_extendedprice AS DECIMAL(21,6))) AS DOUBLE)"
             ).alias("first_line_revenue"),
         )
-        .orderBy("l_returnflag")
+        .transform(sort_bounded, "l_returnflag")
     )
 
 
@@ -382,5 +382,5 @@ def q_bucket_coalesced_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(l_quantity AS DECIMAL(21,6))) AS DOUBLE)"
             ).alias("sum_qty"),
         )
-        .orderBy("o_orderstatus")
+        .transform(sort_bounded, "o_orderstatus")
     )

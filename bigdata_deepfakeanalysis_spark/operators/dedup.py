@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..registry import query
+from .parity import sort_bounded
 
 # ---------------------------------------------------------------------------
 # Augmented corpora: the driver's documents/embeddings are duplicate-free,
@@ -1633,7 +1634,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("seen").isNull(), 0).otherwise(1)
             ).cast("bigint").alias("n_dup_vs_existing"),
         )
-        .orderBy("lang")
+        .transform(sort_bounded, "lang")
     )
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..registry import query
 from .fixtures import PREFIXED_KEYS_CTE, prefixed_keys
+from .parity import sort_bounded
 
 # ---------------------------------------------------------------------------
 # Reusable column expressions (the engine ops themselves)
@@ -111,7 +112,7 @@ def q_group_parse_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_group_dunder_fallback(F.col("dunder_stem")).alias("group_p4"),
         stem_from_key(F.col("key")).alias("stem_p5"),
         F.lower(F.regexp_extract("key", r"\.([^.]+)$", 1)).alias("ext"),
-    ).orderBy("dirname")
+    ).transform(sort_bounded, "dirname")
 
 
 @query(
@@ -136,7 +137,7 @@ def q_prefix_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("label").isin("REAL", "FAKE"))
         .groupBy("label")
         .agg(F.count(F.lit(1)).alias("n"), F.min("vec_id").alias("min_vec_id"))
-        .orderBy("label")
+        .transform(sort_bounded, "label")
     )
 
 
@@ -169,7 +170,7 @@ def q_safe_title(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label")
         .agg(F.count(F.lit(1)).alias("n"))
         .select("label", safe_title(F.col("label")).alias("title"), "n")
-        .orderBy("label")
+        .transform(sort_bounded, "label")
     )
 
 

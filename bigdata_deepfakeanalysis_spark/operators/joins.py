@@ -25,6 +25,7 @@ from .fixtures import (
     grouped_embeddings,
 )
 from .grouping import stem_from_key
+from .parity import sort_bounded
 from .sampling import _seeded_rank_sql, seeded_rank
 
 _HW = FM_H * FM_W
@@ -204,7 +205,11 @@ def q_pairwise_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = grouped_embeddings(spark, sf_dir).select("group").distinct()
     a = groups.select(F.col("group").alias("g1"))
     b = groups.select(F.col("group").alias("g2"))
-    return a.crossJoin(b).where(F.col("g1") < F.col("g2")).orderBy("g1", "g2")
+    return (
+        a.crossJoin(b)
+        .where(F.col("g1") < F.col("g2"))
+        .transform(sort_bounded, "g1", "g2")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -659,5 +664,5 @@ def q_null_skew_shunt_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(o_totalprice AS DECIMAL(21,6))) AS DOUBLE)"
             ).alias("revenue"),
         )
-        .orderBy("segment")
+        .transform(sort_bounded, "segment")
     )

@@ -139,6 +139,32 @@ def range_parts(df) -> int:
     return max(16, n)
 
 
+def sort_bounded(df, *cols):
+    """Final ORDER BY over a result bounded by construction (a grouping
+    on a fixed domain: flags, priorities, nations, segments, languages,
+    event types, bins), sorted on ONE partition.
+
+    A plain global ``orderBy`` plans ``Exchange rangepartitioning``,
+    which under AQE costs two Spark jobs before the result job: the
+    RangePartitioner sampling job and the range-shuffle map job.
+    ``coalesce(1)`` makes the sort's child ``SinglePartition``, which
+    already satisfies the ordered distribution, so no exchange is
+    planned and the query runs only its aggregation map job(s) and the
+    result job — same rows, same order. ``repartition(1)`` would add a
+    shuffle job back.
+
+    Coalesce is narrow: everything above the last exchange below it
+    runs in the one task. Over a grouped aggregate that is the final
+    merge of (map tasks x groups) partial rows — the shape Spark
+    already uses for an ungrouped aggregate. Results that grow with the
+    data (top-k per customer, one row per document, row-level
+    projections) keep the range sort. ``tests/test_plan_hygiene.py``
+    audits every caller: the sort input must be provably bounded, and
+    no scan, Window or Python node may sit between the coalesce and an
+    exchange. In a method chain: ``.transform(sort_bounded, *cols)``."""
+    return df.coalesce(1).orderBy(*cols)
+
+
 def two_pass_rownum(df, order_cols, n_parts: int | None = None, pin: bool = False):
     """Global row numbers over ``order_cols`` via range-repartition +
     per-partition rank + broadcast offsets — identical values to a

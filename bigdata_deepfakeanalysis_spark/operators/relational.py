@@ -10,6 +10,10 @@ Scale notes (100 TB design point):
 - Aggregations are partial+final hash aggs (map-side combine) by
   construction of groupBy; no collect()s anywhere.
 - Sorts that feed a LIMIT become TakeOrderedAndProject (no full sort).
+- Final sorts over results bounded by construction (groupings on
+  flags, priorities, nations, segments, ...) use parity.sort_bounded:
+  one partition, no range-sampling or range-shuffle job. Results that
+  grow with the data keep the global range sort.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from .parity import (
     dsum,
     dsum_sql,
     range_parts,
+    sort_bounded,
     stddev_expr,
     stddev_sql,
 )
@@ -59,7 +64,7 @@ def q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(dmul2_sum(_REVENUE, _DISC, "revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
+        .transform(sort_bounded, F.desc("revenue"), "n_name")
     )
 
 
@@ -113,7 +118,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg("l_discount", "avg_disc", 6),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(sort_bounded, "l_returnflag", "l_linestatus")
     )
 
 
@@ -285,7 +290,7 @@ def q_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_custkey").alias("n_customers"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .orderBy("o_orderpriority")
+        .transform(sort_bounded, "o_orderpriority")
     )
 
 
@@ -618,7 +623,7 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_k"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("event_type")
+        .transform(sort_bounded, "event_type")
     )
 
 
@@ -651,7 +656,7 @@ def q_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("c_acctbal").alias("max_bal"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("c_mktsegment")
+        .transform(sort_bounded, "c_mktsegment")
     )
 
 
@@ -801,7 +806,7 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.element_at("q", 2), 9).alias("p50"),
             F.round(F.element_at("q", 3), 9).alias("p75"),
         )
-        .orderBy("l_returnflag")
+        .transform(sort_bounded, "l_returnflag")
     )
 
 
@@ -1176,7 +1181,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)"
             ).alias("total_bal"),
         )
-        .orderBy("n_name")
+        .transform(sort_bounded, "n_name")
     )
 
 
@@ -1523,7 +1528,7 @@ def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
         )
-        .orderBy("l_linestatus")
+        .transform(sort_bounded, "l_linestatus")
     )
 
 
@@ -1619,7 +1624,7 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("p_brand", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_size")
+        .transform(sort_bounded, F.desc("supplier_cnt"), "p_brand", "p_size")
     )
 
 
@@ -2347,7 +2352,7 @@ def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         values=["sum_qty", "sum_price", "n_rows"],
         variableColumnName="metric",
         valueColumnName="value",
-    ).orderBy("l_returnflag", "metric")
+    ).transform(sort_bounded, "l_returnflag", "metric")
 
 
 # ---------------------------------------------------------------------------
@@ -3769,7 +3774,7 @@ def q_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 9,
             ).alias("seasonal_index"),
         )
-        .orderBy("month")
+        .transform(sort_bounded, "month")
     )
 
 
@@ -3904,7 +3909,7 @@ def q_string_agg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_sort(F.collect_list("n_name")), ","
             ).alias("nations"),
         )
-        .orderBy("region")
+        .transform(sort_bounded, "region")
     )
 
 
@@ -4153,7 +4158,11 @@ def q_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     # needs precision 39 and Spark resolves that overflow by CLIPPING
     # THE SCALE (~1e-7 checksum drift); (18,9) x (12,0) -> (31,9) keeps
     # the product exact, so SUM(z_dec * freq) == SUM over raw rows
-    # bit-for-bit.
+    # bit-for-bit. BOUND: the checksum is exact while no (flag, price)
+    # group reaches 10^12 rows (freq fits DECIMAL(12,0)). Past it the
+    # cast overflows; the engine's session runs with ANSI on (Spark 4's
+    # default, left unchanged by session.py), so the query raises
+    # NUMERIC_VALUE_OUT_OF_RANGE instead of returning NULL.
     scaled = price_counts.withColumnRenamed("flag", "l_returnflag").join(
         F.broadcast(stats), F.col("l_returnflag") == F.col("flag")
     ).withColumn(
@@ -4177,7 +4186,7 @@ def q_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_returnflag", "med", "iqr", "n", "n_beyond_08", "z_checksum"
         )
-        .orderBy("l_returnflag")
+        .transform(sort_bounded, "l_returnflag")
     )
 
 
@@ -4800,7 +4809,7 @@ def q_ols_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(syd - cov_n / varx_n * sxd) / (n * CAST(1000000 AS DOUBLE))"
         ).alias("intercept"),
         F.expr("(cov_n * cov_n) / (varx_n * vary_n)").alias("r2"),
-    ).orderBy("l_returnflag")
+    ).transform(sort_bounded, "l_returnflag")
 
 
 # ---------------------------------------------------------------------------
@@ -5279,7 +5288,7 @@ def q_moment_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             " - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n) / n"
             " AS DECIMAL(24,4)) AS DOUBLE)"
         ).alias("variance"),
-    ).orderBy("yr")
+    ).transform(sort_bounded, "yr")
 
 
 # ---------------------------------------------------------------------------
@@ -5603,7 +5612,7 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hhi_ppm"),
             F.max("share_ppm").cast("bigint").alias("top_share_ppm"),
         )
-        .orderBy("region")
+        .transform(sort_bounded, "region")
     )
 
 
@@ -5849,7 +5858,7 @@ def q_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_wins_c",
             "winsorized_mean",
         )
-        .orderBy("l_returnflag")
+        .transform(sort_bounded, "l_returnflag")
     )
 
 
@@ -5968,7 +5977,7 @@ def q_rare_category_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").cast("bigint").alias("n_parts"),
             F.count(F.lit(1)).cast("bigint").alias("n_src_categories"),
         )
-        .orderBy("category")
+        .transform(sort_bounded, "category")
     )
 
 
@@ -7338,7 +7347,7 @@ def q_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
             " / (n - 1) / (CAST(s1 AS DOUBLE) / n) - 1)"
             " * sqrt((n - 1) / CAST(2 AS DOUBLE)) * 1000) AS BIGINT)"
         ).alias("z_milli"),
-    ).orderBy("segment")
+    ).transform(sort_bounded, "segment")
 
 
 # ---------------------------------------------------------------------------
@@ -7559,7 +7568,7 @@ def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(floor((k + a) / (n + ab) * 1000000) AS BIGINT)"
             ).alias("shrunk_ppm"),
         )
-        .orderBy("brand")
+        .transform(sort_bounded, "brand")
     )
 
 
@@ -8469,5 +8478,5 @@ def q_age_period_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "residual_milli_c"
             ),
         )
-        .orderBy("cohort", "period")
+        .transform(sort_bounded, "cohort", "period")
     )

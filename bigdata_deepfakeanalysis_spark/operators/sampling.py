@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from .fixtures import GROUPED_EMBEDDINGS_CTE, grouped_embeddings
+from .parity import sort_bounded
 
 
 def seeded_rank(group_col: str, key_col: str, seed: int = 42) -> Column:
@@ -157,7 +158,7 @@ def q_group_counts_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("group")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") >= 3)
-        .orderBy("group")
+        .transform(sort_bounded, "group")
     )
 
 
@@ -303,7 +304,7 @@ def q_hash_bernoulli_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(count_if(sampled) * 1000000 DIV COUNT(*) AS BIGINT)"
             ).alias("rate_ppm"),
         )
-        .orderBy("o_orderpriority")
+        .transform(sort_bounded, "o_orderpriority")
     )
 
 
@@ -749,7 +750,7 @@ def q_dp_count_release(spark: SparkSession, sf_dir: str) -> DataFrame:
             "   * ln(1.0 - 2.0 * abs(u))) * 1000000.0) AS BIGINT)"
         ).alias("noisy_count_micro"),
         F.lit(1000).cast("int").alias("eps_milli"),
-    ).orderBy("segment")
+    ).transform(sort_bounded, "segment")
 
 
 # ---------------------------------------------------------------------------
@@ -1061,4 +1062,4 @@ def q_effective_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(floor(CAST(s1 AS DOUBLE) / s2 * s1 / n * 1000000)"
             " AS BIGINT)"
         ).alias("efficiency_ppm"),
-    ).orderBy("segment")
+    ).transform(sort_bounded, "segment")

@@ -45,6 +45,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..registry import query
+from .parity import sort_bounded
 
 _DIM = 64
 _N_PLANES = 4  # 16 buckets
@@ -1197,7 +1198,7 @@ def sq8_profile(emb: DataFrame, dim: int = _DIM) -> DataFrame:
                 9,
             ).alias("avg_abs_err"),
         )
-        .orderBy("dim")
+        .transform(sort_bounded, "dim")
     )
 
 
@@ -1811,7 +1812,7 @@ def q_embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " THEN 1 ELSE 0 END) AS BIGINT)"
             ).alias("n_outliers"),
         )
-        .orderBy("label")
+        .transform(sort_bounded, "label")
     )
 
 
@@ -2065,7 +2066,7 @@ def q_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_abs_err_nano",
             "mean_abs_err_nano",
         )
-        .orderBy("label")
+        .transform(sort_bounded, "label")
     )
 
 
@@ -2146,7 +2147,7 @@ def q_dead_dimension_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("energy_ppm"),
         )
-        .orderBy("dim")
+        .transform(sort_bounded, "dim")
     )
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
+from .parity import sort_bounded
 from .text import _TOKS, _TOKS_SQL
 
 _D = 4      # hash rows
@@ -711,7 +712,7 @@ def q_bitmap_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         shard_counts.withColumn("merge_exact", F.lit(True))
         .unionByName(global_row)
-        .orderBy("scope")
+        .transform(sort_bounded, "scope")
     )
 
 

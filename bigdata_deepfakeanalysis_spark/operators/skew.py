@@ -75,6 +75,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 from ..catalog import EVENTS_US_CTE, table  # noqa: E402
 from ..registry import query  # noqa: E402
+from .parity import sort_bounded  # noqa: E402
 
 
 @query(
@@ -91,7 +92,9 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the plain aggregate exactly (the oracle computes the unsalted
     form; any salt-phase bug shows as a value mismatch)."""
     ev = table(spark, sf_dir, "events")
-    return salted_agg(ev, "event_type", "value").orderBy("event_type")
+    return salted_agg(ev, "event_type", "value").transform(
+        sort_bounded, "event_type"
+    )
 
 
 @query(
@@ -106,8 +109,8 @@ def q_salted_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted exact distinct-count per hot key (salt by value hash →
     partial distincts are disjoint and sum exactly)."""
     ev = table(spark, sf_dir, "events")
-    return salted_distinct_count(ev, "event_type", "user_id").orderBy(
-        "event_type"
+    return salted_distinct_count(ev, "event_type", "user_id").transform(
+        sort_bounded, "event_type"
     )
 
 
@@ -182,7 +185,7 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("weighted_sum"),
         )
-        .orderBy("event_type")
+        .transform(sort_bounded, "event_type")
     )
 
 
@@ -319,7 +322,7 @@ def q_hotkey_split_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)"
             ).alias("value_sum"),
         )
-        .orderBy("event_type")
+        .transform(sort_bounded, "event_type")
     )
 
 

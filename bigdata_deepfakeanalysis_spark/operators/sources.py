@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..catalog import staging_dir, table
 from ..registry import query
 from .fixtures import GROUPED_EMBEDDINGS_CTE, grouped_embeddings
+from .parity import sort_bounded
 
 _N_IMAGES = 100
 _GENS = ("adm", "biggan", "sdv5", "vqdm")  # generator names, reference-style
@@ -131,7 +132,7 @@ def q_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_bytes").cast("bigint").alias("total_bytes"),
             F.sum("first_nibble").cast("bigint").alias("sum_first_nibble"),
         )
-        .orderBy("group")
+        .transform(sort_bounded, "group")
     )
 
 
@@ -266,7 +267,7 @@ def q_e2e_image_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " / COUNT(*)"
             ).alias("mean_feature"),
         )
-        .orderBy("group", "dim")
+        .transform(sort_bounded, "group", "dim")
     )
 
 
@@ -424,7 +425,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)"
             ).alias("sum_acctbal"),
         )
-        .orderBy("c_mktsegment")
+        .transform(sort_bounded, "c_mktsegment")
     )
 
 

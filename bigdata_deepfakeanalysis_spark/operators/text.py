@@ -26,7 +26,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..registry import query
-from .parity import range_parts
+from .parity import range_parts, sort_bounded
 
 # ---------------------------------------------------------------------------
 # Lang-ID profile: marker character-bigrams per language with vote
@@ -629,7 +629,7 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " / COUNT(*)"
             ).alias("mean_tokens"),
         )
-        .orderBy("lang")
+        .transform(sort_bounded, "lang")
     )
 
 
@@ -1266,7 +1266,7 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("tokens_kept"),
         )
-        .orderBy("lang")
+        .transform(sort_bounded, "lang")
     )
 
 
@@ -2207,7 +2207,7 @@ def q_pandas_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").cast("bigint").alias("min_doc"),
         )
-        .orderBy("nibble")
+        .transform(sort_bounded, "nibble")
     )
 
 
@@ -2272,7 +2272,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_syllables").cast("double") / F.sum("n_words"), 9
             ).alias("syllables_per_word"),
         )
-        .orderBy("lang")
+        .transform(sort_bounded, "lang")
     )
 
 
@@ -2807,7 +2807,7 @@ def q_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(js_term AS DECIMAL(18,12))) AS DOUBLE)"
             ).alias("js_div"),
         )
-        .orderBy("source")
+        .transform(sort_bounded, "source")
     )
 
 
@@ -3707,7 +3707,7 @@ def q_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " / (n_docs * (n_docs - 1))"
             ).alias("simpson_d"),
         )
-        .orderBy("source")
+        .transform(sort_bounded, "source")
     )
 
 
@@ -4410,7 +4410,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(n_sub) * 1000000 DIV SUM(n_words) AS BIGINT)"
             ).alias("fertility_ppm"),
         )
-        .orderBy("lang")
+        .transform(sort_bounded, "lang")
     )
 
 
@@ -5134,7 +5134,7 @@ def q_mixture_epoch_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" THEN share - toks * {_EPOCH_CAP_MILLI} DIV 1000"
             f" ELSE 0 END AS BIGINT)"
         ).alias("stranded_budget"),
-    ).orderBy("source")
+    ).transform(sort_bounded, "source")
 
 
 # ---------------------------------------------------------------------------

@@ -90,75 +90,71 @@ def _load_all() -> None:
 
 _WINDOW: list[str] = [
     # ------------------------------------------------------------------
-    # Round-13 rotation (standing rule since r12: any queries whose
+    # Round-14 rotation (standing rule since r12: any queries whose
     # CODE changed this round first, then the LEAST-RECENTLY-GRADED
     # names — rank derived from the CORRECTNESS_r* artifacts,
     # last-round-wins; disk-staging names go last so a
     # staging-restricted run still verifies the pure-compute surface).
+    # Every module is green in the CORRECTNESS artifacts, so module
+    # coverage pins no slot; 71 queries changed this round, so the 21
+    # most recently graded of them ride after slot 50.
     # ------------------------------------------------------------------
-    # (a) r13-changed: the versioned-epoch commit-pointer JDBC sink,
-    # the freq-form robust-scale second pass, the Expand-free
-    # multi-grain top-k, the pinned phrase postings, the quantiles
-    # helper hygiene (entry validation + grouped-path hints — consumer
-    # re-graded), and the six connected-components consumers whose
-    # changed-count metric became propagation-only (ADVICE r12)
-    "q_stream_jdbc_exactly_once",
-    "q_robust_scale",
-    "q_topk_grouping_sets",
-    "q_phrase_search",
-    "q_quantile_band_join",
-    "q_dedup_components",
-    "q_grid_dbscan",
-    "q_record_linkage",
-    "q_dup_cluster_sizes",
-    "q_semantic_dedup",
-    "q_semantic_dedup_lsh",
-    # (a') then: the star components variant (observed edge-change
-    # count) and the two pandas UDFs moved to type hints
-    "q_dedup_components_star",
+    # (a) final sort moved onto parity.sort_bounded: the benchmark's
+    # three plus the robust-scale named-bound entry
+    "q1_pricing_summary",
+    "q5_regional_revenue",
     "q_pandas_scalar_udf",
+    "q_robust_scale",
+    # (a') earlier r14 changes: observed components convergence count,
+    # type-hinted pandas UDAF
+    "q_dedup_components",
+    "q_dedup_components_star",
     "q_pandas_udaf",
-    # (b) least-recently-graded fillers: the full r2 residue (the 8
-    # names rotated out in r12), then the alphabetically-first r3
-    # names that fit, staging names last
-    "q_string_funcs",
-    "q_token_stats",
-    "q_udtf_bigrams",
-    "q_union_provenance",
-    "q_window_distribution",
-    "q_window_running_sum",
-    "q_window_topk_per_group",
-    # r3 rank, non-staging, alphabetical
-    "q_asof_join",
-    "q_audio_chunk_rms",
-    "q_bucketed_join",
-    "q_cka_pairs",
-    "q_cms_heavy_hitters",
-    "q_contamination_check",
-    "q_doc_chunking",
-    "q_embedding_sq8",
-    "q_gap_per_channel",
-    "q_multimodal_metadata",
-    "q_multistage_features",
-    "q_pair_selection",
-    "q_prefix_demux",
-    "q_range_join",
-    "q_salted_agg",
-    "q_seeded_cap_sample",
-    "q_sequence_packing",
-    "q_simhash_hamming",
-    "q_standardize",
-    "q_stem_join_concat",
-    "q_stream_dedup_watermark",
-    "q_stream_record_breakers",
-    "q_stream_session_window",
-    "q_stream_static_join",
-    "q_stream_stream_outer_join",
-    "q_surrogate_features",
-    "q_zorder_layout",
-    # r3 rank, staging-late convention
-    "q_ann_lsh_bucketed",
-    "q_binaryfile_ingest",
+    # (b) the other sort_bounded callers, least-recently-graded first
+    "q12_priority_lines",
+    "q22_dormant_customers",
+    "q_incremental_dedup",
+    "q_salted_join",
+    "q_hash_bernoulli_sample",
+    "q_readability",
+    "q_bitmap_exact_distinct",
+    "q_bucketed_semi_join",
+    "q_dp_count_release",
+    "q_hotkey_split_join",
+    "q_mllib_summarizer",
+    "q_ols_elasticity",
+    "q_bucketed_window_rank",
+    "q_effective_sample_size",
+    "q_target_encoding",
+    "q_bucket_coalesced_join",
+    "q_dau_mau_stickiness",
+    "q_dead_dimension_audit",
+    "q_embedding_drift",
+    "q_embedding_norm_audit",
+    "q_hhi_concentration",
+    "q_null_skew_shunt_join",
+    "q_permutation_importance",
+    "q_quantization_error",
+    "q_seasonal_index",
+    "q_stream_static_anti_join",
+    "q_string_agg_report",
+    "q_unpivot_metrics",
+    "q_js_divergence_sources",
+    "q_k_anonymity",
+    "q_l_diversity",
+    "q_mixture_epoch_budget",
+    "q_moment_merge",
+    "q_retention_audit",
+    "q_simpson_diversity",
+    "q_tokenizer_fertility",
+    "q_winsorized_mean",
+    "q_age_period_cohort",
+    "q_eb_shrinkage",
+    "q_forecast_backtest_mape",
+    "q_late_arriving_dim",
+    # staging-late convention
+    "q_e2e_image_pipeline",
+    "q_orc_roundtrip",
 ]
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import EVENTS_US_CTE, table
+from ..operators.parity import sort_bounded
 from ..registry import query
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -475,7 +476,9 @@ def q_stream_record_breakers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     cust = table(spark, sf_dir, "customer")
-    return stream_static_join(ev, cust).orderBy("c_mktsegment")
+    return stream_static_join(ev, cust).transform(
+        sort_bounded, "c_mktsegment"
+    )
 
 
 @query(
@@ -497,7 +500,9 @@ def q_stream_static_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming form is asserted batch≡stream in tests/test_streaming.py."""
     ev = table(spark, sf_dir, "events")
     cust = table(spark, sf_dir, "customer")
-    return stream_static_anti_join(ev, cust).orderBy("event_type")
+    return stream_static_anti_join(ev, cust).transform(
+        sort_bounded, "event_type"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -788,7 +793,16 @@ def foreach_batch_jdbc_sink(
     pointer transaction after the pointer DELETE — the crash-injection
     hook the atomicity test uses (raising there must roll back, not
     lose the epoch). Returns the JDBC url; read the committed view via
-    ``jdbc_committed_view(table_name)``."""
+    ``jdbc_committed_view(table_name)`` — the only read path
+    (tests/test_streaming.py checks the package source for it).
+
+    SINGLE WRITER: at most one query drains into ``table_name`` at a
+    time. Version allocation (``MAX(ver) + 1`` for the epoch) is not
+    fenced, so two concurrent attempts of one epoch — a zombie and its
+    replacement — could pick the same version and append into it
+    together; the pointer would then name the merged rows. A unique
+    ``(epoch, ver)`` claim that makes the loser's append fail is the
+    fix, and is not in place."""
     from ..operators.sources import _derby_url
 
     url = _derby_url(spark)

@@ -710,6 +710,144 @@ def test_forced_broadcast_builds_bounded_eager(spark):
     assert not offenders, offenders
 
 
+# ---------------------------------------------------------------------------
+# Single-partition final sort audit (parity.sort_bounded).
+#
+# ``sort_bounded`` sorts a final result on ONE partition
+# (``coalesce(1).orderBy``): no range-sampling job, no range-shuffle
+# job. That is only sound when the sort input is bounded by
+# construction, and coalesce is narrow — everything between it and the
+# nearest exchange runs in the one task. So for every query whose root
+# Sort sits over ``Coalesce 1``:
+#   (a) the ANALYZED sort input passes the bounded-build walk, or the
+#       query carries a SINGLE_PARTITION_SORT_BOUNDED entry naming its
+#       bound (entries, not BOUNDED_DOMAIN_COLS additions — the forced-
+#       broadcast audit reads that set too);
+#   (b) in the physical plan every path below ``Coalesce 1`` reaches an
+#       Exchange / BroadcastExchange before any scan, Window or Python
+#       node, so the one task merges aggregate rows instead of scanning,
+#       windowing or running Python over raw rows.
+# ---------------------------------------------------------------------------
+SINGLE_PARTITION_SORT_BOUNDED: dict[str, str] = {
+    # grouping key is a Python-UDF output, so the walk cannot read it
+    "q_pandas_scalar_udf": "16 hex nibbles",
+    # (flag, med, iqr): med/iqr are per-flag constants of the stats join
+    "q_robust_scale": "one row per l_returnflag",
+}
+
+_EXCHANGE_TOP = ("Exchange", "BroadcastExchange", "ReusedExchange")
+_ONE_TASK_FORBIDDEN = ("Window", "ArrowEvalPython", "BatchEvalPython",
+                       "ArrowAggregatePython", "ArrowWindowPython",
+                       "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+                       "MapInPandas", "MapInArrow", "PythonMapInArrow")
+
+
+def _one_task_leaks(tree, i) -> list[str]:
+    """Nodes below line i that a ``Coalesce 1`` at i would pull into its
+    one task: leaves (scans) and Window / Python nodes reached before
+    any exchange. (Python nodes may print with a leading '!'.)"""
+    node = _strip_codegen(tree[i][1]).lstrip("!")
+    if node.startswith(_EXCHANGE_TOP):
+        return []
+    kids = _children(tree, i)
+    if not kids or node.startswith(_ONE_TASK_FORBIDDEN):
+        return [node[:90]]
+    return [bad for k in kids for bad in _one_task_leaks(tree, k)]
+
+
+def _audit_single_partition_sorts(scan: dict) -> dict[str, str]:
+    """The single-partition sort contract over a {name: (physical plan,
+    analyzed plan)} mapping. Returns offender messages; empty = clean.
+    A SINGLE_PARTITION_SORT_BOUNDED entry whose query no longer sorts on
+    one partition, or whose sort input the walk now proves bounded, is
+    reported stale."""
+    offenders: dict[str, str] = {}
+    for name, (plan, analyzed) in scan.items():
+        tree = _parse_tree(plan)
+        root = 1 if tree[0][1].startswith("AdaptiveSparkPlan") else 0
+        kids = _children(tree, root)
+        single = (
+            _strip_codegen(tree[root][1]).startswith("Sort ")
+            and len(kids) == 1
+            and _strip_codegen(tree[kids[0]][1]).startswith("Coalesce 1")
+        )
+        if not single:
+            if name in SINGLE_PARTITION_SORT_BOUNDED:
+                offenders[name] = (
+                    "stale SINGLE_PARTITION_SORT_BOUNDED entry: no "
+                    "Coalesce 1 under the root Sort"
+                )
+            continue
+        atree = _parse_tree(analyzed)
+        akids = _children(atree, 0)
+        bounded = bool(akids) and _hint_build_is_bounded(atree, akids[0])
+        if name in SINGLE_PARTITION_SORT_BOUNDED and bounded:
+            offenders[name] = (
+                "stale SINGLE_PARTITION_SORT_BOUNDED entry: the walk "
+                "proves the sort input bounded — delete the entry"
+            )
+        elif not bounded and name not in SINGLE_PARTITION_SORT_BOUNDED:
+            offenders[name] = (
+                f"single-partition sort over an unbounded input "
+                f"({atree[akids[0]][1][:90] if akids else '<leaf>'}) — "
+                "use a plain orderBy or name the bound in "
+                "SINGLE_PARTITION_SORT_BOUNDED"
+            )
+            continue
+        leaks = _one_task_leaks(tree, kids[0])
+        if leaks:
+            offenders[name] = (
+                f"Coalesce 1 reaches {leaks} before any exchange — the "
+                "whole subtree would run in one task"
+            )
+    return offenders
+
+
+def test_single_partition_sorts_bounded(registry_scan):
+    """Every sort_bounded caller sorts a bounded input (walk or named
+    bound) and pulls no scan, Window or Python node into its one task."""
+    offenders = _audit_single_partition_sorts(
+        {n: (p, a) for n, (p, a, _) in registry_scan.items()}
+    )
+    assert not offenders, offenders
+    # the helper is in use; a revert to plain orderBy everywhere would
+    # otherwise pass vacuously
+    assert "Coalesce 1" in registry_scan["q1_pricing_summary"][0]
+
+
+def test_single_partition_sort_audit_detects_mutations(spark):
+    """Mutation validation: sort_bounded applied to a row-level query
+    (q_filter_project: a filtered lineitem projection) fails both
+    rules; over a bare nation scan it passes (a) but fails (b); a
+    stale entry fails; the q1 shape passes."""
+    from bigdata_deepfakeanalysis_spark.catalog import table
+    from bigdata_deepfakeanalysis_spark.operators.parity import sort_bounded
+    from bigdata_deepfakeanalysis_spark.operators.relational import (
+        q1_pricing_summary,
+        q_filter_project,
+    )
+
+    def plans(df):
+        qe = df._jdf.queryExecution()
+        return qe.executedPlan().toString(), qe.analyzed().toString()
+
+    rows = sort_bounded(q_filter_project(spark, SF_DIR), "l_orderkey")
+    got = _audit_single_partition_sorts({"q_filter_project": plans(rows)})
+    assert "unbounded input" in got.get("q_filter_project", ""), got
+
+    nation = sort_bounded(table(spark, SF_DIR, "nation"), "n_name")
+    got = _audit_single_partition_sorts({"q_nation": plans(nation)})
+    assert "before any exchange" in got.get("q_nation", ""), got
+
+    q1 = plans(q1_pricing_summary(spark, SF_DIR))
+    assert _audit_single_partition_sorts({"q1_pricing_summary": q1}) == {}
+    got = _audit_single_partition_sorts({"q_robust_scale": q1})
+    assert "stale" in got.get("q_robust_scale", ""), got
+    plain = plans(table(spark, SF_DIR, "nation").orderBy("n_name"))
+    got = _audit_single_partition_sorts({"q_pandas_scalar_udf": plain})
+    assert "stale" in got.get("q_pandas_scalar_udf", ""), got
+
+
 def test_global_window_allowlist_matches_registry():
     """Every allowlisted name must still exist — a renamed query would
     silently leave a stale justification behind."""
@@ -718,7 +856,8 @@ def test_global_window_allowlist_matches_registry():
     names = set(all_queries())
     missing = (
         (EAGER_BUILD | PYTHON_EVAL_OK | set(GLOBAL_WINDOW_BOUNDED)
-         | set(BNLJ_BUILD_BOUNDED) | set(FORCED_BROADCAST_BOUNDED)) - names
+         | set(BNLJ_BUILD_BOUNDED) | set(FORCED_BROADCAST_BOUNDED)
+         | set(SINGLE_PARTITION_SORT_BOUNDED)) - names
     )
     assert not missing, missing
 

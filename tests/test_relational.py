@@ -171,3 +171,16 @@ def test_table_missing_path_raises_path_not_found(spark, tmp_path):
     with pytest.raises(AnalysisException) as deleted:
         table(spark, str(tmp_path), "gone")
     assert deleted.value.getCondition() == "PATH_NOT_FOUND"
+
+
+@pytest.mark.parametrize("name", ["q1_pricing_summary", "q_pandas_scalar_udf"])
+def test_bounded_final_sort_runs_two_jobs(spark, name):
+    """A sort_bounded query runs its aggregation map job and its result
+    job only: no RangePartitioner sampling job, no range-shuffle map
+    job (a plain global orderBy runs 4). Jobs are counted by job-id
+    window around the noop write, after the plan is built."""
+    df = all_queries()[name](spark, SF_DIR)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df.write.format("noop").mode("overwrite").save()
+    assert dag.nextJobId() - before == 2

@@ -242,6 +242,93 @@ def test_jdbc_sink_epoch_swap_is_atomic_under_crash(spark):
     assert counts(url, garbage)[0] == 0
 
 
+def _jdbc_reads_bypassing_view(source: str) -> list[int]:
+    """Line numbers of JDBC DataFrame reads in ``source`` whose table is
+    not ``jdbc_committed_view(...)``. A read is a call chain through
+    ``.read`` that selects JDBC by ``.format("jdbc")`` (table in
+    ``option("dbtable", ...)``) or by ``.jdbc(url, table)``. Chains
+    through ``.write`` — the sink's own append — are exempt."""
+    import ast
+
+    def is_view(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None))
+            == "jdbc_committed_view"
+        )
+
+    bad = []
+    for node in ast.walk(ast.parse(source)):
+        if not (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("load", "jdbc")):
+            continue
+        attrs, dbtable, jdbc = [], None, node.func.attr == "jdbc"
+        if jdbc:
+            dbtable = node.args[1] if len(node.args) > 1 else next(
+                (k.value for k in node.keywords if k.arg == "table"), None
+            )
+        cur = node.func.value
+        while isinstance(cur, (ast.Call, ast.Attribute)):
+            if isinstance(cur, ast.Attribute):
+                attrs.append(cur.attr)
+                cur = cur.value
+                continue
+            f = cur.func
+            args = [a.value if isinstance(a, ast.Constant) else a
+                    for a in cur.args]
+            if isinstance(f, ast.Attribute):
+                if f.attr == "format" and args == ["jdbc"]:
+                    jdbc = True
+                if f.attr == "option" and args[:1] == ["dbtable"]:
+                    dbtable = cur.args[1]
+            cur = f
+        if jdbc and "read" in attrs and "write" not in attrs:
+            if dbtable is None or not is_view(dbtable):
+                bad.append(node.lineno)
+    return bad
+
+
+def test_versioned_jdbc_table_is_read_only_through_committed_view():
+    """Readers of the versioned exactly-once table must join through the
+    epoch commit pointer: a direct read would see superseded and
+    crashed-attempt versions. Every JDBC read in a module that defines
+    or drives ``foreach_batch_jdbc_sink`` goes through
+    ``jdbc_committed_view``; the sink's append is a write and exempt.
+    (The sink's own raw statements — version allocation, pointer flip,
+    garbage collection — are the single writer's bookkeeping, not
+    reads through Spark.)"""
+    import pathlib
+
+    import bigdata_deepfakeanalysis_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    owners = {
+        p: p.read_text()
+        for p in root.rglob("*.py")
+        if "foreach_batch_jdbc_sink" in p.read_text()
+    }
+    assert root / "streaming" / "batch_equiv.py" in owners
+    bad = {
+        str(p.relative_to(root)): lines
+        for p, src in owners.items()
+        if (lines := _jdbc_reads_bypassing_view(src))
+    }
+    assert not bad, bad
+
+    # the check itself catches a direct read of the data table, in both
+    # spellings, and exempts the append
+    direct = (
+        "spark.read.format('jdbc').option('url', u)"
+        ".option('dbtable', table_name).load()\n"
+        "spark.read.jdbc(u, table_name)\n"
+        "df.write.format('jdbc').option('dbtable', table_name).save()\n"
+        "spark.read.format('jdbc')"
+        ".option('dbtable', jdbc_committed_view(table_name)).load()\n"
+    )
+    assert _jdbc_reads_bypassing_view(direct) == [1, 2]
+
+
 def test_stateful_op_on_rocksdb_state_store(spark):
     """The custom stateful operator must run unchanged on the RocksDB
     state store provider — the production state backend for large
