@@ -161,7 +161,7 @@ def _heatmap_summary(hm: DataFrame) -> DataFrame:
             (mx == 0.0) | ((mx > 0.9) & (mx <= 1.0))
         ).alias("hm_norm_valid"),
         "used_torch",
-    ).orderBy("media_id")
+    )
 
 
 _GRADCAM_ORACLE = f"""
@@ -332,7 +332,7 @@ def q_occlusion_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min_contrib",
         F.col("_top.cell").alias("top_cell"),
         F.col("_top.contrib").alias("top_contrib"),
-    ).orderBy("media_id")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -92,7 +92,6 @@ def q_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pos",
             F.round((F.col("val") - F.col("mu")) / F.col("sigma"), 9).alias("z"),
         )
-        .orderBy("vec_id", "pos")
     )
 
 
@@ -376,7 +375,6 @@ def _cv_hashed(folds: DataFrame, sizes: DataFrame) -> DataFrame:
                 "accuracy_in_range"
             ),
         )
-        .orderBy("fold", "label")
     )
 
 
@@ -578,7 +576,6 @@ def q_cka_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cka"
             ),
         )
-        .orderBy("g1", "g2")
     )
 
 
@@ -721,7 +718,7 @@ def q_tsne2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return coords.select(
         "group", "image_key", finite.alias("coords_finite")
-    ).orderBy("group", "image_key")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1086,7 +1083,7 @@ def q_auc_evaluation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("tp").cast("double") / F.col("np"), 9).alias(
             "recall_at0"
         ),
-    ).orderBy("fold")
+    )
 
 
 # r7 shared primitive — lives in operators.parity so relational/text
@@ -1180,7 +1177,6 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("pos").cast("double") / F.count(F.lit(1)), 9
             ).alias("pos_rate"),
         )
-        .orderBy("bin")
     )
 
 
@@ -1269,7 +1265,6 @@ def q_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("q0_sum").cast("bigint").alias("q0_sum"),
             "max_roll3",
         )
-        .orderBy("label")
     )
 
 
@@ -1405,7 +1400,6 @@ def q_pr_curve_ap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ap",
             "best_f1",
         )
-        .orderBy("fold")
     )
 
 
@@ -1507,7 +1501,6 @@ def q_centroid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_label").cast("int").alias("pred_label"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("true_label", "pred_label")
     )
 
 
@@ -1751,7 +1744,6 @@ def q_mllib_minhash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("j", 9).alias("jaccard"),
         )
         .distinct()
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1861,7 +1853,6 @@ def q_mllib_brp_lsh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("d2") <= _BRP_D2)
         .select("vec_a", "vec_b", F.round("d2", 9).alias("dist2"))
-        .orderBy("vec_a", "vec_b")
     )
 
 
@@ -2118,7 +2109,6 @@ def q_brier_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * (p_ppm - pos * 1000000)) AS BIGINT)"
             ).alias("brier_fp"),
         )
-        .orderBy("bin")
     )
 
 
@@ -2242,7 +2232,6 @@ def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_cells",
             "n_points",
         )
-        .orderBy("cluster_id")
     )
 
 
@@ -2366,7 +2355,6 @@ def q_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mean_sil_micro",
             "frac_separated_ppm",
         )
-        .orderBy("label")
     )
 
 

@@ -212,7 +212,6 @@ def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("width").cast("bigint").alias("sum_width"),
             F.sum("n_frames").cast("bigint").alias("sum_frames"),
         )
-        .orderBy("kind")
     )
 
 
@@ -234,9 +233,7 @@ def q_surrogate_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly against SQL recomputing the same md5-digit embedding — the
     Arrow round-trip must be value-preserving."""
     feats = surrogate_featurize(media(spark, sf_dir).where(F.col("media_id") < 50))
-    return feats.withColumn("feature", F.round("feature", 9)).orderBy(
-        "media_id", "dim"
-    )
+    return feats.withColumn("feature", F.round("feature", 9))
 
 
 @query(
@@ -272,7 +269,6 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("frame_idx") % F.col("stride") == 0)
         .select("media_id", "frame_idx")
-        .orderBy("media_id", "frame_idx")
     )
 
 
@@ -300,9 +296,7 @@ def q_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     imaging libs are absent (this container always; an environment
     with PIL flips ``decoded`` and takes the real-decode path, which
     is intentionally outside the oracle's contract)."""
-    return resize_half(media(spark, sf_dir).where(F.col("media_id") < 100)).orderBy(
-        "media_id"
-    )
+    return resize_half(media(spark, sf_dir).where(F.col("media_id") < 100))
 
 
 _STAGES = (1, 2, 3)
@@ -369,9 +363,7 @@ def q_multistage_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = surrogate_multistage(
         media(spark, sf_dir).where(F.col("media_id") < 40)
     )
-    return feats.withColumn("feature", F.round("feature", 9)).orderBy(
-        "media_id", "stage", "dim"
-    )
+    return feats.withColumn("feature", F.round("feature", 9))
 
 
 @query(
@@ -427,7 +419,6 @@ def q_audio_chunk_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.abs("s")).alias("peak"),
             F.round(F.sqrt(F.avg(F.col("s") * F.col("s"))), 9).alias("rms"),
         )
-        .orderBy("media_id", "chunk")
     )
 
 
@@ -553,7 +544,7 @@ def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim = corp.select(
         F.col("media_id").alias("doc_id"), "b0", "b1", "b2", "b3"
     ).localCheckpoint(eager=True)
-    return simhash_band_pairs(sim, ham_max=2).orderBy("doc_a", "doc_b")
+    return simhash_band_pairs(sim, ham_max=2)
 
 
 # ---------------------------------------------------------------------------
@@ -647,7 +638,6 @@ def q_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("first_cut"),
         )
-        .orderBy("media_id")
     )
 
 
@@ -717,7 +707,7 @@ def q_image_tiling(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("tile_md5"),
     )
-    return tiles.orderBy("media_id", "tile_id")
+    return tiles
 
 
 # ---------------------------------------------------------------------------
@@ -829,5 +819,4 @@ def q_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "longest_seg",
             "first_active_chunk",
         )
-        .orderBy("media_id")
     )

@@ -60,7 +60,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("band", "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("band", "event_type")
     )
 
 
@@ -113,7 +112,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts", _FMT).alias("ts"),
             F.date_format("asof_signup", _FMT).alias("asof_signup_ts"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -169,7 +167,6 @@ def q_validity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.min("vec_id").cast("bigint").alias("min_vec_id"),
         )
-        .orderBy("valid")
     )
 
 
@@ -237,7 +234,6 @@ def q_embedding_json_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(v AS DECIMAL(12,9))) AS DOUBLE)"
             ).alias("vec_sum")
         )
-        .orderBy("image_key")
     )
 
 
@@ -504,7 +500,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("active_users") * 1.0 / F.col("cohort_n"), 9
             ).alias("retention"),
         )
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -710,7 +705,7 @@ def q_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("updated")
         .alias("status"),
     )
-    return kept.unionByName(applied).orderBy("doc_id")
+    return kept.unionByName(applied)
 
 
 # ---------------------------------------------------------------------------
@@ -774,7 +769,6 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             (F.max("us") - F.min("us")).cast("long").alias("dur_us"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -864,7 +858,6 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)"
             ).alias("total_price"),
         )
-        .orderBy("snapshot")
     )
 
 
@@ -968,7 +961,6 @@ def q_scd2_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "segment",
             F.col("o_totalprice").alias("price"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -1117,7 +1109,6 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("session_end"),
             "n_events",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -1372,7 +1363,6 @@ def q_dictionary_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("code").cast("bigint").alias("code_min"),
             F.max("code").cast("bigint").alias("code_max"),
         )
-        .orderBy("doc_bucket")
     )
 
 
@@ -1451,7 +1441,6 @@ def q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         touched.groupBy("first_touch", "last_touch")
         .agg(F.countDistinct("user_id").alias("n_users"))
-        .orderBy("first_touch", "last_touch")
     )
 
 
@@ -1542,7 +1531,6 @@ def q_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("max_open").cast("bigint").alias("max_open"),
             "first_peak_date",
         )
-        .orderBy("lane")
     )
 
 
@@ -1646,7 +1634,6 @@ def q_merge_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "first_start"
             ),
         )
-        .orderBy("lane")
     )
 
 
@@ -1885,7 +1872,6 @@ def q_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(floor(fv * 1000000) AS BIGINT)) AS BIGINT)"
             ).alias("fill_checksum_fp"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -2073,7 +2059,6 @@ def q_merge_into_emulation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " THEN CAST(price AS DECIMAL(18,2)) END) AS DOUBLE)"
             ).alias("surviving_price_sum"),
         )
-        .orderBy("action")
     )
 
 
@@ -2165,7 +2150,6 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vw_sum_fp",
             "twap",
         )
-        .orderBy("user_id")
     )
 
 
@@ -2260,7 +2244,6 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("day").alias("changepoint_day"),
             F.round(F.abs(F.col("s_t")), 6).alias("max_abs_cusum"),
         )
-        .orderBy("series")
     )
 
 
@@ -2359,7 +2342,6 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.col("cohort_size")
             ).alias("ltv_per_customer"),
         )
-        .orderBy("cohort", "age_q")
     )
 
 
@@ -2468,7 +2450,6 @@ def q_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "day", F.struct(-F.col("prominence"), F.col("day"))
             ).alias("top_peak_day"),
         )
-        .orderBy("series")
     )
 
 
@@ -2571,7 +2552,6 @@ def q_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.abs(F.col("z")) > _RZ_T, F.col("day"))
             ).alias("first_anomaly_day"),
         )
-        .orderBy("series")
     )
 
 
@@ -2657,7 +2637,6 @@ def q_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "close",
             F.col("n_ticks").cast("bigint").alias("n_ticks"),
         )
-        .orderBy("series", "hr")
     )
 
 
@@ -2727,7 +2706,6 @@ def q_trailing_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("report_d").cast("int").alias("report_d"),
             F.col(f"active_{_TDU_WIN}d").cast("bigint"),
         )
-        .orderBy("report_d")
     )
 
 
@@ -2989,7 +2967,6 @@ def q_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("bounce_ppm"),
         )
-        .orderBy("d")
     )
 
 
@@ -3315,7 +3292,6 @@ def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS DECIMAL(18,9)) AS DOUBLE)"
             ).alias("acf"),
         )
-        .orderBy("lag")
     )
 
 
@@ -3556,7 +3532,7 @@ def q_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(COALESCE(CAST(CAST(1.0 AS DOUBLE) / first_rel"
             " AS DECIMAL(18,9)), 0) AS DOUBLE)"
         ).alias("mrr"),
-    ).orderBy("nationkey")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3749,7 +3725,6 @@ def q_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("support"))
         .where(F.col("support") >= _FT_SUP)
         .select("p1", "p2", "p3", F.col("support").cast("bigint").alias("support"))
-        .orderBy(F.col("support").desc(), "p1", "p2", "p3")
     )
 
 
@@ -3985,7 +3960,6 @@ def q_itemitem_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cosine"
             ),
         )
-        .orderBy("item", "rk")
     )
 
 
@@ -4237,7 +4211,6 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "prob_ppm"
             ),
         )
-        .orderBy("prev_event", "next_event")
     )
 
 

@@ -103,7 +103,6 @@ def q_gap_per_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / _HW
             ).alias("gap")
         )
-        .orderBy("group", "stem", "ch")
     )
 
 
@@ -168,7 +167,6 @@ def q_channel_variance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= 2)
         .select("stem", "stage", "ch", "var", "rk")
-        .orderBy("stem", "stage", "rk")
     )
 
 
@@ -204,7 +202,6 @@ def q_minmax_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("hi") - F.col("lo") + F.lit(1e-8))
             ).alias("norm_value"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -278,7 +275,6 @@ def q_gap_hof_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_channels"),
             F.sum("agree").cast("bigint").alias("n_finite"),
         )
-        .orderBy("group", "stem")
     )
 
 
@@ -327,7 +323,7 @@ def q_channel_topk_rowlocal(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the difference between a per-tensor explode +
     window (shuffle of C rows per tensor on the tensor key) and a
     row-local expression pipeline that never leaves the scan stage —
-    the ONLY shuffle in this plan is the final presentation sort."""
+    this plan has no shuffle at all."""
     fm = featuremaps(spark, sf_dir).where(
         (F.col("stage") == "stage2") & (F.col("vec_id") < 60)
     )
@@ -351,7 +347,7 @@ def q_channel_topk_rowlocal(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos") + 1).cast("int").alias("rk"),
         F.col("s.ch").cast("int").alias("ch"),
         F.round(-F.col("s.neg_gap"), 9).alias("gap"),
-    ).orderBy("group", "stem", "rk")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -442,7 +438,6 @@ def q_map_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("val").cast("bigint").alias("total"),
             F.min("val").cast("bigint").alias("min_val"),
         )
-        .orderBy("metric")
     )
 
 
@@ -515,7 +510,7 @@ def q_array_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.expr("sm[31]"), 6).alias("mid_sm"),
         F.round(F.expr("sm[63]"), 6).alias("last_sm"),
         F.round(F.expr(shift_expr), 6).alias("total_shift"),
-    ).orderBy("vec_id")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -152,7 +152,6 @@ def q_bucketed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(order_revenue AS DECIMAL(21,6))) AS DOUBLE)"
             ).alias("total_revenue"),
         )
-        .orderBy("n_items")
     )
 
 
@@ -301,7 +300,6 @@ def q_bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_items"),
             dmul2_sum("l_extendedprice", "1 - l_discount", "revenue"),
         )
-        .orderBy("l_orderkey")
     )
 
 

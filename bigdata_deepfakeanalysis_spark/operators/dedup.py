@@ -628,7 +628,6 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_texts"),
             F.min("doc_id").alias("min_survivor"),
         )
-        .orderBy("n_copies")
     )
 
 
@@ -654,7 +653,7 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = lsh_candidate_pairs(
         minhash_bands(aug_docs(spark, sf_dir), k=12, band_rows=3)
     )
-    return pairs.orderBy("doc_a", "doc_b")
+    return pairs
 
 
 _SIM64_CTE = """
@@ -716,7 +715,7 @@ def q_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the persisted fingerprint table a dedup pipeline keeps anyway."""
     sim = simhash64(aug_docs(spark, sf_dir), "text", "doc_id")
     sim = sim.localCheckpoint(eager=True)
-    return simhash_band_pairs(sim, ham_max=3).orderBy("doc_a", "doc_b")
+    return simhash_band_pairs(sim, ham_max=3)
 
 
 @query(
@@ -755,7 +754,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         jaccard_verify(cands, aug, min_common=5, threshold=0.5)
         .select("doc_a", "doc_b", "jaccard")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -828,7 +826,7 @@ def q_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked = adaptive_lsh_bucket(
         aug_emb(spark, sf_dir).withColumn("_q", quantize("vec"))
     )
-    return cosine_pairs(blocked, "bucket", 0.999).orderBy("vec_a", "vec_b")
+    return cosine_pairs(blocked, "bucket", 0.999)
 
 
 def ivf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -955,7 +953,6 @@ def q_cosine_near_dup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cosine",
             (F.col("n_viol") == 0).alias("ivf_subset_ok"),
         )
-        .orderBy("vec_a", "vec_b")
     )
 
 
@@ -1256,7 +1253,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = connected_components(pairs)
     return cc.select(
         F.col("id").alias("doc_id"), "component"
-    ).orderBy("doc_id")
+    )
 
 
 _COMPONENTS_ORACLE = f"""
@@ -1289,7 +1286,7 @@ def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = connected_components_star(pairs)
     return cc.select(
         F.col("id").alias("doc_id"), "component"
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1337,7 +1334,6 @@ def semantic_dedup_accounting(
             F.sum(F.col("is_survivor").cast("long")).alias("n_survivors"),
             F.sum((~F.col("is_survivor")).cast("long")).alias("n_removed"),
         )
-        .orderBy("label")
     )
 
 
@@ -1371,7 +1367,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.col("n_survivors") + F.col("n_removed") == F.col("n_vectors")
         ).alias("counts_partition"),
-    ).orderBy("label")
+    )
 
 
 def _semantic_dedup_lsh_oracle() -> str:
@@ -1471,7 +1467,6 @@ def q_semantic_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("is_survivor").cast("long")).alias("n_survivors"),
             F.sum((~F.col("is_survivor")).cast("long")).alias("n_removed"),
         )
-        .orderBy("label")
     )
 
 
@@ -1559,7 +1554,7 @@ def q_substring_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (X, X+1000000) pair must surface with many shared spans."""
     return substring_span_pairs(
         aug_docs(spark, sf_dir), "text", "doc_id"
-    ).orderBy("doc_a", "doc_b")
+    )
 
 
 @query(
@@ -1708,7 +1703,6 @@ def q_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("best.quality").cast("bigint").alias("quality"),
             "n_copies",
         )
-        .orderBy("survivor")
     )
 
 
@@ -1801,7 +1795,6 @@ def q_snm_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("doc_id", "nbr").alias("doc_b"),
             F.col("dist").cast("bigint").alias("dist"),
         )
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1897,7 +1890,7 @@ def q_edit_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify touches candidates only — the shape of every
     filter-verification similarity join."""
     _, pairs, _ = edit_distance_pairs(spark, sf_dir)
-    return pairs.orderBy("doc_a", "doc_b")
+    return pairs
 
 
 def edit_distance_pairs(spark: SparkSession, sf_dir: str):
@@ -2047,7 +2040,6 @@ def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_golden",
             "sum_max_len",
         )
-        .orderBy("n_members")
     )
 
 
@@ -2297,7 +2289,6 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("containment", 9).alias("containment"),
             F.round("jaccard", 9).alias("jaccard"),
         )
-        .orderBy("small_id", "big_id")
     )
 
 
@@ -2374,7 +2365,6 @@ def q_normalized_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_groups",
             "min_survivor",
         )
-        .orderBy("n_copies")
     )
 
 
@@ -2560,7 +2550,6 @@ def q_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(cluster_size * n_clusters AS BIGINT)"
             ).alias("n_docs"),
         )
-        .orderBy("cluster_size")
     )
 
 

@@ -230,11 +230,6 @@ def q_path_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_files"),
             F.min("vec_id").alias("min_vec_id"),
         )
-        .orderBy(
-            F.asc_nulls_first("project"),
-            F.asc_nulls_first("split"),
-            F.asc_nulls_first("label"),
-        )
     )
 
 
@@ -311,7 +306,6 @@ def q_stem_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "example_stem",
             (F.col("n_groups") == 4).alias("is_complete"),
         )
-        .orderBy("n_groups")
     )
 
 
@@ -385,7 +379,7 @@ def q_extension_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(n_files * 1000000 DIV SUM(n_files)"
             " OVER (PARTITION BY label) AS BIGINT)"
         ).alias("share_ppm"),
-    ).orderBy("label", "ext")
+    )
 
 
 @query(
@@ -453,5 +447,4 @@ def q_key_depth_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_keys"),
             F.min("key").alias("example_key"),
         )
-        .orderBy("depth", "malformed")
     )

@@ -102,7 +102,6 @@ def q_group_align_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         both.join(F.broadcast(caps), "group")
         .where(F.col("rk") <= F.col("n"))
         .select("group", "side", "key")
-        .orderBy("group", "side", "key")
     )
 
 
@@ -180,7 +179,6 @@ def q_stem_join_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("emb_dim") + F.col("gap_dim")).alias("concat_dim"),
             (F.col("emb_sum") + F.col("gap_sum")).alias("concat_sum"),
         )
-        .orderBy("group", "stem")
     )
 
 
@@ -247,7 +245,6 @@ def q_union_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         real.unionByName(fake)
         .groupBy(F.substring_index("key", "/", 1).alias("label"))
         .agg(F.count(F.lit(1)).alias("n"), F.min("key").alias("first_key"))
-        .orderBy("label")
     )
 
 
@@ -271,7 +268,7 @@ def q_intersect_stems(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = base.where(F.col("vec_id") % 2 == 0).select("stem")
     b = base.where(F.col("vec_id") % 3 == 0).select("stem")
-    return a.intersect(b).orderBy("stem")
+    return a.intersect(b)
 
 
 # ---------------------------------------------------------------------------
@@ -315,14 +312,14 @@ _NAAJ_SQL = """
     FROM base b
     LEFT JOIN not_in ni ON b.p_brand = ni.p_brand
     LEFT JOIN not_exists ne ON b.p_brand = ne.p_brand
-    LEFT JOIN poisoned_cnt pc ON b.p_brand = pc.p_brand
-    ORDER BY b.p_brand
+    LEFT JOIN poisoned_cnt pc ON b.p_brand = pc.p_brand{order}
     """
 
 
 @query(
     "q_not_in_anti_join",
-    _NAAJ_SQL.format(part="part", lineitem="lineitem"),
+    _NAAJ_SQL.format(part="part", lineitem="lineitem",
+                     order="\n    ORDER BY b.p_brand"),
 )
 def q_not_in_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand counts of parts never returned, computed three ways:
@@ -343,7 +340,9 @@ def q_not_in_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     table(spark, sf_dir, "part").createOrReplaceTempView("nj_part")
     table(spark, sf_dir, "lineitem").createOrReplaceTempView("nj_lineitem")
-    return spark.sql(_NAAJ_SQL.format(part="nj_part", lineitem="nj_lineitem"))
+    return spark.sql(
+        _NAAJ_SQL.format(part="nj_part", lineitem="nj_lineitem", order="")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -484,7 +483,6 @@ def q_grid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("site_id").cast("bigint").alias("nearest_site"),
             F.col("d2").cast("bigint").alias("dist2"),
         )
-        .orderBy("pt_id")
     )
 
 
@@ -595,7 +593,6 @@ def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("a_id").alias("n_ship_intervals"),
             F.countDistinct("b_id").alias("n_order_windows"),
         )
-        .orderBy("period")
     )
 
 

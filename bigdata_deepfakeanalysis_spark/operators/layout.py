@@ -113,7 +113,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("l_suppkey").alias("s_lo"),
             F.max("l_suppkey").alias("s_hi"),
         )
-        .orderBy("file_id")
     )
 
 
@@ -254,7 +253,6 @@ def q_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rows_scanned"),
             F.sum("matched").cast("bigint").alias("rows_matched"),
         )
-        .orderBy("probe")
     )
 
 
@@ -341,7 +339,6 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("file_id").cast("bigint").alias("first_file"),
             F.max("file_id").cast("bigint").alias("last_file"),
         )
-        .orderBy("part", "bin")
     )
 
 
@@ -487,7 +484,6 @@ def q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("l_suppkey").alias("s_lo"),
             F.max("l_suppkey").alias("s_hi"),
         )
-        .orderBy("file_id")
     )
 
 
@@ -657,7 +653,7 @@ def q_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"n_partitions BETWEEN {_ADV_MIN_PARTS} AND {_ADV_MAX_PARTS}"
             f" AND max_part_rows * 1000000 DIV n_rows <= {_ADV_MAX_SHARE}"
         ).alias("recommended"),
-    ).orderBy("col")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -767,4 +763,4 @@ def q_encoding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             " WHEN ndv * 10 <= n THEN 'DICT'"
             " ELSE 'PLAIN' END"
         ).alias("encoding"),
-    ).orderBy("col_name")
+    )

@@ -12,8 +12,12 @@ Scale notes (100 TB design point):
 - Sorts that feed a LIMIT become TakeOrderedAndProject (no full sort).
 - Final sorts over results bounded by construction (groupings on
   flags, priorities, nations, segments, ...) use parity.sort_bounded:
-  one partition, no range-sampling or range-shuffle job. Results that
-  grow with the data keep the global range sort.
+  one partition, no range-sampling or range-shuffle job.
+- Order is not part of the result contract: the driver compares
+  results order-insensitively, so other results end unsorted. A root
+  orderBy (a range sort: a sampling job plus a shuffle of the whole
+  result) needs an ORDERED_RESULTS reason in
+  tests/test_plan_hygiene.py.
 """
 
 from __future__ import annotations
@@ -183,7 +187,6 @@ def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         table(spark, sf_dir, "lineitem")
         .where((F.col("l_quantity") > 45) & (F.col("l_returnflag") == "R"))
-        .orderBy("l_orderkey", "l_partkey", "l_linenumber")
         .select("l_orderkey", "l_partkey", "l_quantity")
     )
 
@@ -212,7 +215,6 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders, F.col("c_custkey") == F.col("o_custkey"), "left_semi"
         )
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 
@@ -238,7 +240,6 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti"
         )
         .select("c_custkey", "c_acctbal")
-        .orderBy("c_custkey")
     )
 
 
@@ -262,7 +263,6 @@ def q_outer_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         customer.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("n_orders"))
-        .orderBy("c_custkey")
     )
 
 
@@ -353,10 +353,6 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(dsum("l_quantity", "sum_qty"), F.count(F.lit(1)).alias("n"))
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        )
     )
 
 
@@ -375,10 +371,6 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
         .agg(dsum("l_extendedprice", "sum_price"))
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        )
     )
 
 
@@ -422,7 +414,6 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("double"),
         )
         .select("o_custkey", "o_orderkey", "running_spend")
-        .orderBy("o_custkey", "o_orderkey")
     )
 
 
@@ -457,7 +448,6 @@ def q_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w).alias("rk"),
         )
         .where(F.col("rk") <= 3)
-        .orderBy("c_custkey", "rk")
     )
 
 
@@ -488,7 +478,6 @@ def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("o_orderdate"), F.lag("o_orderdate").over(w)
             ).cast("bigint").alias("days_since_prev"),
         )
-        .orderBy("o_custkey", "o_orderkey")
     )
 
 
@@ -534,7 +523,7 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .exceptAll(big.distinct())
         .select(F.lit("except").alias("op"), "custkey")
     )
-    return inter.unionByName(exc).orderBy("op", "custkey")
+    return inter.unionByName(exc)
 
 
 # --------------------------------------------------------------------------
@@ -572,7 +561,6 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("small")
             .alias("size_class"),
         )
-        .orderBy("p_partkey")
     )
 
 
@@ -597,7 +585,6 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("bigint").alias("order_year"),
         )
         .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("order_month")
     )
 
 
@@ -685,7 +672,6 @@ def q_above_avg_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation_avg.alias("a")), "s_nationkey")
         .where(F.col("s_acctbal") > F.col("nat_avg"))
         .select("s_suppkey", "s_name")
-        .orderBy("s_suppkey")
     )
 
 
@@ -734,10 +720,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderpriority",
         )
         .agg(F.count(F.lit(1)).alias("n"), dsum("o_totalprice", "total"))
-        .orderBy(
-            F.col("r_name").asc_nulls_first(),
-            F.col("o_orderpriority").asc_nulls_first(),
-        )
     )
 
 
@@ -775,7 +757,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col(t), F.lit(0)).cast("bigint").alias(t)
             for t in _EVENT_TYPES
         ],
-    ).orderBy("day")
+    )
 
 
 @query(
@@ -836,7 +818,6 @@ def q_exists_returned(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE EXISTS (SELECT 1 FROM lineitem
                       WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
         GROUP BY o_orderpriority
-        ORDER BY o_orderpriority
         """
     )
 
@@ -887,7 +868,6 @@ def q7_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("int").alias("o_year"),
         )
         .agg(dmul2_sum("l_extendedprice", "1 - l_discount", "revenue"))
-        .orderBy("supp_nation", "cust_nation", "o_year")
     )
 
 
@@ -1015,7 +995,6 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percent_rank().over(w), 9).alias("pct_rank"),
             F.round(F.cume_dist().over(w), 9).alias("cume"),
         )
-        .orderBy("c_custkey")
     )
 
 
@@ -1059,7 +1038,6 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("n_custs"))
-        .orderBy(F.desc("n_custs"), F.desc("c_count"))
     )
 
 
@@ -1112,7 +1090,6 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_totalprice",
             "qty_sum",
         )
-        .orderBy(F.desc("qty_sum"), "o_orderkey")
     )
 
 
@@ -1383,7 +1360,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mkt_share"),
             F.count(F.lit(1)).alias("n_lines"),
         )
-        .orderBy("o_year")
     )
 
 
@@ -1431,7 +1407,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("int").alias("o_year"),
         )
         .agg(dmul2_sum("l_extendedprice", "1 - l_discount", "profit"))
-        .orderBy("supp_nation", F.desc("o_year"))
     )
 
 
@@ -1575,7 +1550,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(max_rev))
         .where(F.col("total_revenue") == F.col("mr"))
         .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
     )
 
 
@@ -1776,7 +1750,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey").alias("p_key"),
             F.col("value_dec").cast("double").alias("part_value"),
         )
-        .orderBy(F.desc("part_value"), "p_key")
     )
 
 
@@ -1862,7 +1835,6 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("s_suppkey", "s_name", "s_acctbal")
         .distinct()
-        .orderBy("s_suppkey")
     )
 
 
@@ -1936,7 +1908,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
     )
 
 
@@ -2002,7 +1973,6 @@ def q_variant_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("v").cast("bigint").alias("sum_v"),
             F.count_distinct("u").alias("n_users"),
         )
-        .orderBy("t")
     )
 
 
@@ -2244,7 +2214,6 @@ def q_histogram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hi_cents"),
             "n",
         )
-        .orderBy("bucket")
     )
 
 
@@ -2306,7 +2275,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"CAST(COUNT(*) OVER ({win}) AS BIGINT)").alias(
             "n_orders_30d"
         ),
-    ).orderBy("o_custkey", "day", "o_orderkey")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2416,7 +2385,6 @@ def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_order",
             "n_nations",
         )
-        .orderBy("k")
     )
 
 
@@ -2481,7 +2449,6 @@ def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("v").alias("hi"),
             dsum("v", "bucket_sum", 2),
         )
-        .orderBy("bucket")
     )
 
 
@@ -2695,7 +2662,6 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_outliers"),
         )
         .select("l_returnflag", "median", "mad", "n", "n_outliers")
-        .orderBy("l_returnflag")
     )
 
 
@@ -2720,13 +2686,13 @@ _RECURSIVE_SQL = """
            CAST(MIN(suppkey) AS BIGINT) AS min_supp,
            CAST(MAX(root) AS BIGINT) AS max_root,
            CAST(SUM(suppkey) AS BIGINT) AS supp_sum
-    FROM chain GROUP BY depth ORDER BY depth
+    FROM chain GROUP BY depth{order}
     """
 
 
 @query(
     "q_recursive_cte_chain",
-    _RECURSIVE_SQL.format(supplier="supplier"),
+    _RECURSIVE_SQL.format(supplier="supplier", order=" ORDER BY depth"),
 )
 def q_recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE hierarchy traversal (Spark 4's recursive CTE /
@@ -2742,7 +2708,7 @@ def q_recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier — the same per-round cost shape as the Pregel loop, with
     the plan depth managed by the engine instead of localCheckpoint."""
     table(spark, sf_dir, "supplier").createOrReplaceTempView("rc_supplier")
-    return spark.sql(_RECURSIVE_SQL.format(supplier="rc_supplier"))
+    return spark.sql(_RECURSIVE_SQL.format(supplier="rc_supplier", order=""))
 
 
 # ---------------------------------------------------------------------------
@@ -2763,14 +2729,15 @@ _LATERAL_SQL = """
              FROM {customer}
              WHERE c_nationkey = n_nationkey
              ORDER BY c_acctbal DESC, c_custkey
-             LIMIT 2) t
-    ORDER BY n_name, t.rk
+             LIMIT 2) t{order}
     """
 
 
 @query(
     "q_lateral_topn",
-    _LATERAL_SQL.format(nation="nation", customer="customer"),
+    _LATERAL_SQL.format(
+        nation="nation", customer="customer", order="\n    ORDER BY n_name, t.rk"
+    ),
 )
 def q_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation top-2 customers by account balance via a LATERAL
@@ -2783,7 +2750,8 @@ def q_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     table(spark, sf_dir, "nation").createOrReplaceTempView("lt_nation")
     table(spark, sf_dir, "customer").createOrReplaceTempView("lt_customer")
     return spark.sql(
-        _LATERAL_SQL.format(nation="lt_nation", customer="lt_customer")
+        _LATERAL_SQL.format(nation="lt_nation", customer="lt_customer",
+                            order="")
     )
 
 
@@ -2856,11 +2824,6 @@ def q_grouping_id_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("row_kind"),
             "n",
             "total",
-        )
-        .orderBy(
-            "gid",
-            F.asc_nulls_first("priority"),
-            F.asc_nulls_first("status"),
         )
     )
 
@@ -3313,7 +3276,6 @@ def q_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(h_part AS DECIMAL(18,9))) AS DOUBLE)"
             ).alias("entropy_bits"),
         )
-        .orderBy("col")
     )
 
 
@@ -3377,7 +3339,7 @@ def q_contribution_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(RANK() OVER (PARTITION BY region"
             " ORDER BY bal DESC, nation) AS INT)"
         ).alias("rank_in_region"),
-    ).orderBy("region", "rank_in_region")
+    )
 
 
 @query(
@@ -3503,7 +3465,6 @@ def q_quantile_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("qty_sum"),
         )
         .select(F.col("band").cast("int"), "n", "lo", "hi", "qty_sum")
-        .orderBy("band")
     )
 
 
@@ -3601,7 +3562,6 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("segment_revenue"),
             F.min("o_custkey").cast("bigint").alias("min_custkey"),
         )
-        .orderBy("segment")
     )
 
 
@@ -3873,7 +3833,6 @@ def q_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_parts"),
             F.expr("CAST(SUM(rev) AS DOUBLE)").alias("class_revenue"),
         )
-        .orderBy("cls")
     )
 
 
@@ -4078,7 +4037,6 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("n1") * F.col("n2"))
             ).alias("ks_stat"),
         )
-        .orderBy("segment")
     )
 
 
@@ -4274,7 +4232,6 @@ def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spend",
             F.col("n_orders").cast("bigint").alias("n_orders"),
         )
-        .orderBy("segment", F.desc("spend"), F.desc("n_orders"))
     )
 
 
@@ -4466,7 +4423,6 @@ def q_upset_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_customers",
             "min_custkey",
         )
-        .orderBy("mask")
     )
 
 
@@ -4541,7 +4497,6 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("v", 9).alias("weighted_median"),
             F.col("tw").cast("bigint").alias("total_weight"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -4711,7 +4666,6 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS DOUBLE))"
             ).alias("gini"),
         )
-        .orderBy("segment")
     )
 
 
@@ -4887,7 +4841,6 @@ def q_histogram2d(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)"
             ).alias("price_mass"),
         )
-        .orderBy("bx", "by")
     )
 
 
@@ -5021,7 +4974,7 @@ def q_group_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("grp").alias("l_returnflag"),
         F.col("m.v").alias("mode_quantity"),
         F.col("m.c").cast("bigint").alias("n_occurrences"),
-    ).orderBy("l_returnflag")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5081,7 +5034,6 @@ def q_percentile_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.element_at("qe", 2), 9).alias("p95"),
             F.round(F.element_at("qe", 3), 9).alias("p99"),
         )
-        .orderBy("series", "month")
     )
 
 
@@ -5210,7 +5162,6 @@ def q_topk_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("bigint").alias("n_lines"),
             F.col("rk").cast("int"),
         )
-        .orderBy("gid", "yr", "nationkey", "rk")
     )
 
 
@@ -5461,7 +5412,6 @@ def q_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_val",
             "avg_len_c",
         )
-        .orderBy("col_name")
     )
 
 
@@ -6352,7 +6302,6 @@ def q_order_to_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p95_days"),
             F.max("days").cast("bigint").alias("max_days"),
         )
-        .orderBy("priority")
     )
 
 
@@ -6941,7 +6890,6 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(hits * 1000000 DIV n_cal AS BIGINT)"
             ).alias("coverage_ppm"),
         )
-        .orderBy("priority")
     )
 
 
@@ -7061,7 +7009,7 @@ def q_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CAST(r1 - r0 - price_eff_c - volume_eff_c AS BIGINT)"
         ).alias("mix_eff_c"),
-    ).orderBy("brand")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -7467,7 +7415,7 @@ def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             " / sqrt(CAST(n AS DOUBLE) * (n + 1) * (2 * n + 1) / 6"
             " - CAST(tie_sum AS DOUBLE) / 12) * 1000) AS BIGINT)"
         ).alias("z_milli"),
-    ).orderBy("segment")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -7796,7 +7744,6 @@ def q_direct_standardization(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("shift_c"),
         )
-        .orderBy("priority")
     )
 
 
@@ -8050,7 +7997,7 @@ def q_rate_mix_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(floor(CAST((w1 - w0) * (r1 - r0) AS DOUBLE)"
             " / 1000000) AS BIGINT)"
         ).alias("cross_eff_ppm"),
-    ).orderBy("priority")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -8147,7 +8094,7 @@ def q_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q_treat_c").cast("bigint").alias("q_treat_c"),
         F.col("q_ctrl_c").cast("bigint").alias("q_ctrl_c"),
         F.expr("CAST(q_treat_c - q_ctrl_c AS BIGINT)").alias("qte_c"),
-    ).orderBy("decile")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -8285,7 +8232,6 @@ def q_simpson_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_seg_down",
             "reversal",
         )
-        .orderBy("priority")
     )
 
 

@@ -80,7 +80,6 @@ def q_seeded_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.withColumn("rk", seeded_rank("group", "image_key"))
         .where(F.col("rk") <= 50)
         .select("group", "image_key", "rk")
-        .orderBy("group", "rk")
     )
 
 
@@ -110,7 +109,6 @@ def q_seeded_sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame
         .join(b.select("group", "image_key"), ["group", "image_key"])
         .groupBy("group")
         .agg(F.count(F.lit(1)).alias("n_stable"))
-        .orderBy("group")
     )
 
 
@@ -135,7 +133,6 @@ def q_first_n_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= 10)
         .select("group", "image_key", "rk")
-        .orderBy("group", "rk")
     )
 
 
@@ -223,7 +220,6 @@ def q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.min("vec_id").alias("min_key"),
         )
-        .orderBy("label", "split")
     )
 
 
@@ -386,7 +382,6 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey").cast("bigint").alias("o_orderkey"),
             "o_totalprice",
         )
-        .orderBy("o_orderpriority", "rk")
     )
 
 
@@ -900,7 +895,7 @@ def q_stratified_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(n * 1000000 DIV SUM(n) OVER (PARTITION BY fold)"
             " AS BIGINT)"
         ).alias("share_ppm"),
-    ).orderBy("fold", "lang")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -330,7 +330,6 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= 5)
-        .orderBy("query_id", "rk")
     )
 
 
@@ -607,7 +606,6 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= 3)
-        .orderBy("query_id", "rk")
     )
 
 
@@ -652,7 +650,6 @@ def q_ann_fast_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         fast.join(exact, ["query_id", "cand_id"])
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .orderBy("query_id")
     )
 
 
@@ -892,7 +889,6 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.coalesce("n_overlap", F.lit(0)) / F.col("count"))
             .alias("recall"),
         )
-        .orderBy("strategy", "query_id")
     )
 
 
@@ -1129,7 +1125,6 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             (F.col("n4") >= F.col("n1")).alias("recall_monotone"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -1395,7 +1390,6 @@ def q_ann_sq8_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         rescored.withColumn("rk", F.row_number().over(w2))
         .where(F.col("rk") <= 3)
-        .orderBy("query_id", "rk")
     )
 
 
@@ -1466,7 +1460,7 @@ def q_arrow_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = emb.mapInArrow(
         quantize_batches, "vec_id bigint, q0 bigint, qsum bigint"
     )
-    return out.orderBy("vec_id")
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1729,7 +1723,6 @@ def q_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS DECIMAL(18,9)) AS DOUBLE)"
             ).alias("accuracy"),
         )
-        .orderBy("label")
     )
 
 
@@ -1990,7 +1983,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         picked,
         "rank int, vec_id long, rel long, max_sim_prev long,"
         " mmr_score long",
-    ).orderBy("rank")
+    )
 
 
 # ---------------------------------------------------------------------------

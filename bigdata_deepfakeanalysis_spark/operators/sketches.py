@@ -246,7 +246,7 @@ def q_hll_distinct_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "est_within_5pct"
         ),
     )
-    return per_scope.unionByName(agreement).orderBy("scope")
+    return per_scope.unionByName(agreement)
 
 
 _KMV_K = 64
@@ -396,7 +396,6 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "kmv_est",
             F.col("exact").cast("bigint").alias("exact"),
         )
-        .orderBy("scope")
     )
 
 
@@ -500,7 +499,7 @@ def q_approx_quantile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ok("r50", 0.50).alias("p50_rank_ok"),
         ok("r95", 0.95).alias("p95_rank_ok"),
         ok("r99", 0.99).alias("p99_rank_ok"),
-    ).orderBy("l_returnflag")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -213,7 +213,6 @@ def q_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .select(F.col("n_nationkey").cast("bigint"), "n_name", "r_name")
-        .orderBy("n_nationkey")
     )
 
 
@@ -390,7 +389,6 @@ def q_npz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_cells"),
             F.sum(F.expr(cell_sum)).cast("bigint").alias("checksum_q"),
         )
-        .orderBy("group", "stage")
     )
 
 
@@ -612,7 +610,6 @@ def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_sum"
             ),
         )
-        .orderBy("file")
     )
 
 
@@ -799,7 +796,6 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(SUM(CAST(total_acctbal AS DECIMAL(18,2))) AS DOUBLE)"
             ).alias("total_acctbal"),
         )
-        .orderBy("n_regionkey")
     )
 
 
@@ -871,7 +867,6 @@ def q_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("file_names_consistent"),
             (F.min("fsize") > 0).alias("sizes_positive"),
         )
-        .orderBy("group")
     )
 
 
@@ -926,7 +921,6 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "acctbal_cents"
             ),
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -996,7 +990,6 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
             F.max("version").cast("int").alias("version"),
             F.min("vec_id").cast("bigint").alias("min_vec_id"),
         )
-        .orderBy("group")
     )
 
 
@@ -1046,7 +1039,6 @@ def q_incremental_file_pickup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.option("recursiveFileLookup", "true")
         .option("modifiedAfter", "2022-01-01T00:00:00")
         .parquet(str(base))
-        .orderBy("n_nationkey")
     )
 
 

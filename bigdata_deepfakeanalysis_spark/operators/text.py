@@ -226,7 +226,7 @@ grams AS (
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID: char-bigram profile votes, argmax per document."""
     docs = table(spark, sf_dir, "documents")
-    return predict_lang(lang_scores(docs)).orderBy("doc_id")
+    return predict_lang(lang_scores(docs))
 
 
 @query(
@@ -250,7 +250,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ceil(len/4) per word), stopword count, observed chars."""
     return token_stats(
         table(spark, sf_dir, "documents"), "text", "doc_id"
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -275,7 +275,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length band + stopword-ratio band → [0, 1]."""
     stats = token_stats(table(spark, sf_dir, "documents"), "text", "doc_id")
-    return quality_score(stats).orderBy("doc_id")
+    return quality_score(stats)
 
 
 @query(
@@ -295,7 +295,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     count per document."""
     return doc_fingerprint(
         table(spark, sf_dir, "documents"), "text", "doc_id", 8
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -401,7 +401,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated-token fraction)."""
     return repetition_stats(
         table(spark, sf_dir, "documents"), "text", "doc_id"
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -517,7 +517,6 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("n_emails") > 0, F.md5("redacted"))
             ).alias("sample_redacted_hash"),
         )
-        .orderBy("lang")
     )
 
 
@@ -547,7 +546,6 @@ def q_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("min_doc_id"),
         )
-        .orderBy("domain")
     )
 
 
@@ -684,7 +682,6 @@ def q_udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT d.doc_id, b.pos, b.bigram
         FROM _udtf_docs d,
              LATERAL bigrams(d.doc_id, d.text) b
-        ORDER BY d.doc_id, b.pos
         """
     )
 
@@ -789,7 +786,6 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .where(F.col("n_hits") > 0)
-        .orderBy("doc_id")
     )
 
 
@@ -849,7 +845,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_tokens").cast("bigint") / F.lit(2048.0), 9
             ).alias("fill_ratio"),
         )
-        .orderBy("lang", "bin")
     )
 
 
@@ -919,7 +914,6 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= 5)
         .select("lang", "term", "tf", "df_docs", "score")
-        .orderBy("lang", F.desc("score"), "term")
     )
 
 
@@ -1009,7 +1003,6 @@ def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("tokens_kept") * 1.0 / F.col("lang_tokens"), 9
             ).alias("keep_ratio"),
         )
-        .orderBy("lang")
     )
 
 
@@ -1120,7 +1113,6 @@ def q_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 9,
             ).alias("lm_score"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1347,11 +1339,8 @@ def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     index upsert keys on.
 
     100 TB design: the chunk struct array is one row-local
-    transform(sequence) — a flatMap, no shuffle anywhere; the ORDER BY
-    exists only for the deterministic compare."""
-    return chunk_docs(table(spark, sf_dir, "documents")).orderBy(
-        "doc_id", "chunk_idx"
-    )
+    transform(sequence) — a flatMap, no shuffle anywhere."""
+    return chunk_docs(table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1602,9 +1591,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str, steps: int) -> DataFrame:
             F.col("cnt").cast("bigint").alias("cnt"),
         )
     )
-    return out.unionByName(final).orderBy(
-        "step", F.desc("cnt"), "sym_a", "sym_b"
-    )
+    return out.unionByName(final)
 
 
 @query("q_bpe_merges", bpe_oracle_sql(_BPE_STEPS))
@@ -1853,7 +1840,6 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("raw").alias("n_variants"),
             F.min("doc_id").alias("min_doc_id"),
         )
-        .orderBy("canonical_url")
     )
 
 
@@ -1922,7 +1908,6 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "concat_ws(',', transform(vec, x -> CAST(x AS STRING)))"
             ).alias("vec"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1981,7 +1966,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " x -> CAST(x AS STRING)))"
             ).alias("postings"),
         )
-        .orderBy("term")
     )
 
 
@@ -2091,7 +2075,6 @@ def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("tokens_kept") * 1.0 / F.col("lang_tokens"), 9
             ).alias("keep_ratio"),
         )
-        .orderBy("lang")
     )
 
 
@@ -2409,7 +2392,6 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(n_fp * 1000000 DIV n_windows AS BIGINT)"
             ).alias("density_ppm"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -2641,7 +2623,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(n_novel * 1000000 DIV n_grams AS BIGINT)"
             ).alias("novelty_ppm"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -2699,7 +2680,7 @@ def q_kwic_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"substr(t, pos + {len(_KWIC_TERM)}, {_KWIC_W})").alias(
             "right_ctx"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3319,7 +3300,6 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_matches").cast("bigint"),
             "first_pos",
         )
-        .orderBy("doc_id")
     )
 
 
@@ -3894,7 +3874,7 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(n * 1000000 DIV SUM(n) OVER (PARTITION BY lang)"
             " AS BIGINT)"
         ).alias("share_ppm"),
-    ).orderBy("lang", "pred_lang")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3965,7 +3945,6 @@ def q_source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("jaccard_ppm"),
         )
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -4138,7 +4117,6 @@ def q_head_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * 1000000 DIV MIN(n_docs) AS BIGINT)"
             ).alias("n50_share_ppm"),
         )
-        .orderBy("source")
     )
 
 
@@ -4352,7 +4330,6 @@ def q_batch_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "score_fp",
             F.col("rk").cast("int").alias("rk"),
         )
-        .orderBy("qid", "rk")
     )
 
 
@@ -4746,7 +4723,6 @@ def q_curriculum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_ttr_ppm",
             "avg_ttr_ppm",
         )
-        .orderBy("phase")
     )
 
 
@@ -5244,5 +5220,4 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v").cast("bigint").alias("full_vocab"),
             F.col("total").cast("bigint").alias("total_tokens"),
         )
-        .orderBy("vocab_size")
     )

@@ -96,65 +96,64 @@ _WINDOW: list[str] = [
     # last-round-wins; disk-staging names go last so a
     # staging-restricted run still verifies the pure-compute surface).
     # Every module is green in the CORRECTNESS artifacts, so module
-    # coverage pins no slot; 71 queries changed this round, so the 21
-    # most recently graded of them ride after slot 50.
+    # coverage pins no slot. 224 queries lost their root range sort
+    # this round; the 174 most recently graded of them ride after
+    # slot 50.
     # ------------------------------------------------------------------
-    # (a) final sort moved onto parity.sort_bounded: the benchmark's
-    # three plus the robust-scale named-bound entry
-    "q1_pricing_summary",
-    "q5_regional_revenue",
-    "q_pandas_scalar_udf",
-    "q_robust_scale",
-    # (a') earlier r14 changes: observed components convergence count,
-    # type-hinted pandas UDAF
+    # (a) root range sort removed: the two benchmark queries
+    "q_window_topk_per_group",
     "q_dedup_components",
-    "q_dedup_components_star",
+    # (b) the other queries whose root range sort was removed,
+    # least-recently-graded first
+    "q13_order_count_distribution",
+    "q15_top_supplier",
+    "q_attention_rollout_surrogate",
+    "q_bucketed_agg",
+    "q_cdc_upsert",
+    "q_channel_topk_rowlocal",
+    "q_cohort_retention",
+    "q_not_in_anti_join",
+    "q_null_safe_join",
+    "q_path_rollup",
+    "q_phash_near_dup",
+    "q_python_datasource",
+    "q_quality_dedup",
+    "q_sessionize_events",
+    "q_stratified_split",
+    "q_stream_sliding_window",
+    "q_stream_stream_join",
+    "q_tfidf_topterms",
+    "q_url_canonicalize",
+    "q_variant_events",
+    "q_window_range_frame",
+    "q_zorder_pruning",
+    "q_abc_analysis",
+    "q_auc_evaluation",
+    "q_bucket_pruned_lookup",
+    "q_calibration_bins",
+    "q_compaction_plan",
+    "q_contribution_share",
+    "q_entropy_profile",
+    "q_equidepth_histogram",
+    "q_file_metadata",
+    "q_grid_knn_join",
+    "q_grouping_id_rollup",
+    "q_hilbert_layout",
+    "q_kmv_distinct",
+    "q_lateral_topn",
+    "q_mad_outliers",
+    "q_map_metrics",
+    "q_max_concurrency",
+    "q_merge_intervals",
+    "q_occlusion_sensitivity",
     "q_pandas_udaf",
-    # (b) the other sort_bounded callers, least-recently-graded first
-    "q12_priority_lines",
-    "q22_dormant_customers",
-    "q_incremental_dedup",
-    "q_salted_join",
-    "q_hash_bernoulli_sample",
-    "q_readability",
-    "q_bitmap_exact_distinct",
-    "q_bucketed_semi_join",
-    "q_dp_count_release",
-    "q_hotkey_split_join",
-    "q_mllib_summarizer",
-    "q_ols_elasticity",
-    "q_bucketed_window_rank",
-    "q_effective_sample_size",
-    "q_target_encoding",
-    "q_bucket_coalesced_join",
-    "q_dau_mau_stickiness",
-    "q_dead_dimension_audit",
-    "q_embedding_drift",
-    "q_embedding_norm_audit",
-    "q_hhi_concentration",
-    "q_null_skew_shunt_join",
-    "q_permutation_importance",
-    "q_quantization_error",
-    "q_seasonal_index",
-    "q_stream_static_anti_join",
-    "q_string_agg_report",
-    "q_unpivot_metrics",
-    "q_js_divergence_sources",
-    "q_k_anonymity",
-    "q_l_diversity",
-    "q_mixture_epoch_budget",
-    "q_moment_merge",
-    "q_retention_audit",
-    "q_simpson_diversity",
-    "q_tokenizer_fertility",
-    "q_winsorized_mean",
-    "q_age_period_cohort",
-    "q_eb_shrinkage",
-    "q_forecast_backtest_mape",
-    "q_late_arriving_dim",
+    "q_recursive_cte_chain",
+    "q_rfm_segmentation",
+    "q_scd2_join",
+    "q_scene_cuts",
     # staging-late convention
-    "q_e2e_image_pipeline",
-    "q_orc_roundtrip",
+    "q_embedding_json_source",
+    "q_npz_roundtrip",
 ]
 
 

@@ -321,7 +321,7 @@ def run_stream_once(
 )
 def q_stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
-    return tumbling_counts(ev).orderBy("win_start", "event_type")
+    return tumbling_counts(ev)
 
 
 @query(
@@ -340,7 +340,7 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window 10m/5m — every event is in exactly the two windows
     starting at bucket(ts,5m) and bucket(ts,5m)-5m."""
     ev = table(spark, sf_dir, "events")
-    return sliding_counts(ev).orderBy("win_start")
+    return sliding_counts(ev)
 
 
 @query(
@@ -369,7 +369,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (5-minute gap) — the oracle recreates Spark's
     ``session_window`` with gaps-and-islands over LAG."""
     ev = table(spark, sf_dir, "events")
-    return session_counts(ev).orderBy("user_id", "sess_start")
+    return session_counts(ev)
 
 
 @query(
@@ -384,7 +384,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
-    return dedup_keep_first(ev).orderBy("user_id", "event_type")
+    return dedup_keep_first(ev)
 
 
 @query(
@@ -436,7 +436,7 @@ def q_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming form of the same plan is asserted batch≡stream in
     tests/test_streaming.py."""
     ev = table(spark, sf_dir, "events")
-    return chained_window_rollup(ev).orderBy("win_start")
+    return chained_window_rollup(ev)
 
 
 @query(
@@ -459,7 +459,7 @@ def q_stream_record_breakers(spark: SparkSession, sf_dir: str) -> DataFrame:
     its batch window-function equivalent; the applyInPandasWithState
     path is asserted batch≡stream in tests/test_streaming.py."""
     ev = table(spark, sf_dir, "events")
-    return record_breakers(ev).orderBy("user_id", "event_id")
+    return record_breakers(ev)
 
 
 @query(
@@ -583,9 +583,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch semantics of the watermarked stream-stream join; the
     readStream path is asserted batch≡stream in tests/test_streaming.py."""
     ev = table(spark, sf_dir, "events")
-    return stream_stream_attribution(ev, ev).orderBy(
-        "user_id", "click_id", "purchase_id"
-    )
+    return stream_stream_attribution(ev, ev)
 
 
 @query(
@@ -613,9 +611,7 @@ def q_stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py; this registered form is the identical
     batch transformation."""
     ev = table(spark, sf_dir, "events")
-    return stream_stream_attribution(ev, ev, join_type="left_outer").orderBy(
-        "user_id", "click_id", "purchase_id"
-    )
+    return stream_stream_attribution(ev, ev, join_type="left_outer")
 
 
 # ---------------------------------------------------------------------------

@@ -623,3 +623,15 @@ def test_adaptive_sample_rule_mirrors_sql_and_thresholds_agree(spark):
     )
     assert got_hi == want_hi
     con.close()
+
+
+def test_components_result_runs_one_job(spark):
+    """q_dedup_components returns its labels unsorted: after the build
+    (which runs the component rounds), writing the result runs one job
+    over the checkpointed labels, with no RangePartitioner sampling job
+    or range-shuffle map job (a root orderBy runs 3)."""
+    df = all_queries()["q_dedup_components"](spark, SF_DIR)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df.write.format("noop").mode("overwrite").save()
+    assert dag.nextJobId() - before == 1

@@ -149,17 +149,16 @@ def _is_global_sorted_window(line: str) -> bool:
     )
 
 
-@pytest.fixture(scope="session")
-def registry_scan(spark):
-    """ONE pass over every lazily-built registry query: physical-plan
-    text + ANALYZED logical-plan text (hints survive only there —
-    the optimizer's EliminateResolvedHint consumes them) + output
-    schema fields, shared by all blanket checks below."""
+def _scan_plans(spark, eager: bool) -> dict:
+    """Build every registry query on one side of EAGER_BUILD. Returns
+    {name: (physical-plan text, ANALYZED logical-plan text, output
+    schema fields)}; hints survive only in the analyzed plan (the
+    optimizer's EliminateResolvedHint consumes them)."""
     from bigdata_deepfakeanalysis_spark.registry import all_queries
 
     out = {}
     for name, fn in all_queries().items():
-        if name in EAGER_BUILD:
+        if (name in EAGER_BUILD) != eager:
             continue
         df = fn(spark, SF_DIR)
         qe = df._jdf.queryExecution()
@@ -167,6 +166,13 @@ def registry_scan(spark):
         analyzed = qe.analyzed().toString()
         out[name] = (plan, analyzed, df.schema.fields)
     return out
+
+
+@pytest.fixture(scope="session")
+def registry_scan(spark):
+    """ONE pass over every lazily-built registry query, shared by all
+    blanket checks below."""
+    return _scan_plans(spark, eager=False)
 
 
 def test_no_cartesian_or_row_python_in_any_plan(registry_scan):
@@ -322,6 +328,10 @@ def _children(tree: list[tuple[int, str]], i: int) -> list[int]:
     return out
 
 
+def _plan_root(tree) -> int:
+    return 1 if tree[0][1].startswith("AdaptiveSparkPlan") else 0
+
+
 def _build_is_bounded(tree: list[tuple[int, str]], i: int) -> bool:
     """True when the subtree rooted at line i provably emits a bounded
     (corpus-independent) number of rows."""
@@ -461,6 +471,10 @@ FORCED_BROADCAST_BOUNDED: dict[str, str] = {
     "q_degree_assortativity": (
         "degree table of the top-K-edge sparsified graph (<= 2K nodes)"
     ),
+    "q_mllib_brp_lsh_join": (
+        "embedding arrays of the first _BRP_N vectors (vec_id < _BRP_N, "
+        "checkpointed)"
+    ),
     # count-guarded hint: fp is checkpointed (stats erased), so the
     # query MEASURES the materialized set and hints only when it is
     # provably small at runtime — corpus-grown sets fall back to
@@ -502,6 +516,7 @@ FORCED_BROADCAST_HINT_BUDGET: dict[str, int] = {
     "q_ann_sq8_rescore": 2,        # queries, shortlist rescore
     "q_degree_assortativity": 2,   # degree table joined on both ends
     "q_link_prediction": 2,        # degree table joined on both ends
+    "q_mllib_brp_lsh_join": 2,     # embeddings re-attached to both ids
 }
 
 # Group-key columns whose domains are bounded at ANY scale factor
@@ -686,30 +701,6 @@ def test_forced_broadcast_audit_detects_mutations():
     assert "unbounded build sides" in got.get("q5_regional_revenue", "")
 
 
-@pytest.mark.skipif(
-    not __import__("os").environ.get("SPARK_GRAFT_SLOW_SCANS"),
-    reason="eager builds execute Spark jobs (~half the suite); set "
-    "SPARK_GRAFT_SLOW_SCANS=1 to run — executed and recorded green "
-    "in the r10 COVERAGE ledger",
-)
-def test_forced_broadcast_builds_bounded_eager(spark):
-    """The EAGER_BUILD half of the forced-broadcast audit: the same
-    walk over the queries the shared registry_scan fixture skips
-    (their DataFrame construction executes jobs — checkpoints, MLlib
-    fits, staged writes). Env-gated so the default suite stays fast;
-    run with SPARK_GRAFT_SLOW_SCANS=1 after touching any eager
-    query's join structure."""
-    from bigdata_deepfakeanalysis_spark.registry import all_queries
-
-    plans = {
-        name: fn(spark, SF_DIR)._jdf.queryExecution().analyzed().toString()
-        for name, fn in all_queries().items()
-        if name in EAGER_BUILD
-    }
-    offenders = _audit_forced_broadcasts(plans)
-    assert not offenders, offenders
-
-
 # ---------------------------------------------------------------------------
 # Single-partition final sort audit (parity.sort_bounded).
 #
@@ -764,7 +755,7 @@ def _audit_single_partition_sorts(scan: dict) -> dict[str, str]:
     offenders: dict[str, str] = {}
     for name, (plan, analyzed) in scan.items():
         tree = _parse_tree(plan)
-        root = 1 if tree[0][1].startswith("AdaptiveSparkPlan") else 0
+        root = _plan_root(tree)
         kids = _children(tree, root)
         single = (
             _strip_codegen(tree[root][1]).startswith("Sort ")
@@ -848,6 +839,125 @@ def test_single_partition_sort_audit_detects_mutations(spark):
     assert "stale" in got.get("q_pandas_scalar_udf", ""), got
 
 
+# ---------------------------------------------------------------------------
+# Root range-sort audit.
+#
+# Order is not part of the result contract: the driver hashes results
+# order-insensitively, and so do conftest.assert_matches_oracle and
+# perfbench/check.py. Under AQE a root ``orderBy`` plans ``Exchange
+# rangepartitioning`` and costs a RangePartitioner sampling job plus a
+# range-shuffle map job that re-sends the whole result, to buy an order
+# nothing reads. So a root Sort over a range exchange (looking through
+# root Projects, where a sort key was dropped after sorting) needs an
+# ORDERED_RESULTS entry naming what observes the order: a test or
+# docstring that asserts it, or an operator that depends on partition
+# order. A sort under a limit plans TakeOrderedAndProject and a
+# sort_bounded sort plans Coalesce 1; neither is a range sort.
+# ---------------------------------------------------------------------------
+ORDERED_RESULTS: dict[str, str] = {}
+
+
+def _root_range_sort(plan: str) -> bool:
+    tree = _parse_tree(plan)
+    i = _plan_root(tree)
+    kids = _children(tree, i)
+    while _strip_codegen(tree[i][1]).startswith("Project ") and len(kids) == 1:
+        i = kids[0]
+        kids = _children(tree, i)
+    return (
+        _strip_codegen(tree[i][1]).startswith("Sort ")
+        and len(kids) == 1
+        and _strip_codegen(tree[kids[0]][1]).startswith(
+            "Exchange rangepartitioning"
+        )
+    )
+
+
+def _audit_root_range_sorts(plans: dict[str, str]) -> dict[str, str]:
+    """The root range-sort contract over a {name: physical plan} mapping.
+    Returns offender messages; empty = clean."""
+    offenders: dict[str, str] = {}
+    for name, plan in plans.items():
+        sorted_root = _root_range_sort(plan)
+        if sorted_root and name not in ORDERED_RESULTS:
+            offenders[name] = (
+                "root range sort that nothing observes — drop the "
+                "orderBy, or name what reads the order in ORDERED_RESULTS"
+            )
+        elif not sorted_root and name in ORDERED_RESULTS:
+            offenders[name] = (
+                "stale ORDERED_RESULTS entry: no root range sort"
+            )
+    return offenders
+
+
+def test_root_range_sorts_declared(registry_scan):
+    """Every root range sort carries an ORDERED_RESULTS reason, and
+    every entry still range-sorts."""
+    offenders = _audit_root_range_sorts(
+        {n: p for n, (p, _, _) in registry_scan.items()}
+    )
+    assert not offenders, offenders
+
+
+def test_root_range_sort_audit_detects_mutations(spark, monkeypatch):
+    """Mutation validation: an orderBy on q_window_topk_per_group's
+    result fails, also when a Project sits over the sort; a stale entry
+    fails; a declared sort passes."""
+    from bigdata_deepfakeanalysis_spark.catalog import table
+    from bigdata_deepfakeanalysis_spark.operators.relational import (
+        q_window_topk_per_group,
+    )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    name = "q_window_topk_per_group"
+    topk = q_window_topk_per_group(spark, SF_DIR)
+    assert _audit_root_range_sorts({name: plan(topk)}) == {}
+    mutant = plan(topk.orderBy("c_custkey", "rk"))
+    got = _audit_root_range_sorts({name: mutant})
+    assert "nothing observes" in got.get(name, ""), got
+    projected = plan(
+        table(spark, SF_DIR, "nation").orderBy("n_name").select("n_nationkey")
+    )
+    got = _audit_root_range_sorts({"q_nation": projected})
+    assert "nothing observes" in got.get("q_nation", ""), got
+
+    monkeypatch.setitem(ORDERED_RESULTS, name, "mutation")
+    assert _audit_root_range_sorts({name: mutant}) == {}
+    got = _audit_root_range_sorts({name: plan(topk)})
+    assert "stale" in got.get(name, ""), got
+
+
+@pytest.mark.skipif(
+    not __import__("os").environ.get("SPARK_GRAFT_SLOW_SCANS"),
+    reason="eager builds execute Spark jobs (~half the suite); set "
+    "SPARK_GRAFT_SLOW_SCANS=1 to run",
+)
+def test_forced_broadcast_builds_bounded_eager(spark):
+    """The EAGER_BUILD half of the plan audits: the queries the shared
+    registry_scan fixture skips (their DataFrame construction executes
+    jobs — checkpoints, MLlib fits, staged writes) get one plan scan of
+    their own, checked by the forced-broadcast, single-partition sort
+    and root range-sort audits. Env-gated so the default suite stays
+    fast; run with SPARK_GRAFT_SLOW_SCANS=1 after touching any eager
+    query's join structure or final sort."""
+    scan = _scan_plans(spark, eager=True)
+    offenders = {
+        "forced broadcast": _audit_forced_broadcasts(
+            {n: a for n, (_, a, _) in scan.items()}
+        ),
+        "single-partition sort": _audit_single_partition_sorts(
+            {n: (p, a) for n, (p, a, _) in scan.items()}
+        ),
+        "root range sort": _audit_root_range_sorts(
+            {n: p for n, (p, _, _) in scan.items()}
+        ),
+    }
+    assert not any(offenders.values()), offenders
+
+
 def test_global_window_allowlist_matches_registry():
     """Every allowlisted name must still exist — a renamed query would
     silently leave a stale justification behind."""
@@ -857,7 +967,7 @@ def test_global_window_allowlist_matches_registry():
     missing = (
         (EAGER_BUILD | PYTHON_EVAL_OK | set(GLOBAL_WINDOW_BOUNDED)
          | set(BNLJ_BUILD_BOUNDED) | set(FORCED_BROADCAST_BOUNDED)
-         | set(SINGLE_PARTITION_SORT_BOUNDED)) - names
+         | set(SINGLE_PARTITION_SORT_BOUNDED) | set(ORDERED_RESULTS)) - names
     )
     assert not missing, missing
 

@@ -45,14 +45,14 @@ def test_ann_hot_path_is_jvm_only(spark):
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
         # the query side is broadcast; the corpus is never shuffled
-        # before scoring (the only shuffles feed the per-query window
-        # and the final presentation sort)
+        # before scoring (the only shuffle feeds the per-query window;
+        # the result is unsorted)
         assert "Broadcast" in plan, name
         # Spark's rank-limit pushdown applies partial top-k map-side
         # BEFORE the window shuffle — the property that keeps per-query
         # top-k traffic at k rows per partition at scale
         assert "WindowGroupLimit" in plan, name
-        assert plan.split("Broadcast")[0].count("Exchange") <= 2, name
+        assert plan.split("Broadcast")[0].count("Exchange") == 1, name
 
 
 def test_python_udf_stages_are_arrow_vectorized(spark):
@@ -116,7 +116,7 @@ def test_bucketed_agg_has_no_exchange_below_first_aggregate(spark):
     """The per-order rollup's distribution requirement is satisfied by
     the bucketed scan's HashPartitioning(l_orderkey, 8) — no Exchange
     may appear between the scan and the l_orderkey aggregate; the only
-    shuffles are the tiny second rollup and the final sort."""
+    shuffle is the tiny second rollup."""
     plan = _plan(all_queries()["q_bucketed_agg"](spark, SF_DIR))
     assert "Bucketed: true" in plan
     scan_idx = plan.find("FileScan")
@@ -125,7 +125,7 @@ def test_bucketed_agg_has_no_exchange_below_first_aggregate(spark):
     # nothing between the first (final) orderkey aggregate and the
     # bucketed scan may be an Exchange
     assert "Exchange" not in plan[agg_idx:scan_idx], plan[agg_idx:scan_idx]
-    assert plan.count("Exchange") <= 2
+    assert plan.count("Exchange") == 1
 
 
 def test_bucketed_semi_join_has_no_exchange_below_join(spark):
@@ -247,8 +247,8 @@ def test_text_curation_ops_are_codegen_only(spark):
         assert "ArrowEvalPython" not in plan, name
         assert "FlatMapGroupsInPandas" not in plan, name
     pii_plan = _plan(all_queries()["q_pii_redaction"](spark, SF_DIR))
-    # one agg shuffle (lang rollup) + the presentation sort only
-    assert pii_plan.count("Exchange") <= 2
+    # one agg shuffle (lang rollup) only
+    assert pii_plan.count("Exchange") == 1
 
 
 def test_ngram_jaccard_has_no_shingle_self_join(spark):
@@ -388,10 +388,10 @@ def test_zorder_split_has_no_sort_or_window(spark):
     assignment; a global sort or window here would not scale."""
     plan = _plan(all_queries()["q_zorder_layout"](spark, SF_DIR))
     assert "Window" not in plan
-    # stats gather + its broadcast + agg shuffle + 16-row presentation
-    # sort; crucially NO exchange between the fact scan and the
-    # prefix-keyed aggregate (the file assignment is row-local)
-    assert plan.count("Exchange") <= 4
+    # stats gather + its broadcast + agg shuffle; crucially NO
+    # exchange between the fact scan and the prefix-keyed aggregate
+    # (the file assignment is row-local)
+    assert plan.count("Exchange") == 3
     fact_side = plan.split("Broadcast")[-1]
     assert "rangepartitioning" not in fact_side
     assert "BatchEvalPython" not in plan
@@ -704,9 +704,9 @@ def test_equidepth_histogram_never_sorts_on_one_partition(spark):
 
 def test_scene_cuts_single_data_shuffle(spark):
     """The LAG window shuffles once on media_id; the rollup reuses that
-    partitioning — the only other Exchange is the presentation sort."""
+    partitioning — no other Exchange."""
     plan = _plan(all_queries()["q_scene_cuts"](spark, SF_DIR))
-    assert plan.count("Exchange") <= 2, plan
+    assert plan.count("Exchange") == 1, plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
 
 

@@ -184,3 +184,16 @@ def test_bounded_final_sort_runs_two_jobs(spark, name):
     before = dag.nextJobId()
     df.write.format("noop").mode("overwrite").save()
     assert dag.nextJobId() - before == 2
+
+
+def test_order_free_result_runs_no_range_sort_jobs(spark):
+    """q_window_topk_per_group returns its top-k rows unsorted: the noop
+    write runs its customer broadcast job, its orders shuffle map job
+    and its result job, and no RangePartitioner sampling job or
+    range-shuffle map job (a root orderBy runs 5). Jobs are counted by
+    job-id window around the noop write, after the plan is built."""
+    df = all_queries()["q_window_topk_per_group"](spark, SF_DIR)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df.write.format("noop").mode("overwrite").save()
+    assert dag.nextJobId() - before == 3
