@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import EVENTS_US_CTE, table
 from ..registry import query
+from ..session import pinned
 from .parity import range_parts, sort_bounded
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -1123,65 +1124,42 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 # co table is UNthresholded so every consumer's support cut is a
 # filter over the checkpoint; results are identical by construction
 # (same dataflow, same counts) and every consumer's oracle recomputes
-# its own set in SQL. Dead-session entries are unpersisted like
-# dedup._PAIRS_CACHE. q_frequent_pairs intentionally does NOT consume
-# this: its row-local basket-explode pair generation is itself the
-# operator under test (the no-self-join 100 TB story its docstring
-# documents).
+# its own set in SQL. The memo is ``session.pinned``. q_frequent_pairs
+# intentionally does NOT consume this: its row-local basket-explode
+# pair generation is itself the operator under test (the no-self-join
+# 100 TB story its docstring documents).
 # ---------------------------------------------------------------------------
 
-_BASKET_CACHE: dict[tuple, DataFrame] = {}
+def basket_items_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (order, part) basket rows, checkpointed once per
+    (session, sf_dir)."""
+    return pinned(
+        spark, sf_dir, "basket_items",
+        lambda: table(spark, sf_dir, "lineitem").select(
+            F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+        ).distinct(),
+    )
 
 
-def _basket_cached(spark: SparkSession, sf_dir: str, what: str) -> DataFrame:
-    import os
+def basket_co_counts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full (p1 < p2, c) basket co-occurrence counts, no support
+    threshold, checkpointed once per (session, sf_dir); consumers apply
+    their own support cut."""
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [kk for kk in _BASKET_CACHE if kk[0] != app_id]:
-        try:
-            _BASKET_CACHE.pop(stale).unpersist()
-        except Exception:
-            pass  # dead JVM handle — dropping the reference is enough
-    key = (app_id, os.path.realpath(str(sf_dir)), what)
-    cached = _BASKET_CACHE.get(key)
-    if cached is not None:
-        return cached
-    if what == "items":
-        li = table(spark, sf_dir, "lineitem")
-        df = (
-            li.select(
-                F.col("l_orderkey").alias("o"),
-                F.col("l_partkey").alias("p"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    else:  # "co": full co-occurrence counts, no support threshold
-        b = _basket_cached(spark, sf_dir, "items")
+    def build() -> DataFrame:
+        b = basket_items_cached(spark, sf_dir)
         b1 = b.select("o", F.col("p").alias("pa"))
         b2 = b.select(F.col("o").alias("o2"), F.col("p").alias("pb"))
-        df = (
+        return (
             b1.join(
                 b2,
                 (F.col("o") == F.col("o2")) & (F.col("pa") < F.col("pb")),
             )
             .groupBy(F.col("pa").alias("p1"), F.col("pb").alias("p2"))
             .agg(F.count(F.lit(1)).alias("c"))
-            .localCheckpoint(eager=True)
         )
-    return _BASKET_CACHE.setdefault(key, df)
 
-
-def basket_items_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (order, part) basket rows, checkpointed once per
-    (session, sf_dir)."""
-    return _basket_cached(spark, sf_dir, "items")
-
-
-def basket_co_counts_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full (p1 < p2, c) basket co-occurrence counts, checkpointed once
-    per (session, sf_dir); consumers apply their own support cut."""
-    return _basket_cached(spark, sf_dir, "co")
+    return pinned(spark, sf_dir, "basket_co", build)
 
 
 # ---------------------------------------------------------------------------

@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import table
 from ..registry import query
+from ..session import pinned
 from .parity import sort_bounded
 
 # ---------------------------------------------------------------------------
@@ -249,13 +250,6 @@ def lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped MinHash-LSH candidate-pair cache, keyed by
-# (applicationId, realpath(sf_dir), k, band_rows) — the
-# graph._EDGE_CACHE pattern (r7 advisor hygiene: realpath-normalized,
-# stale-application entries evicted on every lookup).
-_PAIRS_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-
-
 def lsh_pairs_cached(
     spark: SparkSession, sf_dir: str, k: int = 12, band_rows: int = 3
 ) -> DataFrame:
@@ -272,25 +266,14 @@ def lsh_pairs_cached(
     reality is exactly this shape: one candidate generation, many
     readouts. On a cluster the checkpoint is a bucketed parquet table;
     determinism of the md5-derived MinHash makes the cache a pure
-    optimization — every oracle recomputes the same set in SQL.
-    Checkpoint blocks of evicted (dead-session) entries are
-    unpersisted, mirroring graph._EDGE_CACHE."""
-    import os
-
-    app_id = spark.sparkContext.applicationId
-    for stale in [kk for kk in _PAIRS_CACHE if kk[0] != app_id]:
-        try:
-            _PAIRS_CACHE.pop(stale).unpersist()
-        except Exception:
-            pass  # dead JVM handle — dropping the reference is enough
-    key = (app_id, os.path.realpath(str(sf_dir)), k, band_rows)
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    pairs = lsh_candidate_pairs(
-        minhash_bands(aug_docs(spark, sf_dir), k=k, band_rows=band_rows)
-    ).localCheckpoint(eager=True)
-    return _PAIRS_CACHE.setdefault(key, pairs)
+    optimization — every oracle recomputes the same set in SQL. The
+    memo and its dead-session eviction are ``session.pinned``."""
+    return pinned(
+        spark, sf_dir, ("lsh_pairs", k, band_rows),
+        lambda: lsh_candidate_pairs(
+            minhash_bands(aug_docs(spark, sf_dir), k=k, band_rows=band_rows)
+        ),
+    )
 
 
 def jaccard_verify(
@@ -987,12 +970,14 @@ def connected_components(
     starts labeled with its own id; each round takes the min of its and
     its neighbors' labels; converges in O(component diameter) rounds
     (near-dup components are band-join cliques — diameter 1-2, so 2-3
-    rounds in practice). Each round is one shuffle-join + one groupBy
-    and one Spark job: the round's eager checkpoint, which also yields
-    the scalar changed-count the loop checks as an observed metric
-    (the GraphFrames large-star/small-star optimization applies at
-    100 TB if components were ever deep chains). Returns (id,
-    component).
+    rounds in practice). Each round is one shuffle-join + one groupBy,
+    pinned by an eager checkpoint whose job also yields the scalar
+    changed-count the loop checks as an observed metric (the
+    GraphFrames large-star/small-star optimization applies at 100 TB
+    if components were ever deep chains). Under AQE a plain round runs
+    4 jobs (3 shuffle map stages, the seed groupBy's exchange reused,
+    plus the checkpoint's result job) and the edge pin 2 more: 6 jobs
+    on one-round LSH cliques. Returns (id, component).
 
     Iteration state is ``localCheckpoint``-ed, not cached: a cache
     keeps the logical plan growing every round (cache substitution

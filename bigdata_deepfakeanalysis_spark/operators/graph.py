@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
+from ..session import pinned
 
 _SCALE = 1 << 20
 _BASE = (15 * _SCALE) // 100  # (1-d) mass per node, d = 0.85
@@ -48,11 +49,14 @@ def pagerank_fixed(edges: DataFrame, iters: int = _ITERS) -> DataFrame:
     action: under AQE a lazy checkpoint of a plan with a shuffle runs
     that shuffle's map stage when it is called (1 job for a
     ``groupBy``; 0 with AQE off), so each superstep still starts jobs
-    during the build. Unlike components, PageRank has NO per-round
+    during the build: 4, one per shuffle map stage of its two joins
+    and its groupBy. ``q_pagerank_copurchase`` at sf0.01 runs 19 build
+    jobs and 1 write job. Unlike components, PageRank has NO per-round
     driver decision (fixed iteration count), so nothing needs the
     intermediate results early — measured 2-3× end-to-end vs eager.
     Dropping the checkpoints is worse: the unrolled plan ran 58 jobs
-    in 4.6-5.2 s against 27 jobs in 1.4-1.8 s (sf0.01)."""
+    in 4.6-5.2 s against 27 jobs in 1.4-1.8 s (sf0.01, measured while
+    AQE still rewrote joins to broadcasts at runtime)."""
     edges = edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long")
     ).localCheckpoint(eager=False)
@@ -180,12 +184,6 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TRI_EDGES = 200  # top edges kept by (shared-customer count, s1, s2)
 
-# Per-(SparkSession, SF) cache of the shared sparsified graph. Keyed by
-# applicationId so a dead session's checkpointed partitions are never
-# handed to a new one.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def copurchase_top_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared graph every algorithm below runs on: supplier
     co-customer edges (two suppliers sharing a customer), sparsified to
@@ -201,27 +199,13 @@ def copurchase_top_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned checkpoint; on a cluster a parquet/bucketed table), then
     amortize it across algorithms. Determinism of the full tie-break
     makes the cache a pure optimization — every oracle recomputes the
-    same set in SQL.
+    same set in SQL. The memo and its dead-session eviction are
+    ``session.pinned``."""
+    return pinned(spark, sf_dir, "copurchase_top_edges",
+                  lambda: _top_edges(spark, sf_dir))
 
-    Cache hygiene (r7, advisor finding): the sf_dir key is
-    realpath-normalized so relative/absolute spellings of the same
-    directory share one entry, and on every lookup entries whose
-    applicationId no longer matches the live session are evicted
-    (unpersisting their pinned checkpoint blocks) — a module-global
-    with no eviction would otherwise pin dead sessions' partitions for
-    process lifetime."""
-    import os
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _EDGE_CACHE if k[0] != app_id]:
-        try:
-            _EDGE_CACHE.pop(stale).unpersist()
-        except Exception:
-            pass  # dead JVM handle — dropping the reference is enough
-    key = (app_id, os.path.realpath(str(sf_dir)))
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
+def _top_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     cs = (
@@ -235,18 +219,14 @@ def copurchase_top_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = cs.select("c", F.col("s").alias("s1"))
     b = cs.select("c", F.col("s").alias("s2"))
-    top_e = (
+    return (
         a.join(b, "c")
         .where(F.col("s1") < F.col("s2"))
         .groupBy("s1", "s2")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), "s1", "s2")
         .limit(_TRI_EDGES)
-        .localCheckpoint(eager=True)
     )
-    # setdefault: if a concurrent first call raced us here, keep the
-    # winner and let our duplicate build be garbage-collected.
-    return _EDGE_CACHE.setdefault(key, top_e)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:

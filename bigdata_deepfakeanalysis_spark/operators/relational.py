@@ -7593,13 +7593,14 @@ def q_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit("1998-01-01"))
         )
         .join(p, li.l_partkey == p.p_partkey)
-        .groupBy(
-            F.col("p_brand").alias("brand"),
+        .withColumn(
+            "yr",
             F.expr(
                 "CASE WHEN l_shipdate < TIMESTAMP '1997-01-01'"
                 " THEN 0 ELSE 1 END"
-            ).alias("yr"),
+            ),
         )
+        .groupBy("p_brand", "yr")
         .agg(
             F.expr(
                 "SUM(CAST(floor(CAST(l_extendedprice AS DECIMAL(18,4))"
@@ -7609,18 +7610,20 @@ def q_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ra = rev.where(F.col("yr") == 0).select(
-        "brand",
-        F.expr("ROW_NUMBER() OVER (ORDER BY rev_c DESC, brand)").alias(
+        F.col("p_brand").alias("brand"),
+        F.expr("ROW_NUMBER() OVER (ORDER BY rev_c DESC, p_brand)").alias(
             "r_a"
         ),
     )
     rb = rev.where(F.col("yr") == 1).select(
-        "brand",
-        F.expr("ROW_NUMBER() OVER (ORDER BY rev_c DESC, brand)").alias(
+        F.col("p_brand").alias("brand"),
+        F.expr("ROW_NUMBER() OVER (ORDER BY rev_c DESC, p_brand)").alias(
             "r_b"
         ),
     )
-    m = ra.join(rb, "brand").select(
+    # one row per brand (keys p_brand, yr): broadcast, so the join
+    # plans no hash exchange over either ranked side
+    m = ra.join(F.broadcast(rb), "brand").select(
         F.expr("GREATEST(r_a, r_b)").alias("mx")
     )
     nb = m.agg(F.count(F.lit(1)).alias("nb"))

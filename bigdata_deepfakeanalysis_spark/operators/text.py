@@ -2477,6 +2477,9 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("df") * 20 <= F.col("n"))
         & (F.col("df") <= 256)
     )
+    # each doc's norm rides on its weight rows (a window over doc_id
+    # inside the pin), so the pair aggregate carries both norms and no
+    # per-doc norm join shuffles the pairs again
     weights = (
         tf.join(keep.select("term", "df", "n"), "term")
         .select(
@@ -2487,37 +2490,32 @@ def q_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.log(F.col("n").cast("double") / F.col("df"))
             ).alias("w"),
         )
-        .localCheckpoint(eager=True)  # pin: feeds norms + both join sides
-    )
-    norms = weights.groupBy("doc_id").agg(
-        F.expr(
-            "sqrt(CAST(SUM(CAST(w * w AS DECIMAL(18,6))) AS DOUBLE))"
-        ).alias("nrm")
+        .withColumn(
+            "nrm",
+            F.sqrt(
+                F.expr("SUM(CAST(w * w AS DECIMAL(18,6)))")
+                .over(Window.partitionBy("doc_id"))
+                .cast("double")
+            ),
+        )
+        .localCheckpoint(eager=True)  # pin: feeds both join sides
     )
     a = weights.select(
-        F.col("doc_id").alias("doc_a"), "term", F.col("w").alias("wa")
+        F.col("doc_id").alias("doc_a"), "term", F.col("w").alias("wa"),
+        F.col("nrm").alias("na"),
     )
     b = weights.select(
-        F.col("doc_id").alias("doc_b"), "term", F.col("w").alias("wb")
+        F.col("doc_id").alias("doc_b"), "term", F.col("w").alias("wb"),
+        F.col("nrm").alias("nb"),
     )
-    dots = (
+    scored = (
         a.join(b, "term")
         .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(
             F.expr(
                 "CAST(SUM(CAST(wa * wb AS DECIMAL(18,6))) AS DOUBLE)"
             ).alias("dot")
-        )
-    )
-    scored = (
-        dots.join(norms.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("nrm", "na")
-        .join(
-            norms.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "nrm", "nb"
-            ),
-            "doc_b",
         )
         .select(
             F.col("doc_a").cast("bigint").alias("doc_a"),

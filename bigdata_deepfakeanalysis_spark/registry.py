@@ -91,20 +91,47 @@ def _load_all() -> None:
 _WINDOW: list[str] = [
     # ------------------------------------------------------------------
     # Round-14 rotation (standing rule since r12: any queries whose
-    # CODE changed this round first, then the LEAST-RECENTLY-GRADED
-    # names — rank derived from the CORRECTNESS_r* artifacts,
-    # last-round-wins; disk-staging names go last so a
-    # staging-restricted run still verifies the pure-compute surface).
-    # Every module is green in the CORRECTNESS artifacts, so module
-    # coverage pins no slot. 224 queries lost their root range sort
-    # this round; the 174 most recently graded of them ride after
-    # slot 50.
+    # CODE or PLAN changed this round first, then the
+    # LEAST-RECENTLY-GRADED names — rank derived from the
+    # CORRECTNESS_r* artifacts, last-round-wins; disk-staging names go
+    # last so a staging-restricted run still verifies the pure-compute
+    # surface). Every module is green in the CORRECTNESS artifacts, so
+    # module coverage pins no slot.
     # ------------------------------------------------------------------
-    # (a) root range sort removed: the two benchmark queries
-    "q_window_topk_per_group",
+    # (a) code changed: the brand join broadcasts its one-row-per-brand
+    # ranked side; the per-doc norms ride on the pinned weight rows
+    "q_rank_biased_overlap",
+    "q_sparse_cosine_pairs",
+    # (b) plan changed: AQE no longer rewrites a sort-merge join to a
+    # broadcast after both shuffles ran (job count fell)
+    "q_grid_dbscan",
+    "q_pagerank_copurchase",
+    "q_hll_distinct_merge",
+    "q_datasketches_native",
+    "q_semantic_dedup",
+    "q_semantic_dedup_lsh",
     "q_dedup_components",
-    # (b) the other queries whose root range sort was removed,
-    # least-recently-graded first
+    "q_dedup_components_star",
+    "q_dup_cluster_sizes",
+    "q_heaps_law",
+    "q_record_linkage",
+    "q20_dominant_suppliers",
+    "q_blocking_quality",
+    "q_cms_heavy_hitters",
+    "q_conformal_interval",
+    "q_conversion_latency",
+    "q_corpus_curation",
+    "q_dsir_resample",
+    "q_join_size_estimate",
+    "q_lsh_dedup_eval",
+    "q_modularity",
+    "q_new_vs_returning",
+    "q_pmi_cooccurrence",
+    "q_triangle_count",
+    "q_two_hop_reach",
+    # (c) root range sort removed earlier this round, least-recently-
+    # graded first (the rest ride after slot 50)
+    "q_window_topk_per_group",
     "q13_order_count_distribution",
     "q15_top_supplier",
     "q_attention_rollout_surrogate",
@@ -125,32 +152,6 @@ _WINDOW: list[str] = [
     "q_tfidf_topterms",
     "q_url_canonicalize",
     "q_variant_events",
-    "q_window_range_frame",
-    "q_zorder_pruning",
-    "q_abc_analysis",
-    "q_auc_evaluation",
-    "q_bucket_pruned_lookup",
-    "q_calibration_bins",
-    "q_compaction_plan",
-    "q_contribution_share",
-    "q_entropy_profile",
-    "q_equidepth_histogram",
-    "q_file_metadata",
-    "q_grid_knn_join",
-    "q_grouping_id_rollup",
-    "q_hilbert_layout",
-    "q_kmv_distinct",
-    "q_lateral_topn",
-    "q_mad_outliers",
-    "q_map_metrics",
-    "q_max_concurrency",
-    "q_merge_intervals",
-    "q_occlusion_sensitivity",
-    "q_pandas_udaf",
-    "q_recursive_cte_chain",
-    "q_rfm_segmentation",
-    "q_scd2_join",
-    "q_scene_cuts",
     # staging-late convention
     "q_embedding_json_source",
     "q_npz_roundtrip",

@@ -8,8 +8,9 @@ session — ``tune()`` applies only runtime-settable confs in that case.
 from __future__ import annotations
 
 import os
+from typing import Callable, Hashable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime-settable confs: safe to apply to an externally-owned session.
 _RUNTIME_CONF = {
@@ -31,6 +32,24 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(
         64 * 1024 * 1024
     ),
+    # No runtime sort-merge -> broadcast rewrite. AQE almost always
+    # makes it after BOTH sides' shuffles have run, when it saves no
+    # shuffle and adds one broadcast job. Still on: static broadcasts
+    # planned from estimates under autoBroadcastJoinThreshold below,
+    # the runtime shuffled-hash rewrite above (no extra job), partition
+    # coalescing and skew splitting. Lost: a runtime-broadcast probe
+    # side reads its shuffle locally, a gain only at cluster scale;
+    # where one side's exchange had not run yet, the rewrite saved that
+    # shuffle (q_rank_biased_overlap and q_sparse_cosine_pairs were
+    # restructured for it); and a cached table whose scan stage has
+    # materialized when AQE re-plans a join is sized by runtime stats,
+    # so it is no longer broadcast then (q20_dominant_suppliers' part
+    # semi-join, in some runs). Whole-bench census (sf0.01, local[4],
+    # each query's second build + noop write): jobs 2,223 -> 2,169 and
+    # tasks 3,372 -> 3,330 over 341 queries; jobs fall for 26 queries
+    # (q_grid_dbscan 40 -> 31, q_pagerank_copurchase 27 -> 20,
+    # q_hll_distinct_merge 26 -> 22) and rise for none.
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     # Arrow for every pandas UDF / toPandas boundary (SURVEY §2.9).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
@@ -89,3 +108,35 @@ def get_spark(app_name: str = "bigdata-deepfakeanalysis-spark") -> SparkSession:
     for k, v in {**_STARTUP_CONF, **_RUNTIME_CONF}.items():
         builder = builder.config(k, v)
     return tune(builder.getOrCreate())
+
+
+# Shared derived artifacts (the co-purchase edge list, the LSH
+# candidate pairs, the basket tables), one entry per live application,
+# realpath(sf_dir) and artifact key.
+_PINNED: dict[tuple, DataFrame] = {}
+
+
+def pinned(
+    spark: SparkSession, sf_dir: str, key: Hashable,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """``build()`` pinned with an eager ``localCheckpoint``, built once
+    per (session, sf_dir, key) and shared by every later caller. The
+    sf_dir is realpath-normalized, so relative and absolute spellings
+    share one entry. Every call first drops the entries of applications
+    other than the live one and unpersists them: a module-global with
+    no eviction would pin a dead session's partitions for the life of
+    the process, and would hand them to a new session."""
+    app_id = spark.sparkContext.applicationId
+    for stale in [k for k in _PINNED if k[0] != app_id]:
+        try:
+            _PINNED.pop(stale).unpersist()
+        except Exception:
+            pass  # dead JVM handle — dropping the reference is enough
+    full = (app_id, os.path.realpath(str(sf_dir)), key)
+    cached = _PINNED.get(full)
+    if cached is not None:
+        return cached
+    # setdefault: if a concurrent first call raced us here, keep the
+    # winner and let our duplicate build be garbage-collected.
+    return _PINNED.setdefault(full, build().localCheckpoint(eager=True))

@@ -5,6 +5,7 @@ labels."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -223,21 +224,83 @@ def test_components_variants_give_component_minima(
         assert got == expected, cc.__name__
 
 
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs, by job-id window."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    fn()
+    return dag.nextJobId() - before
+
+
 def test_components_round_runs_no_count_job(spark, lsh_cliques):
     """On one-round cliques the changed-count rides on the round's
     checkpoint job as an observed metric and the seed labels are not
-    pinned: the build runs the edge pin and one round, 8 jobs under
-    AQE. A separate count job (+2 under AQE) or a seed pin (+2) would
-    show here."""
+    pinned: the build runs the edge pin and one round, 6 jobs
+    under AQE. A separate count job (+2 under AQE), a seed pin (+2) or
+    a runtime broadcast rewrite of a join whose shuffles already ran
+    (+1 each) would show here."""
     from bigdata_deepfakeanalysis_spark.operators.dedup import (
         connected_components,
     )
 
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    connected_components(lsh_cliques)
-    jobs = dag.nextJobId() - before
-    assert jobs <= 8, jobs
+    jobs = _jobs_of(spark, lambda: connected_components(lsh_cliques))
+    assert jobs == 6, jobs
+
+
+def test_pagerank_build_and_write_jobs(spark):
+    """q_pagerank_copurchase's second build plus its noop write, once
+    the shared edge list is pinned: the supersteps' lazy checkpoints
+    run their shuffle map stages and the write its result stage,
+    18 jobs. A runtime broadcast rewrite of a superstep join
+    (+1 each) would show here."""
+    q = all_queries()["q_pagerank_copurchase"]
+
+    def run():
+        q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+    run()  # pins the shared co-purchase edge list
+    jobs = _jobs_of(spark, run)
+    assert jobs == 18, jobs
+
+
+def test_pinned_evicts_stale_applications(spark):
+    """session.pinned builds once per (live application, sf_dir, key),
+    and every call drops and unpersists the entries of other
+    applications, also when their handle is dead."""
+    from bigdata_deepfakeanalysis_spark import session
+
+    class Stale:
+        unpersisted = False
+
+        def unpersist(self):
+            Stale.unpersisted = True
+
+    class Dead:
+        def unpersist(self):
+            raise RuntimeError("JVM gone")
+
+    stale = ("app-gone", "/x", "k")
+    dead = ("app-dead", "/x", "k")
+    session._PINNED[stale] = Stale()
+    session._PINNED[dead] = Dead()
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(3)
+
+    try:
+        first = session.pinned(spark, SF_DIR, "test-key", build)
+        again = session.pinned(spark, SF_DIR + "/.", "test-key", build)
+        assert Stale.unpersisted
+        assert stale not in session._PINNED and dead not in session._PINNED
+        assert again is first and len(builds) == 1
+        assert sorted(r.id for r in first.collect()) == [0, 1, 2]
+    finally:
+        app = spark.sparkContext.applicationId
+        session._PINNED.pop(
+            (app, os.path.realpath(SF_DIR), "test-key"), None
+        )
 
 
 def test_quality_dedup_prefers_clean_case_originals(spark):
