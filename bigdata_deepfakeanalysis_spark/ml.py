@@ -2203,6 +2203,8 @@ def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "src", "nx", (F.col("cy") + F.col("dy")).alias("ny")
     )
+    # the probe join finds each adjacency from both cells: keep one
+    # direction (connected_components takes each edge once)
     pairs = probes.join(
         dense.select(
             F.col("cx").alias("nx"),
@@ -2210,7 +2212,7 @@ def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cell").alias("dst"),
         ),
         ["nx", "ny"],
-    ).where(F.col("src") != F.col("dst")).select("src", "dst")
+    ).where(F.col("src") < F.col("dst")).select("src", "dst")
     comp = connected_components(pairs, src="src", dst="dst")
     labeled = dense.join(
         comp.select(F.col("id").alias("cell"), "component"),

@@ -976,8 +976,13 @@ def connected_components(
     GraphFrames large-star/small-star optimization applies at 100 TB
     if components were ever deep chains). Under AQE a plain round runs
     4 jobs (3 shuffle map stages, the seed groupBy's exchange reused,
-    plus the checkpoint's result job) and the edge pin 2 more: 6 jobs
+    plus the checkpoint's result job) and the edge pin 1 more: 5 jobs
     on one-round LSH cliques. Returns (id, component).
+
+    Input contract: each undirected edge is given once (one row per
+    pair, in either direction, e.g. ``src < dst``). The edge list is
+    not deduplicated: duplicates and self-loops still give exact
+    labels, but every round joins a duplicate edge once per copy.
 
     Iteration state is ``localCheckpoint``-ed, not cached: a cache
     keeps the logical plan growing every round (cache substitution
@@ -990,15 +995,11 @@ def connected_components(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
     )
-    edges = (
-        edges.unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # no distinct: a duplicate edge never changes a min label, and the
+    # callers give each undirected edge once, so the pin stays narrow
+    edges = edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=True)
     # seed labels with min(id, direct-neighbor min): the distinct the
     # identity init needed is a groupBy anyway, and this folds the
     # first propagation round into it — an LSH clique (diameter 1)

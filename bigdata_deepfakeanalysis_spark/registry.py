@@ -98,23 +98,28 @@ _WINDOW: list[str] = [
     # surface). Every module is green in the CORRECTNESS artifacts, so
     # module coverage pins no slot.
     # ------------------------------------------------------------------
-    # (a) code changed: the brand join broadcasts its one-row-per-brand
-    # ranked side; the per-doc norms ride on the pinned weight rows
+    # (a) code and plan changed: connected_components pins its edge
+    # list without a distinct, and q_grid_dbscan gives each cell
+    # adjacency once (q_stream_jdbc_exactly_once, which now counts in
+    # the store, stages to disk and sits with the staging names)
+    "q_grid_dbscan",
+    "q_dedup_components",
+    "q_dup_cluster_sizes",
+    "q_semantic_dedup",
+    "q_semantic_dedup_lsh",
+    "q_record_linkage",
+    # (b) code changed earlier this round: the brand join broadcasts
+    # its one-row-per-brand ranked side; the per-doc norms ride on the
+    # pinned weight rows
     "q_rank_biased_overlap",
     "q_sparse_cosine_pairs",
-    # (b) plan changed: AQE no longer rewrites a sort-merge join to a
-    # broadcast after both shuffles ran (job count fell)
-    "q_grid_dbscan",
+    # (c) plan changed earlier this round: AQE no longer rewrites a
+    # sort-merge join to a broadcast after both shuffles ran
     "q_pagerank_copurchase",
     "q_hll_distinct_merge",
     "q_datasketches_native",
-    "q_semantic_dedup",
-    "q_semantic_dedup_lsh",
-    "q_dedup_components",
     "q_dedup_components_star",
-    "q_dup_cluster_sizes",
     "q_heaps_law",
-    "q_record_linkage",
     "q20_dominant_suppliers",
     "q_blocking_quality",
     "q_cms_heavy_hitters",
@@ -129,7 +134,7 @@ _WINDOW: list[str] = [
     "q_pmi_cooccurrence",
     "q_triangle_count",
     "q_two_hop_reach",
-    # (c) root range sort removed earlier this round, least-recently-
+    # (d) root range sort removed earlier this round, least-recently-
     # graded first (the rest ride after slot 50)
     "q_window_topk_per_group",
     "q13_order_count_distribution",
@@ -151,8 +156,8 @@ _WINDOW: list[str] = [
     "q_stream_stream_join",
     "q_tfidf_topterms",
     "q_url_canonicalize",
-    "q_variant_events",
     # staging-late convention
+    "q_stream_jdbc_exactly_once",
     "q_embedding_json_source",
     "q_npz_roundtrip",
 ]

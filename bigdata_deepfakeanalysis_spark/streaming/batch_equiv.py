@@ -755,15 +755,19 @@ def record_breakers_tws(stream: DataFrame) -> DataFrame:
 # Readers join data through the pointer, so they observe each epoch
 # atomically jumping from its previous complete version to the next —
 # never a half-written one (the data rows of a version are fully
-# appended before the pointer can name it). A crash while appending
-# leaves an unreferenced version (invisible; superseded by the next
-# attempt's higher ver); a crash inside the pointer transaction rolls
-# back to the previous pointer. Stale versions are garbage-collected
-# after the flip, outside the transaction — they were already
-# invisible. Compared to the staging swap (stage-append + target
-# DELETE + INSERT..SELECT copy + stage DELETE ≈ 4 row-writes per
-# replayed row), a replayed epoch now costs append + pointer flip +
-# garbage DELETE ≈ 2, and a first-time epoch costs just the append.
+# appended before the pointer can name it). Each attempt first claims
+# its (epoch, ver) in a claims table keyed on exactly that pair, so
+# two attempts of one epoch — a zombie and its replacement — never
+# append into one version: the second claim fails on the key. A crash
+# while appending leaves an unreferenced version (invisible;
+# superseded by the next attempt's higher ver); a crash inside the
+# pointer transaction rolls back to the previous pointer. The pointer
+# only moves to the epoch's newest claim, and stale versions are
+# garbage-collected after the flip, outside the transaction — they
+# were already invisible. Compared to the staging swap (stage-append
+# + target DELETE + INSERT..SELECT copy + stage DELETE ≈ 4 row-writes
+# per replayed row), a replayed epoch now costs append + pointer flip
+# + garbage DELETE ≈ 2, and a first-time epoch costs just the append.
 # The parquet sink above gets the same property from dynamic
 # partition overwrite.
 # ---------------------------------------------------------------------------
@@ -774,11 +778,12 @@ def foreach_batch_jdbc_sink(
     checkpoint_dir: str,
     table_name: str,
     _test_crash=None,
+    _test_pick=None,
 ) -> str:
     """Drain the events stream into a versioned Derby table via
-    foreachBatch: each epoch appends under a fresh version and then
-    atomically flips the epoch's committed-version pointer in ONE
-    transaction, so any replayed micro-batch converges to the same
+    foreachBatch: each epoch appends under a freshly claimed version
+    and then atomically flips the epoch's committed-version pointer in
+    ONE transaction, so any replayed micro-batch converges to the same
     visible state and a crash at ANY point leaves readers on a
     complete epoch boundary. Convergence across a FULL re-drain
     additionally relies on availableNow carving identical micro-batch
@@ -788,22 +793,29 @@ def foreach_batch_jdbc_sink(
     residue). ``_test_crash(epoch_id)``, when given, runs INSIDE the
     pointer transaction after the pointer DELETE — the crash-injection
     hook the atomicity test uses (raising there must roll back, not
-    lose the epoch). Returns the JDBC url; read the committed view via
-    ``jdbc_committed_view(table_name)`` — the only read path
-    (tests/test_streaming.py checks the package source for it).
+    lose the epoch). ``_test_pick(epoch_id, ver)``, when given, runs
+    after the attempt picked its version and before it claims it — the
+    hook the concurrent-attempt test synchronizes on. Returns the JDBC
+    url; read the committed view via ``jdbc_committed_view(table_name)``
+    — the only read path (tests/test_streaming.py checks the package
+    source for it).
 
-    SINGLE WRITER: at most one query drains into ``table_name`` at a
-    time. Version allocation (``MAX(ver) + 1`` for the epoch) is not
-    fenced, so two concurrent attempts of one epoch — a zombie and its
-    replacement — could pick the same version and append into it
-    together; the pointer would then name the merged rows. A unique
-    ``(epoch, ver)`` claim that makes the loser's append fail is the
-    fix, and is not in place."""
+    Concurrent attempts: two attempts of one epoch (a zombie and its
+    replacement) never write into one version. Each claims
+    ``(epoch, ver)`` in ``{table_name}_claims`` under a primary key
+    before it appends a row; an attempt whose claim collides fails
+    with Derby's duplicate-key error (SQLState 23505) and writes
+    nothing. The pointer flip holds an exclusive lock on the commits
+    table and moves the pointer only to the epoch's newest claim, so an
+    attempt that was overtaken by a newer claim fails instead of
+    naming its version, and garbage collection removes only versions
+    (data rows and claims) older than the one just committed."""
     from ..operators.sources import _derby_url
 
     url = _derby_url(spark)
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     commits_name = f"{table_name}_commits"
+    claims_name = f"{table_name}_claims"
 
     # create-if-absent via a bounded JDBC DDL round-trip
     jvm = spark._jvm
@@ -816,6 +828,10 @@ def foreach_batch_jdbc_sink(
             ),
             commits_name: (
                 f"CREATE TABLE {commits_name} (epoch BIGINT, ver BIGINT)"
+            ),
+            claims_name: (
+                f"CREATE TABLE {claims_name} (epoch BIGINT NOT NULL,"
+                f" ver BIGINT NOT NULL, PRIMARY KEY (epoch, ver))"
             ),
         }
         for t, stmt in ddl.items():
@@ -831,21 +847,29 @@ def foreach_batch_jdbc_sink(
         "event_id", "user_id", "value"
     )
 
+    def newest_claim(s, e: int) -> int:
+        rs = s.executeQuery(
+            f"SELECT MAX(ver) FROM {claims_name} WHERE epoch = {e}"
+        )
+        rs.next()
+        ver = rs.getLong(1)
+        ver = 0 if rs.wasNull() else ver
+        rs.close()
+        return ver
+
     def write_batch(df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        # 1. next version for this epoch: one above anything already in
-        #    the data table (covers both crashed-attempt residue and a
-        #    replay of an already-committed epoch)
+        # 1. claim the next version for this epoch: one above every
+        #    claim so far (covers crashed-attempt residue and a replay
+        #    of an already-committed epoch); the key makes a colliding
+        #    attempt fail here, before it appends
         c = jvm.java.sql.DriverManager.getConnection(url)
         try:
             s = c.createStatement()
-            rs = s.executeQuery(
-                f"SELECT MAX(ver) FROM {table_name} WHERE epoch = {e}"
-            )
-            rs.next()
-            prev = rs.getLong(1)
-            v = 1 if rs.wasNull() else prev + 1
-            rs.close()
+            v = newest_claim(s, e) + 1
+            if _test_pick is not None:
+                _test_pick(e, v)
+            s.execute(f"INSERT INTO {claims_name} VALUES ({e}, {v})")
             s.close()
         finally:
             c.close()
@@ -867,12 +891,20 @@ def foreach_batch_jdbc_sink(
             .option("batchsize", "10000")
             .save()
         )
-        # 3. atomic pointer flip: one connection, one transaction
+        # 3. atomic pointer flip: one connection, one transaction,
+        #    serialized with every other flip of this table
         c = jvm.java.sql.DriverManager.getConnection(url)
         try:
             c.setAutoCommit(False)
             s = c.createStatement()
             try:
+                s.execute(f"LOCK TABLE {commits_name} IN EXCLUSIVE MODE")
+                newest = newest_claim(s, e)
+                if newest != v:
+                    raise RuntimeError(
+                        f"{table_name} epoch {e}: version {v} was"
+                        f" superseded by claim {newest}"
+                    )
                 s.execute(f"DELETE FROM {commits_name} WHERE epoch = {e}")
                 if _test_crash is not None:
                     _test_crash(e)
@@ -887,17 +919,17 @@ def foreach_batch_jdbc_sink(
                 s.close()
         finally:
             c.close()
-        # 4. garbage-collect superseded versions (auto-commit, outside
-        #    the transaction: these rows are already invisible through
-        #    the pointer, so a crash here just defers the cleanup to
-        #    the next attempt of this epoch)
+        # 4. garbage-collect superseded versions and their claims
+        #    (auto-commit, outside the transaction: these rows are
+        #    already invisible through the pointer, so a crash here just
+        #    defers the cleanup to the next attempt of this epoch; a
+        #    newer attempt's version is left alone, and the claim of v
+        #    stays, so later attempts still pick above it)
         c = jvm.java.sql.DriverManager.getConnection(url)
         try:
             s = c.createStatement()
-            s.execute(
-                f"DELETE FROM {table_name}"
-                f" WHERE epoch = {e} AND ver <> {v}"
-            )
+            for t in (table_name, claims_name):
+                s.execute(f"DELETE FROM {t} WHERE epoch = {e} AND ver < {v}")
             s.close()
         finally:
             c.close()
@@ -912,12 +944,16 @@ def foreach_batch_jdbc_sink(
     return url
 
 
-def jdbc_committed_view(table_name: str) -> str:
+def jdbc_committed_view(
+    table_name: str, select: str = "d.epoch, d.event_id, d.user_id, d.value"
+) -> str:
     """The reader-side committed view of a versioned exactly-once
     table: data joined through the epoch's commit pointer. A JDBC
-    ``dbtable`` subquery, so the join runs store-side."""
+    ``dbtable`` subquery, so the join runs store-side. ``select`` is
+    the subquery's select list over the data rows ``d``; an aggregate
+    list pushes the whole aggregation into the store."""
     return (
-        f"(SELECT d.epoch, d.event_id, d.user_id, d.value"
+        f"(SELECT {select}"
         f" FROM {table_name} d JOIN {table_name}_commits c"
         f" ON d.epoch = c.epoch AND d.ver = c.ver) AS t"
     )
@@ -940,7 +976,16 @@ def q_stream_jdbc_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit by an atomic pointer flip (r13), then count the committed
     view. Appending replays would double n_rows; losing an epoch would
     drop the fixed-point value checksum; the oracle computes all three
-    numbers from the source table read once."""
+    numbers from the source table read once.
+
+    The count runs in the store: the committed view's select list is
+    the aggregate, so Spark reads one row in one job instead of pulling
+    every committed row through a two-shuffle distinct count. Empty
+    input gives (0, 0, NULL), as in the oracle. Bound: Derby's COUNT
+    returns INTEGER, so past 2^31 - 1 committed rows the read fails
+    with Derby's out-of-range error (SQLState 22003) instead of
+    returning a count; ``value_fp_sum`` is a BIGINT sum, which raises
+    the same error on overflow."""
     import shutil
     from pathlib import Path
 
@@ -953,7 +998,7 @@ def q_stream_jdbc_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         ckpt = staging_dir(f"stream_eo_jdbc_ckpt_{tag}_{attempt}")
         shutil.rmtree(ckpt, ignore_errors=True)
         url = foreach_batch_jdbc_sink(spark, sf_dir, str(ckpt), table_name)
-    sunk = (
+    counted = (
         spark.read.format("jdbc")
         .option("url", url)
         # committed view: data joined through the epoch commit pointer
@@ -961,17 +1006,23 @@ def q_stream_jdbc_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pointer, so appending replays would still double n_rows here
         # only if the sink lost its versioning (the replay proof is
         # unchanged)
-        .option("dbtable", jdbc_committed_view(table_name))
+        .option(
+            "dbtable",
+            jdbc_committed_view(
+                table_name,
+                "COUNT(*) AS n_rows,"
+                " COUNT(DISTINCT d.event_id) AS n_distinct,"
+                " SUM(CAST(FLOOR(d.value * 1000) AS BIGINT))"
+                " AS value_fp_sum",
+            ),
+        )
         .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-        # stream the verification scan in 10k-row fetch blocks instead
-        # of the driver-default row-at-a-time ResultSet paging
-        .option("fetchsize", "10000")
         .load()
     )
-    return sunk.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct("event_id").alias("n_distinct"),
-        F.sum(F.expr("CAST(FLOOR(value * 1000) AS BIGINT)"))
-        .cast("bigint")
-        .alias("value_fp_sum"),
+    # Derby upper-cases unquoted aliases; COUNT comes back INTEGER
+    return counted.select(
+        *(
+            F.col(c.upper()).cast("bigint").alias(c)
+            for c in ("n_rows", "n_distinct", "value_fp_sum")
+        )
     )

@@ -235,16 +235,94 @@ def _jobs_of(spark, fn) -> int:
 def test_components_round_runs_no_count_job(spark, lsh_cliques):
     """On one-round cliques the changed-count rides on the round's
     checkpoint job as an observed metric and the seed labels are not
-    pinned: the build runs the edge pin and one round, 6 jobs
-    under AQE. A separate count job (+2 under AQE), a seed pin (+2) or
-    a runtime broadcast rewrite of a join whose shuffles already ran
-    (+1 each) would show here."""
+    pinned: the build runs the narrow edge pin (1 job) and one round
+    (4 jobs), 5 jobs under AQE. A distinct on the edge pin (+1), a
+    separate count job (+2 under AQE), a seed pin (+2) or a runtime
+    broadcast rewrite of a join whose shuffles already ran (+1 each)
+    would show here."""
     from bigdata_deepfakeanalysis_spark.operators.dedup import (
         connected_components,
     )
 
     jobs = _jobs_of(spark, lambda: connected_components(lsh_cliques))
-    assert jobs == 6, jobs
+    assert jobs == 5, jobs
+
+
+def test_components_exact_on_duplicate_edges_and_self_loops(spark):
+    """The edge list is not deduplicated: every edge given three times
+    in both directions, plus self-loops (one on an isolated node),
+    still gives the union-find component minima."""
+    from bigdata_deepfakeanalysis_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = _grid_edges(6) + [(9, 70), (70, 71)]
+    noisy = 3 * (edges + [(b, a) for a, b in edges])
+    noisy += [(0, 0), (70, 70), (500, 500), (500, 500)]
+    pairs = spark.createDataFrame(noisy, "doc_a long, doc_b long")
+    got = {
+        (r.id, r.component) for r in connected_components(pairs).collect()
+    }
+    assert got == _component_minima(noisy)
+    assert (500, 500) in got
+
+
+# Every caller of connected_components, by enclosing function, and the
+# registered queries that reach each (q_semantic_dedup through
+# semantic_dedup_accounting).
+_COMPONENTS_CALLERS = {
+    "q_dedup_components": "q_dedup_components",
+    "q_dup_cluster_sizes": "q_dup_cluster_sizes",
+    "semantic_dedup_accounting": "q_semantic_dedup",
+    "q_semantic_dedup_lsh": "q_semantic_dedup_lsh",
+    "q_record_linkage": "q_record_linkage",
+    "q_grid_dbscan": "q_grid_dbscan",
+}
+
+
+def test_components_callers_give_each_edge_once(spark, monkeypatch):
+    """connected_components does not deduplicate its edge list (a
+    duplicate edge is joined once per copy every round), so each caller
+    gives every undirected edge once: the edge list made symmetric has
+    no duplicates. The callers are found in the package source, so a
+    new one fails here until it is listed."""
+    import ast
+    import pathlib
+
+    import bigdata_deepfakeanalysis_spark as pkg
+    from bigdata_deepfakeanalysis_spark.operators import dedup
+    from pyspark.sql import functions as F
+
+    callers = set()
+    for p in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
+        for fn in ast.walk(ast.parse(p.read_text())):
+            if isinstance(fn, ast.FunctionDef) and any(
+                isinstance(n, ast.Call)
+                and getattr(n.func, "id", None) == "connected_components"
+                for n in ast.walk(fn)
+            ):
+                callers.add(fn.name)
+    assert callers == set(_COMPONENTS_CALLERS)
+
+    original = dedup.connected_components
+    seen = []
+
+    def checked(pairs, src="doc_a", dst="doc_b", **kw):
+        e = pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        sym = e.unionByName(
+            e.select(F.col("d").alias("s"), F.col("s").alias("d"))
+        )
+        seen.append((sym.count(), sym.distinct().count()))
+        return original(pairs, src, dst, **kw)
+
+    monkeypatch.setattr(dedup, "connected_components", checked)
+    queries = all_queries()
+    for name in _COMPONENTS_CALLERS.values():
+        seen.clear()
+        queries[name](spark, SF_DIR)
+        assert seen, name
+        for n_sym, n_distinct in seen:
+            assert n_sym == n_distinct > 0, (name, n_sym, n_distinct)
 
 
 def test_pagerank_build_and_write_jobs(spark):

@@ -242,6 +242,127 @@ def test_jdbc_sink_epoch_swap_is_atomic_under_crash(spark):
     assert counts(url, garbage)[0] == 0
 
 
+def test_jdbc_exactly_once_result_runs_one_job(spark):
+    """q_stream_jdbc_exactly_once counts the committed view in the
+    store: after the build (which drains the stream twice), writing the
+    result reads one row in one job. Reading the committed rows into
+    Spark and counting them there runs 3 (two shuffle map stages for
+    the distinct count, then the result)."""
+    from bigdata_deepfakeanalysis_spark.registry import all_queries
+
+    df = all_queries()["q_stream_jdbc_exactly_once"](spark, SF_SMALL)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df.write.format("noop").mode("overwrite").save()
+    jobs = dag.nextJobId() - before
+    assert jobs == 1, jobs
+
+
+def test_jdbc_exactly_once_on_empty_events(spark, tmp_path):
+    """Empty input: the store-side count reads (0, 0, NULL), as the
+    oracle does over the same empty table."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from bigdata_deepfakeanalysis_spark.registry import all_oracles
+
+    from .conftest import assert_matches_oracle
+
+    sf = tmp_path / "empty_events"
+    sf.mkdir()
+    src = pq.read_table(f"{SF_SMALL}/events.parquet")
+    pq.write_table(src.slice(0, 0), sf / "events.parquet")
+    df = BE.q_stream_jdbc_exactly_once(spark, str(sf))
+    assert [tuple(r) for r in df.collect()] == [(0, 0, None)]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{sf}/events.parquet')"
+    )
+    assert_matches_oracle(
+        df, con, all_oracles()["q_stream_jdbc_exactly_once"]
+    )
+    con.close()
+
+
+def test_jdbc_sink_fences_concurrent_attempts_of_an_epoch(spark):
+    """A zombie attempt and its replacement replay the same epoch at
+    once. Both pick the same next version (the hook holds each until
+    the other has picked); the version claim's key lets one through and
+    fails the other before it appends, so the committed view holds each
+    event once. Without the claim both append into that version and
+    the pointer names the merged rows, every event twice. An attempt
+    overtaken by a newer claim fails at its pointer flip, leaving the
+    committed view as it was."""
+    import shutil
+    import threading
+
+    from bigdata_deepfakeanalysis_spark.catalog import staging_dir, table
+
+    table_name = "eo_fence_events"
+    both_picked = threading.Barrier(2, timeout=120)
+
+    def drain(attempt: int, pick=None) -> str:
+        ckpt = staging_dir(f"stream_eo_fence_ckpt_{attempt}")
+        shutil.rmtree(ckpt, ignore_errors=True)
+        return BE.foreach_batch_jdbc_sink(
+            spark, SF_SMALL, str(ckpt), table_name,
+            _test_pick=pick,
+        )
+
+    url = drain(0)  # tables exist and every epoch is committed once
+    errors: list[Exception] = []
+
+    def attempt(i: int) -> None:
+        try:
+            drain(i, pick=lambda e, v: both_picked.wait())
+        except Exception as exc:  # noqa: BLE001 - the loser's failure
+            errors.append(exc)
+
+    threads = [threading.Thread(target=attempt, args=(i,)) for i in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert len(errors) == 1, errors
+    assert "duplicate key" in str(errors[0])
+
+    committed = (
+        spark.read.format("jdbc")
+        .option("url", url)
+        .option("dbtable", BE.jdbc_committed_view(table_name))
+        .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+        .load()
+    )
+    src_n = table(spark, SF_SMALL, "events").count()
+
+    def counts() -> tuple[int, int]:
+        return (
+            committed.count(),
+            committed.select("event_id").distinct().count(),
+        )
+
+    assert counts() == (src_n, src_n) and src_n > 0
+
+    # an attempt overtaken by a newer claim while it appends must not
+    # flip the pointer to its own version
+    def newer_claim(e: int, v: int) -> None:
+        c = spark._jvm.java.sql.DriverManager.getConnection(url)
+        try:
+            s = c.createStatement()
+            s.execute(f"INSERT INTO {table_name}_claims VALUES ({e}, {v + 1})")
+            s.close()
+        finally:
+            c.close()
+
+    with pytest.raises(Exception, match="superseded"):
+        drain(3, pick=newer_claim)
+    assert counts() == (src_n, src_n)
+    drain(4)
+    assert counts() == (src_n, src_n)
+
+
 def _jdbc_reads_bypassing_view(source: str) -> list[int]:
     """Line numbers of JDBC DataFrame reads in ``source`` whose table is
     not ``jdbc_committed_view(...)``. A read is a call chain through
