@@ -2204,15 +2204,22 @@ def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src", "nx", (F.col("cy") + F.col("dy")).alias("ny")
     )
     # the probe join finds each adjacency from both cells: keep one
-    # direction (connected_components takes each edge once)
-    pairs = probes.join(
-        dense.select(
-            F.col("cx").alias("nx"),
-            F.col("cy").alias("ny"),
-            F.col("cell").alias("dst"),
-        ),
-        ["nx", "ny"],
-    ).where(F.col("src") < F.col("dst")).select("src", "dst")
+    # direction (connected_components takes each edge once). Pinned:
+    # connected_components reads its pairs once per round, and the
+    # cell grid takes several rounds
+    pairs = (
+        probes.join(
+            dense.select(
+                F.col("cx").alias("nx"),
+                F.col("cy").alias("ny"),
+                F.col("cell").alias("dst"),
+            ),
+            ["nx", "ny"],
+        )
+        .where(F.col("src") < F.col("dst"))
+        .select("src", "dst")
+        .localCheckpoint(eager=True)
+    )
     comp = connected_components(pairs, src="src", dst="dst")
     labeled = dense.join(
         comp.select(F.col("id").alias("cell"), "component"),

@@ -974,15 +974,24 @@ def connected_components(
     pinned by an eager checkpoint whose job also yields the scalar
     changed-count the loop checks as an observed metric (the
     GraphFrames large-star/small-star optimization applies at 100 TB
-    if components were ever deep chains). Under AQE a plain round runs
-    4 jobs (3 shuffle map stages, the seed groupBy's exchange reused,
-    plus the checkpoint's result job) and the edge pin 1 more: 5 jobs
-    on one-round LSH cliques. Returns (id, component).
+    if components were ever deep chains). The seed labels and round 0
+    read one shuffle of the edge list keyed on ``src``, so under AQE
+    round 0 runs 3 jobs (the edge and the neighbor-min shuffle map
+    stages, plus the checkpoint's result job): 3 jobs on one-round LSH
+    cliques. A later plain round re-shuffles the edges, and the
+    checkpointed labels once for each of its two joins: 5 jobs. On
+    nullable id columns the join's inferred not-null filter lands
+    below the edge shuffle, so round 0 no longer shares it: 2 jobs
+    more (labels are the same). Returns (id, component).
 
     Input contract: each undirected edge is given once (one row per
     pair, in either direction, e.g. ``src < dst``). The edge list is
     not deduplicated: duplicates and self-loops still give exact
     labels, but every round joins a duplicate edge once per copy.
+    The operator pins no edges: ``pairs`` is read once in round 0 and
+    once more per later round, so a caller whose pairs are expensive
+    to recompute passes them pinned (``session.pinned`` or an eager
+    ``localCheckpoint``).
 
     Iteration state is ``localCheckpoint``-ed, not cached: a cache
     keeps the logical plan growing every round (cache substitution
@@ -995,22 +1004,26 @@ def connected_components(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
     )
-    # no distinct: a duplicate edge never changes a min label, and the
-    # callers give each undirected edge once, so the pin stays narrow
+    # one shuffle of the symmetric edge list, read by the seed groupBy
+    # and by round 0's join: both key on `src`, so neither plans an
+    # exchange of its own. No partition count, so AQE still coalesces
+    # it. No distinct: a duplicate edge never changes a min label, and
+    # the callers give each undirected edge once.
     edges = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    ).repartition("src")
     # seed labels with min(id, direct-neighbor min): the distinct the
     # identity init needed is a groupBy anyway, and this folds the
     # first propagation round into it — an LSH clique (diameter 1)
     # then converges at round 1's changed==0 check instead of round 2.
-    # Not pinned: the groupBy is already hash-partitioned by id, so
-    # round 0 joins it without a re-shuffle and its checkpoint job
-    # computes the seed too.
+    # Not pinned: round 0's checkpoint job computes the seed too.
     labels = (
-        edges.groupBy(F.col("src").alias("id"))
+        edges.groupBy("src")
         .agg(F.min("dst").alias("_nm"))
-        .select("id", F.least(F.col("id"), F.col("_nm")).alias("label"))
+        .select(
+            F.col("src").alias("id"),
+            F.least(F.col("src"), F.col("_nm")).alias("label"),
+        )
     )
     changed = -1
     first_changed = None
@@ -1034,13 +1047,19 @@ def connected_components(
             and first_changed is not None
             and changed > first_changed / 2
         )
+        # each edge carries its source's label to its destination;
+        # the edge list is symmetric, so the min over `dst` is the min
+        # over every neighbor. The merge hint keeps AQE from planning
+        # the labels side as a broadcast once round 0's shared edge
+        # stage has run (the aggregate above a reused stage carries
+        # static stats), which costs one broadcast job
         nbr_min = (
             edges.join(
-                labels.withColumnRenamed("id", "dst"), "dst"
+                labels.withColumnRenamed("id", "src").hint("merge"), "src"
             )
-            .groupBy("src")
+            .groupBy("dst")
             .agg(F.min("label").alias("nbr_min"))
-            .withColumnRenamed("src", "id")
+            .withColumnRenamed("dst", "id")
         )
         # carry the changed flag into the checkpointed frame so the
         # convergence count rides on the checkpoint job as an observed
@@ -1127,12 +1146,12 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    edges = (
-        e.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+    # not deduplicated or pinned: large-star ends in a distinct and
+    # the loop's groupBy(u, v) is one, so a duplicate edge is gone
+    # after round 0, which reads this narrow projection of the input
+    # twice (the caller pins expensive pairs)
+    edges = e.select(
+        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
     )
 
     def large_star(ed: DataFrame) -> DataFrame:
@@ -1304,7 +1323,10 @@ def semantic_dedup_accounting(
     # no oracle mirror needed.
     n_cells = max(_IVF_CELLS, -(-emb.count() // 1500))
     _, assigned = ivf_assign(emb, n_cells=n_cells, vec_col="vec")
-    pairs = cosine_pairs(assigned, "cell", 0.999)
+    # pinned: connected_components reads its pairs once per round
+    pairs = cosine_pairs(assigned, "cell", 0.999).localCheckpoint(
+        eager=True
+    )
     cc = connected_components(pairs, src="vec_a", dst="vec_b")
     labeled = emb.join(
         cc.withColumnRenamed("id", "vec_id"), "vec_id", "left"
@@ -1437,7 +1459,10 @@ def q_semantic_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = aug_emb(spark, sf_dir)
     blocked = adaptive_lsh_bucket(emb.withColumn("_q", quantize("vec")))
-    pairs = cosine_pairs(blocked, "bucket", 0.999)
+    # pinned: connected_components reads its pairs once per round
+    pairs = cosine_pairs(blocked, "bucket", 0.999).localCheckpoint(
+        eager=True
+    )
     cc = connected_components(pairs, src="vec_a", dst="vec_b")
     labeled = emb.join(
         cc.withColumnRenamed("id", "vec_id"), "vec_id", "left"

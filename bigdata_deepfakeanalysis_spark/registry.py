@@ -98,16 +98,21 @@ _WINDOW: list[str] = [
     # surface). Every module is green in the CORRECTNESS artifacts, so
     # module coverage pins no slot.
     # ------------------------------------------------------------------
-    # (a) code and plan changed: connected_components pins its edge
-    # list without a distinct, and q_grid_dbscan gives each cell
-    # adjacency once (q_stream_jdbc_exactly_once, which now counts in
-    # the store, stages to disk and sits with the staging names)
-    "q_grid_dbscan",
+    # (a) code and plan changed: connected_components reads one edge
+    # shuffle for its seed and round 0 and pins no edges (both
+    # semantic-dedup paths and q_grid_dbscan pin their pairs instead),
+    # and connected_components_star neither deduplicates nor pins its
+    # edge list. Earlier this round: the edge list lost its distinct
+    # and q_grid_dbscan gives each cell adjacency once
+    # (q_stream_jdbc_exactly_once, which now counts in the store,
+    # stages to disk and sits with the staging names)
     "q_dedup_components",
     "q_dup_cluster_sizes",
     "q_semantic_dedup",
     "q_semantic_dedup_lsh",
     "q_record_linkage",
+    "q_grid_dbscan",
+    "q_dedup_components_star",
     # (b) code changed earlier this round: the brand join broadcasts
     # its one-row-per-brand ranked side; the per-doc norms ride on the
     # pinned weight rows
@@ -118,7 +123,6 @@ _WINDOW: list[str] = [
     "q_pagerank_copurchase",
     "q_hll_distinct_merge",
     "q_datasketches_native",
-    "q_dedup_components_star",
     "q_heaps_law",
     "q20_dominant_suppliers",
     "q_blocking_quality",

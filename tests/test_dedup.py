@@ -233,19 +233,21 @@ def _jobs_of(spark, fn) -> int:
 
 
 def test_components_round_runs_no_count_job(spark, lsh_cliques):
-    """On one-round cliques the changed-count rides on the round's
-    checkpoint job as an observed metric and the seed labels are not
-    pinned: the build runs the narrow edge pin (1 job) and one round
-    (4 jobs), 5 jobs under AQE. A distinct on the edge pin (+1), a
-    separate count job (+2 under AQE), a seed pin (+2) or a runtime
-    broadcast rewrite of a join whose shuffles already ran (+1 each)
-    would show here."""
+    """On one-round cliques the build is one round, and the operator
+    pins nothing of its own: the seed labels and round 0 read one
+    shuffle of the edge list, and the changed-count rides on the
+    round's checkpoint job as an observed metric. That is 3 jobs under
+    AQE: the edge and the neighbor-min shuffle map stages, and the
+    checkpoint's result job. An edge pin (+1), a seed that shuffles the
+    edges again (+1), a separate count job (+2 under AQE), a seed pin
+    (+2) or a runtime broadcast of the round's labels side (+1) would
+    show here."""
     from bigdata_deepfakeanalysis_spark.operators.dedup import (
         connected_components,
     )
 
     jobs = _jobs_of(spark, lambda: connected_components(lsh_cliques))
-    assert jobs == 5, jobs
+    assert jobs == 3, jobs
 
 
 def test_components_exact_on_duplicate_edges_and_self_loops(spark):
@@ -325,20 +327,65 @@ def test_components_callers_give_each_edge_once(spark, monkeypatch):
             assert n_sym == n_distinct > 0, (name, n_sym, n_distinct)
 
 
+def _build_and_write_jobs(spark, name: str) -> int:
+    """Jobs of a query's second build plus its noop write: the first
+    run fills the session's pinned tables, so the second counts the
+    query's own work."""
+    q = all_queries()[name]
+
+    def run():
+        q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+    run()
+    return _jobs_of(spark, run)
+
+
 def test_pagerank_build_and_write_jobs(spark):
     """q_pagerank_copurchase's second build plus its noop write, once
     the shared edge list is pinned: the supersteps' lazy checkpoints
     run their shuffle map stages and the write its result stage,
     18 jobs. A runtime broadcast rewrite of a superstep join
     (+1 each) would show here."""
-    q = all_queries()["q_pagerank_copurchase"]
-
-    def run():
-        q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
-    run()  # pins the shared co-purchase edge list
-    jobs = _jobs_of(spark, run)
+    jobs = _build_and_write_jobs(spark, "q_pagerank_copurchase")
     assert jobs == 18, jobs
+
+
+def test_dedup_components_build_and_write_jobs(spark):
+    """q_dedup_components's second build plus its noop write, once the
+    shared LSH pairs are pinned: one 3-job components round and the
+    write's one job over the checkpointed labels, 4 jobs. An edge pin
+    inside the operator or a runtime broadcast of the round's labels
+    side (+1 each) would show here."""
+    jobs = _build_and_write_jobs(spark, "q_dedup_components")
+    assert jobs == 4, jobs
+
+
+# Second build plus noop write of every connected_components caller,
+# at the test session's 8 shuffle partitions. The operator pins no
+# edges, so the callers own the pin: the LSH callers pass pinned
+# pairs, both semantic-dedup paths pin their cosine pairs, and so does
+# q_grid_dbscan, whose cell grid takes several rounds (without: 30).
+# q_record_linkage converges in one round and pins none (with: 16).
+_COMPONENTS_CALLER_JOBS = {
+    "q_dedup_components": 4,
+    "q_dup_cluster_sizes": 11,
+    "q_semantic_dedup": 20,
+    "q_semantic_dedup_lsh": 14,
+    "q_record_linkage": 15,
+    "q_grid_dbscan": 28,
+}
+
+
+def test_components_callers_build_and_write_jobs(spark):
+    """A caller that stops pinning pairs that are expensive to
+    recompute, or starts pinning pairs that are cheap, changes its
+    exact job count here."""
+    assert set(_COMPONENTS_CALLER_JOBS) == set(_COMPONENTS_CALLERS.values())
+    got = {
+        name: _build_and_write_jobs(spark, name)
+        for name in _COMPONENTS_CALLER_JOBS
+    }
+    assert got == _COMPONENTS_CALLER_JOBS, got
 
 
 def test_pinned_evicts_stale_applications(spark):

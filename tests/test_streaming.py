@@ -416,9 +416,9 @@ def test_versioned_jdbc_table_is_read_only_through_committed_view():
     crashed-attempt versions. Every JDBC read in a module that defines
     or drives ``foreach_batch_jdbc_sink`` goes through
     ``jdbc_committed_view``; the sink's append is a write and exempt.
-    (The sink's own raw statements — version allocation, pointer flip,
-    garbage collection — are the single writer's bookkeeping, not
-    reads through Spark.)"""
+    (The sink's own raw statements — the fenced ``(epoch, ver)``
+    claim, the pointer flip, garbage collection — are its commit
+    protocol over plain JDBC, not reads through Spark.)"""
     import pathlib
 
     import bigdata_deepfakeanalysis_spark as pkg
