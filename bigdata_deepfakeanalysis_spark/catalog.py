@@ -161,10 +161,6 @@ def staging_dir(name: str) -> Path:
     return d
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views for spark.sql() use."""
     for name in TABLES:

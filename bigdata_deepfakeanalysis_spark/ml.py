@@ -112,21 +112,6 @@ def pca2d(df: DataFrame, vec_col: str = "embedding", k: int = 2) -> tuple:
     return coords, list(model.explainedVariance), model
 
 
-def pca2d_coords(
-    df: DataFrame, vec_col: str = "embedding", k: int = 2
-) -> DataFrame:
-    """The per-row product surface (vec_id, label, pc1, pc2, ev1, ev2)
-    — what a user plots; engine-local up to eigenvector sign."""
-    coords, ev, _ = pca2d(df, vec_col, k)
-    out = coords.select(
-        "vec_id",
-        "label",
-        F.element_at("_coords", 1).alias("pc1"),
-        F.element_at("_coords", 2).alias("pc2"),
-    )
-    return out.withColumn("ev1", F.lit(ev[0])).withColumn("ev2", F.lit(ev[1]))
-
-
 @query(
     "q_pca_explained_variance",
     """
@@ -150,8 +135,7 @@ def q_pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0,1], their sum <= 1, every projected coordinate finite, and the
     64x2 principal-component matrix orthonormal (max |PᵀP - I| < 1e-9,
     checked on the driver over the k*k Gram of the loadings — 4
-    doubles, not data-sized). The per-row coords remain available via
-    :func:`pca2d_coords` and keep their own invariant test."""
+    doubles, not data-sized)."""
     import numpy as np
 
     emb = table(spark, sf_dir, "embeddings")

@@ -25,7 +25,6 @@ stored columnar (binary column pruned unless selected).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -82,14 +81,6 @@ def media(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # mapInPandas featurizers
 # ---------------------------------------------------------------------------
-
-def _surrogate_vec(payload_hex: str) -> list[float]:
-    """Deterministic pseudo-embedding: md5 hex digits of the payload's
-    hex representation, scaled to [0, 1]. Stands in for the CNN forward
-    pass (M1) — same signature, same batch shape."""
-    h = hashlib.md5(payload_hex.encode("ascii")).hexdigest()
-    return [int(c, 16) / 15.0 for c in h[:_N_DIMS]]
-
 
 def surrogate_featurize(media_df: DataFrame) -> DataFrame:
     """mapInPandas featurizer (iterator-of-batches: per-partition init,

@@ -4,8 +4,8 @@ The reference's tensor verbs — global-average-pool over [C,H,W], channel
 variance + top-k, min-max normalization — re-expressed over flattened
 ``array<float>`` tensor columns (data model D4).
 
-Scale design: the engine ops (``gap_means``, ``normalize_array``) are
-per-row higher-order functions — JVM-side, zero shuffle, no Python.
+Scale design: the engine op (``gap_means``) is a per-row higher-order
+function — JVM-side, zero shuffle, no Python.
 The oracle *queries* instead explode via an index table and aggregate
 through DECIMAL, because cross-engine bit-equality of a left-fold over
 floats is not guaranteed; both formulations compute the same numbers.
@@ -41,13 +41,6 @@ def gap_means(data: Column, c: int, hw: int) -> Column:
         )
         / F.lit(float(hw)),
     )
-
-
-def normalize_array(data: Column) -> Column:
-    """P10 — min-max scale an array to [0,1] with the reference's 1e-8
-    epsilon (``src/feature_map_analysis.py:59``)."""
-    lo, hi = F.array_min(data), F.array_max(data)
-    return F.transform(data, lambda x: (x - lo) / (hi - lo + F.lit(1e-8)))
 
 
 # ---------------------------------------------------------------------------

@@ -17,12 +17,13 @@ with zero external dependencies. This module implements:
   one InputPartition per file on read (Avro's sync-marker block
   structure also permits per-block splits — noted below), one
   part-file per Spark partition on write;
-- a vectorized read path (default): ``read()`` yields one
+- Arrow transfer both ways: ``read()`` yields one
   ``pyarrow.RecordBatch`` per container block (SPARK-48493), decoded
   by a flat-offset scan (``_dec_block_columns``) — no per-value
-  BytesIO calls, no per-record pickle round-trip. ``option("arrow",
-  "false")`` keeps the row-iterator path as a fallback; the two are
-  equality-tested and share the hypothesis fuzz;
+  BytesIO calls, no per-record pickle round-trip — and the writer
+  receives Arrow batches. The row-at-a-time decoders
+  (``read_container``, ``read_blocks``) are the plain references the
+  tests and the hypothesis fuzz compare the batches against;
 - filter pushdown (Spark 4.1 ``pushFilters``): comparison/IN/null/
   string-prefix filters are compiled to picklable specs and rows are
   dropped during block decode, BEFORE the worker->JVM transfer.
@@ -931,19 +932,15 @@ def make_pyavro_datasource(spark=None, warn=True):
         DataSource,
         DataSourceArrowWriter,
         DataSourceReader,
-        DataSourceWriter,
         InputPartition,
         WriterCommitMessage,
     )
 
-    _read_container = read_container
     _read_header = read_header
-    _read_blocks = read_blocks
     _arrow_blocks = arrow_blocks
     _block_index = block_index
     _plan_splits = plan_splits
     _compile = _compile_filter
-    _passes = _row_passes
     _write_container = write_container
     _ddl = spark_ddl_from_avro
     _from_spark = avro_schema_from_spark
@@ -960,13 +957,6 @@ def make_pyavro_datasource(spark=None, warn=True):
         def __init__(self, options, expect_fields):
             self._path = options.get("path")
             self._split_bytes = int(options.get("split_bytes", 0))
-            # Arrow-batch transfer is the default (one buffer per
-            # container block instead of one pickled tuple per
-            # record); option arrow=false keeps the row iterator as
-            # a debugging/fallback path.
-            self._arrow = (
-                options.get("arrow", "true").lower() != "false"
-            )
             self._pushdown = (
                 options.get("pushdown", "true").lower() != "false"
             )
@@ -1009,17 +999,9 @@ def make_pyavro_datasource(spark=None, warn=True):
         def read(self, partition):
             path, offsets = partition.value
             self._check(path, _read_header(path))
-            specs = self._filters
-            if self._arrow:
-                yield from _arrow_blocks(path, offsets, specs)
-            else:
-                if offsets is None:
-                    _, rows = _read_container(path)
-                else:
-                    rows = _read_blocks(path, offsets)
-                if specs:
-                    rows = (r for r in rows if _passes(specs, r))
-                yield from rows
+            # one Arrow batch per container block, not one pickled
+            # tuple per record
+            yield from _arrow_blocks(path, offsets, self._filters)
 
     def _push_filters(self, filters):
         # CONSERVATIVE pushdown: compile what we understand and
@@ -1095,8 +1077,10 @@ def make_pyavro_datasource(spark=None, warn=True):
         def __init__(self, tmp):
             self.tmp = tmp
 
-    class _PyAvroWriter(DataSourceWriter):
-        """Staged two-phase write: tasks emit hidden ``.tmp-`` files
+    class _PyAvroWriter(DataSourceArrowWriter):
+        """Tasks receive ``pyarrow.RecordBatch`` objects, not pickled
+        Rows: the JVM->Python boundary is one Arrow buffer per batch.
+        Staged two-phase write: tasks emit hidden ``.tmp-`` files
         and commit() renames them into place — an overwrite that fails
         mid-job leaves the old data untouched (no destructive work
         happens before every task has succeeded). Append
@@ -1125,25 +1109,28 @@ def make_pyavro_datasource(spark=None, warn=True):
             # types — never after old data has been touched
             _from_spark(schema)
 
-        def _tmp_path(self):
+        def write(self, iterator):
             import os as _os
             from pyspark import TaskContext
 
             ctx = TaskContext.get()
             _os.makedirs(self._path, exist_ok=True)
-            return _os.path.join(
+            tmp = _os.path.join(
                 self._path,
                 f".tmp-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.avro",
             )
-
-        def write(self, iterator):
-            tmp = self._tmp_path()
             avro_schema = _from_spark(self._schema)
-            fields = [f.name for f in self._schema.fields]
+
+            def rows():
+                for batch in iterator:
+                    yield from zip(
+                        *[c.to_pylist() for c in batch.columns]
+                    )
+
             _write_container(
                 tmp,
                 avro_schema,
-                (tuple(row[c] for c in fields) for row in iterator),
+                rows(),
                 codec=self._codec,
                 block_records=self._block_records,
             )
@@ -1195,32 +1182,6 @@ def make_pyavro_datasource(spark=None, warn=True):
                 if m is not None and _os.path.exists(m.tmp):
                     _os.remove(m.tmp)
 
-    class _PyAvroArrowWriter(DataSourceArrowWriter, _PyAvroWriter):
-        """Arrow-transfer twin of ``_PyAvroWriter`` (the default):
-        tasks receive ``pyarrow.RecordBatch`` objects instead of
-        pickled Rows — the JVM->Python boundary is one Arrow buffer
-        per batch. Encoding, staging, commit, and abort are all
-        inherited; only the iterator adapter differs."""
-
-        def write(self, iterator):
-            tmp = self._tmp_path()
-            avro_schema = _from_spark(self._schema)
-
-            def rows():
-                for batch in iterator:
-                    yield from zip(
-                        *[c.to_pylist() for c in batch.columns]
-                    )
-
-            _write_container(
-                tmp,
-                avro_schema,
-                rows(),
-                codec=self._codec,
-                block_records=self._block_records,
-            )
-            return _PyAvroCommit(tmp)
-
     class PyAvroDataSource(DataSource):
         """``format("pyavro")`` — Avro container files, pure Python."""
 
@@ -1247,10 +1208,6 @@ def make_pyavro_datasource(spark=None, warn=True):
         def writer(self, schema, overwrite):
             # destructive work is deferred to the writer's commit()
             # (after every task succeeded); here we only validate.
-            # Arrow transfer is the default; option arrow=false keeps
-            # the pickled-Row path (symmetric with the reader knob).
-            if self.options.get("arrow", "true").lower() != "false":
-                return _PyAvroArrowWriter(self.options, schema, overwrite)
             return _PyAvroWriter(self.options, schema, overwrite)
 
     return PyAvroDataSource

@@ -979,10 +979,10 @@ def connected_components(
     round 0 runs 3 jobs (the edge and the neighbor-min shuffle map
     stages, plus the checkpoint's result job): 3 jobs on one-round LSH
     cliques. A later plain round re-shuffles the edges, and the
-    checkpointed labels once for each of its two joins: 5 jobs. On
-    nullable id columns the join's inferred not-null filter lands
-    below the edge shuffle, so round 0 no longer shares it: 2 jobs
-    more (labels are the same). Returns (id, component).
+    checkpointed labels once for each of its two joins: 5 jobs. A pair
+    with a NULL endpoint is no edge and is dropped before the edge
+    shuffle (on NOT NULL id columns Catalyst folds that filter away),
+    so nullable id columns run the same jobs. Returns (id, component).
 
     Input contract: each undirected edge is given once (one row per
     pair, in either direction, e.g. ``src < dst``). The edge list is
@@ -1003,7 +1003,7 @@ def connected_components(
     edges = pairs.select(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
-    )
+    ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     # one shuffle of the symmetric edge list, read by the seed groupBy
     # and by round 0's join: both key on `src`, so neither plans an
     # exchange of its own. No partition count, so AQE still coalesces

@@ -536,24 +536,22 @@ def _kcore_oracle() -> str:
     """
 
 
-@query("q_kcore", _kcore_oracle())
-def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """{_KCORE_K}-core of the sparsified supplier co-purchase graph
-    (same top-{_TRI_EDGES} edge set as q_triangle_count): degree
-    distribution of the surviving core with a witness node per degree.
-    Spark runs the same {_KCORE_ROUNDS} fixed peel rounds the oracle
-    unrolls, each a lazily-checkpointed degree-filter semi-join —
-    the scale shape is one narrow shuffle per round over a strictly
-    shrinking edge set."""
-    edges = copurchase_top_edges(spark, sf_dir).select("s1", "s2")
-    for _ in range(_KCORE_ROUNDS):
+def kcore_edges(
+    edges: DataFrame, k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS
+) -> DataFrame:
+    """Peel undirected (s1, s2) edges, each given once, for ``rounds``
+    fixed rounds: each round keeps the edges whose both endpoints have
+    degree >= ``k`` in the current edge set (``_kcore_round_sql``).
+    Each round is a lazily-checkpointed degree-filter semi-join.
+    Returns the surviving (s1, s2) edges."""
+    for _ in range(rounds):
         deg = (
             edges.select(F.col("s1").alias("id"))
             .unionAll(edges.select(F.col("s2").alias("id")))
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        keep = deg.where(F.col("d") >= _KCORE_K).select("id")
+        keep = deg.where(F.col("d") >= k).select("id")
         edges = (
             edges.join(
                 F.broadcast(keep.withColumnRenamed("id", "s1")), "s1"
@@ -562,6 +560,18 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("s1", "s2")
             .localCheckpoint(eager=False)
         )
+    return edges
+
+
+@query("q_kcore", _kcore_oracle())
+def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """{_KCORE_K}-core of the sparsified supplier co-purchase graph
+    (same top-{_TRI_EDGES} edge set as q_triangle_count): degree
+    distribution of the surviving core with a witness node per degree.
+    Spark runs the same {_KCORE_ROUNDS} fixed peel rounds the oracle
+    unrolls (``kcore_edges``) — the scale shape is one narrow shuffle
+    per round over a strictly shrinking edge set."""
+    edges = kcore_edges(copurchase_top_edges(spark, sf_dir).select("s1", "s2"))
     core_deg = (
         edges.select(F.col("s1").alias("id"))
         .unionAll(edges.select(F.col("s2").alias("id")))
@@ -953,6 +963,35 @@ def q_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BFS_ROUNDS = 4
 
 
+def bfs_distances(edges: DataFrame, rounds: int = _BFS_ROUNDS) -> DataFrame:
+    """Hop distance (<= ``rounds``) from the smallest ``s1`` over
+    undirected (s1, s2) edges: per round one join of the current
+    distance table against the undirected edge list plus a min-rollup
+    — the BFS superstep every distributed graph engine runs; the
+    frontier table never exceeds the node set. The root is
+    ``MIN(s1)``, as in the oracle, so an empty edge list has a NULL
+    root: one row (NULL, 0). Returns (id, dist)."""
+    und = edges.select(
+        F.col("s1").alias("a"), F.col("s2").alias("b")
+    ).unionAll(edges.select(F.col("s2").alias("a"), F.col("s1").alias("b")))
+    und = und.localCheckpoint(eager=True)
+    dist = edges.agg(F.min("s1").alias("id")).select(
+        "id", F.lit(0).alias("dist")
+    )
+    for _ in range(rounds):
+        expanded = (
+            dist.join(und, dist["id"] == und["a"])
+            .select(F.col("b").alias("id"), (F.col("dist") + 1).alias("dist"))
+        )
+        dist = (
+            dist.unionAll(expanded)
+            .groupBy("id")
+            .agg(F.min("dist").alias("dist"))
+            .localCheckpoint(eager=False)
+        )
+    return dist
+
+
 @query(
     "q_bfs_distance",
     f"""
@@ -984,30 +1023,8 @@ _BFS_ROUNDS = 4
 )
 def q_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hop distance (<= {_BFS_ROUNDS}) from the smallest supplier in
-    the sparsified co-customer edge set: per round one join of the
-    current distance table against the undirected edge list plus a
-    min-rollup — the BFS superstep every distributed graph engine
-    runs; the frontier table never exceeds the node set."""
-    edges = copurchase_top_edges(spark, sf_dir).select("s1", "s2")
-    und = edges.select(
-        F.col("s1").alias("a"), F.col("s2").alias("b")
-    ).unionAll(edges.select(F.col("s2").alias("a"), F.col("s1").alias("b")))
-    und = und.localCheckpoint(eager=True)
-    seed = edges.agg(F.min("s1").alias("id")).select(
-        "id", F.lit(0).alias("dist")
-    )
-    dist = seed
-    for _ in range(_BFS_ROUNDS):
-        expanded = (
-            dist.join(und, dist["id"] == und["a"])
-            .select(F.col("b").alias("id"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionAll(expanded)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
+    the sparsified co-customer edge set (``bfs_distances``)."""
+    dist = bfs_distances(copurchase_top_edges(spark, sf_dir).select("s1", "s2"))
     return dist.select(
         F.col("id").cast("bigint").alias("suppkey"),
         F.col("dist").cast("int").alias("dist"),

@@ -31,17 +31,6 @@ from .sampling import _seeded_rank_sql, seeded_rank
 _HW = FM_H * FM_W
 
 
-def align_and_concat(emb: DataFrame, feat: DataFrame) -> DataFrame:
-    """J2 engine op — record-level equi-join on (group, stem) + horizontal
-    array concat (``src/combined_embedding_features_comprations.py:
-    182-225``). Returns (group, stem, concat_vec)."""
-    return emb.join(feat, ["group", "stem"]).select(
-        "group",
-        "stem",
-        F.concat(F.col("emb_vec"), F.col("feat_vec")).alias("concat_vec"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # J1 — group-alignment join with per-side caps
 # ---------------------------------------------------------------------------
@@ -141,8 +130,8 @@ def q_stem_join_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 — inner join embeddings to stage1-GAP features on (group, stem),
     horizontal concat. Output is the concat's dimension + decimal-exact
     element checksum (arrays themselves are float-formatting-unsafe to
-    hash across engines; the engine op ``align_and_concat`` returns the
-    real concatenated array)."""
+    hash across engines; ``F.concat`` of the two arrays over the same
+    join gives the real concatenated vector)."""
     emb = (
         grouped_embeddings(spark, sf_dir)
         .where(F.col("vec_id") < 100)

@@ -110,16 +110,6 @@ def stddev_sql(expr: str, alias: str, scale: int = 4) -> str:
     )
 
 
-# Seeded deterministic ordering (SURVEY A7): rank over md5 of (seed, key).
-# md5 hex is identical in Spark and DuckDB, so rank order matches exactly.
-def md5_order(key_expr: str, seed: int = 42) -> Column:
-    return F.md5(F.concat_ws("|", F.lit(str(seed)), F.expr(f"CAST(({key_expr}) AS STRING)")))
-
-
-def md5_order_sql(key_expr: str, seed: int = 42) -> str:
-    return f"md5(concat('{seed}', '|', CAST(({key_expr}) AS VARCHAR)))"
-
-
 def range_parts(df) -> int:
     """Range fan-out for two-pass prefix ranking: the session's
     ``spark.sql.shuffle.partitions`` (floor 16). A hard-coded 16 was

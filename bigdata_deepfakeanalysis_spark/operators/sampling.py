@@ -40,19 +40,6 @@ def cap_per_group(
     )
 
 
-def first_n_per_group(
-    df: DataFrame, group_col: str, order_col: str, n: int
-) -> DataFrame:
-    """A8 — first-n in deterministic listing order
-    (``src/feature_map_analysis.py:32-34``)."""
-    w = Window.partitionBy(group_col).orderBy(order_col)
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= n)
-        .drop("_rk")
-    )
-
-
 def _seeded_rank_sql(group: str, key: str, seed: int = 42) -> str:
     return (
         f"ROW_NUMBER() OVER (PARTITION BY {group} ORDER BY "
@@ -235,16 +222,6 @@ def q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the idiom for consistent train/holdout carving across snapshots).
 # ---------------------------------------------------------------------------
 
-def hash_sample(df: DataFrame, key_col: str, pct: int, seed: int = 42) -> DataFrame:
-    """Keep rows whose md5-derived bucket (0..99) is < pct. Row-local
-    filter; no window, no shuffle, no rand()."""
-    bucket = F.expr(
-        f"CAST(conv(substr(md5(concat('{seed}', '|', "
-        f"CAST({key_col} AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100"
-    )
-    return df.where(bucket < pct)
-
-
 @query(
     "q_hash_bernoulli_sample",
     """
@@ -269,10 +246,10 @@ def hash_sample(df: DataFrame, key_col: str, pct: int, seed: int = 42) -> DataFr
 def q_hash_bernoulli_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10% hash-Bernoulli sample of orders, audited per priority class:
     realized counts, a witness key, and the realized rate in ppm
-    (integer DIV so both engines agree exactly). The sample itself is
-    ``hash_sample`` — a row-local filter the optimizer keeps inside the
-    scan stage; this query adds the rate audit (one aggregation) on
-    top. Unlike ``TABLESAMPLE``/``df.sample`` the selection is
+    (integer DIV so both engines agree exactly). The sample is the
+    ``sampled`` flag: a row-local md5-bucket predicate the optimizer
+    keeps inside the scan stage (as a filter it is the whole sample);
+    this query adds the rate audit (one aggregation) on top. Unlike ``TABLESAMPLE``/``df.sample`` the selection is
     deterministic, engine-independent, and append-stable."""
     from ..catalog import table
 

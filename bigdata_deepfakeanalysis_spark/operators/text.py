@@ -52,12 +52,6 @@ lang_profile AS (
 """
 
 
-def lang_profile(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        _LANG_PROFILE, schema="gram string, cand_lang string, weight int"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Engine ops
 # ---------------------------------------------------------------------------
@@ -1004,34 +998,6 @@ def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("keep_ratio"),
         )
     )
-
-
-def curation_with_metrics(spark: SparkSession, sf_dir: str):
-    """Corpus-curation quality gate instrumented with the Observation
-    API: input doc/char counts and kept-doc counts are collected as a
-    side effect of the SAME job — no second pass over the corpus. At
-    100 TB a pipeline run cannot afford a separate count() per metric;
-    ``observe`` attaches the aggregates to the existing physical plan.
-    Returns (curated_df, observation); read ``observation.get`` after
-    an action on the returned frame."""
-    from pyspark.sql import Observation
-
-    obs = Observation("curation_metrics")
-    docs = table(spark, sf_dir, "documents").observe(
-        obs,
-        F.count(F.lit(1)).alias("n_in"),
-        F.sum(F.length("text").cast("long")).alias("chars_in"),
-        # DISTINCT aggregates are rejected by CollectMetrics — the
-        # sketch-based approx is the observable form
-        F.approx_count_distinct("lang").alias("n_langs"),
-    )
-    stats = token_stats(docs, "text", "doc_id")
-    kept = (
-        docs.join(quality_score(stats), "doc_id")
-        .where(F.col("quality") >= 0.5)
-        .select("doc_id", "lang", "text")
-    )
-    return kept, obs
 
 
 # word-bigram list from the token array (same let-binding discipline:

@@ -98,24 +98,32 @@ _WINDOW: list[str] = [
     # surface). Every module is green in the CORRECTNESS artifacts, so
     # module coverage pins no slot.
     # ------------------------------------------------------------------
-    # (a) code and plan changed: connected_components reads one edge
-    # shuffle for its seed and round 0 and pins no edges (both
-    # semantic-dedup paths and q_grid_dbscan pin their pairs instead),
-    # and connected_components_star neither deduplicates nor pins its
-    # edge list. Earlier this round: the edge list lost its distinct
-    # and q_grid_dbscan gives each cell adjacency once
-    # (q_stream_jdbc_exactly_once, which now counts in the store,
-    # stages to disk and sits with the staging names)
+    # (a) code changed, plan equal up to ids: connected_components
+    # drops pairs with a NULL endpoint above its edge shuffle (folded
+    # away on these callers' NOT NULL ids); q_kcore and q_bfs_distance
+    # run their rounds through kcore_edges and bfs_distances; three
+    # docstrings no longer cite deleted operators (q_csv_json_roundtrip,
+    # whose pyavro reader and writer lost their row twins, stages to
+    # disk and sits with the staging names)
     "q_dedup_components",
     "q_dup_cluster_sizes",
     "q_semantic_dedup",
     "q_semantic_dedup_lsh",
     "q_record_linkage",
     "q_grid_dbscan",
+    "q_kcore",
+    "q_bfs_distance",
+    "q_hash_bernoulli_sample",
+    "q_stem_join_concat",
+    "q_pca_explained_variance",
+    # (b) code changed earlier this round: connected_components reads
+    # one edge shuffle for its seed and round 0 (the callers above);
+    # connected_components_star neither deduplicates nor pins its edge
+    # list; the brand join broadcasts its one-row-per-brand ranked
+    # side; the per-doc norms ride on the pinned weight rows
+    # (q_stream_jdbc_exactly_once, which now counts in the store,
+    # stages to disk and sits with the staging names)
     "q_dedup_components_star",
-    # (b) code changed earlier this round: the brand join broadcasts
-    # its one-row-per-brand ranked side; the per-doc norms ride on the
-    # pinned weight rows
     "q_rank_biased_overlap",
     "q_sparse_cosine_pairs",
     # (c) plan changed earlier this round: AQE no longer rewrites a
@@ -154,13 +162,8 @@ _WINDOW: list[str] = [
     "q_phash_near_dup",
     "q_python_datasource",
     "q_quality_dedup",
-    "q_sessionize_events",
-    "q_stratified_split",
-    "q_stream_sliding_window",
-    "q_stream_stream_join",
-    "q_tfidf_topterms",
-    "q_url_canonicalize",
     # staging-late convention
+    "q_csv_json_roundtrip",
     "q_stream_jdbc_exactly_once",
     "q_embedding_json_source",
     "q_npz_roundtrip",

@@ -115,6 +115,15 @@ def assert_matches_oracle(spark_df, duck_con, sql: str):
     )
 
 
+def jobs_of(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs, by job-id window (also
+    counts jobs of stream threads that a job group would miss)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    fn()
+    return dag.nextJobId() - before
+
+
 @pytest.fixture(scope="session")
 def oracle_check(duck):
     def check(spark_df, sql):

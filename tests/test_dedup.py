@@ -12,7 +12,7 @@ import pytest
 
 from bigdata_deepfakeanalysis_spark.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_of
 
 
 def test_ivf_cosine_near_dup_covers_planted_copies(spark):
@@ -224,14 +224,6 @@ def test_components_variants_give_component_minima(
         assert got == expected, cc.__name__
 
 
-def _jobs_of(spark, fn) -> int:
-    """Spark jobs started while ``fn()`` runs, by job-id window."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    fn()
-    return dag.nextJobId() - before
-
-
 def test_components_round_runs_no_count_job(spark, lsh_cliques):
     """On one-round cliques the build is one round, and the operator
     pins nothing of its own: the seed labels and round 0 read one
@@ -246,8 +238,36 @@ def test_components_round_runs_no_count_job(spark, lsh_cliques):
         connected_components,
     )
 
-    jobs = _jobs_of(spark, lambda: connected_components(lsh_cliques))
+    jobs = jobs_of(spark, lambda: connected_components(lsh_cliques))
     assert jobs == 3, jobs
+
+
+def test_components_nullable_ids_share_the_edge_shuffle(spark):
+    """Nullable id columns run the same 3 build jobs as NOT NULL ones:
+    the operator drops pairs with a NULL endpoint above the shared
+    edge shuffle, so Catalyst infers no not-null filter below it (that
+    split the exchange: +2 jobs). A pair with a NULL endpoint is no
+    edge: the labels are union-find over the non-null pairs."""
+    from bigdata_deepfakeanalysis_spark.operators.dedup import (
+        connected_components,
+    )
+
+    def build_jobs(schema):
+        pairs = spark.createDataFrame([(1, 2)], schema).localCheckpoint(
+            eager=True
+        )
+        return jobs_of(spark, lambda: connected_components(pairs))
+
+    assert build_jobs("doc_a long not null, doc_b long not null") == 3
+    assert build_jobs("doc_a long, doc_b long") == 3
+
+    edges = [(1, 2), (2, 3), (7, 8)]
+    with_nulls = edges + [(3, None), (None, 9), (None, None), (5, None)]
+    pairs = spark.createDataFrame(with_nulls, "doc_a long, doc_b long")
+    got = {
+        (r.id, r.component) for r in connected_components(pairs).collect()
+    }
+    assert got == _component_minima(edges)
 
 
 def test_components_exact_on_duplicate_edges_and_self_loops(spark):
@@ -337,7 +357,7 @@ def _build_and_write_jobs(spark, name: str) -> int:
         q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
     run()
-    return _jobs_of(spark, run)
+    return jobs_of(spark, run)
 
 
 def test_pagerank_build_and_write_jobs(spark):
@@ -819,7 +839,5 @@ def test_components_result_runs_one_job(spark):
     over the checkpointed labels, with no RangePartitioner sampling job
     or range-shuffle map job (a root orderBy runs 3)."""
     df = all_queries()["q_dedup_components"](spark, SF_DIR)
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    df.write.format("noop").mode("overwrite").save()
-    assert dag.nextJobId() - before == 1
+    write = df.write.format("noop").mode("overwrite")
+    assert jobs_of(spark, write.save) == 1

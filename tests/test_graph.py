@@ -1,6 +1,6 @@
 """Graph operators on degenerate inputs: the empty edge list and a
 single edge give exact results (checked against plain-Python
-references of the same integer recurrences), never a hang."""
+references of the same integer recurrences and rounds), never a hang."""
 
 from __future__ import annotations
 
@@ -72,3 +72,59 @@ def test_lpa_labels_on_degenerate_graphs(spark, graph):
     got = {r.id: r.label for r in lpa_labels(df).collect()}
     assert got == _lpa_reference(edges, _LPA_ROUNDS)
     assert len(got) == len(edges)
+
+
+def _kcore_reference(edges, k, rounds):
+    """kcore_edges' fixed peel rounds, serially."""
+    for _ in range(rounds):
+        deg = Counter(n for e in edges for n in e)
+        edges = [(a, b) for a, b in edges if deg[a] >= k and deg[b] >= k]
+    return sorted(edges)
+
+
+def _bfs_reference(edges, rounds):
+    """bfs_distances' rounds, serially, from the smallest ``s1``: on no
+    edges the root is None (SQL ``MIN`` over no rows) at distance 0."""
+    root = min((a for a, _ in edges), default=None)
+    dist = {root: 0}
+    for _ in range(rounds):
+        step = dict(dist)
+        for a, b in edges + [(b, a) for a, b in edges]:
+            if a in dist:
+                step[b] = min(step.get(b, dist[a] + 1), dist[a] + 1)
+        dist = step
+    return dist
+
+
+@pytest.mark.parametrize("k", [1, 3])
+@pytest.mark.parametrize("graph", sorted(_GRAPHS))
+def test_kcore_edges_on_degenerate_graphs(spark, graph, k):
+    """The empty graph has no core; a single edge is its own 1-core and
+    is peeled from the 3-core in the first round."""
+    from bigdata_deepfakeanalysis_spark.operators.graph import (
+        _KCORE_ROUNDS,
+        kcore_edges,
+    )
+
+    edges = _GRAPHS[graph]
+    df = spark.createDataFrame(edges, "s1 long, s2 long")
+    got = sorted(map(tuple, kcore_edges(df, k).collect()))
+    assert got == _kcore_reference(edges, k, _KCORE_ROUNDS)
+    assert bool(got) == (graph == "one_edge" and k == 1)
+
+
+@pytest.mark.parametrize("graph", sorted(_GRAPHS))
+def test_bfs_distances_on_degenerate_graphs(spark, graph):
+    """A single edge puts its far end one hop from the root. The empty
+    graph gives the one row the oracle's ``MIN(s1)`` root gives: a NULL
+    root at distance 0."""
+    from bigdata_deepfakeanalysis_spark.operators.graph import (
+        _BFS_ROUNDS,
+        bfs_distances,
+    )
+
+    edges = _GRAPHS[graph]
+    df = spark.createDataFrame(edges, "s1 long, s2 long")
+    got = {r.id: r.dist for r in bfs_distances(df).collect()}
+    assert got == _bfs_reference(edges, _BFS_ROUNDS)
+    assert got == ({1: 0, 2: 1} if edges else {None: 0})

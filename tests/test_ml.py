@@ -13,15 +13,20 @@ from .conftest import SF_DIR
 
 
 def test_pca_invariants(spark):
-    """Per-row product surface keeps its invariants; the registered
-    summary query's guarantee booleans must all be genuinely TRUE
-    (the oracle hashes them as literals)."""
-    from bigdata_deepfakeanalysis_spark.catalog import table
-    from bigdata_deepfakeanalysis_spark.ml import pca2d_coords
+    """The fit the summary query runs keeps its invariants per row;
+    the registered summary query's guarantee booleans must all be
+    genuinely TRUE (the oracle hashes them as literals)."""
+    from pyspark.sql import functions as F
 
-    df = pca2d_coords(table(spark, SF_DIR, "embeddings")).toPandas()
+    from bigdata_deepfakeanalysis_spark.catalog import table
+    from bigdata_deepfakeanalysis_spark.ml import pca2d
+
+    coords, (ev1, ev2), _ = pca2d(table(spark, SF_DIR, "embeddings"))
+    df = coords.select(
+        F.element_at("_coords", 1).alias("pc1"),
+        F.element_at("_coords", 2).alias("pc2"),
+    ).toPandas()
     assert len(df) > 0
-    ev1, ev2 = float(df.ev1.iloc[0]), float(df.ev2.iloc[0])
     assert 0 < ev2 <= ev1 <= 1 and ev1 + ev2 <= 1
     assert df.pc1.map(math.isfinite).all() and df.pc2.map(math.isfinite).all()
 

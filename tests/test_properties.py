@@ -1151,26 +1151,28 @@ def test_parity_helpers_bit_exact_vs_duckdb(spark, rows, seed):
     # double subtraction, and SQRT(neg) must then be NaN on BOTH sides
     assert repr(g_std) == repr(w_std)
 
-    # rank-over-md5: the seeded deterministic order must agree
-    # position-for-position (integer keys only: CAST(int AS STRING)
-    # agrees across engines, CAST(double AS ...) does NOT — double
-    # string formats differ and double->int rounds in DuckDB but
-    # truncates in Spark, which is why no call site keys md5_order
-    # on a raw double)
-    got_order = [
-        r.uid
-        for r in sdf.select("uid")
-        .withColumn("h", P.md5_order("uid * 7 + " + str(seed % 13), seed))
-        .orderBy("h")
+    # rank-over-md5 (sampling.seeded_rank, the seeded cap sample):
+    # the per-group ranks must agree row-for-row (integer keys only:
+    # CAST(int AS STRING) agrees across engines, CAST(double AS ...)
+    # does NOT — double string formats differ and double->int rounds
+    # in DuckDB but truncates in Spark, which is why no call site
+    # ranks on a raw double)
+    from pyspark.sql import functions as F
+
+    from bigdata_deepfakeanalysis_spark.operators.sampling import (
+        _seeded_rank_sql,
+        seeded_rank,
+    )
+
+    key = f"uid * 7 + {seed % 13}"
+    got_rank = sorted(
+        sdf.withColumn("key", F.expr(key))
+        .select("uid", seeded_rank("grp", "key", seed).alias("rk"))
         .collect()
-    ]
-    want_order = [
-        r[0]
-        for r in con.execute(
-            "SELECT uid FROM (SELECT uid, "
-            f"{P.md5_order_sql(f'uid * 7 + {seed % 13}', seed)} AS h "
-            "FROM t) ORDER BY h"
-        ).fetchall()
-    ]
-    assert got_order == want_order
+    )
+    want_rank = con.execute(
+        f"SELECT uid, {_seeded_rank_sql('grp', 'key', seed)} AS rk "
+        f"FROM (SELECT uid, grp, {key} AS key FROM t) ORDER BY uid"
+    ).fetchall()
+    assert [tuple(r) for r in got_rank] == [tuple(r) for r in want_rank]
     con.close()

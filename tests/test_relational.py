@@ -7,7 +7,7 @@ import pytest
 
 from bigdata_deepfakeanalysis_spark.registry import all_oracles, all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_of
 
 
 def _oracle_cases():
@@ -63,32 +63,6 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"n_name", "revenue"}
 
 
-def test_curation_metrics_ride_the_same_job(spark):
-    """Observation metrics must equal independently computed counts —
-    and arrive from the one curation job, not a second scan."""
-    from bigdata_deepfakeanalysis_spark.catalog import table
-    from bigdata_deepfakeanalysis_spark.operators.text import (
-        curation_with_metrics,
-    )
-    from pyspark.sql import functions as F
-
-    from .conftest import SF_DIR
-
-    kept, obs = curation_with_metrics(spark, SF_DIR)
-    n_kept = kept.count()
-    docs = table(spark, SF_DIR, "documents")
-    expect = docs.agg(
-        F.count(F.lit(1)).alias("n_in"),
-        F.sum(F.length("text").cast("long")).alias("chars_in"),
-        F.approx_count_distinct("lang").alias("n_langs"),
-    ).collect()[0]
-    got = obs.get
-    assert got["n_in"] == expect["n_in"]
-    assert got["chars_in"] == expect["chars_in"]
-    assert got["n_langs"] == expect["n_langs"]
-    assert 0 < n_kept <= got["n_in"]
-
-
 def test_training_pipeline_funnel_strictly_shrinks(spark):
     """Every pipeline stage must catch its planted failure class:
     quality < input, dedup < quality (re-posts), decontamination <
@@ -113,13 +87,8 @@ def test_table_read_infers_schema_once(spark):
     """Only the first read of a path runs the schema-inference job."""
     from bigdata_deepfakeanalysis_spark.catalog import table
 
-    from .conftest import SF_DIR
-
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
     table(spark, SF_DIR, "lineitem")
-    before = dag.nextJobId()
-    table(spark, SF_DIR, "lineitem")
-    assert dag.nextJobId() == before
+    assert jobs_of(spark, lambda: table(spark, SF_DIR, "lineitem")) == 0
 
 
 def test_table_rewritten_in_place_is_reinferred(spark, tmp_path):
@@ -180,10 +149,8 @@ def test_bounded_final_sort_runs_two_jobs(spark, name):
     job (a plain global orderBy runs 4). Jobs are counted by job-id
     window around the noop write, after the plan is built."""
     df = all_queries()[name](spark, SF_DIR)
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    df.write.format("noop").mode("overwrite").save()
-    assert dag.nextJobId() - before == 2
+    write = df.write.format("noop").mode("overwrite")
+    assert jobs_of(spark, write.save) == 2
 
 
 def test_order_free_result_runs_no_range_sort_jobs(spark):
@@ -193,7 +160,5 @@ def test_order_free_result_runs_no_range_sort_jobs(spark):
     range-shuffle map job (a root orderBy runs 5). Jobs are counted by
     job-id window around the noop write, after the plan is built."""
     df = all_queries()["q_window_topk_per_group"](spark, SF_DIR)
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    df.write.format("noop").mode("overwrite").save()
-    assert dag.nextJobId() - before == 3
+    write = df.write.format("noop").mode("overwrite")
+    assert jobs_of(spark, write.save) == 3

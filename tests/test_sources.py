@@ -247,19 +247,6 @@ def test_pyavro_spark_roundtrip(spark, tmp_path):
     df.coalesce(1).write.format("pyavro").mode("overwrite").save(out)
     assert len([f for f in os.listdir(out) if f.endswith(".avro")]) == 1
     assert spark.read.format("pyavro").load(out).count() == df.count()
-    # the row-transfer writer (option arrow=false) must produce the
-    # same readback as the default Arrow-batch writer
-    out2 = str(tmp_path / "pyavro_rowwriter")
-    (
-        df.coalesce(1)
-        .write.format("pyavro")
-        .option("arrow", "false")
-        .mode("overwrite")
-        .save(out2)
-    )
-    assert sorted(
-        map(tuple, spark.read.format("pyavro").load(out2).collect())
-    ) == sorted(map(tuple, df.collect()))
 
 
 def test_pyavro_split_reads_within_one_file(spark, tmp_path):
@@ -360,9 +347,9 @@ def test_pyavro_split_plan_block_boundary_fuzz(tmp_path):
 
 
 def test_pyavro_arrow_and_row_paths_agree(spark, tmp_path):
-    """The Arrow-batch read path (default) and the row-iterator path
-    (option arrow=false) must produce identical DataFrames — every
-    scalar type, NULLs, both codecs, whole-file AND ranged
+    """The Spark read (Arrow batches) returns the input rows, and so
+    does the row-at-a-time reference decoder ``read_container`` —
+    every scalar type, NULLs, both codecs, whole-file AND ranged
     split-within-one-file partitions."""
     from bigdata_deepfakeanalysis_spark.operators import avro_lite as al
 
@@ -395,24 +382,14 @@ def test_pyavro_arrow_and_row_paths_agree(spark, tmp_path):
         al.write_container(
             d / "one.avro", schema, rows, codec=codec, block_records=64
         )
+        assert list(al.read_container(d / "one.avro")[1]) == rows
         spark.dataSource.register(al.make_pyavro_datasource())
         for opts in ({}, {"split_bytes": 1500}):
             rd = spark.read.format("pyavro")
             for k, v in opts.items():
                 rd = rd.option(k, v)
-            via_arrow = sorted(
-                map(tuple, rd.load(str(d)).collect())
-            )
-            via_rows = sorted(
-                map(
-                    tuple,
-                    rd.option("arrow", "false")
-                    .load(str(d))
-                    .collect(),
-                )
-            )
-            assert via_arrow == via_rows
-            assert via_arrow == sorted(rows)
+            got = sorted(map(tuple, rd.load(str(d)).collect()))
+            assert got == sorted(rows), (codec, opts)
 
 
 def test_pyavro_writer_codec_and_block_options(spark, tmp_path):
@@ -501,8 +478,8 @@ def test_avro_filter_specs_tristate_semantics():
 
 def test_pyavro_filter_pushdown_differential(spark, tmp_path):
     """Pre-filtering during block decode must be invisible to query
-    results: every (arrow x pushdown) combination returns the same
-    rows as the unfiltered read filtered by Spark alone. Catching
+    results: the pushdown read returns the same rows as the
+    unfiltered read filtered by Spark alone. Catching
     OVER-dropping requires the pushdown=false arm — Spark's own
     post-scan re-evaluation only protects against under-dropping."""
     from bigdata_deepfakeanalysis_spark.operators import avro_lite as al
@@ -570,22 +547,19 @@ def test_pyavro_filter_pushdown_differential(spark, tmp_path):
             "NaN" if isinstance(v, float) and v != v else v for v in row
         )
 
+    def read(pred, pushdown):
+        return sorted(
+            canon(r)
+            for r in spark.read.format("pyavro")
+            .option("pushdown", pushdown)
+            .load(str(tmp_path))
+            .where(pred)
+            .collect()
+        )
+
     for pred in preds:
-        expect = None
-        for arrow in ("true", "false"):
-            for pushdown in ("true", "false"):
-                got = sorted(
-                    canon(r)
-                    for r in spark.read.format("pyavro")
-                    .option("arrow", arrow)
-                    .option("pushdown", pushdown)
-                    .load(str(tmp_path))
-                    .where(pred)
-                    .collect()
-                )
-                if expect is None:
-                    expect = got
-                assert got == expect, (pred, arrow, pushdown)
+        expect = read(pred, "false")
+        assert read(pred, "true") == expect, pred
         assert len(expect) > 0, pred  # fixture exercises the predicate
 
 
@@ -862,18 +836,14 @@ import sys
 sys.path = [p for p in sys.path if "repo" not in p]
 from pyspark.serializers import CloudPickleSerializer
 cls = CloudPickleSerializer().loads(open({str(blob)!r}, "rb").read())
-ds = cls(options={{"path": {str(avro)!r}, "arrow": "false"}})
+ds = cls(options={{"path": {str(avro)!r}}})
 assert ds.schema() == "k bigint", ds.schema()
 r = ds.reader(None)
-rows = [row for p in r.partitions() for row in r.read(p)]
+rows = [tuple(d.values())
+        for p in r.partitions()
+        for b in r.read(p)
+        for d in b.to_pylist()]
 assert rows == [(7,), (8,)], rows
-ds2 = cls(options={{"path": {str(avro)!r}}})
-r2 = ds2.reader(None)
-rows2 = [tuple(d.values())
-         for p in r2.partitions()
-         for b in r2.read(p)
-         for d in b.to_pylist()]
-assert rows2 == [(7,), (8,)], rows2
 print("BY_VALUE_OK")
 """
     out = subprocess.run(

@@ -17,7 +17,7 @@ import pytest
 from bigdata_deepfakeanalysis_spark.catalog import table
 from bigdata_deepfakeanalysis_spark.streaming import batch_equiv as BE
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, jobs_of
 
 _CASES = {
     "tumbling": (
@@ -251,10 +251,8 @@ def test_jdbc_exactly_once_result_runs_one_job(spark):
     from bigdata_deepfakeanalysis_spark.registry import all_queries
 
     df = all_queries()["q_stream_jdbc_exactly_once"](spark, SF_SMALL)
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.nextJobId()
-    df.write.format("noop").mode("overwrite").save()
-    jobs = dag.nextJobId() - before
+    write = df.write.format("noop").mode("overwrite")
+    jobs = jobs_of(spark, write.save)
     assert jobs == 1, jobs
 
 
@@ -650,45 +648,6 @@ def test_pylog_segment_roll_and_offsets(tmp_path):
         assert offs == sorted(offs) and len(set(offs)) == len(offs)
 
 
-def test_pylog_stream_exactly_once_across_restarts(spark, tmp_path):
-    """Two availableNow drains over one checkpoint: the second run
-    delivers ONLY the records appended between runs — checkpointed
-    offset cursors + replayable ranges = exactly-once into the sink."""
-    from bigdata_deepfakeanalysis_spark.streaming.pylog import (
-        append_log,
-        make_pylog_datasource,
-    )
-
-    spark.dataSource.register(make_pylog_datasource())
-    log = str(tmp_path / "log")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    append_log(log, [(f"a{i}", str(i)) for i in range(5)])
-
-    def drain():
-        q = (
-            spark.readStream.format("pylog")
-            .load(log)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "availableNow drain timed out"
-
-    drain()
-    got1 = {r.key for r in spark.read.parquet(sink).collect()}
-    assert got1 == {f"a{i}" for i in range(5)}
-    append_log(log, [(f"b{i}", str(i)) for i in range(3)])
-    drain()
-    out = spark.read.parquet(sink).collect()
-    assert len(out) == 8  # no duplicates, nothing lost
-    assert {r.key for r in out} == {f"a{i}" for i in range(5)} | {
-        f"b{i}" for i in range(3)
-    }
-
-
 def test_pylog_cursor_never_skips_a_torn_segment(tmp_path):
     """A torn tail in a NON-final segment must halt the cursor there:
     advancing into segment 1 would lose the record once its writer
@@ -780,9 +739,10 @@ def test_pylog_repairs_whole_segment_torn_from_byte_zero(tmp_path):
 
 
 def test_pylog_data_plane_partitions_match_simple_reader(tmp_path):
-    """The DataSourceStreamReader port must emit exactly the simple
-    reader's rows for the same [start, end) cursor range, one
-    InputPartition per in-range segment, all ranges newline-aligned."""
+    """The stream reader must emit exactly the rows of the plain
+    ``_read_range`` reference for the same [start, end) cursor range,
+    one InputPartition per in-range segment, all ranges
+    newline-aligned."""
     from bigdata_deepfakeanalysis_spark.streaming import pylog
 
     d = str(tmp_path / "log")
@@ -793,11 +753,10 @@ def test_pylog_data_plane_partitions_match_simple_reader(tmp_path):
     start = {"seg": 0, "pos": 0}
     end = pylog._durable_cursor(d)
     expect, cur = pylog._read_range(d, start, None)
-    assert cur == end  # planning cursor == simple reader's cursor
+    assert cur == end  # planning cursor == the reference's cursor
 
     ds_cls = pylog.make_pylog_datasource()
-    ds = ds_cls(options={"path": d, "data_plane": "true"})
-    reader = ds.streamReader(None)
+    reader = ds_cls(options={"path": d}).streamReader(None)
     assert reader.latestOffset() == end
     parts = reader.partitions(start, end)
     segs_covered = [p.seg for p in parts]
@@ -822,7 +781,7 @@ def test_pylog_data_plane_partitions_match_simple_reader(tmp_path):
 
 def test_pylog_data_plane_latest_offset_halts_at_torn_segment(tmp_path):
     """latestOffset must apply the same stop-at-first-torn-segment
-    rule as the simple reader's cursor — otherwise a restart could
+    rule as the ``_read_range`` cursor — otherwise a restart could
     skip the torn record once its writer completes it."""
     import os
 
@@ -837,12 +796,11 @@ def test_pylog_data_plane_latest_offset_halts_at_torn_segment(tmp_path):
     assert pylog._durable_cursor(d) == {"seg": 0, "pos": 18}
 
 
-def test_pylog_data_plane_stream_exactly_once_across_restarts(
-    spark, tmp_path
-):
-    """The executor-side port under the full exactly-once protocol:
-    two availableNow drains over one checkpoint, second run delivers
-    only the between-run appends."""
+def test_pylog_stream_exactly_once_across_restarts(spark, tmp_path):
+    """Two availableNow drains over one checkpoint: the second run
+    delivers ONLY the records appended between runs — checkpointed
+    offset cursors + replayable ranges = exactly-once into the sink,
+    with every segment byte-range decoded on the executors."""
     from bigdata_deepfakeanalysis_spark.streaming.pylog import (
         append_log,
         make_pylog_datasource,
@@ -860,7 +818,6 @@ def test_pylog_data_plane_stream_exactly_once_across_restarts(
     def drain():
         q = (
             spark.readStream.format("pylog")
-            .option("data_plane", "true")
             .load(log)
             .writeStream.format("parquet")
             .option("path", sink)
@@ -901,36 +858,33 @@ def test_pylog_topic_partitions_have_independent_cursors(tmp_path):
         f.write(b'{"k":"torn","v":"x')
 
     ds_cls = pylog.make_pylog_datasource()
-    reader = ds_cls(
-        options={"path": topic}
-    ).simpleStreamReader(None)
+    reader = ds_cls(options={"path": topic}).streamReader(None)
+
+    def batch(start, end):
+        parts = reader.partitions(start, end)
+        return [r for p in parts for r in reader.read(p)]
+
     start = reader.initialOffset()
     assert set(start) == {"0", "1"}  # topic-shaped offset
-    rows, cur = reader.read(start)
-    rows = list(rows)
+    cur = reader.latestOffset()
+    rows = batch(start, cur)
     assert {(r[0], r[2]) for r in rows} == {("a", 0), ("b", 1)}
     # p0's cursor halted before the torn bytes; p1's advanced fully
     assert cur["0"]["pos"] == 18 and cur["1"]["pos"] == 18
     # completing the torn record releases ONLY p0's held-back row
     with open(os.path.join(topic, "p0", "00000000.jsonl"), "ab") as f:
         f.write(b'"}\n')
-    rows2, _ = reader.read(cur)
+    rows2 = batch(cur, reader.latestOffset())
     assert [(r[0], r[2]) for r in rows2] == [("torn", 0)]
     # committed-range replay is per-partition byte-identical
-    replay = list(reader.readBetweenOffsets(start, cur))
-    assert sorted(replay) == sorted(rows)
+    assert sorted(batch(start, cur)) == sorted(rows)
 
 
-@pytest.mark.parametrize("data_plane", ["false", "true"])
-def test_pylog_topic_exactly_once_across_restarts(
-    spark, tmp_path, data_plane
-):
-    """VERDICT r11 task 6: N directories = N partitions with
-    independent {"seg","pos"} cursors — exactly-once re-proven across
-    a 2-partition topic drain + restart on BOTH the driver prefetch
-    path and the executor data plane. The crc32 router must actually
-    use both partitions, and the partition column must agree with the
-    router."""
+def test_pylog_topic_exactly_once_across_restarts(spark, tmp_path):
+    """N directories = N partitions with independent {"seg","pos"}
+    cursors — exactly-once re-proven across a 2-partition topic drain
+    + restart. The crc32 router must actually use both partitions, and
+    the partition column must agree with the router."""
     from zlib import crc32
 
     from bigdata_deepfakeanalysis_spark.streaming.pylog import (
@@ -940,8 +894,8 @@ def test_pylog_topic_exactly_once_across_restarts(
 
     spark.dataSource.register(make_pylog_datasource())
     topic = str(tmp_path / "topic")
-    sink = str(tmp_path / f"sink_{data_plane}")
-    ckpt = str(tmp_path / f"ckpt_{data_plane}")
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
     first = [(f"a{i}", str(i)) for i in range(8)]
     append_topic(topic, first, n_partitions=2, roll_bytes=60)
     assert (tmp_path / "topic" / "p0").is_dir()
@@ -950,7 +904,6 @@ def test_pylog_topic_exactly_once_across_restarts(
     def drain():
         q = (
             spark.readStream.format("pylog")
-            .option("data_plane", data_plane)
             .load(topic)
             .writeStream.format("parquet")
             .option("path", sink)
