@@ -536,15 +536,13 @@ def _kcore_oracle() -> str:
     """
 
 
-def kcore_edges(
-    edges: DataFrame, k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS
-) -> DataFrame:
-    """Peel undirected (s1, s2) edges, each given once, for ``rounds``
-    fixed rounds: each round keeps the edges whose both endpoints have
-    degree >= ``k`` in the current edge set (``_kcore_round_sql``).
-    Each round is a lazily-checkpointed degree-filter semi-join.
-    Returns the surviving (s1, s2) edges."""
-    for _ in range(rounds):
+def kcore_edges(edges: DataFrame, k: int = _KCORE_K) -> DataFrame:
+    """Peel undirected (s1, s2) edges, each given once, for
+    _KCORE_ROUNDS fixed rounds: each round keeps the edges whose both
+    endpoints have degree >= ``k`` in the current edge set
+    (``_kcore_round_sql``). Each round is a lazily-checkpointed
+    degree-filter semi-join. Returns the surviving (s1, s2) edges."""
+    for _ in range(_KCORE_ROUNDS):
         deg = (
             edges.select(F.col("s1").alias("id"))
             .unionAll(edges.select(F.col("s2").alias("id")))
@@ -963,8 +961,8 @@ def q_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BFS_ROUNDS = 4
 
 
-def bfs_distances(edges: DataFrame, rounds: int = _BFS_ROUNDS) -> DataFrame:
-    """Hop distance (<= ``rounds``) from the smallest ``s1`` over
+def bfs_distances(edges: DataFrame) -> DataFrame:
+    """Hop distance (<= _BFS_ROUNDS) from the smallest ``s1`` over
     undirected (s1, s2) edges: per round one join of the current
     distance table against the undirected edge list plus a min-rollup
     — the BFS superstep every distributed graph engine runs; the
@@ -978,7 +976,7 @@ def bfs_distances(edges: DataFrame, rounds: int = _BFS_ROUNDS) -> DataFrame:
     dist = edges.agg(F.min("s1").alias("id")).select(
         "id", F.lit(0).alias("dist")
     )
-    for _ in range(rounds):
+    for _ in range(_BFS_ROUNDS):
         expanded = (
             dist.join(und, dist["id"] == und["a"])
             .select(F.col("b").alias("id"), (F.col("dist") + 1).alias("dist"))
