@@ -799,8 +799,49 @@ def test_pylog_data_plane_latest_offset_halts_at_torn_segment(tmp_path):
 def test_pylog_stream_exactly_once_across_restarts(spark, tmp_path):
     """Two availableNow drains over one checkpoint: the second run
     delivers ONLY the records appended between runs — checkpointed
-    offset cursors + replayable ranges = exactly-once into the sink,
-    with every segment byte-range decoded on the executors."""
+    offset cursors + replayable ranges = exactly-once into the sink."""
+    from bigdata_deepfakeanalysis_spark.streaming.pylog import (
+        append_log,
+        make_pylog_datasource,
+    )
+
+    spark.dataSource.register(make_pylog_datasource())
+    log = str(tmp_path / "log")
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    append_log(log, [(f"a{i}", str(i)) for i in range(5)])
+
+    def drain():
+        q = (
+            spark.readStream.format("pylog")
+            .load(log)
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "availableNow drain timed out"
+
+    drain()
+    got1 = {r.key for r in spark.read.parquet(sink).collect()}
+    assert got1 == {f"a{i}" for i in range(5)}
+    append_log(log, [(f"b{i}", str(i)) for i in range(3)])
+    drain()
+    out = spark.read.parquet(sink).collect()
+    assert len(out) == 8  # no duplicates, nothing lost
+    assert {r.key for r in out} == {f"a{i}" for i in range(5)} | {
+        f"b{i}" for i in range(3)
+    }
+
+
+def test_pylog_data_plane_stream_exactly_once_across_restarts(
+    spark, tmp_path
+):
+    """The executor data plane under the full exactly-once protocol
+    with a drain spanning several segments: two availableNow drains
+    over one checkpoint, the second delivers only the between-run
+    appends, every segment byte-range decoded on the executors."""
     from bigdata_deepfakeanalysis_spark.streaming.pylog import (
         append_log,
         make_pylog_datasource,
