@@ -536,10 +536,10 @@ def _kcore_oracle() -> str:
     """
 
 
-def kcore_edges(edges: DataFrame, k: int = _KCORE_K) -> DataFrame:
+def kcore_edges(edges: DataFrame) -> DataFrame:
     """Peel undirected (s1, s2) edges, each given once, for
     _KCORE_ROUNDS fixed rounds: each round keeps the edges whose both
-    endpoints have degree >= ``k`` in the current edge set
+    endpoints have degree >= _KCORE_K in the current edge set
     (``_kcore_round_sql``). Each round is a lazily-checkpointed
     degree-filter semi-join. Returns the surviving (s1, s2) edges."""
     for _ in range(_KCORE_ROUNDS):
@@ -549,7 +549,7 @@ def kcore_edges(edges: DataFrame, k: int = _KCORE_K) -> DataFrame:
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        keep = deg.where(F.col("d") >= k).select("id")
+        keep = deg.where(F.col("d") >= _KCORE_K).select("id")
         edges = (
             edges.join(
                 F.broadcast(keep.withColumnRenamed("id", "s1")), "s1"

@@ -96,28 +96,34 @@ def _bfs_reference(edges, rounds):
     return dist
 
 
-@pytest.mark.parametrize("k", [1, 3])
-@pytest.mark.parametrize("graph", sorted(_GRAPHS))
-def test_kcore_edges_on_degenerate_graphs(spark, graph, k):
-    """The empty graph has no core; a single edge is its own 1-core and
-    is peeled from the 3-core in the first round."""
+_K4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+
+
+@pytest.mark.parametrize("graph", sorted(_GRAPHS) + ["k4"])
+def test_kcore_edges_on_degenerate_graphs(spark, graph):
+    """The empty graph has no core and a single edge is peeled in the
+    first round; K4, where every node has degree 3, is its own
+    3-core."""
     from bigdata_deepfakeanalysis_spark.operators.graph import (
+        _KCORE_K,
         _KCORE_ROUNDS,
         kcore_edges,
     )
 
-    edges = _GRAPHS[graph]
+    edges = _K4 if graph == "k4" else _GRAPHS[graph]
     df = spark.createDataFrame(edges, "s1 long, s2 long")
-    got = sorted(map(tuple, kcore_edges(df, k).collect()))
-    assert got == _kcore_reference(edges, k, _KCORE_ROUNDS)
-    assert bool(got) == (graph == "one_edge" and k == 1)
+    got = sorted(map(tuple, kcore_edges(df).collect()))
+    assert got == _kcore_reference(edges, _KCORE_K, _KCORE_ROUNDS)
+    assert got == (_K4 if graph == "k4" else [])
 
 
 @pytest.mark.parametrize("graph", sorted(_GRAPHS))
 def test_bfs_distances_on_degenerate_graphs(spark, graph):
     """A single edge puts its far end one hop from the root. The empty
     graph gives the one row the oracle's ``MIN(s1)`` root gives: a NULL
-    root at distance 0."""
+    root at distance 0. That row pins a known defect (an empty graph
+    should give no rows); drop the NULL root in ``bfs_distances`` and
+    in the oracle's seed CTE together, then expect ``{}`` here."""
     from bigdata_deepfakeanalysis_spark.operators.graph import (
         _BFS_ROUNDS,
         bfs_distances,
