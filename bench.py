@@ -14,8 +14,7 @@ Prints ONE JSON line: summary scalars first, `queries` (name ->
 seconds) last, so a head-truncated capture still ends with per-query
 pairs. The full document, plus each query's two run times (`runs`,
 name -> seconds of both runs) and the sf1 section, goes to the sidecar
-tools/bench_sidecar_last.json, overwritten every run (copy it to a
-named tools/bench_local_*.json to keep a run).
+tools/bench_sidecar_last.json, overwritten every run.
 
 `warm` and `time_query` are the one timing harness: the tools that time
 queries call them, and so can a REPL (`from bench import warm,

@@ -99,13 +99,17 @@ def q_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M5 — PCA with explained variance (MLlib; invariant-checked)
 # ---------------------------------------------------------------------------
 
-def pca2d(df: DataFrame, vec_col: str = "embedding", k: int = 2) -> tuple:
-    """Fit distributed PCA, return (coords_df, explained_variance list)."""
+_PCA_K = 2  # q_pca_explained_variance and its oracle report it as k
+
+
+def pca2d(df: DataFrame) -> tuple:
+    """Fit distributed PCA over ``embedding``, return (coords_df,
+    explained_variance list, model)."""
     from pyspark.ml.feature import PCA as MLPca
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    feat = df.withColumn("_features", array_to_vector(F.col(vec_col)))
-    model = MLPca(k=k, inputCol="_features", outputCol="_pca").fit(feat)
+    feat = df.withColumn("_features", array_to_vector(F.col("embedding")))
+    model = MLPca(k=_PCA_K, inputCol="_features", outputCol="_pca").fit(feat)
     coords = model.transform(feat).withColumn(
         "_coords", vector_to_array("_pca")
     )
@@ -114,8 +118,8 @@ def pca2d(df: DataFrame, vec_col: str = "embedding", k: int = 2) -> tuple:
 
 @query(
     "q_pca_explained_variance",
-    """
-    SELECT 2 AS k, CAST(COUNT(*) AS BIGINT) AS n_rows,
+    f"""
+    SELECT {_PCA_K} AS k, CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(MIN(len(embedding)) AS INT) AS dim,
            CAST(COUNT(DISTINCT len(embedding)) AS BIGINT) AS n_dims,
            TRUE AS ev_descending_in_range, TRUE AS ev_sum_le_1,
@@ -155,7 +159,7 @@ def q_pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("embedding").alias("_dim"),
     )
     return per_row.agg(
-        F.lit(2).alias("k"),
+        F.lit(_PCA_K).alias("k"),
         F.count(F.lit(1)).alias("n_rows"),
         F.min("_dim").alias("dim"),
         F.countDistinct("_dim").alias("n_dims"),
@@ -172,8 +176,11 @@ def q_pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HAS_XGBOOST = importlib.util.find_spec("xgboost") is not None
 
+_CV_SEED = 42  # fold order (Spark and both oracles), seeded estimators
+_XGB_N_ESTIMATORS = 300
 
-def _spark_xgb_estimator(seed: int, n_estimators: int = 300):
+
+def _spark_xgb_estimator():
     """SURVEY M7's primary implementation: distributed XGBoost via
     ``xgboost.spark.SparkXGBClassifier`` with the reference's
     XGBClassifier params VERBATIM
@@ -197,13 +204,13 @@ def _spark_xgb_estimator(seed: int, n_estimators: int = 300):
     from xgboost.spark import SparkXGBClassifier
 
     return SparkXGBClassifier(
-        n_estimators=n_estimators,
+        n_estimators=_XGB_N_ESTIMATORS,
         max_depth=6,
         learning_rate=0.05,
         subsample=0.9,
         colsample_bytree=0.9,
         tree_method="hist",
-        random_state=seed,
+        random_state=_CV_SEED,
     )
 
 
@@ -211,9 +218,7 @@ def cv_separability(
     df: DataFrame,
     estimator: str = "logreg",
     n_folds: int = 5,
-    seed: int = 42,
     gbt_max_iter: int = 10,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """k-fold CV accuracy of label-from-embedding classification — the
     reference's separability score (M6/M7). Folds are assigned
@@ -235,14 +240,14 @@ def cv_separability(
     equivalent → featureSubsetStrategy). MLlib GBT is binary-only,
     so multiclass labels go One-vs-Rest.
 
-    ``n_partitions`` sizes the cached training set's partition count:
-    the fold-assignment window shuffles into
+    The cached training set is coalesced to ONE partition: the
+    fold-assignment window shuffles into
     ``spark.sql.shuffle.partitions`` partitions, and every solver
     iteration then schedules one task per partition — for a
     fixture-sized fit that is 32 near-empty tasks per LBFGS/boosting
     step, pure scheduler overhead (measured 20 s → 4.5 s for the
-    5-fold logreg at sf0.01 with 1 partition). At cluster scale leave
-    it None and size via shuffle.partitions as usual."""
+    5-fold logreg at sf0.01 with 1 partition); a cluster-scale fit
+    would size it via shuffle.partitions instead."""
     from pyspark.ml.classification import (
         GBTClassifier,
         LogisticRegression,
@@ -260,21 +265,19 @@ def cv_separability(
         (
             F.row_number().over(
                 Window.partitionBy("label").orderBy(
-                    F.md5(F.concat_ws("|", F.lit(seed), F.col("vec_id")))
+                    F.md5(F.concat_ws("|", F.lit(_CV_SEED), F.col("vec_id")))
                 )
             )
             % n_folds
         ),
     )
-    if n_partitions is not None:
-        data = data.coalesce(n_partitions)
-    data = data.cache()
+    data = data.coalesce(1).cache()
 
     try:
         if estimator == "logreg":
             est = LogisticRegression(maxIter=20, regParam=0.01)
         elif estimator == "xgb":
-            est = _spark_xgb_estimator(seed)
+            est = _spark_xgb_estimator()
         elif estimator == "gbt":
             # MLlib fallback (M7; reference XGB 300×6, lr .05, subsample .9)
             n_labels = data.select("label").distinct().count()
@@ -287,7 +290,7 @@ def cv_separability(
                 stepSize=0.05,
                 subsamplingRate=0.9,
                 featureSubsetStrategy="0.9",
-                seed=seed,
+                seed=_CV_SEED,
             )
             est = gbt if n_labels <= 2 else OneVsRest(classifier=gbt)
         else:
@@ -311,7 +314,7 @@ def cv_separability(
     return out
 
 
-def _cv_fold_sizes(emb: DataFrame, n_folds: int, seed: int = 42) -> DataFrame:
+def _cv_fold_sizes(emb: DataFrame, n_folds: int) -> DataFrame:
     """Per-(fold, label) test-set composition under the rank-over-md5
     fold scheme — fully deterministic and oracle-replayable (DuckDB
     computes the identical md5 ranks), plus the (fold=-1, label=-1)
@@ -322,7 +325,7 @@ def _cv_fold_sizes(emb: DataFrame, n_folds: int, seed: int = 42) -> DataFrame:
     fold = (
         F.row_number().over(
             Window.partitionBy("label").orderBy(
-                F.md5(F.concat_ws("|", F.lit(seed), F.col("vec_id")))
+                F.md5(F.concat_ws("|", F.lit(_CV_SEED), F.col("vec_id")))
             )
         )
         % n_folds
@@ -364,10 +367,10 @@ def _cv_hashed(folds: DataFrame, sizes: DataFrame) -> DataFrame:
 
 @query(
     "q_logreg_cv_separability",
-    """
+    f"""
     WITH folds AS (
         SELECT CAST(ROW_NUMBER() OVER (PARTITION BY label
-                   ORDER BY md5('42' || '|' || CAST(vec_id AS VARCHAR)))
+                   ORDER BY md5('{_CV_SEED}' || '|' || CAST(vec_id AS VARCHAR)))
                % 5 AS INT) AS fold,
                CAST(label AS INT) AS label
         FROM embeddings)
@@ -392,22 +395,19 @@ def q_logreg_cv_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracies remain available via :func:`cv_separability` with their
     own invariant test."""
     emb = table(spark, sf_dir, "embeddings")
-    # 1 partition: the sf-fixture is a few hundred rows — see the
-    # n_partitions note in cv_separability (a cluster-scale caller
-    # passes None and sizes via shuffle.partitions)
-    folds = cv_separability(emb, "logreg", n_partitions=1)
+    folds = cv_separability(emb, "logreg")
     return _cv_hashed(folds, _cv_fold_sizes(emb, n_folds=5))
 
 
 @query(
     "q_tree_cv_separability",
-    """
+    f"""
     WITH base AS (
         SELECT label, vec_id FROM embeddings
         WHERE vec_id < 200 AND label < 3),
     folds AS (
         SELECT CAST(ROW_NUMBER() OVER (PARTITION BY label
-                   ORDER BY md5('42' || '|' || CAST(vec_id AS VARCHAR)))
+                   ORDER BY md5('{_CV_SEED}' || '|' || CAST(vec_id AS VARCHAR)))
                % 2 AS INT) AS fold,
                CAST(label AS INT) AS label
         FROM base)
@@ -437,9 +437,7 @@ def q_tree_cv_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").where(
         (F.col("vec_id") < 200) & (F.col("label") < 3)
     )
-    folds = cv_separability(
-        emb, "gbt", n_folds=2, gbt_max_iter=4, n_partitions=1
-    )
+    folds = cv_separability(emb, "gbt", n_folds=2, gbt_max_iter=4)
     return _cv_hashed(folds, _cv_fold_sizes(emb, n_folds=2))
 
 
@@ -639,16 +637,13 @@ def q_pair_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M4 — t-SNE (bounded collect; rows-only)
 # ---------------------------------------------------------------------------
 
-def tsne2d(
-    df: DataFrame,
-    group_col: str = "group",
-    key_col: str = "image_key",
-    vec_col: str = "vector",
-    cap: int = 100,
-    seed: int = 42,
-) -> DataFrame:
-    """M4 — the reference's capped t-SNE (X5: sample-before-quadratic):
-    seeded per-group cap → bounded toPandas collect → the engine's
+_TSNE_CAP = 50  # rows per group; q_tsne2d's oracle replays the cap
+
+
+def tsne2d(df: DataFrame) -> DataFrame:
+    """M4 — the reference's capped t-SNE (X5: sample-before-quadratic)
+    of ``(group, image_key, vector)`` rows: seeded per-group cap of
+    ``_TSNE_CAP`` rows → bounded toPandas collect → the engine's
     vendored exact t-SNE (``tsne.tsne_exact``: perplexity clamp, PCA
     init, fixed seed — the semantics of ``src/analyze_embedding_with_
     tsne.py:59-77`` without the sklearn dependency). Returns
@@ -659,15 +654,15 @@ def tsne2d(
 
     spark = df.sparkSession
     capped = (
-        df.withColumn("_r", seeded_rank(group_col, key_col, seed))
-        .where(F.col("_r") <= cap)
-        .select(group_col, key_col, vec_col)
+        df.withColumn("_r", seeded_rank("group", "image_key"))
+        .where(F.col("_r") <= _TSNE_CAP)
+        .select("group", "image_key", "vector")
     )
-    pdf = capped.toPandas()  # bounded: <= cap * n_groups rows
-    pdf = pdf.sort_values([group_col, key_col]).reset_index(drop=True)
-    X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-    coords, _kl = tsne_exact(X, perplexity=30.0, seed=seed)
-    out = pdf[[group_col, key_col]].copy()
+    pdf = capped.toPandas()  # bounded: <= _TSNE_CAP * n_groups rows
+    pdf = pdf.sort_values(["group", "image_key"]).reset_index(drop=True)
+    X = np.asarray(pdf["vector"].tolist(), dtype=np.float64)
+    coords, _kl = tsne_exact(X)
+    out = pdf[["group", "image_key"]].copy()
     out["x"] = coords[:, 0].astype(float)
     out["y"] = coords[:, 1].astype(float)
     return spark.createDataFrame(out)
@@ -682,7 +677,7 @@ def tsne2d(
                {_seeded_rank_sql('"group"', "image_key")} AS rk
         FROM grouped_embeddings)
     SELECT "group", image_key, TRUE AS coords_finite
-    FROM ranked WHERE rk <= 50
+    FROM ranked WHERE rk <= {_TSNE_CAP}
     ORDER BY "group", image_key
     """,
 )
@@ -695,7 +690,7 @@ def q_tsne2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row coords-finite boolean the oracle expects to be TRUE. The
     actual (x, y) coordinates remain available via :func:`tsne2d`,
     which keeps its determinism + KL-decrease invariant tests."""
-    coords = tsne2d(grouped_embeddings(spark, sf_dir), cap=50)
+    coords = tsne2d(grouped_embeddings(spark, sf_dir))
     finite = (
         ~F.isnan("x") & ~F.isnan("y")
         & (F.abs("x") < float("inf")) & (F.abs("y") < float("inf"))
@@ -710,9 +705,11 @@ def q_tsne2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 # coarse quantizer that similarity.ivf_assign trains per-query)
 # ---------------------------------------------------------------------------
 
-def kmeans_profile(
-    emb: DataFrame, k: int = 8, seed: int = 42
-) -> DataFrame:
+_KMEANS_K = 8  # q_kmeans_clusters' oracle expects this many clusters
+_KMEANS_SEED = 42
+
+
+def kmeans_profile(emb: DataFrame) -> DataFrame:
     """Distributed k-means over the embedding column, emitting one row
     per cluster: size + mean distance to the centroid. Cluster ids are
     relabeled by (size desc, original id) so output is stable across
@@ -727,7 +724,8 @@ def kmeans_profile(
     feat = emb.select(
         "vec_id", array_to_vector(F.col("embedding")).alias("features")
     )
-    model = KMeans(k=k, seed=seed, featuresCol="features").fit(feat)
+    model = KMeans(k=_KMEANS_K, seed=_KMEANS_SEED, featuresCol="features")
+    model = model.fit(feat)
     assigned = model.transform(feat)
     centers = [
         (int(i), [float(x) for x in c])
@@ -773,8 +771,8 @@ def kmeans_profile(
 
 @query(
     "q_kmeans_clusters",
-    """
-    SELECT 8 AS n_clusters, CAST(COUNT(*) AS BIGINT) AS n_points,
+    f"""
+    SELECT {_KMEANS_K} AS n_clusters, CAST(COUNT(*) AS BIGINT) AS n_points,
            CAST(MIN(len(embedding)) AS INT) AS dim,
            TRUE AS sizes_partition_corpus, TRUE AS sizes_desc,
            TRUE AS dist_finite
@@ -874,8 +872,8 @@ def q_ml_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").cast("double").alias("label"),
             array_to_vector(F.col("embedding")).alias("raw"),
         )
-        # fixture-sized fit: one partition, same rationale as the
-        # n_partitions note in cv_separability
+        # fixture-sized fit: one partition, same rationale as
+        # cv_separability's one-partition training set
         .repartition(1)
     )
     train = emb.where(F.col("vec_id") % 5 != 0)

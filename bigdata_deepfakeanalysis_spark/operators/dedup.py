@@ -119,6 +119,11 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 _MH_P = 2147483647  # Mersenne prime 2^31 - 1
+# minhash_bands and its oracle _MINHASH_PAIRS_CTE: K minhashes in
+# bands of _MH_BAND_ROWS; jaccard_verify shingles like minhash_bands
+_MH_K = 12
+_MH_BAND_ROWS = 3
+_SHINGLE_N = 3
 
 
 def _mh_coeffs(k: int) -> list[tuple[int, int]]:
@@ -151,16 +156,10 @@ _MH_BASE = (
 )
 
 
-def minhash_bands(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 12,
-    band_rows: int = 3,
-    n: int = 3,
-) -> DataFrame:
-    """K minhashes per doc, folded into K/band_rows banded signature
-    strings. ZERO shuffles: shingling, base hashing, and all K mins are
+def minhash_bands(docs: DataFrame) -> DataFrame:
+    """K minhashes per ``(doc_id, text)`` row, folded into K/band_rows
+    banded signature strings. ZERO shuffles: shingling, base hashing,
+    and all K mins are
     ONE higher-order expression over the document row (MIN over a doc's
     shingles is row-local state — exploding shingle rows and
     aggregating them back, as rounds 1-2 did, paid a full hash-agg over
@@ -188,6 +187,7 @@ def minhash_bands(
     par = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
+    k, band_rows, n = _MH_K, _MH_BAND_ROWS, _SHINGLE_N
     coeffs = _mh_coeffs(k)
     n_bands = k // band_rows
     concat_args = ", ".join(f"_t[p + {j}]" for j in range(n))
@@ -217,7 +217,7 @@ def minhash_bands(
     )
     bands_expr = (
         f"explode("
-        f" transform(array(split({text_col}, ' ')), _t ->"
+        f" transform(array(split(text, ' ')), _t ->"
         f"  transform(array({grams}), _g ->"
         f"   transform(array({base}), hb ->"
         f"    CASE WHEN size(hb) = 0 THEN"
@@ -229,7 +229,7 @@ def minhash_bands(
         f")"
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"), F.expr(bands_expr).alias("bs")
+        "doc_id", F.expr(bands_expr).alias("bs")
     ).select(
         "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
     )
@@ -250,13 +250,11 @@ def lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
-def lsh_pairs_cached(
-    spark: SparkSession, sf_dir: str, k: int = 12, band_rows: int = 3
-) -> DataFrame:
-    """The MinHash(k)+LSH(band_rows) candidate pairs over
-    ``aug_docs``, materialized ONCE per (session, sf_dir, params) as
-    an eager localCheckpoint and shared by every downstream consumer
-    (components, components-star, the dedup-QA trio, exact rescores).
+def lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MinHash+LSH candidate pairs over ``aug_docs``, materialized
+    ONCE per (session, sf_dir) as an eager localCheckpoint and shared
+    by every downstream consumer (components, components-star, the
+    dedup-QA trio, exact rescores).
 
     VERDICT r8 task 4: the dedup-QA trio (`q_dup_cluster_sizes`,
     `q_dup_flow_matrix`, `q_lsh_dedup_eval`) each rebuilt the identical
@@ -269,25 +267,20 @@ def lsh_pairs_cached(
     optimization — every oracle recomputes the same set in SQL. The
     memo and its dead-session eviction are ``session.pinned``."""
     return pinned(
-        spark, sf_dir, ("lsh_pairs", k, band_rows),
-        lambda: lsh_candidate_pairs(
-            minhash_bands(aug_docs(spark, sf_dir), k=k, band_rows=band_rows)
-        ),
+        spark, sf_dir, "lsh_pairs",
+        lambda: lsh_candidate_pairs(minhash_bands(aug_docs(spark, sf_dir))),
     )
 
 
 def jaccard_verify(
     cands: DataFrame,
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     min_common: int = 5,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact n-gram Jaccard rescore of candidate pairs (the verification
     stage downstream of LSH): ``cands`` is (doc_a, doc_b), ``docs`` the
-    document table.
+    ``(doc_id, text)`` document table, n = ``_SHINGLE_N``.
 
     Plan: the distinct shingle SET of each document is a row-local
     array expression (let-bound so the gram build runs once per row),
@@ -308,6 +301,7 @@ def jaccard_verify(
     so the MinHash candidate generation doesn't re-execute per branch
     (measured 4-6× the query cost without it)."""
     cands = cands.localCheckpoint(eager=True)
+    n = _SHINGLE_N
     concat_args = ", ".join(f"_t[p + {j}]" for j in range(n))
     grams = (
         f"array_distinct(CASE WHEN size(_t) >= {n} THEN "
@@ -316,14 +310,14 @@ def jaccard_verify(
         f" ELSE CAST(array() AS array<string>) END)"
     )
     gram_set = (
-        f"element_at(transform(array(split({text_col}, ' ')),"
+        f"element_at(transform(array(split(text, ' ')),"
         f" _t -> {grams}), 1)"
     )
     ga = docs.select(
-        F.col(id_col).alias("doc_a"), F.expr(gram_set).alias("ga")
+        F.col("doc_id").alias("doc_a"), F.expr(gram_set).alias("ga")
     )
     gb = docs.select(
-        F.col(id_col).alias("doc_b"), F.expr(gram_set).alias("gb")
+        F.col("doc_id").alias("doc_b"), F.expr(gram_set).alias("gb")
     )
     jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
     return (
@@ -562,11 +556,11 @@ shingles AS (
     FROM shingled)
 """
 
-# MinHash(K=12) banding → LSH candidate pairs — shared by the minhash,
+# MinHash banding → LSH candidate pairs — shared by the minhash,
 # jaccard-verify, and components oracles (mirrors minhash_bands +
 # lsh_candidate_pairs exactly, including the Carter-Wegman coefficients).
 _COEF_ROWS = ", ".join(
-    f"({i}, {a}, {b})" for i, (a, b) in enumerate(_mh_coeffs(12))
+    f"({i}, {a}, {b})" for i, (a, b) in enumerate(_mh_coeffs(_MH_K))
 )
 _MINHASH_PAIRS_CTE = f"""
 coef AS (SELECT * FROM (VALUES {_COEF_ROWS}) AS t(i, a, b)),
@@ -578,9 +572,9 @@ hashed AS (SELECT doc_id, i, (a * hm + b) % {_MH_P} AS h FROM hm, coef),
 mins AS (
     SELECT doc_id, i, MIN(h) AS mh FROM hashed GROUP BY doc_id, i),
 bands AS (
-    SELECT doc_id, CAST(i // 3 AS INTEGER) AS band,
+    SELECT doc_id, CAST(i // {_MH_BAND_ROWS} AS INTEGER) AS band,
            string_agg(CAST(mh AS VARCHAR), '|' ORDER BY i) AS sig
-    FROM mins GROUP BY doc_id, i // 3),
+    FROM mins GROUP BY doc_id, i // {_MH_BAND_ROWS}),
 pairs AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands a JOIN bands b
@@ -633,10 +627,7 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join, no Cartesian) is the plan evidence the scans and plan
     tests read — a cached checkpoint would collapse it to a Scan
     ExistingRDD. The six downstream consumers share the cache."""
-    pairs = lsh_candidate_pairs(
-        minhash_bands(aug_docs(spark, sf_dir), k=12, band_rows=3)
-    )
-    return pairs
+    return lsh_candidate_pairs(minhash_bands(aug_docs(spark, sf_dir)))
 
 
 _SIM64_CTE = """
@@ -960,11 +951,15 @@ def _pin_counting(df: DataFrame, cond: Column) -> tuple[DataFrame, int]:
     return pinned, obs.get["n"]
 
 
+# round budgets: past them the components operators raise
+_CC_MAX_ITER = 20
+_CC_STAR_MAX_ITER = 25
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Min-label propagation over the undirected pair graph: every node
     starts labeled with its own id; each round takes the min of its and
@@ -1027,7 +1022,7 @@ def connected_components(
     )
     changed = -1
     first_changed = None
-    for it in range(max_iter):
+    for it in range(_CC_MAX_ITER):
         # Adaptive pointer halving (r12): LSH near-dup graphs are
         # diameter-1-2 cliques and converge in <= 3 plain rounds, but
         # grid/chain graphs (q_grid_dbscan's cell adjacency) propagate
@@ -1107,23 +1102,19 @@ def connected_components(
     if changed != 0:
         # partial labels would silently diverge from the exact
         # transitive closure — fail loud (a component deeper than
-        # max_iter means the caller should raise it or switch to
-        # the GraphFrames large-star/small-star variant)
+        # _CC_MAX_ITER means the budget should grow or the caller
+        # switch to the GraphFrames large-star/small-star variant)
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
+            f"connected_components did not converge in {_CC_MAX_ITER} "
             f"rounds ({changed} labels still changing)"
         )
     return labels.select("id", F.col("label").alias("component"))
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
+def connected_components_star(pairs: DataFrame) -> DataFrame:
+    """Alternating large-star / small-star connected components of
+    ``(doc_a, doc_b)`` pairs (Kiveris et al., "Connected Components in
+    MapReduce and Beyond") —
     the O(log n)-round algorithm for graphs where min-label
     propagation's O(diameter) bound is the bottleneck (deep chains:
     a 60-node path converges here in ~5 alternations where label
@@ -1138,11 +1129,12 @@ def connected_components_star(
     (id, component); nodes only ever present as self-pairs get their
     own id."""
     e = pairs.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+        F.col("doc_a").cast("long").alias("u"),
+        F.col("doc_b").cast("long").alias("v"),
     ).where(F.col("u") != F.col("v"))
     all_ids = (
-        pairs.select(F.col(src).cast("long").alias("id"))
-        .unionByName(pairs.select(F.col(dst).cast("long").alias("id")))
+        pairs.select(F.col("doc_a").cast("long").alias("id"))
+        .unionByName(pairs.select(F.col("doc_b").cast("long").alias("id")))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -1190,7 +1182,7 @@ def connected_components_star(
         )
 
     changed = -1
-    for _ in range(max_iter):
+    for _ in range(_CC_STAR_MAX_ITER):
         # fixpoint = a FULL alternation leaves the edge set unchanged
         # (comparing the two half-rounds to each other converges
         # spuriously: small-star can fix large-star's output without
@@ -1215,7 +1207,8 @@ def connected_components_star(
             break
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
+            "connected_components_star did not converge in "
+            f"{_CC_STAR_MAX_ITER} "
             f"alternations ({changed} edges still changing)"
         )
     star_labels = edges.select(
@@ -1231,36 +1224,7 @@ def connected_components_star(
     )
 
 
-@query(
-    "q_dedup_components",
-    f"""
-    WITH RECURSIVE {AUG_DOCS_CTE.strip()},
-    {_SHINGLES_CTE.strip()},
-    {_MINHASH_PAIRS_CTE.strip()},
-    edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs),
-    reach(id, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.id)
-    SELECT id AS doc_id, MIN(lbl) AS component FROM reach
-    GROUP BY id ORDER BY doc_id
-    """,
-)
-def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup components over the MinHash+LSH candidate pairs: each
-    clustered doc labeled with its component (= min doc id reachable);
-    the oracle computes the same components via a recursive transitive
-    closure."""
-    pairs = lsh_pairs_cached(spark, sf_dir)
-    cc = connected_components(pairs)
-    return cc.select(
-        F.col("id").alias("doc_id"), "component"
-    )
-
-
+# the exact serial closure both components operators are checked against
 _COMPONENTS_ORACLE = f"""
     WITH RECURSIVE {AUG_DOCS_CTE.strip()},
     {_SHINGLES_CTE.strip()},
@@ -1276,6 +1240,19 @@ _COMPONENTS_ORACLE = f"""
     SELECT id AS doc_id, MIN(lbl) AS component FROM reach
     GROUP BY id ORDER BY doc_id
     """
+
+
+@query("q_dedup_components", _COMPONENTS_ORACLE)
+def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup components over the MinHash+LSH candidate pairs: each
+    clustered doc labeled with its component (= min doc id reachable);
+    the oracle computes the same components via a recursive transitive
+    closure."""
+    pairs = lsh_pairs_cached(spark, sf_dir)
+    cc = connected_components(pairs)
+    return cc.select(
+        F.col("id").alias("doc_id"), "component"
+    )
 
 
 @query("q_dedup_components_star", _COMPONENTS_ORACLE)
@@ -1492,17 +1469,20 @@ def q_semantic_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Data Makes Language Models Better"-style substring dedup.
 # ---------------------------------------------------------------------------
 
+# substring_span_pairs and the q_substring_span_dedup oracle
+_SPAN_GRAM = 40
+_SPAN_STRIDE = 10
+_SPAN_MIN_ANCHORS = 3
+_SPAN_MAX_DF = 50
+
+
 def substring_span_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    gram: int = 40,
-    stride: int = 10,
-    min_anchors: int = 3,
-    max_df: int = 50,
+    df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """(doc_a, doc_b, n_shared_spans) for docs sharing >= min_anchors
     anchor spans, anchors with document frequency > max_df dropped."""
+    gram, stride = _SPAN_GRAM, _SPAN_STRIDE
+    min_anchors, max_df = _SPAN_MIN_ANCHORS, _SPAN_MAX_DF
     # per-doc anchor dedup is row-local (array_distinct before the
     # explode) — a global DISTINCT here would shuffle the whole anchor
     # stream for a per-document property
@@ -1542,20 +1522,20 @@ def substring_span_pairs(
     f"""
     WITH {AUG_DOCS_CTE.strip()},
     anchors AS (
-        SELECT DISTINCT doc_id, substr(text, CAST(p AS INTEGER), 40) AS a
+        SELECT DISTINCT doc_id, substr(text, CAST(p AS INTEGER), {_SPAN_GRAM}) AS a
         FROM (SELECT doc_id, text,
-                     UNNEST(range(1, greatest(length(text) - 38, 2), 10)) AS p
+                     UNNEST(range(1, greatest(length(text) - {_SPAN_GRAM - 2}, 2), {_SPAN_STRIDE})) AS p
               FROM aug_docs) t
-        WHERE length(text) >= 40),
+        WHERE length(text) >= {_SPAN_GRAM}),
     keep AS (
         SELECT a FROM anchors GROUP BY a
-        HAVING COUNT(*) BETWEEN 2 AND 50),
+        HAVING COUNT(*) BETWEEN 2 AND {_SPAN_MAX_DF}),
     pruned AS (SELECT doc_id, anchors.a FROM anchors JOIN keep USING (a))
     SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
            COUNT(*) AS n_shared_spans
     FROM pruned x JOIN pruned y ON x.a = y.a AND x.doc_id < y.doc_id
     GROUP BY x.doc_id, y.doc_id
-    HAVING COUNT(*) >= 3
+    HAVING COUNT(*) >= {_SPAN_MIN_ANCHORS}
     ORDER BY doc_a, doc_b
     """,
 )

@@ -38,7 +38,7 @@ _BASE = (15 * _SCALE) // 100  # (1-d) mass per node, d = 0.85
 _ITERS = 3
 
 
-def pagerank_fixed(edges: DataFrame, iters: int = _ITERS) -> DataFrame:
+def pagerank_fixed(edges: DataFrame) -> DataFrame:
     """Fixed-point PageRank over directed (src, dst) BIGINT edges.
     Returns (id, rank) with rank an exact fixed-point BIGINT.
 
@@ -75,7 +75,7 @@ def pagerank_fixed(edges: DataFrame, iters: int = _ITERS) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     ranks = nodes.withColumn("rank", F.lit(_SCALE).cast("long"))
-    for _ in range(iters):
+    for _ in range(_ITERS):
         contribs = (
             edges_w.join(ranks.withColumnRenamed("id", "src"), "src")
             .select(
@@ -967,14 +967,16 @@ def bfs_distances(edges: DataFrame) -> DataFrame:
     distance table against the undirected edge list plus a min-rollup
     — the BFS superstep every distributed graph engine runs; the
     frontier table never exceeds the node set. The root is
-    ``MIN(s1)``, as in the oracle, so an empty edge list has a NULL
-    root: one row (NULL, 0). Returns (id, dist)."""
+    ``MIN(s1)``, as in the oracle; an empty edge list has a NULL root,
+    which both drop, so it gives no rows. Returns (id, dist)."""
     und = edges.select(
         F.col("s1").alias("a"), F.col("s2").alias("b")
     ).unionAll(edges.select(F.col("s2").alias("a"), F.col("s1").alias("b")))
     und = und.localCheckpoint(eager=True)
-    dist = edges.agg(F.min("s1").alias("id")).select(
-        "id", F.lit(0).alias("dist")
+    dist = (
+        edges.agg(F.min("s1").alias("id"))
+        .where(F.col("id").isNotNull())
+        .select("id", F.lit(0).alias("dist"))
     )
     for _ in range(_BFS_ROUNDS):
         expanded = (
@@ -1009,7 +1011,7 @@ def bfs_distances(edges: DataFrame) -> DataFrame:
         SELECT s1 AS a, s2 AS b FROM e UNION ALL SELECT s2, s1 FROM e),
     seed AS (SELECT MIN(s1) AS root FROM e),
     walk(id, dist) AS (
-        SELECT root, 0 FROM seed
+        SELECT root, 0 FROM seed WHERE root IS NOT NULL
         UNION ALL
         SELECT u.b, w2.dist + 1
         FROM walk w2 JOIN und u ON w2.id = u.a

@@ -72,42 +72,48 @@ def davg_sql(expr: str, alias: str, scale: int = 4) -> str:
     )
 
 
-def dmul2_sum(a: str, b: str, alias: str, scale: int = 4) -> Column:
-    """SUM(a*b) with both factors snapped to DECIMAL first (exact product)."""
-    return F.expr(
-        f"CAST(SUM(CAST(({a}) AS DECIMAL(18,{scale})) *"
-        f" CAST(({b}) AS DECIMAL(18,{scale}))) AS DOUBLE)"
-    ).alias(alias)
+# Decimal scales; each Spark column and its DuckDB fragment are spelled
+# from one string, so they cannot drift.
+_DMUL2_SCALE = 4
+_STDDEV_SCALE = 4
 
 
-def dmul2_sum_sql(a: str, b: str, alias: str, scale: int = 4) -> str:
+def _dmul2_text(a: str, b: str) -> str:
     return (
-        f"CAST(SUM(CAST(({a}) AS DECIMAL(18,{scale})) *"
-        f" CAST(({b}) AS DECIMAL(18,{scale}))) AS DOUBLE) AS {alias}"
+        f"CAST(SUM(CAST(({a}) AS DECIMAL(18,{_DMUL2_SCALE})) *"
+        f" CAST(({b}) AS DECIMAL(18,{_DMUL2_SCALE}))) AS DOUBLE)"
     )
 
 
-def stddev_expr(expr: str, alias: str, scale: int = 4) -> Column:
+def dmul2_sum(a: str, b: str, alias: str) -> Column:
+    """SUM(a*b) with both factors snapped to DECIMAL first (exact product)."""
+    return F.expr(_dmul2_text(a, b)).alias(alias)
+
+
+def dmul2_sum_sql(a: str, b: str, alias: str) -> str:
+    return f"{_dmul2_text(a, b)} AS {alias}"
+
+
+def _stddev_text(expr: str) -> str:
+    d = f"CAST(({expr}) AS DECIMAL(12,{_STDDEV_SCALE}))"
+    return (
+        f"SQRT((CAST(SUM({d}*{d}) AS DOUBLE) - "
+        f"CAST(SUM({d}) AS DOUBLE)*CAST(SUM({d}) AS DOUBLE)/COUNT({expr}))"
+        f" / (COUNT({expr}) - 1))"
+    )
+
+
+def stddev_expr(expr: str, alias: str) -> Column:
     """Sample stddev via the explicit decimal-exact sum/sumsq formula so
     both engines compute sqrt() of the identical double.
 
     DECIMAL(12,scale): small enough that the squared term stays within
     DuckDB's physical int64/int128 multiply (DECIMAL(18)^2 overflows)."""
-    d = f"CAST(({expr}) AS DECIMAL(12,{scale}))"
-    return F.expr(
-        f"SQRT((CAST(SUM({d}*{d}) AS DOUBLE) - "
-        f"CAST(SUM({d}) AS DOUBLE)*CAST(SUM({d}) AS DOUBLE)/COUNT({expr}))"
-        f" / (COUNT({expr}) - 1))"
-    ).alias(alias)
+    return F.expr(_stddev_text(expr)).alias(alias)
 
 
-def stddev_sql(expr: str, alias: str, scale: int = 4) -> str:
-    d = f"CAST(({expr}) AS DECIMAL(12,{scale}))"
-    return (
-        f"SQRT((CAST(SUM({d}*{d}) AS DOUBLE) - "
-        f"CAST(SUM({d}) AS DOUBLE)*CAST(SUM({d}) AS DOUBLE)/COUNT({expr}))"
-        f" / (COUNT({expr}) - 1)) AS {alias}"
-    )
+def stddev_sql(expr: str, alias: str) -> str:
+    return f"{_stddev_text(expr)} AS {alias}"
 
 
 def range_parts(df) -> int:
@@ -155,7 +161,7 @@ def sort_bounded(df, *cols):
     return df.coalesce(1).orderBy(*cols)
 
 
-def two_pass_rownum(df, order_cols, n_parts: int | None = None, pin: bool = False):
+def two_pass_rownum(df, order_cols, pin: bool = False):
     """Global row numbers over ``order_cols`` via range-repartition +
     per-partition rank + broadcast offsets — identical values to a
     partition-less row_number window, without the single-partition
@@ -163,7 +169,8 @@ def two_pass_rownum(df, order_cols, n_parts: int | None = None, pin: bool = Fals
     r7 as the shared primitive behind every de-globalized
     ranking/cumsum: curriculum plan, ABC Pareto, calibration deciles,
     Brier forecast ranks, sequence gaps, vocab coverage). Adds column
-    ``rn`` (bigint). The per-partition offsets table is n_parts rows —
+    ``rn`` (bigint). The range fan-out is ``range_parts(df)``; the
+    per-partition offsets table has one row per range partition —
     driver-broadcast KBs at any scale.
 
     ``pin`` decides whether the offsets branch recomputes ``df``'s
@@ -192,8 +199,7 @@ def two_pass_rownum(df, order_cols, n_parts: int | None = None, pin: bool = Fals
     layout."""
     from pyspark.sql.window import Window
 
-    if n_parts is None:
-        n_parts = range_parts(df)
+    n_parts = range_parts(df)
     if not pin:
         reuse = (
             df.sparkSession.conf.get("spark.sql.exchange.reuse", "true")

@@ -9,7 +9,7 @@ mirroring ``Percentile.getPercentile`` term-for-term — as two codegen
 passes with bounded per-task state (guide §1.2 step 1 / §5):
 
   pass 1: per-group (min, max, N) + an equi-width ``_qbin`` histogram
-          (n_bins rows per group, partial-aggregated map-side);
+          (_N_BINS rows per group, partial-aggregated map-side);
   rank math (tiny, in-plan): position = p * (N - 1); the lo/hi integer
           ranks land in specific bins via the bins' running counts;
   pass 2: only rows in the <= 2*|ps| rank-carrying bins are re-scanned
@@ -19,7 +19,7 @@ passes with bounded per-task state (guide §1.2 step 1 / §5):
           two short-circuits (integer position; equal keys).
 
 In the UNGROUPED form every broadcast build is bounded by
-construction: scalar aggregates, the n_bins-keyed histogram, and
+construction: scalar aggregates, the _N_BINS-keyed histogram, and
 constant-fanout explodes of literal-arity arrays. The GROUPED form's
 intermediates (stats, bins_cum, the rank hits) scale with group
 cardinality, so that path uses plain joins and leaves broadcast
@@ -49,11 +49,9 @@ def exact_percentiles_histo(
     groups: list,
     v: str,
     ps: list,
-    weight: str | None = None,
-    n_bins: int = _N_BINS,
 ) -> DataFrame:
     """Exact percentiles of double column ``v`` per ``groups``,
-    bit-identical to ``percentile(v, array(*ps)[, weight])``. Returns
+    bit-identical to ``percentile(v, array(*ps))``. Returns
     one row per group with an array column ``qs`` (same order as
     ``ps``). NULL ``v`` rows are ignored, like Percentile.
 
@@ -71,7 +69,7 @@ def exact_percentiles_histo(
                 f"percentile p must be in [0, 1], got {p!r}"
             )
     gcols = list(groups)
-    w = F.col(weight) if weight else F.lit(1).cast("long")
+    w = F.lit(1).cast("long")  # each row counts once
     base = (
         df.where(F.col(v).isNotNull())
         .select(*gcols, F.col(v).alias("_v"), w.alias("_w"))
@@ -95,11 +93,11 @@ def exact_percentiles_histo(
     bin_expr = F.when(
         F.col("_mx") > F.col("_mn"),
         F.least(
-            F.lit(n_bins - 1),
+            F.lit(_N_BINS - 1),
             F.floor(
                 (F.col("_v") - F.col("_mn"))
                 / (F.col("_mx") - F.col("_mn"))
-                * n_bins
+                * _N_BINS
             ),
         ),
     ).otherwise(F.lit(0))

@@ -638,7 +638,7 @@ def q_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             davg("c_acctbal", "avg_bal"),
-            stddev_expr("c_acctbal", "std_bal", 4),
+            stddev_expr("c_acctbal", "std_bal"),
             F.min("c_acctbal").alias("min_bal"),
             F.max("c_acctbal").alias("max_bal"),
             F.count(F.lit(1)).alias("n"),

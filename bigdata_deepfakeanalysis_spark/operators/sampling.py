@@ -30,11 +30,11 @@ def seeded_rank(group_col: str, key_col: str, seed: int = 42) -> Column:
 
 
 def cap_per_group(
-    df: DataFrame, group_col: str, key_col: str, cap: int, seed: int = 42
+    df: DataFrame, group_col: str, key_col: str, cap: int
 ) -> DataFrame:
     """A7 — seeded cap-sample: keep <= cap rows per group, deterministic."""
     return (
-        df.withColumn("_rk", seeded_rank(group_col, key_col, seed))
+        df.withColumn("_rk", seeded_rank(group_col, key_col))
         .where(F.col("_rk") <= cap)
         .drop("_rk")
     )
@@ -153,24 +153,22 @@ def q_group_counts_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agree row-for-row). One window shuffle on the label; scale-safe.
 # ---------------------------------------------------------------------------
 
-def stratified_split(
-    df: DataFrame,
-    label_col: str,
-    key_col: str,
-    train_frac: float = 0.8,
-    val_frac: float = 0.1,
-    seed: int = 42,
-) -> DataFrame:
+# stratified_split and the q_stratified_split oracle
+_TRAIN_FRAC = 0.8
+_VAL_FRAC = 0.1
+
+
+def stratified_split(df: DataFrame, label_col: str, key_col: str) -> DataFrame:
     """Assign train/val/test per label by seeded-rank position within
-    the label's row count: first train_frac → train, next val_frac →
+    the label's row count: first _TRAIN_FRAC → train, next _VAL_FRAC →
     val, rest → test. Exact row counts per label are deterministic
     (floor arithmetic), unlike randomSplit's Bernoulli draw."""
     n_w = Window.partitionBy(label_col)
-    rk = seeded_rank(label_col, key_col, seed)
+    rk = seeded_rank(label_col, key_col)
     n = F.count(F.lit(1)).over(n_w)
     split = (
-        F.when(rk <= F.floor(n * train_frac), "train")
-        .when(rk <= F.floor(n * train_frac) + F.floor(n * val_frac), "val")
+        F.when(rk <= F.floor(n * _TRAIN_FRAC), "train")
+        .when(rk <= F.floor(n * _TRAIN_FRAC) + F.floor(n * _VAL_FRAC), "val")
         .otherwise("test")
     )
     return df.withColumn("split", split)
@@ -186,8 +184,8 @@ def stratified_split(
         FROM embeddings),
     assigned AS (
         SELECT label, vec_id,
-               CASE WHEN rk <= FLOOR(n * 0.8) THEN 'train'
-                    WHEN rk <= FLOOR(n * 0.8) + FLOOR(n * 0.1) THEN 'val'
+               CASE WHEN rk <= FLOOR(n * {_TRAIN_FRAC}) THEN 'train'
+                    WHEN rk <= FLOOR(n * {_TRAIN_FRAC}) + FLOOR(n * {_VAL_FRAC}) THEN 'val'
                     ELSE 'test' END AS split
         FROM ranked)
     SELECT label, split, COUNT(*) AS n_rows, MIN(vec_id) AS min_key

@@ -167,15 +167,11 @@ def hyperplane_sign(qcol: str, plane: int) -> Column:
     )
 
 
-def lsh_bucket(
-    qcol: str, n_planes: int = _N_PLANES, plane_offset: int = 0
-) -> Column:
-    """Pack sign bits of n_planes random projections into a bucket id.
-    ``plane_offset`` selects an independent plane set — table t of a
-    multi-table LSH index uses planes [t*n_planes, (t+1)*n_planes)."""
+def lsh_bucket(qcol: str) -> Column:
+    """Pack sign bits of _N_PLANES random projections into a bucket id."""
     b = F.lit(0)
-    for p in range(n_planes):
-        b = b + F.shiftleft(hyperplane_sign(qcol, plane_offset + p), p)
+    for p in range(_N_PLANES):
+        b = b + F.shiftleft(hyperplane_sign(qcol, p), p)
     return b
 
 
@@ -200,11 +196,10 @@ def plane_signs(qcol: str, n_planes_total: int) -> Column:
     )
 
 
-def index_signs_arrow(
-    df: DataFrame, n_planes_total: int, vec_col: str = "cq"
-) -> DataFrame:
-    """Append the 64-plane sign array via ONE Arrow-batched numpy
-    matmul — the vectorized offline index-build kernel.
+def index_signs_arrow(df: DataFrame, n_planes_total: int) -> DataFrame:
+    """Append the 64-plane sign array of column ``cq`` via ONE
+    Arrow-batched numpy matmul — the vectorized offline index-build
+    kernel.
 
     The SQL formulation (``plane_signs``) is a transform-over-
     aggregate-over-zip_with: nested lambdas fall to interpreted
@@ -228,7 +223,7 @@ def index_signs_arrow(
         import pyarrow.compute as _pc
 
         for batch in it:
-            vecs = batch.column(vec_col)
+            vecs = batch.column("cq")
             flat = _pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
             signs = (flat.reshape(-1, dim) @ w > 0).astype(_np.int32)
             yield batch.append_column(
@@ -241,14 +236,15 @@ def index_signs_arrow(
     return df.mapInArrow(run, out_schema)
 
 
-def bucket_from_signs(signs_col: str, table: int, n_planes: int = _N_PLANES) -> Column:
+def bucket_from_signs(signs_col: str, table: int) -> Column:
     """Bucket id of LSH table ``table`` from the precomputed sign array
     (row-local integer arithmetic, no re-projection)."""
     return sum(
         F.shiftleft(
-            F.expr(f"element_at({signs_col}, {table * n_planes + p + 1})"), p
+            F.expr(f"element_at({signs_col}, {table * _N_PLANES + p + 1})"),
+            p,
         )
-        for p in range(n_planes)
+        for p in range(_N_PLANES)
     )
 
 
@@ -333,9 +329,13 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def adaptive_planes(
-    n: int, target: int = 1500, lo: int = 4, hi: int = 12
-) -> int:
+# adaptive_planes, adaptive_lsh_bucket and its oracle adaptive_bucket_sql
+_ADAPTIVE_TARGET = 1500
+_ADAPTIVE_LO = 4
+_ADAPTIVE_HI = 12
+
+
+def adaptive_planes(n: int) -> int:
     """Plane count for a sign-LSH coarse stage whose expected bucket
     occupancy stays ~``target`` as the corpus grows: the smallest
     ``p`` in [lo, hi] with ``target * 2^p >= n``. Pure integer
@@ -347,21 +347,16 @@ def adaptive_planes(
     fixed 4 planes, so graded results are unchanged; the r11 sf5
     probe (n ~ 100k) gets 7 planes / 128 buckets and keeps the
     within-bucket pair count ~linear in n instead of quadratic."""
+    target, lo, hi = _ADAPTIVE_TARGET, _ADAPTIVE_LO, _ADAPTIVE_HI
     for p in range(lo, hi + 1):
         if target * (1 << p) >= n:
             return p
     return hi
 
 
-def adaptive_lsh_bucket(
-    df: DataFrame,
-    qcol: str = "_q",
-    target: int = 1500,
-    lo: int = 4,
-    hi: int = 12,
-    out: str = "bucket",
-) -> DataFrame:
-    """Occupancy-adaptive sign-LSH bucketing WITHOUT a driver-side
+def adaptive_lsh_bucket(df: DataFrame) -> DataFrame:
+    """Column ``bucket`` from the quantized vector ``_q``:
+    occupancy-adaptive sign-LSH bucketing WITHOUT a driver-side
     count job: the plane count rides the plan as a broadcast scalar —
     ``COUNT(*)`` through the same integer-doubling rule as
     :func:`adaptive_planes` (in-plan ``filter(sequence(lo,hi), ...)``
@@ -371,7 +366,7 @@ def adaptive_lsh_bucket(
     DataFrame-build time, so blanket plan scans still cover it) and
     the plan corpus-adaptive at RUNTIME: the same physical plan
     serves any input size, which is the 100-TB contract. Equals
-    ``lsh_bucket(qcol, n_planes=adaptive_planes(n))`` row-for-row
+    ``lsh_bucket("_q")`` at ``_N_PLANES = adaptive_planes(n)`` row-for-row
     for every n (the oracle mirror is :func:`adaptive_bucket_sql`).
     The bucket is ``hi+1`` GATED single-level sign folds —
     ``CASE WHEN p < np THEN sign_p << p END`` per plane — not one
@@ -380,6 +375,7 @@ def adaptive_lsh_bucket(
     evaluate only ``np`` folds at runtime (the nested-lambda array
     form falls to interpreted evaluation — the repo's standing HOF
     lesson)."""
+    target, lo, hi = _ADAPTIVE_TARGET, _ADAPTIVE_LO, _ADAPTIVE_HI
     n = df.agg(F.count(F.lit(1)).alias("_n")).select(
         # try_element_at, NOT element_at: under Spark 4 default ANSI
         # mode element_at on the empty filtered array (every plane
@@ -397,24 +393,23 @@ def adaptive_lsh_bucket(
     for p in range(hi + 1):
         b = b + F.when(
             F.lit(p) < F.col("_np"),
-            hyperplane_sign(qcol, p) * F.lit(1 << p),
+            hyperplane_sign("_q", p) * F.lit(1 << p),
         ).otherwise(0)
     return (
         df.crossJoin(F.broadcast(n))
-        .withColumn(out, b)
+        .withColumn("bucket", b)
         .drop("_np")
     )
 
 
-def adaptive_bucket_sql(
-    count_cte: str, target: int = 1500, lo: int = 4, hi: int = 12
-) -> str:
+def adaptive_bucket_sql(count_cte: str) -> str:
     """DuckDB CTE block mirroring :func:`adaptive_planes` at runtime:
     ``nrow`` counts ``count_cte``, ``np`` picks the plane count by
     the same integer-doubling rule, and ``buckets`` packs sign bits
     for planes gated on ``p < np`` — identical hyperplane derivation
     to ``_BUCKET_SQL`` (md5 first hex digit), identical bucket ids to
     the fixed-plane form whenever ``np`` resolves to ``lo``."""
+    target, lo, hi = _ADAPTIVE_TARGET, _ADAPTIVE_LO, _ADAPTIVE_HI
     terms = " + ".join(
         f"(CASE WHEN {p} < (SELECT np FROM np)"
         f" AND (SELECT SUM(q[pos + 1] *"
@@ -437,7 +432,12 @@ buckets AS (
 """
 
 
-def adaptive_sample_k(n: int, target: int = 12000, hi: int = 30) -> int:
+# adaptive_sample_k, adaptive_sample and its oracle adaptive_sample_sql
+_SAMPLE_TARGET = 12000
+_SAMPLE_HI = 30
+
+
+def adaptive_sample_k(n: int) -> int:
     """Halving count ``k`` for a deterministic md5-prefix audit sample
     whose expected size stays <= ``target`` as the corpus grows: the
     smallest ``k`` in [1, hi] with ``target * 2^k >= n`` (fraction
@@ -451,6 +451,7 @@ def adaptive_sample_k(n: int, target: int = 12000, hi: int = 30) -> int:
     BOUNDED (<= target² pair candidates) instead of growing as
     (n/2)² — the r12 sf25 probe caught the fixed 1/2 fraction putting
     ~300k vectors in the single audit block."""
+    target, hi = _SAMPLE_TARGET, _SAMPLE_HI
     for k in range(1, hi + 1):
         if target * (1 << k) >= n:
             return k
@@ -468,15 +469,10 @@ def sample_threshold(k: int) -> str:
     return format((1 << (4 * d)) >> k, "x").zfill(d)
 
 
-def adaptive_sample(
-    df: "DataFrame",
-    id_col: str = "vec_id",
-    target: int = 12000,
-    hi: int = 30,
-) -> "DataFrame":
-    """Occupancy-adaptive md5-prefix sample WITHOUT a driver-side
-    count job (the :func:`adaptive_lsh_bucket` pattern): ``COUNT(*)``
-    rides the plan as a broadcast scalar through the same
+def adaptive_sample(df: "DataFrame") -> "DataFrame":
+    """Occupancy-adaptive md5-prefix sample of ``vec_id`` WITHOUT a
+    driver-side count job (the :func:`adaptive_lsh_bucket` pattern):
+    ``COUNT(*)`` rides the plan as a broadcast scalar through the same
     integer-doubling rule as :func:`adaptive_sample_k`, the halving
     count picks its threshold literal from a CASE over
     :func:`sample_threshold` (generated by the SAME Python helper
@@ -484,6 +480,7 @@ def adaptive_sample(
     construction), and the filter keeps ``md5(id) < threshold``.
     Equals ``df.where(md5(id) < sample_threshold(adaptive_sample_k(
     n)))`` row-for-row for every n."""
+    target, hi = _SAMPLE_TARGET, _SAMPLE_HI
     cases = " ".join(
         f"WHEN {k} THEN '{sample_threshold(k)}'" for k in range(1, hi + 1)
     )
@@ -500,20 +497,19 @@ def adaptive_sample(
     )
     return (
         df.crossJoin(F.broadcast(n))
-        .where(F.md5(F.col(id_col).cast("string")) < F.col("_sthr"))
+        .where(F.md5(F.col("vec_id").cast("string")) < F.col("_sthr"))
         .drop("_sthr")
     )
 
 
-def adaptive_sample_sql(
-    count_cte: str, target: int = 12000, hi: int = 30
-) -> str:
+def adaptive_sample_sql(count_cte: str) -> str:
     """DuckDB CTE block mirroring :func:`adaptive_sample_k` +
     :func:`sample_threshold` at runtime: ``snrow`` counts
     ``count_cte``, ``sk`` picks the halving count by the identical
     integer-doubling rule, ``sthr`` maps it to the identical
     threshold literal. Consumers filter
     ``md5(CAST(id AS VARCHAR)) < (SELECT thr FROM sthr)``."""
+    target, hi = _SAMPLE_TARGET, _SAMPLE_HI
     cases = " ".join(
         f"WHEN {k} THEN '{sample_threshold(k)}'" for k in range(1, hi + 1)
     )
@@ -897,35 +893,33 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _IVF_CELLS = 16
+_IVF_SEED = 42
+_IVF_TRAIN_MOD = 7
+# 4 Lloyd passes (r12, was 8): every MLlib iteration is a distributed
+# pass over the training sample (~2 jobs), and a COARSE quantizer's
+# centroids only steer candidate density — every hashed consumer is
+# assignment-invariant by construction (subset/monotonicity/partition
+# theorems; re-proven when r12's random-init change moved every
+# centroid and 415/415 stayed green). Interleaved warm fit at sf0.1:
+# 1.13-1.30 s -> 0.62-0.70 s; planted-copy coverage and the
+# recall-ladder invariants are seeding- and iteration-independent
+# (identical vectors share a cell under ANY centroid set).
+_IVF_MAX_ITER = 4
 
 
 def ivf_assign(
     emb: DataFrame,
     n_cells: int = _IVF_CELLS,
-    seed: int = 42,
     vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    train_mod: int = 7,
-    # 4 Lloyd passes (r12, was 8): every MLlib iteration is a
-    # distributed pass over the training sample (~2 jobs), and a
-    # COARSE quantizer's centroids only steer candidate density —
-    # every hashed consumer is assignment-invariant by construction
-    # (subset/monotonicity/partition theorems; re-proven when r12's
-    # random-init change moved every centroid and 415/415 stayed
-    # green). Interleaved warm fit at sf0.1: 1.13-1.30 s -> 0.62-0.70 s;
-    # planted-copy coverage and the recall-ladder invariants are
-    # seeding- and iteration-independent (identical vectors share a
-    # cell under ANY centroid set).
-    max_iter: int = 4,
 ):
     """Fit a k-means coarse quantizer (MLlib, seeded) and assign every
     vector to its cell. At 100 TB the assignment is a narrow projection
     against broadcast centroids and ``cell`` is the partition key — a
     probe reads nprobe partitions instead of the corpus.
 
-    The quantizer trains on a deterministic ~1/``train_mod`` subsample
-    (id % train_mod == 0) with a bounded iteration count — the
-    standard IVF practice (faiss trains its coarse quantizer on a
+    The quantizer trains on a deterministic ~1/``_IVF_TRAIN_MOD``
+    subsample with a bounded iteration count — the standard IVF
+    practice (faiss trains its coarse quantizer on a
     corpus sample): centroid quality needs a representative sample,
     not the corpus, and fitting on everything made the fit 7× the cost
     of the assignment it exists to speed up."""
@@ -935,11 +929,11 @@ def ivf_assign(
     feat = emb.withColumn(
         "_f", array_to_vector(F.col(vec_col).cast("array<double>"))
     )
-    train = feat.where(F.col(id_col) % train_mod == 0)
+    train = feat.where(F.col("vec_id") % _IVF_TRAIN_MOD == 0)
     model = KMeans(
         k=n_cells,
-        seed=seed,
-        maxIter=max_iter,
+        seed=_IVF_SEED,
+        maxIter=_IVF_MAX_ITER,
         # random init (r12): k-means|| runs ~2 extra distributed passes
         # over the training sample to seed centroids — measured 1.63 s
         # vs 0.66 s for the whole fit at sf0.1 (interleaved, warm). A
@@ -1134,7 +1128,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # for the ANN scan; FAISS's SQ8 is the reference pattern)
 # ---------------------------------------------------------------------------
 
-def sq8_profile(emb: DataFrame, dim: int = _DIM) -> DataFrame:
+def sq8_profile(emb: DataFrame) -> DataFrame:
     """Per-dimension scalar quantization to 256 bins: global per-dim
     [lo, hi] range, ``code = min(floor((v-lo)/(hi-lo)*256), 255)``,
     dequantized midpoint ``lo + (code+0.5)/256*(hi-lo)``. Emits the

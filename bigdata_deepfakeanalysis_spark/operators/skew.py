@@ -22,9 +22,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_agg(
-    df: DataFrame, key: str, value: str, n_salts: int = 16
-) -> DataFrame:
+# salts per key of the two-phase aggregates and of the salted join
+_AGG_SALTS = 16
+_JOIN_SALTS = 8
+
+
+def salted_agg(df: DataFrame, key: str, value: str) -> DataFrame:
     """count + sum(value) per key, two-phase over a row-unique salt
     (deterministic per physical row: partition id + row offset). A salt
     derived from the aggregated value would collapse when a hot key
@@ -41,7 +44,7 @@ def salted_agg(
                     F.monotonically_increasing_id(),
                 )
             )
-            % n_salts
+            % _AGG_SALTS
         ).cast("int"),
     )
     partials = salted.groupBy(key, "_salt").agg(
@@ -56,14 +59,13 @@ def salted_agg(
     )
 
 
-def salted_distinct_count(
-    df: DataFrame, key: str, value: str, n_salts: int = 16
-) -> DataFrame:
+def salted_distinct_count(df: DataFrame, key: str, value: str) -> DataFrame:
     """Exact COUNT(DISTINCT value) per key: salt BY VALUE HASH so every
     distinct value lands in exactly one (key, salt) partial; partial
     distinct counts then sum exactly."""
     salted = df.withColumn(
-        "_salt", (F.crc32(F.col(value).cast("string")) % n_salts).cast("int")
+        "_salt",
+        (F.crc32(F.col(value).cast("string")) % _AGG_SALTS).cast("int"),
     )
     partials = salted.groupBy(key, "_salt").agg(
         F.countDistinct(value).alias("_d")
@@ -114,9 +116,7 @@ def q_salted_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def salted_join(
-    fact: DataFrame, dim: DataFrame, key: str, n_salts: int = 8
-) -> DataFrame:
+def salted_join(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     """Salt-and-replicate join for hot keys: fact rows get a row-unique
     salt in [0, S); the (small) build side is replicated S× carrying
     every salt; the join key becomes (key, salt), spreading one hot
@@ -138,11 +138,11 @@ def salted_join(
                     F.monotonically_increasing_id(),
                 )
             )
-            % n_salts
+            % _JOIN_SALTS
         ).cast("int"),
     )
     rep = dim.withColumn(
-        "_salt", F.explode(F.expr(f"sequence(0, {n_salts - 1})"))
+        "_salt", F.explode(F.expr(f"sequence(0, {_JOIN_SALTS - 1})"))
     ).withColumn("_salt", F.col("_salt").cast("int"))
     return salted.hint("shuffle_hash").join(rep, [key, "_salt"]).drop("_salt")
 

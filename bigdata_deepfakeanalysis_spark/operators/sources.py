@@ -50,11 +50,11 @@ def _payload(vec_id: int) -> bytes:
     )
 
 
-def write_image_tree(base: Path | None = None) -> Path:
+def write_image_tree() -> Path:
     """Stage the GenImage-layout tree (idempotent):
     ``<base>/imagenet_ai_0419_<gen>/train/ai/img_<id>.png`` plus decoy
     files that the glob filter must skip."""
-    base = _tree() if base is None else base
+    base = _tree()
     marker = base / ".complete"
     if marker.exists():
         return base
@@ -72,15 +72,14 @@ def write_image_tree(base: Path | None = None) -> Path:
     return base
 
 
-def scan_images(spark: SparkSession, base: Path | None = None) -> DataFrame:
+def scan_images(spark: SparkSession) -> DataFrame:
     """S1+S2 — binaryFile scan, extension filter pushed to file listing,
     group key parsed from the directory name (P3)."""
-    base = _tree() if base is None else base
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.png")
         .option("recursiveFileLookup", "false")
-        .load(f"{base}/imagenet_ai_0419_*/train/ai/")
+        .load(f"{_tree()}/imagenet_ai_0419_*/train/ai/")
     )
     dirname = F.element_at(F.split(F.col("path"), "/"), -4)
     return raw.select(

@@ -87,29 +87,17 @@ def char_ngrams(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     )
 
 
-def lang_scores(
-    docs: DataFrame, profile: DataFrame | list | None = None
-) -> DataFrame:
-    """Per (doc, candidate lang) n-gram vote totals.
+def lang_scores(docs: DataFrame) -> DataFrame:
+    """Per (doc, candidate lang) n-gram vote totals over the
+    ``_LANG_PROFILE`` (gram, lang, weight) rows.
 
     Plan: one doc scan; per profile gram a LITERAL-pattern
     ``regexp_count`` with a zero-width lookahead (overlapping matches —
     same counts as exploding every bigram and joining, with no explode
     and the regex compiled once per task, not per row), unpivoted via
-    ``stack`` and rolled up in one narrow groupBy. ``profile`` may be
-    the (gram, lang, weight) list directly — passing a DataFrame costs
-    a driver collect job per call (the profile is plan-time literal
-    data either way)."""
-    if profile is None:
-        profile = _LANG_PROFILE
-    rows = (
-        sorted(profile)
-        if isinstance(profile, list)
-        else sorted(
-            (r["gram"], r["cand_lang"], int(r["weight"]))
-            for r in profile.collect()
-        )
-    )
+    ``stack`` and rolled up in one narrow groupBy. The profile is
+    plan-time literal data: no driver collect job."""
+    rows = sorted(_LANG_PROFILE)
     cells = ", ".join(
         f"'{l}', {w}, regexp_count(text, '(?={g})')" for g, l, w in rows
     )
@@ -175,10 +163,14 @@ def quality_score(stats: DataFrame) -> DataFrame:
     )
 
 
-def doc_fingerprint(df: DataFrame, text_col: str, id_col: str, k: int = 8) -> DataFrame:
+# character gram width of doc_fingerprint and its q_doc_fingerprint oracle
+_FP_K = 8
+
+
+def doc_fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Char-shingle fingerprint: min md5 over all k-grams (rolling-hash
     minimum) + distinct-gram count. One flatMap + one hash agg."""
-    grams = char_ngrams(df, text_col, id_col, k)
+    grams = char_ngrams(df, text_col, id_col, _FP_K)
     return grams.groupBy("doc_id").agg(
         F.min(F.md5("gram")).alias("fingerprint"),
         F.countDistinct("gram").alias("n_distinct_grams"),
@@ -275,7 +267,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_doc_fingerprint",
     f"""
-    WITH {_CHAR_GRAMS_SQL.strip().format(k=8, km2=6)}
+    WITH {_CHAR_GRAMS_SQL.strip().format(k=_FP_K, km2=_FP_K - 2)}
     SELECT doc_id,
            MIN(md5(gram)) AS fingerprint,
            COUNT(DISTINCT gram) AS n_distinct_grams
@@ -287,9 +279,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: min rolling char-8-gram md5 + distinct-gram
     count per document."""
-    return doc_fingerprint(
-        table(spark, sf_dir, "documents"), "text", "doc_id", 8
-    )
+    return doc_fingerprint(table(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1239,9 +1229,7 @@ _CHUNK = 32   # tokens per chunk
 _STRIDE = 24  # chunk stride (8-token overlap)
 
 
-def chunk_docs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def chunk_docs(docs: DataFrame) -> DataFrame:
     """Overlapping token-window chunking as a library transform: one
     output row per ({_CHUNK}-token, stride-{_STRIDE}) window per doc —
     minimal cover (chunk i exists only while chunk i-1 did not already
@@ -1259,9 +1247,9 @@ def chunk_docs(
         f"      slice(_t, i * {_STRIDE} + 1, {_CHUNK})))))"
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.explode(
-            F.expr(f"transform(array(split({text_col}, ' ')), _t -> {chunks})[0]")
+            F.expr(f"transform(array(split(text, ' ')), _t -> {chunks})[0]")
         ).alias("c"),
     ).select(
         "doc_id",

@@ -66,12 +66,18 @@ def sliding_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def session_counts(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
+# event-time intervals each operator shares with its oracle
+_SESSION_GAP = "5 minutes"
+_LATE_DELAY = "1 hour"
+_ATTRIBUTION_WITHIN = "10 minutes"
+
+
+def session_counts(events: DataFrame) -> DataFrame:
     """Session windows per user: a session closes after a 5-minute gap.
     Emits session start + event count + decimal-exact value sum."""
     return (
         events.groupBy(
-            F.session_window("ts", gap).alias("win"), "user_id"
+            F.session_window("ts", _SESSION_GAP).alias("win"), "user_id"
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -132,11 +138,11 @@ def dedup_keep_first(events: DataFrame) -> DataFrame:
     )
 
 
-def drop_late(events: DataFrame, delay: str = "1 hour") -> DataFrame:
-    """Batch equivalent of ``withWatermark(ts, delay)``'s final state:
-    only events at or above (global max ts - delay) survive."""
+def drop_late(events: DataFrame) -> DataFrame:
+    """Batch equivalent of ``withWatermark(ts, _LATE_DELAY)``'s final
+    state: only events at or above (global max ts - delay) survive."""
     horizon = events.agg(
-        (F.max("ts") - F.expr(f"INTERVAL {delay}")).alias("wm")
+        (F.max("ts") - F.expr(f"INTERVAL {_LATE_DELAY}")).alias("wm")
     )
     return events.join(F.broadcast(horizon)).where(F.col("ts") >= F.col("wm"))
 
@@ -350,7 +356,7 @@ def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq AS (
         SELECT user_id, ts, value,
                CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         <= INTERVAL '5 minutes'
+                         <= INTERVAL '{_SESSION_GAP}'
                     THEN 0 ELSE 1 END AS new_sess
         FROM events_us),
     sess AS (
@@ -391,7 +397,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_stream_late_drop",
     f"""
     WITH {EVENTS_US_CTE},
-    wm AS (SELECT MAX(ts) - INTERVAL '1 hour' AS wm FROM events_us)
+    wm AS (SELECT MAX(ts) - INTERVAL '{_LATE_DELAY}' AS wm FROM events_us)
     SELECT TRUE AS kept, COUNT(*) AS n,
            strftime(MIN(ts), '{_FMT_DUCK}') AS first_kept_ts
     FROM events_us, wm WHERE ts >= wm
@@ -401,7 +407,7 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark late-data drop: only the final hour of events survives
     the 1-hour watermark's terminal state."""
     ev = table(spark, sf_dir, "events")
-    kept = drop_late(ev, "1 hour")
+    kept = drop_late(ev)
     return kept.agg(
         F.lit(True).alias("kept"),
         F.count(F.lit(1)).alias("n"),
@@ -517,7 +523,6 @@ def q_stream_static_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_stream_attribution(
     clicks_src: DataFrame,
     purchases_src: DataFrame,
-    within: str = "10 minutes",
     join_type: str = "inner",
 ) -> DataFrame:
     """(click, purchase) pairs per user with the purchase in
@@ -546,7 +551,8 @@ def stream_stream_attribution(
             & (F.col("purchase_ts") >= F.col("click_ts"))
             & (
                 F.col("purchase_ts")
-                <= F.col("click_ts") + F.expr(f"INTERVAL {within}")
+                <= F.col("click_ts")
+                + F.expr(f"INTERVAL {_ATTRIBUTION_WITHIN}")
             ),
             join_type,
         )
@@ -574,7 +580,7 @@ def stream_stream_attribution(
            epoch_us(purchase_ts) - epoch_us(click_ts) AS lag_us
     FROM a JOIN b ON user_id = p_user_id
       AND purchase_ts >= click_ts
-      AND purchase_ts <= click_ts + INTERVAL '10 minutes'
+      AND purchase_ts <= click_ts + INTERVAL '{_ATTRIBUTION_WITHIN}'
     ORDER BY user_id, click_id, purchase_id
     """,
 )
@@ -599,7 +605,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            epoch_us(purchase_ts) - epoch_us(click_ts) AS lag_us
     FROM a LEFT JOIN b ON a.user_id = p_user_id
       AND purchase_ts >= click_ts
-      AND purchase_ts <= click_ts + INTERVAL '10 minutes'
+      AND purchase_ts <= click_ts + INTERVAL '{_ATTRIBUTION_WITHIN}'
     ORDER BY user_id, click_id, purchase_id
     """,
 )
@@ -944,16 +950,23 @@ def foreach_batch_jdbc_sink(
     return url
 
 
-def jdbc_committed_view(
-    table_name: str, select: str = "d.epoch, d.event_id, d.user_id, d.value"
-) -> str:
+# the committed view's select list over data rows ``d``: the aggregate
+# q_stream_jdbc_exactly_once reads, pushed into the store
+_COMMITTED_SELECT = (
+    "COUNT(*) AS n_rows,"
+    " COUNT(DISTINCT d.event_id) AS n_distinct,"
+    " SUM(CAST(FLOOR(d.value * 1000) AS BIGINT))"
+    " AS value_fp_sum"
+)
+
+
+def jdbc_committed_view(table_name: str) -> str:
     """The reader-side committed view of a versioned exactly-once
-    table: data joined through the epoch's commit pointer. A JDBC
-    ``dbtable`` subquery, so the join runs store-side. ``select`` is
-    the subquery's select list over the data rows ``d``; an aggregate
-    list pushes the whole aggregation into the store."""
+    table: ``_COMMITTED_SELECT`` over the data joined through the
+    epoch's commit pointer. A JDBC ``dbtable`` subquery, so the join
+    and the aggregation run store-side."""
     return (
-        f"(SELECT {select}"
+        f"(SELECT {_COMMITTED_SELECT}"
         f" FROM {table_name} d JOIN {table_name}_commits c"
         f" ON d.epoch = c.epoch AND d.ver = c.ver) AS t"
     )
@@ -1006,16 +1019,7 @@ def q_stream_jdbc_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pointer, so appending replays would still double n_rows here
         # only if the sink lost its versioning (the replay proof is
         # unchanged)
-        .option(
-            "dbtable",
-            jdbc_committed_view(
-                table_name,
-                "COUNT(*) AS n_rows,"
-                " COUNT(DISTINCT d.event_id) AS n_distinct,"
-                " SUM(CAST(FLOOR(d.value * 1000) AS BIGINT))"
-                " AS value_fp_sum",
-            ),
-        )
+        .option("dbtable", jdbc_committed_view(table_name))
         .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
         .load()
     )

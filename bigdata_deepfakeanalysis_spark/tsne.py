@@ -16,6 +16,13 @@ from __future__ import annotations
 
 import numpy as np
 
+# the reference's perplexity and seed; the solver's iteration count
+# and learning rate
+_PERPLEXITY = 30.0
+_N_ITER = 500
+_SEED = 42
+_LR = 200.0
+
 
 def _conditional_p(D2: np.ndarray, perplexity: float) -> np.ndarray:
     """Per-row Gaussian affinities with bandwidth binary-searched so
@@ -47,16 +54,11 @@ def _conditional_p(D2: np.ndarray, perplexity: float) -> np.ndarray:
     return P
 
 
-def tsne_exact(
-    X: np.ndarray,
-    perplexity: float = 30.0,
-    n_iter: int = 500,
-    seed: int = 42,
-    lr: float = 200.0,
-) -> tuple[np.ndarray, list[float]]:
+def tsne_exact(X: np.ndarray) -> tuple[np.ndarray, list[float]]:
     """Exact t-SNE to 2-D. Returns (coords [N,2], KL history sampled
     every 50 iterations — tests assert it decreases). Deterministic
-    given (X, seed)."""
+    given X."""
+    n_iter = _N_ITER
     X = np.asarray(X, dtype=np.float64)
     n = X.shape[0]
     if n < 4:  # degenerate input: PCA-style projection is the best map
@@ -68,7 +70,7 @@ def tsne_exact(
     # H(p) = log(perp) over n-1 neighbors, and H is bounded by log(n-1) —
     # perp > n-1 would never converge (burns all iterations returning
     # near-uniform affinities on tiny samples)
-    perp = min(perplexity, max(5.0, float(n - 1) / 3.0), float(n - 2))
+    perp = min(_PERPLEXITY, max(5.0, float(n - 1) / 3.0), float(n - 2))
 
     d2 = ((X[:, None, :] - X[None, :, :]) ** 2).sum(-1)
     P = _conditional_p(d2, perp)
@@ -80,7 +82,7 @@ def tsne_exact(
     _, _, vt = np.linalg.svd(Xc, full_matrices=False)
     vt = vt * np.sign(vt[np.arange(vt.shape[0]), np.abs(vt).argmax(1)])[:, None]
     Y = (Xc @ vt[:2].T) * 1e-4
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(_SEED)
     Y = Y + rng.normal(0, 1e-6, Y.shape)  # break exact ties, seeded
 
     vel = np.zeros_like(Y)
@@ -99,7 +101,7 @@ def tsne_exact(
         momentum = 0.5 if it < 250 else 0.8
         gains = np.where(np.sign(G) != np.sign(vel),
                          gains + 0.2, gains * 0.8).clip(0.01)
-        vel = momentum * vel - lr * gains * G
+        vel = momentum * vel - _LR * gains * G
         Y = Y + vel
         Y = Y - Y.mean(axis=0)
         if it % 50 == 0 or it == n_iter - 1:

@@ -61,9 +61,12 @@ def test_semantic_dedup_removes_planted_copies(spark):
         ), row
 
 
-def test_connected_components_raises_on_non_convergence(spark):
-    """A 5-node chain needs 4 propagation rounds; max_iter=1 must raise,
-    never silently return partial labels."""
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
+    """A 5-node chain needs 4 propagation rounds; a budget of 1 round
+    must raise, never silently return partial labels. The round budget
+    ``_CC_MAX_ITER`` is read by the driver loop, so the test patches
+    it."""
+    from bigdata_deepfakeanalysis_spark.operators import dedup
     from bigdata_deepfakeanalysis_spark.operators.dedup import (
         connected_components,
     )
@@ -71,25 +74,28 @@ def test_connected_components_raises_on_non_convergence(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(4)], "doc_a long, doc_b long"
     )
+    monkeypatch.setattr(dedup, "_CC_MAX_ITER", 1)
     with pytest.raises(RuntimeError, match="did not converge") as err:
-        connected_components(chain, max_iter=1).collect()
+        connected_components(chain).collect()
     # the message carries the observed changed-count of the last round
     still = re.search(r"\((\d+) labels still changing\)", str(err.value))
     assert still and int(still.group(1)) > 0, str(err.value)
 
-    ok = connected_components(chain, max_iter=10)
+    monkeypatch.setattr(dedup, "_CC_MAX_ITER", 10)
+    ok = connected_components(chain)
     labels = {r.component for r in ok.collect()}
     assert labels == {0}
 
 
-def test_star_components_handle_deep_chains(spark):
+def test_star_components_handle_deep_chains(spark, monkeypatch):
     """A path graph is the worst case for plain min-label propagation
     (O(diameter) rounds). r12's adaptive pointer halving converges it
-    in O(log diameter) rounds inside the default max_iter — but a
+    in O(log diameter) rounds inside the default round budget — but a
     hard cap below that bound must still fail loud, and the large-star
     / small-star alternation remains the O(log n) reference."""
     import pytest
 
+    from bigdata_deepfakeanalysis_spark.operators import dedup
     from bigdata_deepfakeanalysis_spark.operators.dedup import (
         connected_components,
         connected_components_star,
@@ -98,25 +104,28 @@ def test_star_components_handle_deep_chains(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(80)], "doc_a long, doc_b long"
     )
-    # pointer halving: an 80-edge path now converges within the
-    # default budget (plain propagation needed ~80 rounds)
-    labels_lp = connected_components(chain, max_iter=10).collect()
+    # pointer halving: an 80-edge path now converges within 10 rounds,
+    # half the default budget (plain propagation needed ~80 rounds)
+    monkeypatch.setattr(dedup, "_CC_MAX_ITER", 10)
+    labels_lp = connected_components(chain).collect()
     assert len(labels_lp) == 81
     assert all(r.component == 0 for r in labels_lp)
     # the loud-divergence contract survives: 3 rounds reach <= ~7 hops
+    monkeypatch.setattr(dedup, "_CC_MAX_ITER", 3)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=3)
+        connected_components(chain)
     labels = connected_components_star(chain).collect()
     assert len(labels) == 81
     assert all(r.component == 0 for r in labels)
 
 
-def test_star_components_equal_label_propagation(spark):
+def test_star_components_equal_label_propagation(spark, monkeypatch):
     """Both algorithms must produce identical (id, min-of-component)
     labelings — checked on the LSH candidate graph and on a seeded
     random graph with isolated self-pair nodes."""
     import random
 
+    from bigdata_deepfakeanalysis_spark.operators import dedup
     from bigdata_deepfakeanalysis_spark.operators.dedup import (
         aug_docs,
         connected_components,
@@ -142,10 +151,8 @@ def test_star_components_equal_label_propagation(spark):
     g = spark.createDataFrame(edges, "doc_a long, doc_b long")
     # sparse random graphs have long paths: give propagation the
     # rounds it needs (the star variant needs ~5 alternations)
-    a = {
-        (r.id, r.component)
-        for r in connected_components(g, max_iter=80).collect()
-    }
+    monkeypatch.setattr(dedup, "_CC_MAX_ITER", 80)
+    a = {(r.id, r.component) for r in connected_components(g).collect()}
     b = {(r.id, r.component) for r in connected_components_star(g).collect()}
     assert a == b
     assert (777, 777) in b
@@ -573,18 +580,23 @@ def test_normalized_dedup_collapses_planted_republications(spark):
     assert rows[2].min_survivor < 3000000
 
 
-def test_adaptive_planes_rule_mirrors_sql_and_buckets_agree(spark):
+def test_adaptive_planes_rule_mirrors_sql_and_buckets_agree(
+    spark, monkeypatch
+):
     """r11 adaptive coarse stage: (a) the Python integer-doubling
     plane rule and its DuckDB CTE mirror must pick the IDENTICAL
     plane count for every corpus size, including exact power-of-two
     boundaries (a float-log formulation can flip by 1 ulp there);
     (b) with the plane count forced ABOVE the 4-plane floor, the
     gated bucket SQL must produce bit-identical bucket ids to
-    Spark's lsh_bucket(n_planes=P) — the p-gating arithmetic is the
-    only code path the grading-scale oracle (P=4) never exercises."""
+    Spark's lsh_bucket at _N_PLANES=P — the p-gating arithmetic is
+    the only code path the grading-scale oracle (P=4) never
+    exercises. The occupancy target and plane count are module
+    constants read on the driver; (b) patches them."""
     import duckdb
     import numpy as np
 
+    from bigdata_deepfakeanalysis_spark.operators import similarity as S
     from bigdata_deepfakeanalysis_spark.operators.similarity import (
         adaptive_bucket_sql,
         adaptive_planes,
@@ -626,32 +638,36 @@ def test_adaptive_planes_rule_mirrors_sql_and_buckets_agree(spark):
             }
         ),
     )
-    sql = adaptive_bucket_sql("qv_src", target=2, lo=4, hi=12)
+    monkeypatch.setattr(S, "_ADAPTIVE_TARGET", 2)
+    sql = adaptive_bucket_sql("qv_src")
     duck_buckets = dict(
         con.execute(
             f"WITH qv AS (SELECT vec_id, q FROM qv_src), {sql.strip()} "
             "SELECT vec_id, bucket FROM buckets ORDER BY vec_id"
         ).fetchall()
     )
-    n_planes = adaptive_planes(40, target=2, lo=4, hi=12)
+    n_planes = adaptive_planes(40)
     assert n_planes == 5
+    monkeypatch.setattr(S, "_N_PLANES", n_planes)
     sdf = spark.createDataFrame(
         [(i, [int(x) for x in v]) for i, v in enumerate(q)],
         "vec_id int, q array<bigint>",
-    ).withColumn("bucket", lsh_bucket("q", n_planes=n_planes))
+    ).withColumn("bucket", lsh_bucket("q"))
     spark_buckets = {r.vec_id: r.bucket for r in sdf.collect()}
     assert spark_buckets == duck_buckets
     assert max(duck_buckets.values()) >= 16  # planes past the floor used
     con.close()
 
 
-def test_adaptive_lsh_bucket_production_path_and_hi_fallback(spark):
+def test_adaptive_lsh_bucket_production_path_and_hi_fallback(
+    spark, monkeypatch
+):
     """ADVICE r11: the (a)-(b) parity test above never ran the
     PRODUCTION adaptive_lsh_bucket path — the gated CASE column, the
     in-plan count broadcast, and the empty-filter fallback — which is
     what hid the ANSI element_at crash. Pin all three here:
     (1) above the 4-plane floor, adaptive_lsh_bucket must equal
-    lsh_bucket(n_planes=adaptive_planes(n)) row-for-row;
+    lsh_bucket at _N_PLANES=adaptive_planes(n) row-for-row;
     (2) with n PAST target*2^hi (every plane saturated, the filtered
     array empty) the hi fallback must ENGAGE — under default ANSI mode
     plain element_at throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT there,
@@ -659,11 +675,17 @@ def test_adaptive_lsh_bucket_production_path_and_hi_fallback(spark):
     equal the fixed hi-plane form."""
     import numpy as np
 
+    from bigdata_deepfakeanalysis_spark.operators import similarity as S
     from bigdata_deepfakeanalysis_spark.operators.similarity import (
         adaptive_lsh_bucket,
         adaptive_planes,
         lsh_bucket,
     )
+
+    def fixed_planes(df, n_planes):
+        with monkeypatch.context() as m:
+            m.setattr(S, "_N_PLANES", n_planes)
+            return df.withColumn("bucket", lsh_bucket("_q"))
 
     rng = np.random.default_rng(9)
     q = [
@@ -676,34 +698,27 @@ def test_adaptive_lsh_bucket_production_path_and_hi_fallback(spark):
     )
 
     # (1) production path above the floor: n=40, target=2 -> np=5
-    np5 = adaptive_planes(40, target=2)
+    monkeypatch.setattr(S, "_ADAPTIVE_TARGET", 2)
+    np5 = adaptive_planes(40)
     assert np5 == 5
     got = {
         r.vec_id: r.bucket
-        for r in adaptive_lsh_bucket(sdf, target=2).collect()
+        for r in adaptive_lsh_bucket(sdf).collect()
     }
-    want = {
-        r.vec_id: r.bucket
-        for r in sdf.withColumn(
-            "bucket", lsh_bucket("_q", n_planes=np5)
-        ).collect()
-    }
+    want = {r.vec_id: r.bucket for r in fixed_planes(sdf, np5).collect()}
     assert got == want
     assert max(got.values()) >= 16  # gated planes past the floor fired
 
     # (2) hi fallback: 2 * 2^3 = 16 < 40, filter() comes back empty ->
     # np must fall back to hi=3 instead of throwing
-    assert adaptive_planes(40, target=2, lo=2, hi=3) == 3
+    monkeypatch.setattr(S, "_ADAPTIVE_LO", 2)
+    monkeypatch.setattr(S, "_ADAPTIVE_HI", 3)
+    assert adaptive_planes(40) == 3
     got_hi = {
         r.vec_id: r.bucket
-        for r in adaptive_lsh_bucket(sdf, target=2, lo=2, hi=3).collect()
+        for r in adaptive_lsh_bucket(sdf).collect()
     }
-    want_hi = {
-        r.vec_id: r.bucket
-        for r in sdf.withColumn(
-            "bucket", lsh_bucket("_q", n_planes=3)
-        ).collect()
-    }
+    want_hi = {r.vec_id: r.bucket for r in fixed_planes(sdf, 3).collect()}
     assert got_hi == want_hi
     assert max(got_hi.values()) <= 7  # only 3 planes -> bucket < 8
 
@@ -746,7 +761,9 @@ def test_cosine_pairs_strip_chunking_preserves_pairs(spark, monkeypatch):
     assert len(one) > 0  # scaled twins: cosine exactly 1 >= 0.999
 
 
-def test_adaptive_sample_rule_mirrors_sql_and_thresholds_agree(spark):
+def test_adaptive_sample_rule_mirrors_sql_and_thresholds_agree(
+    spark, monkeypatch
+):
     """r12 adaptive audit sample: (a) the Python integer-doubling
     halving rule and its DuckDB CTE mirror must pick the IDENTICAL
     halving count for every corpus size including exact boundaries;
@@ -755,9 +772,11 @@ def test_adaptive_sample_rule_mirrors_sql_and_thresholds_agree(spark):
     the PRODUCTION adaptive_sample path (in-plan count broadcast,
     CASE threshold, md5 filter) must equal the direct
     md5 < sample_threshold(adaptive_sample_k(n)) filter row-for-row,
-    including the hi fallback."""
+    including the hi fallback. (c) patches the driver-read constants
+    _SAMPLE_TARGET and _SAMPLE_HI."""
     import duckdb
 
+    from bigdata_deepfakeanalysis_spark.operators import similarity as S
     from bigdata_deepfakeanalysis_spark.operators.similarity import (
         adaptive_sample,
         adaptive_sample_k,
@@ -806,10 +825,11 @@ def test_adaptive_sample_rule_mirrors_sql_and_thresholds_agree(spark):
     from pyspark.sql import functions as F
 
     sdf = spark.range(40).select(F.col("id").alias("vec_id"))
-    assert adaptive_sample_k(40, target=8) == 3
+    monkeypatch.setattr(S, "_SAMPLE_TARGET", 8)
+    assert adaptive_sample_k(40) == 3
     got = sorted(
         r.vec_id
-        for r in adaptive_sample(sdf, target=8).collect()
+        for r in adaptive_sample(sdf).collect()
     )
     want_ids = sorted(
         r.vec_id
@@ -818,10 +838,11 @@ def test_adaptive_sample_rule_mirrors_sql_and_thresholds_agree(spark):
         ).collect()
     )
     assert got == want_ids and 0 < len(got) < 40
-    assert adaptive_sample_k(40, target=8, hi=2) == 2
+    monkeypatch.setattr(S, "_SAMPLE_HI", 2)
+    assert adaptive_sample_k(40) == 2
     got_hi = sorted(
         r.vec_id
-        for r in adaptive_sample(sdf, target=8, hi=2).collect()
+        for r in adaptive_sample(sdf).collect()
     )
     want_hi = sorted(
         r.vec_id

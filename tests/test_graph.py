@@ -83,10 +83,11 @@ def _kcore_reference(edges, k, rounds):
 
 
 def _bfs_reference(edges, rounds):
-    """bfs_distances' rounds, serially, from the smallest ``s1``: on no
-    edges the root is None (SQL ``MIN`` over no rows) at distance 0."""
-    root = min((a for a, _ in edges), default=None)
-    dist = {root: 0}
+    """bfs_distances' rounds, serially, from the smallest ``s1``: no
+    edges, no root, no distances."""
+    if not edges:
+        return {}
+    dist = {min(a for a, _ in edges): 0}
     for _ in range(rounds):
         step = dict(dist)
         for a, b in edges + [(b, a) for a, b in edges]:
@@ -120,10 +121,8 @@ def test_kcore_edges_on_degenerate_graphs(spark, graph):
 @pytest.mark.parametrize("graph", sorted(_GRAPHS))
 def test_bfs_distances_on_degenerate_graphs(spark, graph):
     """A single edge puts its far end one hop from the root. The empty
-    graph gives the one row the oracle's ``MIN(s1)`` root gives: a NULL
-    root at distance 0. That row pins a known defect (an empty graph
-    should give no rows); drop the NULL root in ``bfs_distances`` and
-    in the oracle's seed CTE together, then expect ``{}`` here."""
+    graph has no root (``MIN(s1)`` over no rows is NULL, which both
+    ``bfs_distances`` and the oracle's seed CTE drop), so no rows."""
     from bigdata_deepfakeanalysis_spark.operators.graph import (
         _BFS_ROUNDS,
         bfs_distances,
@@ -133,4 +132,4 @@ def test_bfs_distances_on_degenerate_graphs(spark, graph):
     df = spark.createDataFrame(edges, "s1 long, s2 long")
     got = {r.id: r.dist for r in bfs_distances(df).collect()}
     assert got == _bfs_reference(edges, _BFS_ROUNDS)
-    assert got == ({1: 0, 2: 1} if edges else {None: 0})
+    assert got == ({1: 0, 2: 1} if edges else {})

@@ -49,7 +49,7 @@ def test_cv_accuracy_bounds(spark):
     from bigdata_deepfakeanalysis_spark.ml import cv_separability
 
     folds = cv_separability(
-        table(spark, SF_DIR, "embeddings"), "logreg", n_partitions=1
+        table(spark, SF_DIR, "embeddings"), "logreg"
     ).toPandas()
     assert len(folds) == 5
     assert ((folds.accuracy >= 0) & (folds.accuracy <= 1)).all()
@@ -69,18 +69,24 @@ def test_cka_bounds(spark, duck):
     assert ((df.cka >= 0) & (df.cka <= 1 + 1e-9)).all()
 
 
-def test_tsne_kl_decreases_and_separates():
+def test_tsne_kl_decreases_and_separates(monkeypatch):
     """The vendored solver is a real t-SNE: its KL objective decreases
-    over iterations, and planted clusters end up separated."""
+    over iterations, and planted clusters end up separated (at
+    perplexity 15 and 400 iterations, patched over the module
+    constants for this 80-point input)."""
     import numpy as np
 
+    from bigdata_deepfakeanalysis_spark import tsne
     from bigdata_deepfakeanalysis_spark.tsne import tsne_exact
+
+    monkeypatch.setattr(tsne, "_PERPLEXITY", 15)
+    monkeypatch.setattr(tsne, "_N_ITER", 400)
 
     rng = np.random.RandomState(0)
     X = np.concatenate(
         [rng.normal(0, 0.05, (40, 16)), rng.normal(1, 0.05, (40, 16))]
     )
-    Y, kl = tsne_exact(X, perplexity=15, n_iter=400, seed=42)
+    Y, kl = tsne_exact(X)
     assert Y.shape == (80, 2)
     assert np.isfinite(Y).all() and np.isfinite(kl).all()
     assert len(kl) >= 3 and kl[-1] < kl[0]  # objective actually optimized
@@ -93,7 +99,7 @@ def test_tsne_kl_decreases_and_separates():
     )
     assert gap > 2 * spread
     # determinism
-    Y2, _ = tsne_exact(X, perplexity=15, n_iter=400, seed=42)
+    Y2, _ = tsne_exact(X)
     assert np.abs(Y - Y2).max() < 1e-12
 
 
@@ -104,14 +110,14 @@ def test_tsne_shape_and_determinism(spark):
     )
 
     a = (
-        tsne2d(grouped_embeddings(spark, SF_DIR), cap=50)
+        tsne2d(grouped_embeddings(spark, SF_DIR))
         .orderBy("group", "image_key")
         .toPandas()
     )
     assert len(a) > 0
     assert a.x.map(math.isfinite).all() and a.y.map(math.isfinite).all()
     b = (
-        tsne2d(grouped_embeddings(spark, SF_DIR), cap=50)
+        tsne2d(grouped_embeddings(spark, SF_DIR))
         .orderBy("group", "image_key")
         .toPandas()
     )
@@ -282,9 +288,7 @@ def test_xgb_estimator_path_or_gate(spark):
         .where((F.col("vec_id") < 60) & (F.col("label") < 2))
     )
     if ml.HAS_XGBOOST:
-        folds = ml.cv_separability(
-            emb, "xgb", n_folds=2, n_partitions=1
-        ).collect()
+        folds = ml.cv_separability(emb, "xgb", n_folds=2).collect()
         assert [r.fold for r in folds] == [0, 1]
         assert all(0.0 <= r.accuracy <= 1.0 for r in folds)
         assert all(r.estimator == "xgb" for r in folds)
@@ -292,9 +296,9 @@ def test_xgb_estimator_path_or_gate(spark):
         with pytest.raises(
             NotImplementedError, match="xgboost optional extra"
         ):
-            ml.cv_separability(emb, "xgb", n_folds=2, n_partitions=1)
+            ml.cv_separability(emb, "xgb", n_folds=2)
     with pytest.raises(ValueError, match="unknown estimator"):
-        ml.cv_separability(emb, "catboost", n_folds=2, n_partitions=1)
+        ml.cv_separability(emb, "catboost", n_folds=2)
 
 
 def test_mutual_nn_tile_count_invariance(spark):

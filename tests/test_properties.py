@@ -874,8 +874,11 @@ def test_two_pass_rownum_and_ntile_match_window_functions(
     pattern, and n<k / n%k edge: two_pass_rownum == partition-less
     ROW_NUMBER, and ntile_expr(rn, n_tot) == NTILE(k), both over the
     same deterministic total order (value, uid)."""
+    from unittest import mock
+
     from pyspark.sql import functions as F
 
+    from bigdata_deepfakeanalysis_spark.operators import parity
     from bigdata_deepfakeanalysis_spark.operators.parity import (
         ntile_expr,
         two_pass_rownum,
@@ -884,16 +887,19 @@ def test_two_pass_rownum_and_ntile_match_window_functions(
     df = spark.createDataFrame(
         [(v, i) for i, v in enumerate(vals)], "v int, uid int"
     )
-    got = (
-        two_pass_rownum(df, ["v", "uid"], n_parts=n_parts)
-        .crossJoin(
-            F.broadcast(df.agg(F.count(F.lit(1)).alias("n_tot")))
+    # the range fan-out is read on the driver, so patching it sweeps
+    # the partition count for this example only
+    with mock.patch.object(parity, "range_parts", lambda _df: n_parts):
+        got = (
+            two_pass_rownum(df, ["v", "uid"])
+            .crossJoin(
+                F.broadcast(df.agg(F.count(F.lit(1)).alias("n_tot")))
+            )
+            .select("uid", "rn", F.expr(ntile_expr(k)).alias("tile"))
+            .toPandas()
+            .set_index("uid")
+            .sort_index()
         )
-        .select("uid", "rn", F.expr(ntile_expr(k)).alias("tile"))
-        .toPandas()
-        .set_index("uid")
-        .sort_index()
-    )
     want = (
         df.select(
             "uid",
@@ -1034,8 +1040,10 @@ def test_pylog_torn_tail_repair_survives_any_window_ratio(
     equal, or many windows long, with or without preceding good
     records — repair must truncate to exactly the last acknowledged
     newline (or to empty) and never leave torn bytes for a subsequent
-    append to merge into."""
+    append to merge into. The scan window is the driver-read constant
+    ``pylog._SCAN_WINDOW``, patched for each example."""
     import os
+    from unittest import mock
 
     from bigdata_deepfakeanalysis_spark.streaming import pylog
 
@@ -1054,7 +1062,8 @@ def test_pylog_torn_tail_repair_survives_any_window_ratio(
         good_bytes = f.read()
     with open(seg0, "ab") as f:
         f.write(b'{"k":"torn","v":"' + b"z" * torn_len)
-    pylog._repair_torn_tail(seg0, window=window)
+    with mock.patch.object(pylog, "_SCAN_WINDOW", window):
+        pylog._repair_torn_tail(seg0)
     with open(seg0, "rb") as f:
         repaired = f.read()
     assert repaired == good_bytes  # exactly the acknowledged prefix

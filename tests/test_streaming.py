@@ -173,7 +173,11 @@ def test_foreach_batch_sink_is_replay_idempotent(spark):
     assert sunk == src
 
 
-def test_jdbc_sink_epoch_swap_is_atomic_under_crash(spark):
+# the committed view's select list for the tests that read its rows
+_COMMITTED_ROWS = "d.epoch, d.event_id, d.user_id, d.value"
+
+
+def test_jdbc_sink_epoch_swap_is_atomic_under_crash(spark, monkeypatch):
     """VERDICT r11 task 5 (pattern upgraded r13 per VERDICT r12 task
     5): the JDBC exactly-once sink's epoch transition must be ONE
     transaction. Protocol: (1) clean drain commits every epoch; (2) a
@@ -184,12 +188,14 @@ def test_jdbc_sink_epoch_swap_is_atomic_under_crash(spark):
     bit-identical to the pre-crash state (the crashed attempt's data
     rows may persist, but only as unreferenced versions invisible
     through the pointer); (3) a further replay converges to the source
-    and garbage-collects every superseded version."""
+    and garbage-collects every superseded version. The committed view
+    is read row by row here: the test patches its select list."""
     import shutil
 
     from bigdata_deepfakeanalysis_spark.catalog import staging_dir, table
 
     table_name = "eo_crash_events"
+    monkeypatch.setattr(BE, "_COMMITTED_SELECT", _COMMITTED_ROWS)
 
     def drain(attempt: int, crash=None) -> str:
         ckpt = staging_dir(f"stream_eo_crash_ckpt_{attempt}")
@@ -283,7 +289,7 @@ def test_jdbc_exactly_once_on_empty_events(spark, tmp_path):
     con.close()
 
 
-def test_jdbc_sink_fences_concurrent_attempts_of_an_epoch(spark):
+def test_jdbc_sink_fences_concurrent_attempts_of_an_epoch(spark, monkeypatch):
     """A zombie attempt and its replacement replay the same epoch at
     once. Both pick the same next version (the hook holds each until
     the other has picked); the version claim's key lets one through and
@@ -291,13 +297,15 @@ def test_jdbc_sink_fences_concurrent_attempts_of_an_epoch(spark):
     event once. Without the claim both append into that version and
     the pointer names the merged rows, every event twice. An attempt
     overtaken by a newer claim fails at its pointer flip, leaving the
-    committed view as it was."""
+    committed view as it was. The committed view is read row by row
+    here: the test patches its select list."""
     import shutil
     import threading
 
     from bigdata_deepfakeanalysis_spark.catalog import staging_dir, table
 
     table_name = "eo_fence_events"
+    monkeypatch.setattr(BE, "_COMMITTED_SELECT", _COMMITTED_ROWS)
     both_picked = threading.Barrier(2, timeout=120)
 
     def drain(attempt: int, pick=None) -> str:
